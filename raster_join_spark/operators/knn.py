@@ -634,10 +634,11 @@ def knn_join_bulk(
         # grid assignment (including the refined grid) from the cache.
         # (r8) the .rdd.getNumPartitions() under-parallelism guard that
         # used to live here cost ~0.5-1s of pure driver time per call
-        # (full physical planning of the source just to read a number);
-        # source parallelism is the source's job now — points_df
-        # repartitions single-row-group files itself, and synth/test
-        # sources already carry >= parallelism partitions.
+        # (full physical planning of the source just to read a number).
+        # points_df does NOT repartition (its single-row-group scan stays
+        # one task; sources/pages.py records why the repartition was
+        # reverted): this persist is the barrier that keeps the regex
+        # synthesis out of every probe predicate below.
         pts_base = points.select(id_col, x, y).persist()
 
         def _assign(g: GridSpec) -> DataFrame:

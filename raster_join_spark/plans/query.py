@@ -69,7 +69,19 @@ class QueryConstraint:  # Common.h:34-39
 
 @dataclass
 class QueryEngine:
-    """DataHandler-shaped driver over a points DataFrame."""
+    """DataHandler-shaped driver over a points DataFrame.
+
+    Like the reference's ``DataHandler::initData`` (DataHandler.cpp:24-62),
+    the engine loads its input once: construction persists ``points`` and
+    materializes it, so every request reads the cached columns instead of
+    re-running the scan and the page synthesis, which Catalyst would
+    otherwise inline into each window, time and constraint predicate.
+    The copy is held in memory for the engine's lifetime;
+    ``engine.points.unpersist()`` releases it. Spark serves every query
+    over the same input plan from this one copy, so engines over the
+    same input share it, and so does any other query the caller runs
+    over that input.
+    """
 
     spark: SparkSession
     points: DataFrame
@@ -78,10 +90,23 @@ class QueryEngine:
     constraints: list[QueryConstraint] = field(default_factory=list)
     agg: AggSpec = field(default_factory=AggSpec)
     _window: DataFrame | None = None
+    _join: SpatialJoin | None = field(default=None, init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        # No repartition before the persist: it runs the Arrow stages in
+        # more Python workers and measured higher peak RSS (CLAUDE.md).
+        self.points = self.points.persist()
+        self.points.count()
+        if self.polyset is not None:
+            self.set_polygon_query(self.polyset)
 
     # ----------------------------------------------------- query setup
 
     def set_polygon_query(self, polyset: PolygonSet) -> "QueryEngine":
+        """Select the collection; its SpatialJoin is built here, once,
+        and serves every request until the collection changes."""
+        if self._join is None or polyset is not self.polyset:
+            self._join = SpatialJoin(self.spark, polyset, self.grid)
         self.polyset = polyset
         return self
 
@@ -92,12 +117,10 @@ class QueryEngine:
     def set_aggregation(self, agg: Aggregation, attr: str | None = None) -> "QueryEngine":
         if agg is Aggregation.COUNT:
             self.agg = AggSpec("count", None, "agg")
-        elif agg is Aggregation.AVG:
-            assert attr, "AVG needs an attribute (DataHandler.cpp:68-71)"
-            self.agg = AggSpec("avg", attr, "agg")
-        else:
-            assert attr, "SUM needs an attribute"
-            self.agg = AggSpec("sum", attr, "agg")
+            return self
+        if not attr:
+            raise ValueError(f"{agg.name} needs an attribute (DataHandler.cpp:68-71)")
+        self.agg = AggSpec(agg.name.lower(), attr, "agg")
         return self
 
     def execute_query(
@@ -110,11 +133,11 @@ class QueryEngine:
         """Coarse sigma: cell-granular superset of the query window
         (HashGridIndex.cpp:78-137). If box is None, uses the polygon
         collection's bbox like the reference (main.cpp:131-134)."""
-        sj = self._sj()
         if box is None:
-            assert self.polyset is not None
+            if self.polyset is None:
+                raise ValueError("execute_query needs a box or a polygon collection")
             box = self.polyset.bbox
-        win = sj.coarse_scan(self.points, *box)
+        win = self._sj().coarse_scan(self.points, *box)
         if t0 is not None:
             win = win.filter(F.col(ts_col) >= F.lit(t0).cast("timestamp_ntz"))
         if t1 is not None:
@@ -125,8 +148,9 @@ class QueryEngine:
     # ------------------------------------------------------- execution
 
     def _sj(self) -> SpatialJoin:
-        assert self.polyset is not None, "set_polygon_query first"
-        return SpatialJoin(self.spark, self.polyset, self.grid)
+        if self._join is None:
+            raise ValueError("no polygon collection: call set_polygon_query first")
+        return self._join
 
     def _filtered(self) -> DataFrame:
         df = self._window if self._window is not None else self.points

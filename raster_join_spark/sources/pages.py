@@ -122,7 +122,8 @@ def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     spatial_split_count 1.8s -> 15.7s at sf1.0: the exchange below the
     chained broadcast probes breaks their single codegen'd pipeline).
     Operators that re-scan this expensive projection fix parallelism
-    at their own persist boundary instead — see knn.py.)"""
+    at their own persist boundary instead — see knn.py and
+    plans/query.py.)"""
     spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
     # `text` rides along for the byte-identity invariant; Catalyst prunes
     # it out of every plan that doesn't select it (tests/test_plans.py)

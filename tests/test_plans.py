@@ -180,3 +180,36 @@ def test_prepare_corpus_no_doc_sized_join(spark, sf_dir):
     plan = plan_of(prepare_corpus(docs, test_permille=200))
     assert "SortMergeJoin" not in plan
     assert "Window" not in plan and "Cartesian" not in plan
+
+
+def request_nodes(df) -> list[str]:
+    """The physical operators a request runs, one string each. A cached
+    relation's own plan ran when it was built, so the walk stops at its
+    InMemoryTableScan; it enters adaptive plans and broadcast sides."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        out.append(node.simpleString(10_000))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_query_engine_reads_cached_points(spark, sf_dir):
+    """QueryEngine requests scan the engine's persisted copy of its input:
+    the page synthesis (regex extraction) ran once when the engine was
+    built and is in no request's plan, not even inlined into the window
+    and constraint predicates (CLAUDE.md, Catalyst inlines expensive
+    projections)."""
+    from raster_join_spark.plans.query import ConstraintType, QueryConstraint, QueryEngine
+
+    eng = QueryEngine(spark, points_df(spark, sf_dir), COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.execute_query(None, "2024-01-05 00:00:00", "2024-01-25 00:00:00")
+    eng.set_query_constraints([QueryConstraint("value_c", ConstraintType.GT, 2000)])
+    for fn in ("raster", "index", "hybrid", "errorbounds"):
+        nodes = request_nodes(eng.execute_function(fn))
+        assert any(n.startswith("InMemoryTableScan") for n in nodes), (fn, nodes)
+        assert not [n for n in nodes if "regexp_extract" in n], (fn, nodes)

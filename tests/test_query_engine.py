@@ -4,6 +4,7 @@ strategy equivalence (mirrors the reference's main.cpp query lifecycle)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,8 +26,13 @@ def pts(spark, sf_dir):
 
 def test_constraints_match_manual_filters(spark, pts):
     """The reference's hardcoded constraint set shape (main.cpp:82-118):
-    EQ on a categorical + GT/LT on numerics, conjunctive."""
+    EQ on a categorical + GT/LT on numerics, conjunctive, inside a time
+    window. Every strategy over the engine's cached input equals the same
+    SpatialJoin strategy over the raw, uncached, manually filtered input,
+    in every output column."""
+    t0, t1 = "2024-01-05 00:00:00", "2024-01-25 00:00:00"
     eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.execute_query(None, t0, t1)
     eng.set_query_constraints(
         [
             QueryConstraint("lang", ConstraintType.EQ, "purchase"),
@@ -34,14 +40,31 @@ def test_constraints_match_manual_filters(spark, pts):
             QueryConstraint("value_c", ConstraintType.LT, 15000),
         ]
     )
-    got = eng.execute_function("hybrid").orderBy("poly_id").toPandas()
+    fns = ("raster", "index", "hybrid", "errorbounds")
+    got = {fn: eng.execute_function(fn).orderBy("poly_id").toPandas() for fn in fns}
 
+    eng.points.unpersist()
+    ts = F.col("warc_ts")
     manual = pts.filter(
-        (F.col("lang") == "purchase") & (F.col("value_c") > 2000) & (F.col("value_c") < 15000)
+        (ts >= F.lit(t0).cast("timestamp_ntz"))
+        & (ts <= F.lit(t1).cast("timestamp_ntz"))
+        & (F.col("lang") == "purchase")
+        & (F.col("value_c") > 2000)
+        & (F.col("value_c") < 15000)
     )
+    assert "InMemoryTableScan" not in manual._jdf.queryExecution().executedPlan().toString()
     sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
-    exp = sj.hybrid_join(manual).orderBy("poly_id").toPandas()
-    assert got["agg"].tolist() == exp["agg"].tolist()
+    exp = {
+        "raster": sj.raster_join(manual),
+        "index": sj.index_join(manual),
+        "hybrid": sj.hybrid_join(manual),
+        "errorbounds": sj.error_bounds(manual),
+    }
+    assert got["hybrid"]["agg"].sum() > 0
+    for fn in fns:
+        pd.testing.assert_frame_equal(
+            got[fn], exp[fn].orderBy("poly_id").toPandas(), check_exact=True, obj=fn
+        )
 
 
 def test_all_exact_strategies_agree(spark, pts):
@@ -79,6 +102,18 @@ def test_coarse_window_then_aggregate(spark, pts):
 
 
 def test_unknown_function_raises(spark, pts):
+    """Bad input raises ValueError (not an assert, which ``python -O``
+    strips)."""
     eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
-    with pytest.raises(ValueError, match="unknown join type"):
-        eng.execute_function("gpu")
+    bare = QueryEngine(spark, pts, COARSE_GRID)
+    cases = [
+        (lambda: eng.execute_function("gpu"), "unknown join type"),
+        (lambda: eng.set_aggregation(Aggregation.AVG), "AVG needs an attribute"),
+        (lambda: eng.set_aggregation(Aggregation.SUM, ""), "SUM needs an attribute"),
+        (lambda: bare.execute_function("hybrid"), "set_polygon_query first"),
+        (lambda: bare.execute_query(ORACLE_POLYS.bbox), "set_polygon_query first"),
+        (lambda: bare.execute_query(), "needs a box or a polygon collection"),
+    ]
+    for call, match in cases:
+        with pytest.raises(ValueError, match=match):
+            call()
