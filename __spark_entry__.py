@@ -107,31 +107,20 @@ def _q_index_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_hybrid_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """coord_transfer="packed": the engine's canonical coordinate space
-    is integer microdegrees (int32-exact), so the fused kernel's Arrow
-    feed ships BOTH coords in one int64 column — half the bytes of
-    float64 and half the per-row field count, the two measured
-    full-width cost terms (BENCH/hybrid_rootcause.md). The kernel
-    unpacks and widens back to float64; this gate row proves
-    bit-identical results."""
+    """The exact hybrid COUNT: one mapInArrow pass over float64
+    coordinates (interior cells by CSR lookup, boundary cells by PIP)."""
     from raster_join_spark.fixtures import COARSE_GRID
 
-    return _sj(spark, COARSE_GRID).hybrid_join(
-        _points(spark, sf_dir), coord_transfer="packed"
-    )
+    return _sj(spark, COARSE_GRID).hybrid_join(_points(spark, sf_dir))
 
 
 def _q_split_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hierarchical split plan (r7): interior membership resolved
-    JVM-side through the boundary-only quadtree refinement's chained
-    broadcast probes; only the ~2% of points the deepest level cannot
-    classify reach the Arrow PIP kernel. Same oracle as the fused
-    hybrid/index gates — all physical plans must hash-agree."""
+    """Kept under its historical name: it used to run a separate split
+    plan and now runs the single exact hybrid plan, the same query as
+    spatial_hybrid_count. Same oracle as the hybrid/index gates."""
     from raster_join_spark.fixtures import COARSE_GRID
 
-    return _sj(spark, COARSE_GRID).hybrid_join(
-        _points(spark, sf_dir), fused="split", coord_transfer="packed"
-    )
+    return _sj(spark, COARSE_GRID).hybrid_join(_points(spark, sf_dir))
 
 
 def _q_hybrid_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,23 +449,19 @@ def _q_hybrid_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raster_join_spark.operators.spatial_join import AggSpec
 
     return _sj(spark, COARSE_GRID).hybrid_join(
-        _points(spark, sf_dir), AggSpec("sum", "value_c", "agg"),
-        coord_transfer="packed",
+        _points(spark, sf_dir), AggSpec("sum", "value_c", "agg")
     )
 
 
 def _q_split_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUM through the hierarchical split plan: the JVM interior chain
-    carries the value column into its map-side-combined partials while
-    the Arrow sink sums only the deep-boundary residue — gated against
-    the same DuckDB oracle as the fused-kernel sum, so the two physical
-    plans' partial-aggregation arithmetic is pinned hash-identical."""
+    """Kept under its historical name: it used to run a separate split
+    plan and now runs the single exact hybrid plan, the same query as
+    spatial_hybrid_sum, gated against the same DuckDB oracle."""
     from raster_join_spark.fixtures import COARSE_GRID
     from raster_join_spark.operators.spatial_join import AggSpec
 
     return _sj(spark, COARSE_GRID).hybrid_join(
-        _points(spark, sf_dir), AggSpec("sum", "value_c", "agg"),
-        fused="split", coord_transfer="packed",
+        _points(spark, sf_dir), AggSpec("sum", "value_c", "agg")
     )
 
 
@@ -521,7 +506,7 @@ def _q_hybrid_poly4096(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raster_join_spark.operators.spatial_join import SpatialJoin
 
     sj = SpatialJoin(spark, rect_polyset(), COARSE_GRID)
-    return sj.hybrid_join(_points(spark, sf_dir), coord_transfer="int")
+    return sj.hybrid_join(_points(spark, sf_dir))
 
 
 def _q_index_f32(spark: SparkSession, sf_dir: str) -> DataFrame:

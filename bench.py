@@ -48,9 +48,9 @@ def run_suite(master: str, sf_dir: str) -> dict:
     qs = e.queries()
     headline = [
         "spatial_hybrid_count",
-        # r7: the same accurate aggregation under fused='auto' (the
-        # hierarchical split plan) — recorded alongside the fused series
-        # so both physical plans stay visible in the round record
+        # added in r7 for a second exact plan; that plan is gone and the
+        # query now runs the same plan as spatial_hybrid_count, kept so
+        # the JSON line's keys stay the same
         "spatial_split_count",
         "spatial_index_count",
         "spatial_raster_count",
@@ -118,20 +118,9 @@ def run_suite(master: str, sf_dir: str) -> dict:
     # r6 policy change (r5 verdict item 4): knn_bulk now FOLDS INTO the
     # headline `value` — both r5 and r6 record it per-query, so the
     # round-over-round comparison subtracts `knn_bulk_sec` when
-    # comparing against r1-r4 totals. The per-sample series also appends
-    # to BENCH/knn_bulk_history.jsonl for a best-sound trend line.
+    # comparing against r1-r4 totals. The per-sample series is in the
+    # JSON line (knn_bulk_samples); the default run writes no file.
     total = round(sum(timings.values()), 3)
-    if knn_bulk_samples:
-        try:
-            with open(os.path.join(REPO, "BENCH", "knn_bulk_history.jsonl"), "a") as f:
-                f.write(json.dumps({
-                    "sf": _sf_from_dir(sf_dir),
-                    "master": master,
-                    "samples_sec": knn_bulk_samples,
-                    "best_sec": min(knn_bulk_samples),
-                }) + "\n")
-        except OSError:
-            pass
     hybrid_rate = n_docs / timings["spatial_hybrid_count"] if timings.get(
         "spatial_hybrid_count"
     ) else 0.0
@@ -170,9 +159,8 @@ def run_suite(master: str, sf_dir: str) -> dict:
             "knn_bulk (best of samples — min-over-samples applies to "
             "knn_bulk ONLY, all other queries are single warmed shots; "
             "was value_excludes through r5)",
-            "spatial_split_count (new in r7: the accurate aggregation "
-            "under fused='auto', i.e. the hierarchical split plan; "
-            "subtracted in value_legacy)",
+            "spatial_split_count (new in r7; now the same exact hybrid "
+            "plan as spatial_hybrid_count; subtracted in value_legacy)",
         ],
     }
 
@@ -239,28 +227,9 @@ def _flagship_once(master: str, sf_dir: str) -> dict:
     t_raster = best_of(lambda: SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
                        .raster_join(synth_points(spark, n_raster, 256),
                                     include_zero=False).collect())
-    # secondary: the accurate fused hybrid join (Arrow kernel path);
-    # coord_transfer="packed" — both int32-exact microdegree coords in
-    # ONE int64 column: half the feed bytes of float64 AND half the
-    # per-row field count, the two measured full-width cost terms
-    # (BENCH/hybrid_rootcause.md; A/B at 400M: local[32] best 4.83s vs
-    # 5.99s for "int", local[8] 15.1 vs 13.5 — work moves from the
-    # contended JVM feed into the scalable numpy kernel, the right
-    # trade for wide clusters). The same option is exact-gated by the
-    # driver (spatial_hybrid_count/sum).
+    # secondary: the accurate fused hybrid join (Arrow kernel path)
     t_hybrid = best_of(lambda: SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
-                       .hybrid_join(synth_points(spark, n_hybrid, 256),
-                                    coord_transfer="packed").collect())
-    # r7: the accurate hybrid under the CURRENT auto rule — the
-    # hierarchical split (interior resolved JVM-side via the boundary-
-    # only quadtree's chained broadcast probes; ~2% of points through
-    # Arrow). Recorded ALONGSIDE the fused-kernel number so the r1-r6
-    # hybrid series stays comparable; exact-gated by the driver as
-    # spatial_split_count.
-    t_split = best_of(lambda: SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
-                      .hybrid_join(synth_points(spark, n_hybrid, 256),
-                                   fused="auto",
-                                   coord_transfer="packed").collect())
+                       .hybrid_join(synth_points(spark, n_hybrid, 256)).collect())
     try:
         load1 = float(open("/proc/loadavg").read().split()[0])
     except OSError:
@@ -275,8 +244,6 @@ def _flagship_once(master: str, sf_dir: str) -> dict:
             "docs_per_sec": round(n_raster / t_raster, 1),
             "hybrid_sec": round(t_hybrid, 3), "hybrid_docs": n_hybrid,
             "hybrid_docs_per_sec": round(n_hybrid / t_hybrid, 1),
-            "hybrid_split_sec": round(t_split, 3),
-            "hybrid_split_docs_per_sec": round(n_hybrid / t_split, 1),
             "steal_pct": steal_pct,
             "load_after": load1}
 
@@ -484,44 +451,6 @@ def _scaling_closure_md(hybrid_docs: int) -> str:
     )
 
 
-def _split_ab_md() -> str:
-    """Render the recorded fused-vs-split A/B series
-    (BENCH/split_ab.jsonl, written by tools/split_ab.py) into the
-    accurate-path throughput section. Best row per (label, plan)."""
-    path = os.path.join(REPO, "BENCH", "split_ab.jsonl")
-    if not os.path.exists(path):
-        return ""
-    best: dict[tuple, dict] = {}
-    for line in open(path):
-        line = line.strip()
-        if not line:
-            continue
-        rec = json.loads(line)
-        k = (rec.get("label", "r7-initial"), rec["plan"], rec["n"], rec["master"])
-        if k not in best or rec["best"] < best[k]["best"]:
-            best[k] = rec
-    rows = "".join(
-        f"| {k[0]} | {k[1]} | {k[2]} | {k[3]} | {v['best']} | "
-        f"{v['docs_per_sec']:,.0f} | {v['load_after']} |\n"
-        for k, v in sorted(best.items())
-    )
-    return (
-        "## Accurate-path plan A/B — fused kernel vs hierarchical split\n\n"
-        "fused='auto' picks the hierarchical split for partial-aggregable\n"
-        "ops (operators/spatial_join.py): interior membership resolves\n"
-        "through per-level broadcast hashmap probes (pure JVM), and only\n"
-        "the ~2% of points left unresolved by the boundary-only quadtree\n"
-        "descent cross the Arrow boundary. Recorded best-of-reps per plan\n"
-        "variant (tools/split_ab.py, uncached input, fresh plans):\n\n"
-        "| variant | plan | rows | master | best sec | docs/s | load |\n"
-        "|---|---|---|---|---|---|---|\n" + rows + "\n"
-        "Reference anchor: the GPU hybrid runs 236M pts/s\n"
-        "(taxi-in-memory.txt:13); the v2 split's recorded best puts the\n"
-        "accurate path within ~1.9x of the reference GPU on a CPU-only\n"
-        "JVM+Arrow stack.\n\n"
-    )
-
-
 def _hybrid_rootcause_md() -> str:
     """Inline the hybrid-path scaling root-cause analysis (written by
     tools/diag_hybrid.py) into BASELINE.md when present."""
@@ -561,7 +490,6 @@ def run_scaling(sf_dir: str) -> dict:
     results: dict[str, dict] = {}
     round_effs: list[float] = []
     hybrid_effs: list[float] = []
-    split_effs: list[float] = []
     loads: list[tuple] = []
     steals: list[tuple] = []
     for _ in range(rounds):
@@ -590,13 +518,6 @@ def run_scaling(sf_dir: str) -> dict:
         hybrid_effs.append(
             round(
                 (results["local[8]"]["hybrid_sec"] / results["local[32]"]["hybrid_sec"]) / 4.0,
-                3,
-            )
-        )
-        split_effs.append(
-            round(
-                (results["local[8]"]["hybrid_split_sec"]
-                 / results["local[32]"]["hybrid_split_sec"]) / 4.0,
                 3,
             )
         )
@@ -632,7 +553,6 @@ def run_scaling(sf_dir: str) -> dict:
         "runs_local32": results[1]["all_runs_sec"],
         "round_efficiencies": round_effs,
         "round_efficiencies_hybrid": hybrid_effs,
-        "round_efficiencies_hybrid_split": split_effs,
         "round_loads_after": loads,
         # machine-wide hypervisor steal over each leg's whole run
         # (/proc/stat field 8): the DIRECT external-contention measure —
@@ -640,13 +560,6 @@ def run_scaling(sf_dir: str) -> dict:
         # soundness analysis can gate on observed theft, not inference.
         "round_steal_pct": steals,
         "hybrid_docs": results[0]["hybrid_docs"],
-        # r7: the auto-rule (hierarchical split) hybrid at the same
-        # stratum, per level — throughput evidence for the accurate path
-        "hybrid_split_sec_local8": results[0].get("hybrid_split_sec"),
-        "hybrid_split_sec_local32": results[1].get("hybrid_split_sec"),
-        "hybrid_split_docs_per_sec_local32": results[1].get(
-            "hybrid_split_docs_per_sec"
-        ),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # persist every attempt; report the best window observed so far (the
@@ -788,12 +701,6 @@ def run_scaling(sf_dir: str) -> dict:
             f"  SOUND round is reported next to the median — the spirit of the\n"
             f"  reference's min-over-iterations policy (GLHandler.cpp:214-248)\n"
             f"  without best-case cherry-picking.\n\n"
-            f"- hybrid under fused='auto' (hierarchical split, r7): "
-            f"local[8] {report['hybrid_split_sec_local8']}s, "
-            f"local[32] {report['hybrid_split_sec_local32']}s "
-            f"({report['hybrid_split_docs_per_sec_local32']} docs/s at 4N); "
-            f"per-round split efficiencies: {report['round_efficiencies_hybrid_split']}\n\n"
-            f"{_split_ab_md()}"
             f"{_kernel_scaling_md()}"
             f"{_raster_closure_md(results[0]['docs'])}"
             f"{_scaling_closure_md(results[0]['hybrid_docs'])}"
@@ -906,11 +813,9 @@ def run_poly_sweep() -> dict:
                 f"{v['pairs']} | {v['raster']} | {v['hybrid']} |\n"
                 for k, v in out.items()
             )
-            + "\nNotes: pip_col (the unrolled all-JVM PIP expression) is\n"
-            "guarded at PIP_COL_MAX_POLYS=512 — above that the Arrow kernel\n"
-            "is the only exact path (and the faster one). The 4096-polygon\n"
-            "hybrid count runs under the driver's exact gate\n"
-            "(spatial_hybrid_poly4096, closed-form oracle).\n"
+            + "\nNotes: the 4096-polygon hybrid count runs under the\n"
+            "driver's exact gate (spatial_hybrid_poly4096, closed-form\n"
+            "oracle).\n"
         )
     return report
 

@@ -67,50 +67,13 @@ class PolyGridTables:
         m = self.cls_kind == BOUNDARY
         return self.cls_cell[m], self.cls_poly[m], self.cls_frac[m], self.cls_center_in[m]
 
-    def boundary_fraction(
-        self, cell_weights: tuple[np.ndarray, np.ndarray] | None = None
-    ) -> float:
+    def boundary_fraction(self) -> float:
         """Share of covered (cell, poly) pairs that are boundary pairs —
-        the estimate of the share of points needing the exact PIP
-        kernel. Used by hybrid_join's plan auto-select.
-
-        Without ``cell_weights``: a pure pair-count ratio (free,
-        data-independent) that assumes near-uniform density per covered
-        cell. Under skew that can be badly off — e.g. the fixture's
-        NYC-style hot box puts 30% of points in a handful of cells, so
-        when hot cells are boundary cells the true PIP share far exceeds
-        the pair-count ratio (round-4 verdict item 5).
-
-        With ``cell_weights`` = (cell_ids, counts) — e.g. a sampled
-        per-cell point histogram — each pair is weighted by its cell's
-        point count, so the estimate tracks where the DATA is, not where
-        the cells are. Cells absent from the histogram weigh 0.
-        Mis-estimation is performance-only either way (both plans are
-        exact; fused is the safe fallback)."""
-        if cell_weights is None:
-            nb = int((self.cls_kind == BOUNDARY).sum())
-            return nb / max(len(self.cls_kind), 1)
-        wc, wv = cell_weights
-        wc = np.asarray(wc, np.int64)
-        wv = np.asarray(wv, np.float64)
-        if len(wc) == 0:
-            # empty histogram: the `&` below is bitwise (both operands
-            # evaluate), so wc[idx_c] would IndexError — take the
-            # documented "histogram missed everything" fallback directly
-            nb = int((self.cls_kind == BOUNDARY).sum())
-            return nb / max(len(self.cls_kind), 1)
-        order = np.argsort(wc)
-        wc, wv = wc[order], wv[order]
-        idx = np.searchsorted(wc, self.cls_cell)
-        idx_c = np.clip(idx, 0, len(wc) - 1)
-        hit = wc[idx_c] == self.cls_cell
-        w = np.where(hit, wv[idx_c], 0.0)
-        tot = float(w.sum())
-        if tot <= 0:
-            # histogram missed every covered cell — fall back to counts
-            nb = int((self.cls_kind == BOUNDARY).sum())
-            return nb / max(len(self.cls_kind), 1)
-        return float(w[self.cls_kind == BOUNDARY].sum()) / tot
+        a data-independent estimate of the share of points needing the
+        exact PIP kernel, assuming near-uniform density per covered
+        cell. SpatialJoin's refinement rule reads it."""
+        nb = int((self.cls_kind == BOUNDARY).sum())
+        return nb / max(len(self.cls_kind), 1)
 
 
 def _segments_intersect_rect(
@@ -441,10 +404,7 @@ def _pair_geometry(
     """Geometric tests for EXPLICIT (polygon, cell) pairs on ``grid``:
     returns (center_in, vert_in, edge_hit, frac) flat arrays. This is
     the batch core of :func:`classify_cells` (which derives its pairs
-    from MBR covers); :func:`classify_pairs` exposes it for caller-
-    chosen pair lists — the hierarchical boundary-only refinement used
-    by the split hybrid plan classifies just the CHILDREN of the
-    previous level's boundary pairs, never a full-grid cover."""
+    from MBR covers)."""
     offs = polyset.offsets
     nv_per = np.diff(offs)
     tot = len(pair_poly)
@@ -502,33 +462,6 @@ def _pair_geometry(
                         vd, base[bs], nv, lbx[bs], lby[bs], rtx[bs], rty[bs]
                     )
     return center_in, vert_in, edge_hit, frac
-
-
-OUTSIDE = -1
-
-
-def classify_pairs(
-    grid: GridSpec,
-    polyset: PolygonSet,
-    pair_poly: np.ndarray,
-    gx: np.ndarray,
-    gy: np.ndarray,
-) -> np.ndarray:
-    """Kind per explicit (polygon, cell) pair on ``grid``: INTERIOR,
-    BOUNDARY, or OUTSIDE (-1, the pair contributes nothing). Identical
-    decision rule to :func:`classify_cells` (boundary = vertex-in-rect
-    or edge-crossing; interior = not boundary and center inside), just
-    over a caller-supplied pair list instead of MBR covers."""
-    if len(pair_poly) == 0:
-        return np.empty(0, np.int32)
-    center_in, vert_in, edge_hit, _ = _pair_geometry(
-        grid, polyset, pair_poly, gx, gy, with_frac=False
-    )
-    boundary = vert_in | edge_hit
-    kind = np.full(len(pair_poly), OUTSIDE, np.int32)
-    kind[boundary] = BOUNDARY
-    kind[~boundary & center_in] = INTERIOR
-    return kind
 
 
 def classify_cells(

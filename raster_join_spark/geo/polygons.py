@@ -144,8 +144,7 @@ class PolygonSet:
         """OGC-style even-odd ring semantics (holes honored), expressed
         as a PLAIN flat-run collection so every unchanged crossing-parity
         kernel — numpy pip_mask/pip_candidates, the generated SQL oracle,
-        the all-JVM pip_col expression, classify_cells — computes it
-        without knowing rings exist.
+        classify_cells — computes it without knowing rings exist.
 
         Construction (the classic keyhole bridge, made parity-exact):
         each ring is explicitly closed by re-appending its first vertex,

@@ -14,9 +14,11 @@ geo/classify.py and the flat CSR polygon arrays):
   cover table (the "polygon rasterization" pass, computed once on the
   driver) -> re-aggregate per polygon. Approximate within epsilon.
 - **hybrid_join** (J3, RasterJoin/join/HybridJoin.cpp:339-359,
-  shaders/hybrid.glsl:224-301): interior-cell points resolve by broadcast
-  map-join alone (no PIP); boundary-cell points go through the exact PIP
-  path; union. Accurate, faster than index_join when boundaries are thin.
+  shaders/hybrid.glsl:224-301): one mapInArrow pass — interior-cell
+  points resolve by a CSR cell lookup alone (no PIP), boundary-cell
+  points go through the exact PIP kernel, and each Arrow batch emits
+  per-polygon partials. Accurate, faster than index_join when
+  boundaries are thin.
 - **error_bounds** (J4, RasterJoin/join/RasterJoinBounds.cpp:202-381,
   shaders/line-bound.frag:219-262): raster result plus per-polygon
   [agg-fp, agg+fn] intervals from boundary-cell accounting — both the
@@ -37,7 +39,7 @@ Scale design (the part that matters at 100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterable
 
 import numpy as np
@@ -46,22 +48,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from raster_join_spark.geo.classify import (
-    BOUNDARY,
-    INTERIOR,
-    POLY_GRID_CACHE,
-    PolyGridTables,
-    classify_pairs,
-)
+from raster_join_spark.geo.classify import POLY_GRID_CACHE, PolyGridTables
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.pip import pip_candidates
 from raster_join_spark.geo.polygons import PolygonSet
-
-# pip_col's unrolled CASE chain costs O(n_polys) dispatch per row and
-# O(polys x edges) codegen'd expression tree — measured viable only to a
-# few hundred polygons; past this bound callers must use the Arrow
-# kernel (which is also faster there; BENCH/poly_scaling.md)
-PIP_COL_MAX_POLYS = 512
 
 
 def _cell_csr(cells: np.ndarray, polys: np.ndarray, n_cells: int | None = None) -> dict:
@@ -180,7 +170,6 @@ class SpatialJoin:
     REFINE_TARGET_SPAN = 8.0  # aim: median polygon spans ~8 refined cells/axis
     REFINE_MAX_K = 8
     REFINE_COVER_BUDGET = 12_000_000  # driver classify cost cap (MBR-cover pairs)
-    MIN_SAMPLE_PTS = 256  # sampled-bfrac floor before escalating to a full scan
 
     def __init__(
         self,
@@ -200,7 +189,8 @@ class SpatialJoin:
         matches the SQL oracle bit-for-bit.
 
         ``refine``: the internal classification-grid refinement factor
-        for the EXACT (hybrid/pairs) paths — ``"auto"`` (default) picks
+        for the Arrow-kernel paths (``hybrid_join``,
+        ``assign_polygons``) — ``"auto"`` (default) picks
         a power-of-two factor when the polygon collection is tiny
         relative to the query grid (see the class constants), ``1``
         disables, an int forces a factor. Results are identical at any
@@ -290,13 +280,6 @@ class SpatialJoin:
             self.cls_grid, self.polyset, dtype=self.dtype, with_frac=False
         )
 
-    def _ck(self, name: str) -> str:
-        """Cache key for classification-grid-dependent artifacts —
-        suffixed with the refine level AND dtype (an f32 parity
-        instance classifies with different arithmetic, so its pair
-        tables must never serve an f64 twin on the same grid)."""
-        return f"{name}@r{self.refine_k}{np.dtype(self.dtype).char}"
-
     # ------------------------------------------------------------ helpers
 
     # session-level cache of the small dimension DataFrames: building a
@@ -322,9 +305,8 @@ class SpatialJoin:
     def _bc_art(self):
         """The per-executor membership artifact (interior CSR, boundary
         CSR, flat polygon vertices), broadcast once per (session,
-        collection content, grid, dtype, refine_k) and shared by every
-        Arrow-kernel plan (fused partials, fused pairs, split boundary
-        stage)."""
+        collection content, grid, dtype, refine_k) and shared by both
+        Arrow-kernel plans (``_fused_agg`` and ``_fused_pairs``)."""
         key = (
             id(self.spark),
             self.polyset.cache_token,
@@ -390,10 +372,10 @@ class SpatialJoin:
         # (r8) coalesce + persist the broadcast-side map: every query
         # execution otherwise re-parses the python-serialized literal
         # partitions AND collects them through defaultParallelism tiny
-        # tasks per broadcast build (measured: the split plan's three
-        # chained probe maps + two boundary cell sets cost ~0.9s/query
-        # of pure rebuild at any scale; 1-partition persisted maps cut
-        # spatial_split_count 2.3s -> 1.3s at sf1.0). Maps derive from
+        # tasks per broadcast build (measured on a since-removed plan
+        # with five such maps: ~0.9s/query of pure rebuild at any
+        # scale; 1-partition persisted maps cut it 2.3s -> 1.3s at
+        # sf1.0). Maps derive from
         # the polygon fixture only (never from the scanned table), so
         # this is broadcast-side constant data like the _BC_CACHE CSR
         # artifact, LRU-bounded the same way. ~4M rows per partition
@@ -408,37 +390,6 @@ class SpatialJoin:
                 except Exception:
                     pass
             self._PAIRS_CACHE[key] = df
-        return df
-
-    _CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-    def _cells_df(self, cells: np.ndarray, cache_key: str) -> DataFrame:
-        """Small broadcastable table of distinct cell ids (session-cached)."""
-        key = (id(self.spark), self.polyset.cache_token, self.grid, cache_key)
-        hit = self._CELLS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        df = (
-            self.spark.createDataFrame(
-                pd.DataFrame({"cell_id": np.unique(cells).astype(np.int64)}),
-                schema=T.StructType(
-                    [T.StructField("cell_id", T.LongType(), False)]
-                ),
-            )
-            # same rationale as _pairs_df (r8): one-partition persisted
-            # literal — broadcast builds collect one task from cache
-            # instead of re-parsing python-serialized partitions
-            .coalesce(1)
-            .persist()
-        )
-        if len(self._CELLS_CACHE) > 64:
-            for old in self._CELLS_CACHE.values():
-                try:
-                    old.unpersist(blocking=False)
-                except Exception:
-                    pass
-            self._CELLS_CACHE.clear()
-        self._CELLS_CACHE[key] = df
         return df
 
     def with_cell(self, points: DataFrame) -> DataFrame:
@@ -472,66 +423,11 @@ class SpatialJoin:
 
         return df.filter(_pip(F.col(self.x), F.col(self.y), F.col("poly_id")))
 
-    def pip_col(self, poly_id_col: Column) -> Column:
-        """Exact ray-cast PIP as a PURE JVM column expression: for each
-        polygon an unrolled crossing-parity sum (identical IEEE op order
-        as geo/pip.py and the SQL oracle), dispatched by poly_id through
-        a CASE chain. Whole-stage-codegen'd — no python anywhere. Viable
-        for collections up to a few hundred polygons (expression size
-        grows as polys x edges; codegen splits long methods) — GUARDED:
-        raises above PIP_COL_MAX_POLYS, where the CASE chain's linear
-        dispatch and expression-tree size make it strictly worse than the
-        Arrow kernel (callers like hybrid_join(fused="jvm") fall back
-        automatically)."""
-        if self.polyset.n_polys > PIP_COL_MAX_POLYS:
-            raise ValueError(
-                f"pip_col unrolls one CASE branch per polygon: "
-                f"{self.polyset.n_polys} polygons exceeds the "
-                f"{PIP_COL_MAX_POLYS}-polygon viability bound (linear "
-                "CASE dispatch per row + codegen tree blowup). Use the "
-                "Arrow PIP kernel (hybrid_join fused=True / index_join)."
-            )
-        x = F.col(self.x).cast("double")
-        y = F.col(self.y).cast("double")
-        result: Column | None = None
-        for p in range(self.polyset.n_polys):
-            v = self.polyset.poly_verts(p)
-            nv = len(v)
-            if nv < 3:
-                inside = F.lit(False)
-            else:
-                acc: Column | None = None
-                for i in range(nv):
-                    j = (i - 1) % nv
-                    vix, viy = float(v[i, 0]), float(v[i, 1])
-                    vjx, vjy = float(v[j, 0]), float(v[j, 1])
-                    straddle = (F.lit(viy) > y) != (F.lit(vjy) > y)
-                    xcross = (
-                        F.lit(vjx - vix) * (y - F.lit(viy)) / F.lit(vjy - viy)
-                        + F.lit(vix)
-                    )
-                    term = F.when(straddle & (x < xcross), F.lit(1)).otherwise(F.lit(0))
-                    acc = term if acc is None else acc + term
-                inside = acc % 2 == 1
-            result = (
-                F.when(poly_id_col == p, inside)
-                if result is None
-                else result.when(poly_id_col == p, inside)
-            )
-        assert result is not None
-        return result.otherwise(F.lit(False))
-
-    def _cell_partials(
-        self, points: DataFrame, agg: AggSpec, grid: GridSpec | None = None
-    ) -> DataFrame:
+    def _cell_partials(self, points: DataFrame, agg: AggSpec) -> DataFrame:
         """Point 'rasterization': per-cell partial aggregates
         (RasterJoin.cpp:215-221's additive-blend canvas as a hash agg
-        with map-side combine). ``grid`` overrides the keying grid (the
-        split plan keys on the internal classification grid)."""
-        g = grid or self.grid
-        pts = points.withColumn(
-            "cell_id", g.cell_id_col(F.col(self.x), F.col(self.y))
-        ).filter(F.col("cell_id").isNotNull())
+        with map-side combine)."""
+        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
         sum_col = (
             F.sum(F.col(agg.col)).alias("_sum")
             if agg.col
@@ -539,18 +435,13 @@ class SpatialJoin:
         )
         return pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("_cnt"), sum_col)
 
-    def _finalize(
-        self, assigned: DataFrame, agg: AggSpec, include_zero: bool = True
+    def _densify(
+        self, out: DataFrame, agg: AggSpec, include_zero: bool
     ) -> DataFrame:
-        """groupBy(poly_id) final aggregation + densify to all polygons
-        (the reference emits every polygon position 0..N-1,
-        RasterJoin/main.cpp:202-224)."""
-        if agg.op == "count":
-            out = assigned.groupBy("poly_id").agg(F.count(F.lit(1)).alias(agg.alias))
-        elif agg.op == "sum":
-            out = assigned.groupBy("poly_id").agg(F.sum(agg.col).alias(agg.alias))
-        else:  # avg
-            out = assigned.groupBy("poly_id").agg(F.avg(agg.col).alias(agg.alias))
+        """Densify a per-polygon result to every polygon position
+        0..N-1, as the reference emits (RasterJoin/main.cpp:202-224):
+        empty polygons get 0 for COUNT and NULL for SUM/AVG.
+        ``include_zero=False`` returns ``out`` as is."""
         if not include_zero:
             return out
         all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
@@ -560,6 +451,19 @@ class SpatialJoin:
         return all_polys.join(F.broadcast(out), "poly_id", "left").select(
             "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
         )
+
+    def _finalize(
+        self, assigned: DataFrame, agg: AggSpec, include_zero: bool = True
+    ) -> DataFrame:
+        """groupBy(poly_id) final aggregation over (point, poly) rows,
+        then :meth:`_densify`."""
+        if agg.op == "count":
+            out = assigned.groupBy("poly_id").agg(F.count(F.lit(1)).alias(agg.alias))
+        elif agg.op == "sum":
+            out = assigned.groupBy("poly_id").agg(F.sum(agg.col).alias(agg.alias))
+        else:  # avg
+            out = assigned.groupBy("poly_id").agg(F.avg(agg.col).alias(agg.alias))
+        return self._densify(out, agg, include_zero)
 
     # --------------------------------------------------------- strategies
 
@@ -577,16 +481,13 @@ class SpatialJoin:
         return self._finalize(exact, agg, include_zero)
 
     def assign_polygons(
-        self, points: DataFrame, cols: Iterable[str] = ("url",), fused: bool = True
+        self, points: DataFrame, cols: Iterable[str] = ("url",)
     ) -> DataFrame:
         """Per-point polygon assignment (the north_star's per-point tile
         assignment output): exact hybrid-path resolution, one row per
-        (point, containing polygon). The fused form emits pairs from one
-        Arrow pass (no JVM pair materialization + re-filter)."""
-        if fused:
-            return self._fused_pairs(points, list(cols))
-        pairs = self._exact_pairs(points)
-        return pairs.select(*cols, "cell_id", "poly_id")
+        (point, containing polygon), emitted from one Arrow pass
+        (:meth:`_fused_pairs`)."""
+        return self._fused_pairs(points, list(cols))
 
     def _fused_pairs(self, points: DataFrame, cols: list[str]) -> DataFrame:
         """One mapInArrow pass: per batch, interior memberships via CSR
@@ -657,587 +558,35 @@ class SpatialJoin:
             src = src.coalesce(2 * target)
         return src.mapInArrow(fn, schema)
 
-    def _exact_pairs(self, points: DataFrame, jvm_pip: bool = False) -> DataFrame:
-        """Hybrid-path exact (point, poly) pairs: interior cells skip PIP
-        (hybrid.glsl:224-301's non-border fast path), boundary cells get
-        the exact kernel (isBorder branch, hybrid.glsl:173-185) — either
-        the Arrow numpy kernel or the all-JVM unrolled expression.
-        Membership joins key on the internal classification grid; the
-        exposed cell_id column stays the caller's grid."""
-        t = self.cls_tables
-        int_c, int_p = t.interior_pairs()
-        b_c, b_p, _, _ = t.boundary_pairs()
-        interior = self._pairs_df(int_c, int_p, cache_key=self._ck("interior"))
-        boundary = self._pairs_df(b_c, b_p, cache_key=self._ck("boundary"))
-
-        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
-        if self.refine_k > 1:
-            pts = pts.withColumn(
-                "_rcell", self.cls_grid.cell_id_col(F.col(self.x), F.col(self.y))
-            )
-            interior = interior.withColumnRenamed("cell_id", "_rcell")
-            boundary = boundary.withColumnRenamed("cell_id", "_rcell")
-            key = "_rcell"
-        else:
-            key = "cell_id"
-        fast = pts.join(F.broadcast(interior), key, "inner")
-        slow = pts.join(F.broadcast(boundary), key, "inner")
-        if jvm_pip:
-            slow = slow.filter(self.pip_col(F.col("poly_id")))
-        else:
-            slow = self._pip_filter(slow)
-        out = fast.unionByName(slow)
-        return out.drop("_rcell") if self.refine_k > 1 else out
-
-    def _sampled_boundary_fraction(
-        self, points: DataFrame, fraction: float = 0.01, seed: int = 7
-    ) -> float:
-        """Point-weighted boundary share from a sampled scan: a
-        ``fraction`` sample of the input broadcast-joins a per-cell
-        (boundary pairs, total pairs) table derived from the
-        classification grid, and the estimate is sum(nb)/sum(nt) — i.e.
-        each sampled point weighs its cell's pairs. Weighting by where
-        the POINTS are, not where the cells are, keeps hot-boundary-cell
-        skew from fooling the plan auto-select (round-4 verdict item 5):
-        the fixture's NYC-style hot box puts 30% of points in a handful
-        of cells, and when those are boundary cells the pure pair-count
-        ratio underestimates the true PIP share severalfold. One tiny
-        scalar aggregate — no driver-side histogram, scale-independent.
-        Falls back to the data-independent pair-count ratio when the
-        sample misses every covered cell. A sample that lands fewer than
-        ``MIN_SAMPLE_PTS`` covered points is noise (a 1%% draw over a
-        small test input can be ~40 points), so the estimate re-runs as
-        a full scan — the input is memory-cached whenever this runs (the
-        auto rule's precondition), so the retry is one cheap cached
-        pass and only small inputs ever take it."""
-        wkey = (id(self.spark), self.polyset.cache_token, self.grid, self._ck("wdf"))
-        wdf = self._PAIRS_CACHE.get(wkey)
-        if wdf is None:
-            t = self.cls_tables
-            uniq, inv = np.unique(t.cls_cell, return_inverse=True)
-            nt = np.bincount(inv, minlength=len(uniq)).astype(np.float64)
-            nb = np.bincount(
-                inv,
-                weights=(t.cls_kind == BOUNDARY).astype(np.float64),
-                minlength=len(uniq),
-            )
-            wdf = self.spark.createDataFrame(
-                pd.DataFrame(
-                    {"cell_id": uniq.astype(np.int64), "_nb": nb, "_nt": nt}
-                ),
-                schema=T.StructType(
-                    [
-                        T.StructField("cell_id", T.LongType(), False),
-                        T.StructField("_nb", T.DoubleType(), False),
-                        T.StructField("_nt", T.DoubleType(), False),
-                    ]
-                ),
-            )
-            while len(self._PAIRS_CACHE) >= 64:  # LRU: evict coldest only
-                self._PAIRS_CACHE.pop(next(iter(self._PAIRS_CACHE)))
-            self._PAIRS_CACHE[wkey] = wdf
-
-        def _scan(fr: float):
-            src = points if fr >= 1.0 else points.sample(fraction=fr, seed=seed)
-            return (
-                src.withColumn(
-                    "cell_id",
-                    self.cls_grid.cell_id_col(F.col(self.x), F.col(self.y)),
-                )
-                .join(F.broadcast(wdf), "cell_id", "inner")
-                .agg(
-                    F.sum("_nb").alias("nb"),
-                    F.sum("_nt").alias("nt"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()[0]
-            )
-
-        row = _scan(fraction)
-        if row["n"] < self.MIN_SAMPLE_PTS and fraction < 1.0:
-            row = _scan(1.0)
-        if not row["nt"]:
-            # sample missed every covered cell: fall back to the
-            # data-independent pair-count ratio (self.cls_tables, NOT a
-            # local from the cache-miss branch — the weight table is
-            # usually served from _PAIRS_CACHE and that branch never ran)
-            return self.cls_tables.boundary_fraction()
-        return float(row["nb"]) / float(row["nt"])
-
     def hybrid_join(
         self,
         points: DataFrame,
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
-        fused: bool = True,
-        coord_transfer: str | None = None,
-        stats: dict | None = None,
     ) -> DataFrame:
         """J3 accurate: interior fast path + boundary exact refinement.
         Result is identical to index_join; only the physical plan differs
-        (PIP runs on boundary-cell points only).
-
-        The gate queries and the bench run ``fused="auto"``, which since
-        r7 picks the HIERARCHICAL SPLIT plan for partial-aggregable ops
-        (count/sum/avg): interior membership resolves through chained
-        per-level broadcast hashmap probes entirely JVM-side, and only
-        the ~2% of points the boundary-only quadtree leaves unresolved
-        cross the Arrow boundary. The keyword's literal values select
-        explicit plans: ``fused=True`` (the signature default, kept for
-        API compatibility) is the one-pass fused mapInArrow
-        partial-vector kernel; ``fused="split"`` forces the split plan
-        (it scans the input TWICE — interior chain and boundary
-        semi-join are separate consumers); ``fused=False`` keeps the
-        pair-materializing broadcast-join plan (same rows, useful for
-        plan comparison and per-point outputs). All variants return
-        identical results.
-
-        Hierarchical-split exactness additionally assumes INTEGRAL point
-        coordinates (the engine's canonical integer-microdegree space,
-        exact in float64): the multi-level floor-nesting argument in
-        ``_hier_ok`` bounds rounding against cell edges at binary
-        fractions, which a non-integral coordinate within ~1 ulp of a
-        refined cell edge could violate (ADVICE r7). Callers feeding
-        non-integral coords should pass ``fused=True`` (the fused kernel
-        and single-level split carry no such data precondition).
-
-        ``fused="auto"`` applies the measured decision rule, re-derived
-        in round 7 (BENCH/split_ab.jsonl): for partial-aggregable ops
-        the HIERARCHICAL split is the plan — the boundary-only quadtree
-        refinement drops the Arrow-fed share to ~2% of points (1.97%
-        on the bench fixture vs 34.5% on its classification grid), and
-        with the r7 direct-probe interior (no per-cell partial agg)
-        split beat the fused kernel on UNCACHED input at the 1.6B-row
-        stratum (recorded best-of-3: 17.2s vs 20.8s, local[32]; the
-        round-3 rule's "split loses uncached" was an artifact of the
-        old groupBy(cell_id) interior and the flat k-refinement's giant
-        probe maps). The fused one-pass kernel remains for non-hier-
-        safe geometries (non-dyadic grids fall back inside _split_agg
-        to the single-level split, still exact) and as the explicit
-        ``fused=True`` plan.
-
-        ``stats`` (optional dict) records the decision:
-        {"plan": "fused"|"split"|"pairs"|"jvm", "refine_k": int}."""
-        if fused == "auto":
-            if agg.op in ("count", "sum", "avg"):
-                fused = "split"
-            else:
-                # non-partial-aggregable op: the pair-materializing plan
-                # is the only executor — normalize so stats['plan']
-                # records the plan actually run, never the literal "auto"
-                fused = False
-        if stats is not None:
-            stats["plan"] = (
-                fused if isinstance(fused, str) else ("fused" if fused else "pairs")
-            )
-            stats["refine_k"] = self.refine_k
-        if fused == "split" and agg.op in ("count", "sum", "avg"):
-            return self._split_agg(points, agg, include_zero, coord_transfer)
-        if fused == "jvm":
-            # all-JVM exact plan: interior broadcast join + boundary
-            # broadcast join filtered by the unrolled PIP expression.
-            # Zero python operators — but measured ~3x SLOWER than the
-            # Arrow kernel path (giant CASE expression trees evaluate
-            # poorly); kept as the no-python fallback for environments
-            # without Arrow workers, not as the default. Above the
-            # pip_col viability bound the unrolled expression is not
-            # even constructible — fall back to the fused Arrow kernel.
-            if self.polyset.n_polys > PIP_COL_MAX_POLYS:
-                import warnings
-
-                warnings.warn(
-                    f"fused='jvm' unavailable for {self.polyset.n_polys} "
-                    f"polygons (> {PIP_COL_MAX_POLYS}); falling back to "
-                    "the fused Arrow kernel",
-                    stacklevel=2,
-                )
-            else:
-                return self._finalize(
-                    self._exact_pairs(points, jvm_pip=True), agg, include_zero
-                )
-        if fused and agg.op in ("count", "sum", "avg"):
-            return self._fused_agg(points, agg, include_zero, coord_transfer)
-        return self._finalize(self._exact_pairs(points), agg, include_zero)
-
-    # --------------------------- hierarchical boundary-only refinement
-    #
-    # The split plan's Arrow share is the point mass in BOUNDARY cells of
-    # the classification grid (34.5% of points on the bench fixture).
-    # Uniform k-refinement shrinks it but grows the interior probe map
-    # k^2-fold (a full k=64 cover of the fixture grid would be ~90M
-    # cells). The hierarchy refines ONLY the previous level's boundary
-    # (cell, poly) pairs — a quadtree-style adaptive split: map sizes
-    # grow with the polygon PERIMETER (O(P*k)) instead of the area
-    # (O(A*k^2)), so two x8 levels reach k=64-equivalent boundary
-    # thinness (1.97% of points on the bench fixture) with interior
-    # maps of 38k/317k pairs (fixture levels 228x96 -> 1824x768 ->
-    # 14592x6144).
-
-    HIER_FACTORS: tuple[int, ...] = (8, 8)
-    HIER_PAIR_BUDGET = 16_000_000  # stop refining past this pair count
-
-    def _hier_ok(self) -> bool:
-        """Exactness precondition for the hierarchical descent: the
-        chained left joins rely on cell NESTING — floor((v-o)/(w/f))
-        // f == floor((v-o)/w) for every data value v. With integral
-        microdegree coordinates (the engine's canonical space, exact in
-        f64) and cell sizes that stay exact multiples of 2^-16 at every
-        level, both floors are exact: cell edges sit at multiples of
-        p/2^16, whose distance from any non-coincident integer v is
-        >= 2^-16 ~= 1.5e-5, while the single correctly-rounded IEEE
-        divide perturbs the quotient by <= 0.5 ulp (~6e-12 at the
-        deepest grid's quotient magnitudes) — five orders of magnitude
-        of margin, so a floor can never flip across a level. Grids
-        whose refined cells leave that binary-fraction family (or f32
-        parity mode, whose decisions are pinned single-level) fall back
-        to the single-level split — still exact, just a fatter Arrow
-        share."""
-        if np.dtype(self.dtype) != np.float64:
-            return False  # f32 parity mode pins single-level decisions
-        if not (float(self.grid.x0).is_integer() and float(self.grid.y0).is_integer()):
-            return False
-        w, h = self.cls_grid.cell_w, self.cls_grid.cell_h
-        for f in self.HIER_FACTORS:
-            w, h = w / f, h / f
-            if not (float(w * 65536).is_integer() and float(h * 65536).is_integer()):
-                return False
-        return True
-
-    _HIER_CACHE: dict[tuple, list] = {}
-
-    def _hier_levels(self) -> list[tuple[GridSpec, np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
-        """Per level: (grid, interior_cells, interior_polys,
-        boundary_cells, boundary_polys). Level 0 is the instance's
-        classification tables; level i+1 classifies the f x f children
-        of level i's boundary pairs only (geo/classify.classify_pairs).
-        Driver-side numpy, memoized per (collection, grid, factors)."""
-        key = (
-            self.polyset.cache_token,
-            self.grid,
-            self.refine_k,
-            self.HIER_FACTORS,
-        )
-        hit = self._HIER_CACHE.get(key)
-        if hit is not None:
-            return hit
-        t = self.cls_tables
-        int_c, int_p = t.interior_pairs()
-        b_c, b_p, _, _ = t.boundary_pairs()
-        levels = [(self.cls_grid, int_c, int_p, b_c, b_p)]
-        g = self.cls_grid
-        for f in self.HIER_FACTORS:
-            if len(b_c) == 0 or len(b_c) * f * f > self.HIER_PAIR_BUDGET:
-                break
-            gc = g.refined(f)
-            pgx = b_c % g.nx
-            pgy = b_c // g.nx
-            dx = np.tile(np.arange(f, dtype=np.int64), f)
-            dy = np.repeat(np.arange(f, dtype=np.int64), f)
-            cgx = (pgx[:, None] * f + dx[None, :]).ravel()
-            cgy = (pgy[:, None] * f + dy[None, :]).ravel()
-            cpoly = np.repeat(b_p, f * f)
-            kind = classify_pairs(gc, self.polyset, cpoly, cgx, cgy)
-            cells = cgx + gc.nx * cgy
-            mi = kind == INTERIOR
-            mb = kind == BOUNDARY
-            levels.append((gc, cells[mi], cpoly[mi], cells[mb], cpoly[mb]))
-            g, b_c, b_p = gc, cells[mb], cpoly[mb]
-        if len(self._HIER_CACHE) > 16:
-            self._HIER_CACHE.clear()
-        self._HIER_CACHE[key] = levels
-        return levels
-
-    def _hier_join_maps(self) -> list[tuple[GridSpec, DataFrame]]:
-        """The interior chain's probe maps, one BROADCAST join per map,
-        ONE map per level — smallest map first.
-
-        Per-row probe cost is dominated by the probe map's cache
-        residency, not the join count: the level-0 map is tiny (5.3k
-        entries on the bench fixture — L1/L2-cache resident) and
-        resolves the ~65% of rows in level-0 interior cells outright,
-        so only descending rows ever touch the bigger deep maps. An
-        alternative that MERGED level 0's interior pairs (expanded x64)
-        into level 1's map to save one join was measured ~1.7x slower
-        at the 1.6B stratum (11.5s vs 6.9s interior chain,
-        BENCH/split_ab.jsonl variant rows): every row paid a 298k-entry
-        probe where most needed only the tiny one. Map rows are
-        (cell_id, poly_id) with poly_id = -1 MARKER rows ('descend to
-        the next level') for the level's distinct boundary cells; the
-        deepest map carries no markers — unresolved rows are the
-        boundary sink's job (_split_agg routes them by the staged
-        boundary semi-joins). Single-level instances get one
-        marker-free interior map on the classification grid."""
-        levels = self._hier_levels() if self._hier_ok() else None
-        if levels is None or len(levels) == 1:
-            t = self.cls_tables
-            ic, ip = t.interior_pairs()
-            return [
-                (
-                    self.cls_grid,
-                    self._pairs_df(ic, ip, cache_key=self._ck("hierm0-flat")),
-                )
-            ]
-        out: list[tuple[GridSpec, DataFrame]] = []
-        for j, (g, ic, ip, bc, _) in enumerate(levels):
-            cells = [ic]
-            polys = [ip]
-            if j < len(levels) - 1:
-                mark = np.unique(bc)
-                cells.append(mark)
-                polys.append(np.full(len(mark), -1, np.int64))
-            out.append(
-                (
-                    g,
-                    self._pairs_df(
-                        np.concatenate(cells),
-                        np.concatenate(polys),
-                        cache_key=self._ck(f"hierm{j}v2|{self.HIER_FACTORS}"),
-                    ),
-                )
-            )
-        return out
-
-    def _bc_art_hier(self, levels) -> object:
-        """Broadcast kernel artifact for the hierarchical split's Arrow
-        stage: the DEEPEST level's boundary-pair CSR (sparse-keyed; deep
-        grids exceed the dense-index bound) — exactly the pairs the JVM
-        chain could not resolve, so kernel PIP neither double-counts a
-        JVM-resolved (point, poly) nor misses an unresolved one."""
-        key = (
-            id(self.spark),
-            self.polyset.cache_token,
-            self.grid,
-            np.dtype(self.dtype).char,
-            self.refine_k,
-            "hier",
-            self.HIER_FACTORS,
-        )
-        bc = self._BC_CACHE.pop(key, None)
-        if bc is not None:
-            self._BC_CACHE[key] = bc
-            return bc
-        deep_grid, _, _, b_c, b_p = levels[-1]
-        bc = self.spark.sparkContext.broadcast(
-            {
-                "interior": None,
-                "boundary": _cell_csr(b_c, b_p, deep_grid.n_cells),
-                "verts": self.polyset.verts,
-                "offsets": self.polyset.offsets,
-            }
-        )
-        while len(self._BC_CACHE) >= self._BC_CACHE_MAX:
-            old = self._BC_CACHE.pop(next(iter(self._BC_CACHE)))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._BC_CACHE[key] = bc
-        return bc
-
-    def _split_agg(
-        self,
-        points: DataFrame,
-        agg: AggSpec,
-        include_zero: bool,
-        coord_transfer: str | None = None,
-    ) -> DataFrame:
-        """Split plan — minimum Arrow traffic for exact results.
-
-        Interior-cell contributions never touch Python: each point
-        probes a chain of broadcast (cell, poly) hashmaps — level 0 the
-        classification grid, each further level the boundary-only x8
-        refinement of the previous one (see HIER_FACTORS notes above) —
-        and feeds a P-key map-side-combined groupBy. EXACT semantics,
-        because an interior cell's points all belong to the polygon by
-        construction. Only points still unresolved after the deepest
-        level (in cells the quadtree could not classify either way,
-        ~2% of points on the bench fixture vs 67% single-level) cross
-        the Arrow boundary for the PIP kernel, against exactly the
-        unresolved (cell, poly) pairs. The python stage — the
-        per-row-priciest link (BENCH/hybrid_rootcause.md) — shrinks by
-        that factor, and the whole plan scales like the pure-JVM
-        raster join.
-
-        r7 rework (recorded A/B: BENCH/split_ab.jsonl): r3-r6
-        pre-aggregated per CELL (groupBy(cell_id) partials, the raster
-        plan's shape) before the interior join. Fine on the base grid
-        (22k cells), but on a k-refined classification grid the
-        per-task hash agg keys on MILLIONS of cells and dominated the
-        stage — the reason the r3-r6 auto rule kept the fused kernel
-        on uncached input. Direct per-row probes into small broadcast
-        hashmaps + a P-key agg are cardinality-independent: whole-stage
-        codegen, no shuffle wider than P rows per task.
-        """
-        hier = self._hier_ok()
-        levels = self._hier_levels() if hier else None
-
-        # chained LEFT joins (_hier_join_maps): key_i is the level-i
-        # cell id WHEN the row is still descending (marker match at
-        # level i-1), else NULL (null keys never match — a resolved row
-        # passes the remaining joins untouched, so each (point, poly)
-        # contribution appears exactly once)
-        chained = points
-        poly_cols: list[Column] = []
-        descending: Column | None = None
-        for i, (g, mdf) in enumerate(self._hier_join_maps()):
-            m = mdf.select(
-                F.col("cell_id").alias(f"_hc{i}"), F.col("poly_id").alias(f"_hp{i}")
-            )
-            cell = g.cell_id_col(F.col(self.x), F.col(self.y))
-            key = cell if descending is None else F.when(descending, cell)
-            chained = chained.join(F.broadcast(m), key == F.col(f"_hc{i}"), "left")
-            poly_cols.append(F.when(F.col(f"_hp{i}") >= 0, F.col(f"_hp{i}")))
-            descending = F.col(f"_hp{i}") == -1
-
-        sum_col = (
-            F.sum(F.col(agg.col)).alias("_sum")
-            if agg.col
-            else F.lit(None).cast("double").alias("_sum")
-        )
-        jvm_part = (
-            chained.withColumn("poly_id", F.coalesce(*poly_cols))
-            .filter(F.col("poly_id").isNotNull())
-            .groupBy("poly_id")
-            .agg(F.count(F.lit(1)).alias("_cnt"), sum_col)
-        )
-        # Boundary sink: membership probes on the boundary-cell sets —
-        # no marker chain needed, because nesting makes descent
-        # implicit: a deep cell is in the deep set iff its whole
-        # ancestry stayed boundary, so membership alone selects exactly
-        # the rows the chain would have routed down. The probe is
-        # STAGED (penultimate level's boundary set first, then the
-        # deepest): the mid set is an order of magnitude smaller —
-        # cache-resident — and its semi-join discards ~88% of rows
-        # before they ever touch the big deep set, which cut the
-        # boundary leg 8.3s -> 6.8s at the 1.6B stratum
-        # (BENCH/split_ab.jsonl variant rows). Subset precondition
-        # (deep boundary cells lie under mid boundary cells) holds by
-        # construction — each level refines only the previous level's
-        # boundary pairs — and is pinned by a unit test.
-        # (A one-scan variant that rode the boundary rows through the
-        # interior aggregation as bucketed collect_list payloads was
-        # measured SLOWER at the 1.6B stratum: ObjectHashAggregate
-        # breaks whole-stage codegen, charging interpreted per-row cost
-        # on the FULL input, not just the 2% boundary. At rest the
-        # second scan is one extra column-pruned parquet pass (x, y
-        # only); measured on this host a full 1.6B-row scan costs ~1s
-        # of the plan's ~13s, so scan count is NOT the split plan's
-        # cost driver — probe work is. A cell-RANGE-clustered layout
-        # could additionally file-skip non-boundary tiles on this scan;
-        # TileStore's hash cell_buckets deliberately trade that for
-        # write balance, so no such pruning is claimed here.)
-        bpts = points
-        if hier and len(levels) > 1:
-            deep_grid, deep_bcells = levels[-1][0], levels[-1][3]
-            art_bc, grid_override = self._bc_art_hier(levels), levels[-1][0]
-            mid_grid, mid_bcells = levels[-2][0], levels[-2][3]
-            mcells = self._cells_df(
-                mid_bcells, cache_key=self._ck(f"hiermidb|{self.HIER_FACTORS}")
-            )
-            bpts = bpts.join(
-                F.broadcast(mcells.select(F.col("cell_id").alias("_midbc"))),
-                mid_grid.cell_id_col(F.col(self.x), F.col(self.y))
-                == F.col("_midbc"),
-                "left_semi",
-            )
-        else:
-            deep_grid = self.cls_grid
-            deep_bcells = self.cls_tables.boundary_pairs()[0]
-            art_bc = grid_override = None
-        bcells = self._cells_df(
-            deep_bcells, cache_key=self._ck(f"hierbcells|{self.HIER_FACTORS}")
-        )
-        bpts = (
-            bpts.withColumn(
-                "cell_id", deep_grid.cell_id_col(F.col(self.x), F.col(self.y))
-            )
-            .filter(F.col("cell_id").isNotNull())
-            .join(F.broadcast(bcells), "cell_id", "left_semi")
-        )
-        py_part = self._arrow_partials(
-            bpts,
-            agg,
-            use_interior=False,
-            coord_transfer=coord_transfer,
-            art_bc=art_bc,
-            grid_override=grid_override,
-        )
-        partials = jvm_part.unionByName(py_part)
-        out = partials.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
-            "id", "poly_id"
-        )
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
+        (PIP runs on boundary-cell points only). There is one plan, the
+        one-pass :meth:`_fused_agg` kernel; it takes coordinates as
+        float64 and carries no precondition on their values."""
+        return self._fused_agg(points, agg, include_zero)
 
     def _fused_agg(
-        self,
-        points: DataFrame,
-        agg: AggSpec,
-        include_zero: bool,
-        coord_transfer: str | None = None,
+        self, points: DataFrame, agg: AggSpec, include_zero: bool
     ) -> DataFrame:
         """One-pass exact aggregation — the plan we'd run at 100 TB.
 
-        mapInPandas over (x, y[, val]): per Arrow batch, resolve interior
+        mapInArrow over (x, y[, val]): per Arrow batch, resolve interior
         membership by CSR lookup of the cell, boundary membership by the
         exact PIP kernel, and emit a PARTIAL per-polygon vector (<=P rows
         per batch). The exchange then carries #batches x P rows instead of
         O(points) pair rows — the reference's per-thread partial vectors
         (CPUJoin/CPUJoin.cpp:93-116) in Spark clothes. No JVM-side pair
-        materialization, half the Arrow traffic of the join plan.
-
-        ``coord_transfer`` ("int" | "float" | "packed" | None): the
-        Arrow feed is the bandwidth-dominant term at full machine width,
-        so a caller who KNOWS the coordinates are losslessly
-        representable in a narrower type (e.g. integer microdegrees, the
-        engine's canonical coordinate space, fit int32 exactly) can
-        halve the transfer bytes ("int"), or additionally halve the
-        per-row FIELD count ("packed": both int32 coords in one int64
-        column — Spark's MapInBatch wrap cost is per field, see
-        BENCH/hybrid_rootcause.md); the kernel always widens back to
-        float64, so results are bit-identical. Default None transfers
-        the column's own type.
+        materialization. Membership resolves on the internal
+        classification grid (refine_k).
         """
-        partials = self._arrow_partials(
-            points, agg, use_interior=True, coord_transfer=coord_transfer
-        )
-        n_polys = self.polyset.n_polys
-        out = partials.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(n_polys).withColumnRenamed("id", "poly_id")
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
-
-    def _arrow_partials(
-        self,
-        points: DataFrame,
-        agg: AggSpec,
-        use_interior: bool,
-        coord_transfer: str | None = None,
-        art_bc=None,
-        grid_override: GridSpec | None = None,
-    ) -> DataFrame:
-        """The Arrow-batched partial-vector kernel stage: (poly_id, _cnt,
-        _sum) rows, <= n_polys per input batch. ``use_interior=False``
-        is the split plan's boundary-only variant (the caller already
-        resolved interior cells JVM-side). Membership resolves on the
-        internal classification grid (refine_k) unless the caller ships
-        its own artifact + grid (``art_bc``/``grid_override``: the
-        hierarchical split's deepest-level boundary CSR)."""
-        # the shared memoized artifact always carries the interior CSR;
-        # the split plan's boundary-only variant just ignores it (the
-        # shared broadcast amortizes across plans, which beats shipping
-        # a second, slightly smaller artifact)
-        bc = art_bc if art_bc is not None else self._bc_art()
-        grid = grid_override if grid_override is not None else self.cls_grid
+        bc = self._bc_art()
+        grid = self.cls_grid
         dtype = self.dtype
         n_polys = self.polyset.n_polys
         x_name, y_name = self.x, self.y
@@ -1282,26 +631,14 @@ class SpatialJoin:
             verts, offsets = art["verts"], art["offsets"]
             for rb in batches:
                 names = rb.schema.names
-                if "_xy" in names:
-                    # packed transfer: ONE int64 column carries both int32
-                    # coords — Spark's MapInBatch wrap pays per FIELD, so
-                    # one field halves the dominant per-row feed cost;
-                    # unpack is two vectorized shifts (sign-extending)
-                    xy = np.asarray(
-                        rb.column(names.index("_xy")).to_numpy(zero_copy_only=False),
-                        dtype=np.int64,
-                    )
-                    x = ((xy << 32) >> 32).astype(np.float64)
-                    y = (xy >> 32).astype(np.float64)
-                else:
-                    x = np.asarray(
-                        rb.column(names.index(x_name)).to_numpy(zero_copy_only=False),
-                        dtype=np.float64,
-                    )
-                    y = np.asarray(
-                        rb.column(names.index(y_name)).to_numpy(zero_copy_only=False),
-                        dtype=np.float64,
-                    )
+                x = np.asarray(
+                    rb.column(names.index(x_name)).to_numpy(zero_copy_only=False),
+                    dtype=np.float64,
+                )
+                y = np.asarray(
+                    rb.column(names.index(y_name)).to_numpy(zero_copy_only=False),
+                    dtype=np.float64,
+                )
                 val = (
                     np.asarray(
                         rb.column(names.index(agg_col)).to_numpy(zero_copy_only=False),
@@ -1334,12 +671,11 @@ class SpatialJoin:
                         out = np.bincount(polys, weights=vals, minlength=n_polys)
                         sm[:] += out.astype(np.int64) if integral else out
 
-                if use_interior:
-                    rows_i, polys_i = _csr_expand(art["interior"], cells)
-                    if len(rows_i):
-                        cnt += np.bincount(polys_i, minlength=n_polys)
-                        if want_sum:
-                            acc_sum(polys_i, val[rows_i])
+                rows_i, polys_i = _csr_expand(art["interior"], cells)
+                if len(rows_i):
+                    cnt += np.bincount(polys_i, minlength=n_polys)
+                    if want_sum:
+                        acc_sum(polys_i, val[rows_i])
 
                 rows_b, polys_b = _csr_expand(art["boundary"], cells)
                 if len(rows_b):
@@ -1368,24 +704,12 @@ class SpatialJoin:
         # unless the input is already coarser. On a real cluster this is
         # executors*cores; tasks then stream many Arrow batches each.
         target = max(self.spark.sparkContext.defaultParallelism, 1)
-        if coord_transfer == "packed":
-            # both int32-exact coords in one int64: y in the high word,
-            # x (two's-complement) in the low — see the unpack in fn()
-            xy = F.shiftleft(F.col(y_name).cast("long"), 32).bitwiseOR(
-                F.col(x_name).cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
-            )
-            src = points.select(xy.alias("_xy"), *cols[2:])
-        elif coord_transfer:
-            src = points.select(
-                F.col(x_name).cast(coord_transfer).alias(x_name),
-                F.col(y_name).cast(coord_transfer).alias(y_name),
-                *cols[2:],
-            )
-        else:
-            src = points.select(*cols)
+        src = points.select(*cols)
         if src.rdd.getNumPartitions() > 2 * target:
             src = src.coalesce(2 * target)
-        return src.mapInArrow(fn, schema)
+        partials = src.mapInArrow(fn, schema)
+        out = partials.groupBy("poly_id").agg(*agg.exprs())
+        return self._densify(out, agg, include_zero)
 
     def raster_join(
         self,
@@ -1400,15 +724,7 @@ class SpatialJoin:
         cells = self._cell_partials(points, agg)
         per_poly = cells.join(F.broadcast(cover), "cell_id", "inner")
         out = per_poly.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
-            "id", "poly_id"
-        )
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
+        return self._densify(out, agg, include_zero)
 
     def error_bounds(self, points: DataFrame) -> DataFrame:
         """J4: raster count plus per-polygon error intervals.

@@ -167,11 +167,10 @@ class QueryEngine:
             return sj.raster_join(pts, self.agg)
         if fn == "index":
             return sj.index_join(pts, self.agg)
-        if fn == "hybrid":
+        if fn in ("hybrid", "cpu"):
+            # J5 (cpu): identical semantics; the fused plan IS the
+            # CPU-join shape (per-task partials + merge)
             return sj.hybrid_join(pts, self.agg)
-        if fn == "cpu":
-            # J5: identical semantics; the fused plan IS the CPU-join shape
-            return sj.hybrid_join(pts, self.agg, fused=True)
         if fn == "errorbounds":
             return sj.error_bounds(pts)
         raise ValueError(f"unknown join type {fn!r}")

@@ -72,36 +72,6 @@ def test_fused_hybrid_minimal_exchanges(spark, sf_dir, sj):
     assert n_shuffles <= 1, plan
 
 
-def test_split_plan_shape(spark, sf_dir, sj):
-    """Pin the hierarchical split plan (the fused='auto' default
-    accurate path since r7, r7-verdict item 2): every probe/membership
-    join is a BroadcastHashJoin (never a SortMergeJoin — a stats
-    regression silently shuffling the point side would only show up in
-    a bench round otherwise), the Arrow kernel appears exactly once
-    (the boundary sink), and the only hash exchanges are the two
-    partial-aggregation merges (interior chain + boundary union) plus
-    the final per-poly merge — never a point-wide shuffle."""
-    plan = plan_of(
-        sj.hybrid_join(points_df(spark, sf_dir), fused="auto", include_zero=False)
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert "ShuffledHashJoin" not in plan, plan
-    # 3 chained probe maps + staged boundary semi-joins, all broadcast
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    # the boundary-only Arrow kernel, exactly once (count the numbered
-    # operator list — formatted explain also names each node in the tree)
-    import re
-
-    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
-    # aggregation-only exchanges: partial agg merges, bounded by P rows
-    # per task — a point-wide exchange would add hashpartitioning over
-    # point columns
-    n_shuffles = sum(
-        1 for l in plan.splitlines() if "Exchange hashpartitioning" in l
-    )
-    assert n_shuffles <= 3, plan
-
-
 def test_simhash_and_minhash_are_pure_jvm(spark):
     """The md5-derived hash family keeps minhash/simhash entirely inside
     whole-stage codegen — no Python operator may appear in their plans."""

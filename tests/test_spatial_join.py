@@ -128,6 +128,71 @@ def test_assign_polygons_row_for_row(spark, points_df, polyset, grid, random_poi
         assert idx[r["url"]] == r["cell_id"]
 
 
+def test_non_integral_coordinates_match_brute_force(spark):
+    """Every exact path against the numpy brute force on inputs off the
+    integer lattice: half-integer polygon vertices, points at fractional
+    positions, points exactly on cell edges, and points on polygon
+    vertices and edges. The first three points are the smallest case
+    that truncating the coordinates gets wrong: all three lie inside
+    the square [0.5, 5.5]^2, but (0.7, 0.7) truncates to (0, 0)."""
+    from raster_join_spark.geo.polygons import PolygonSet
+
+    polys = PolygonSet.from_list(
+        [
+            [(0.5, 0.5), (5.5, 0.5), (5.5, 5.5), (0.5, 5.5)],
+            [(7.5, 1.5), (13.5, 2.5), (9.5, 8.5)],
+            [(2.5, 9.5), (6.5, 7.5), (8.5, 12.5), (4.5, 14.5), (1.5, 12.5)],
+            [(11.5, 10.5), (17.5, 10.5), (17.5, 17.5), (14.5, 13.5), (11.5, 17.5)],
+        ]
+    )
+    grid = GridSpec(0.0, 0.0, 2.5, 2.5, 8, 8)  # cell edges at multiples of 2.5
+    rng = np.random.RandomState(41)
+    n = 1500
+    x = np.r_[
+        [0.7, 2.0, 5.3],
+        rng.uniform(0, 20, n),  # fractional positions
+        2.5 * rng.randint(0, 8, n // 3),  # on vertical cell edges
+        rng.uniform(0, 20, n // 3),
+        polys.verts[:, 0],  # on polygon vertices
+        np.repeat([0.5, 5.5, 11.5, 17.5], 5),  # on vertical polygon edges
+    ]
+    y = np.r_[
+        [0.7, 2.0, 1.0],
+        rng.uniform(0, 20, n),
+        rng.uniform(0, 20, n // 3),
+        2.5 * rng.randint(0, 8, n // 3),  # on horizontal cell edges
+        polys.verts[:, 1],
+        np.tile([0.5, 2.25, 3.0, 5.5, 12.75], 4),
+    ]
+    val = rng.randint(0, 1000, len(x)).astype(np.int64)
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": [f"u{i}" for i in range(len(x))], "x": x, "y": y, "val": val})
+    )
+    cnt, sums = brute_counts(x, y, polys, val)
+    want_avg = np.where(cnt > 0, sums / np.where(cnt > 0, cnt, 1), np.nan)
+    pt_idx, poly_ids = pip_multi(x, y, polys.verts, polys.offsets)
+    cells = grid.cell_ids_np(x, y)
+    want_pairs = {(f"u{i}", int(cells[i]), int(p)) for i, p in zip(pt_idx, poly_ids)}
+    # the three repro points alone: 3 in the square, index and hybrid alike
+    sj = SpatialJoin(spark, polys, grid)
+    repro = spark.createDataFrame(pd.DataFrame({"x": x[:3], "y": y[:3]}))
+    for strategy in (sj.index_join, sj.hybrid_join):
+        got = strategy(repro).orderBy("poly_id").toPandas()["agg"].tolist()
+        assert got == [3, 0, 0, 0], strategy.__name__
+
+    for sj in (SpatialJoin(spark, polys, grid), SpatialJoin(spark, polys, grid, refine=4)):
+        for strategy in (sj.index_join, sj.hybrid_join):
+            got = strategy(df).orderBy("poly_id").toPandas()["agg"]
+            assert got.tolist() == cnt.tolist(), (strategy.__name__, sj.refine_k)
+        s = sj.hybrid_join(df, AggSpec("sum", "val")).orderBy("poly_id").toPandas()["agg"]
+        assert s.fillna(0).astype(np.int64).tolist() == sums.tolist()
+        a = sj.hybrid_join(df, AggSpec("avg", "val")).orderBy("poly_id").toPandas()["agg"]
+        assert np.array_equal(a.to_numpy(np.float64), want_avg, equal_nan=True)
+        rows = sj.assign_polygons(df).collect()
+        assert len(rows) == len(want_pairs)
+        assert {(r["url"], r["cell_id"], r["poly_id"]) for r in rows} == want_pairs
+
+
 # ----------------------------------------------------- raster + bounds
 
 
@@ -210,28 +275,6 @@ def test_coarse_scan_superset_then_exact(spark, points_df, polyset, grid, random
     assert n_exact_df == int(exact_mask.sum())
 
 
-def test_jvm_pip_mode_equals_fused(spark, points_df, polyset, grid, random_points):
-    """The all-JVM unrolled-PIP plan (fused='jvm') produces identical
-    results to the Arrow kernel plan."""
-    sj = SpatialJoin(spark, polyset, grid)
-    a = sj.hybrid_join(points_df).orderBy("poly_id").toPandas()
-    b = sj.hybrid_join(points_df, fused="jvm").orderBy("poly_id").toPandas()
-    assert a["agg"].tolist() == b["agg"].tolist()
-
-
-def test_split_mode_equals_fused(spark, points_df, polyset, grid):
-    """fused='split' (interior resolved JVM-side, only boundary-cell
-    points through Arrow) must match the one-pass kernel plan exactly
-    for count, sum and avg."""
-    from raster_join_spark.operators.spatial_join import AggSpec
-
-    sj = SpatialJoin(spark, polyset, grid)
-    for agg in (AggSpec(), AggSpec("sum", "val", "agg"), AggSpec("avg", "val", "agg")):
-        a = sj.hybrid_join(points_df, agg).orderBy("poly_id").toPandas()
-        b = sj.hybrid_join(points_df, agg, fused="split").orderBy("poly_id").toPandas()
-        assert a["agg"].tolist() == b["agg"].tolist(), agg.op
-
-
 def test_fused_sum_exact_above_2pow53(spark, polyset, grid):
     """Integral SUM stays bit-exact when values exceed float64's 2^53
     integer range: 2^55+1 is not float64-representable, so any float
@@ -258,107 +301,22 @@ def test_fused_sum_exact_above_2pow53(spark, polyset, grid):
     assert [None if pd.isna(v) else int(v) for v in got["agg"]] == exp_series
 
 
-def test_fused_auto_selection(spark, points_df, polyset, random_points):
-    """fused='auto' (r7 rule): the hierarchical split for every
-    partial-aggregable op — its plan shows the boundary deep semi-join
-    (LeftSemi) feeding MapInArrow plus the chained interior broadcast
-    probes, and NO SortMergeJoin. Results identical to the fused
-    kernel."""
-    fine = GridSpec(0.0, 0.0, 5.0, 5.0, 200, 200)
-    sj = SpatialJoin(spark, polyset, fine)
-
-    stats: dict = {}
-    got = sj.hybrid_join(points_df, fused="auto", stats=stats)
-    assert stats["plan"] == "split"
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "LeftSemi" in plan
-    assert "SortMergeJoin" not in plan
-    a = got.orderBy("poly_id").toPandas()
-    b = sj.hybrid_join(points_df).orderBy("poly_id").toPandas()
-    assert a["agg"].tolist() == b["agg"].tolist()
-
-
-@pytest.fixture(scope="module")
-def dyadic_grid():
-    """Integral origin + cell sizes that stay quarter-integers through
-    two x8 refinements (64 -> 8 -> 1) — the hierarchical split's
-    exactness precondition, unlike the cell-25 `grid` fixture."""
-    return GridSpec(0.0, 0.0, 64.0, 64.0, 16, 16)
-
-
-def test_hier_levels_engage_and_nest(spark, polyset, dyadic_grid):
-    """Hierarchy structure invariants on a dyadic grid: the descent
-    engages (>1 level), each level's pair tables live on the refined
-    grid, and every deeper boundary/interior pair sits under a
-    PREVIOUS-level boundary cell (the nesting that makes the staged
-    boundary semi-joins and the marker chain exact)."""
-    sj = SpatialJoin(spark, polyset, dyadic_grid)
-    assert sj._hier_ok()
-    levels = sj._hier_levels()
-    assert len(levels) > 1
-    for j in range(1, len(levels)):
-        gp, _, _, bc_prev, _ = levels[j - 1]
-        g, ic, ip, bc, bp = levels[j]
-        f = SpatialJoin.HIER_FACTORS[j - 1]
-        assert g.nx == gp.nx * f and g.ny == gp.ny * f
-        prev_b = set(np.unique(bc_prev).tolist())
-        for cells in (ic, bc):
-            gx, gy = cells % g.nx, cells // g.nx
-            parents = (gx // f) + gp.nx * (gy // f)
-            assert set(np.unique(parents).tolist()) <= prev_b
-    # one probe map per level, markers on all but the deepest
-    maps = sj._hier_join_maps()
-    assert len(maps) == len(levels)
-    for j, (g, mdf) in enumerate(maps):
-        has_marker = mdf.filter(F.col("poly_id") == -1).count() > 0
-        assert has_marker == (j < len(maps) - 1)
-
-
-def test_hier_split_matches_brute_force(spark, points_df, polyset,
-                                        dyadic_grid, random_points):
-    """End-to-end exactness of the multi-level split (chained probes +
-    staged boundary semi-joins + deep-CSR Arrow kernel) against the
-    numpy brute force, for count and sum."""
-    x, y, val = random_points
-    cnt, sums = brute_counts(x, y, polyset, val)
-    sj = SpatialJoin(spark, polyset, dyadic_grid)
-    assert len(sj._hier_levels()) > 1
-    got_cnt = (
-        sj.hybrid_join(points_df, fused="split")
-        .orderBy("poly_id").toPandas()["agg"].to_numpy()
-    )
-    assert got_cnt.tolist() == cnt.tolist()
-    got_sum = (
-        sj.hybrid_join(points_df, agg=AggSpec("sum", "val"), fused="split")
-        .orderBy("poly_id").toPandas()["agg"].fillna(0).to_numpy()
-    )
-    assert got_sum.astype(np.int64).tolist() == sums.tolist()
-    got_avg = (
-        sj.hybrid_join(points_df, agg=AggSpec("avg", "val"), fused="split")
-        .orderBy("poly_id").toPandas()["agg"].to_numpy()
-    )
-    # same single IEEE divide as the engine's finalize: sum/cnt in f64
-    want_avg = np.where(cnt > 0, sums / np.where(cnt > 0, cnt, 1), np.nan)
-    assert np.array_equal(got_avg, want_avg, equal_nan=True)
-
-
 def test_hier_split_poly4096_budget_stop(spark):
-    """4096 rect polygons on the bench grid: the level-2 refinement
-    exceeds HIER_PAIR_BUDGET, so the descent stops early — the split
-    must stay exact across the budget-stop boundary (2-level chain,
-    staged semi with mid = level 0), agreeing with the fused kernel."""
+    """The 4096-polygon gate fixture on the bench grid over 100k
+    synthesized points (per-batch partial vectors of up to 4096 rows):
+    the fused kernel equals index_join. The name is kept from the
+    removed hierarchical split plan, whose budget stop this fixture hit."""
     from raster_join_spark.fixtures import COARSE_GRID, rect_polyset
     from raster_join_spark.sources.pages import synth_points
 
-    sj = SpatialJoin(spark, rect_polyset(), COARSE_GRID)
-    assert sj._hier_ok()
-    levels = sj._hier_levels()
-    assert 2 <= len(levels) <= len(SpatialJoin.HIER_FACTORS) + 1
+    ps = rect_polyset()
+    sj = SpatialJoin(spark, ps, COARSE_GRID)
     pts = synth_points(spark, 100_000, 8)
-    a = sj.hybrid_join(pts, fused="split").orderBy("poly_id").toPandas()
-    b = sj.hybrid_join(pts, fused=True).orderBy("poly_id").toPandas()
-    assert a["agg"].tolist() == b["agg"].tolist()
-    assert int(a["agg"].sum()) > 0
+    hyb = sj.hybrid_join(pts).orderBy("poly_id").toPandas()
+    idx = sj.index_join(pts).orderBy("poly_id").toPandas()
+    assert len(hyb) == ps.n_polys == 4096
+    assert hyb["agg"].tolist() == idx["agg"].tolist()
+    assert int(hyb["agg"].sum()) > 0
 
 
 def test_rect_polyset_pip_equals_closed_form():
@@ -415,22 +373,13 @@ def test_rect_polyset_pip_equals_closed_form():
 
 
 def test_pip_col_guard_and_jvm_fallback(spark):
-    """pip_col must refuse to unroll >512 polygons; hybrid_join('jvm')
-    falls back to the fused Arrow kernel and stays exact."""
-    import warnings
-
-    import numpy as np
-    import pandas as pd
-    import pytest
-    from pyspark.sql import functions as F
-
+    """1024 rect polygons over 3,000 random points: the fused kernel
+    equals index_join row for row. The name is kept from the removed
+    all-JVM PIP plan, which fell back to the fused kernel at this size."""
     from raster_join_spark.fixtures import COARSE_GRID, X0, X1, Y0, Y1, rect_polyset
-    from raster_join_spark.operators.spatial_join import SpatialJoin
 
-    ps = rect_polyset(32)  # 1024 polys > PIP_COL_MAX_POLYS
+    ps = rect_polyset(32)
     sj = SpatialJoin(spark, ps, COARSE_GRID)
-    with pytest.raises(ValueError, match="pip_col"):
-        sj.pip_col(F.lit(0))
     rng = np.random.RandomState(7)
     pdf = pd.DataFrame(
         {
@@ -439,15 +388,15 @@ def test_pip_col_guard_and_jvm_fallback(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        got = sj.hybrid_join(df, fused="jvm").toPandas()
-    assert any("falling back" in str(x.message) for x in w)
-    exp = sj.hybrid_join(df, fused=True).toPandas()
+    got = sj.hybrid_join(df).toPandas()
+    exp = sj.index_join(df).toPandas()
+    assert len(got) == ps.n_polys == 1024
     pd.testing.assert_frame_equal(
-        got.sort_values("poly_id", ignore_index=True),
-        exp.sort_values("poly_id", ignore_index=True),
+        got.sort_values("poly_id", ignore_index=True)[["poly_id", "agg"]],
+        exp.sort_values("poly_id", ignore_index=True)[["poly_id", "agg"]],
+        check_dtype=False,
     )
+    assert int(got["agg"].sum()) > 0
 
 
 def test_float32_decision_diff():
@@ -477,22 +426,6 @@ def test_float32_decision_diff():
     assert diff <= 20, f"f32/f64 decision diff unexpectedly large: {diff}"
     # stability pin: bump deliberately if the fixture changes
     assert diff == 1, f"recorded diff count changed: {diff}"
-
-
-def test_coord_transfer_modes_identical(spark, points_df, polyset, grid):
-    """int/packed/float64 transfer modes must be bit-identical — the
-    packed int64 (y<<32 | x&0xffffffff) round-trips negative x."""
-    from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin
-
-    sj = SpatialJoin(spark, polyset, grid)
-    base = sj.hybrid_join(points_df, AggSpec("sum", "val", "agg")).toPandas()
-    for mode in ("int", "packed"):
-        got = sj.hybrid_join(
-            points_df, AggSpec("sum", "val", "agg"), coord_transfer=mode
-        ).toPandas()
-        assert got.sort_values("poly_id", ignore_index=True).equals(
-            base.sort_values("poly_id", ignore_index=True)
-        ), mode
 
 
 def test_refinement_auto_and_equivalence(spark):
@@ -544,115 +477,3 @@ def test_refinement_auto_and_equivalence(spark):
     big = blob_polygons(8, 0, 0, 1000, 1000, n_verts=9, seed=31)
     assert SpatialJoin(spark, big, coarse).refine_k == 1
 
-
-def test_sampled_boundary_fraction_detects_skew(spark, polyset):
-    """Round-4 verdict item 5: the pure pair-count boundary estimate is
-    blind to WHERE the points are. A hot box parked on a polygon
-    boundary keeps the pair-count ratio < 0.15 while most points
-    actually need PIP — the sampled point-weighted estimate must see
-    that. (Since the r7 auto rule the estimator no longer gates plan
-    selection — split wins at every measured fraction — but it remains
-    the diagnostic that exposed the r6 rule's blind spot and feeds the
-    A/B tooling, so its skew sensitivity stays pinned.)"""
-    fine = GridSpec(0.0, 0.0, 5.0, 5.0, 200, 200)
-    sj = SpatialJoin(spark, polyset, fine)
-    assert sj.tables.boundary_fraction() < 0.15
-
-    # park 85% of the points in a 4-unit hot box centred on the first
-    # polygon's first vertex (a guaranteed boundary cell)
-    vx, vy = float(polyset.verts[0, 0]), float(polyset.verts[0, 1])
-    rng = np.random.RandomState(17)
-    n_hot, n_cold = 3400, 600
-    x = np.r_[vx + rng.uniform(-2, 2, n_hot), rng.uniform(0, 1000, n_cold)]
-    y = np.r_[vy + rng.uniform(-2, 2, n_hot), rng.uniform(0, 1000, n_cold)]
-    df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
-
-    cached = df.persist()
-    try:
-        cached.count()
-        bfrac = sj._sampled_boundary_fraction(cached)
-        assert bfrac >= 0.15  # skew detected where pair counts said < 0.15
-    finally:
-        cached.unpersist()
-
-
-def test_boundary_fraction_cell_weights():
-    """classify-side unit check of the weighted estimator: loading all
-    the weight onto boundary cells drives the fraction toward 1, onto
-    interior cells toward 0; no weights reproduces the pair-count
-    ratio."""
-    from raster_join_spark.geo.classify import BOUNDARY, classify_cells
-
-    ps = blob_polygons(4, 0, 0, 100, 100, n_verts=8, seed=3)
-    g = GridSpec(0.0, 0.0, 5.0, 5.0, 20, 20)
-    t = classify_cells(g, ps)
-    b_mask = t.cls_kind == BOUNDARY
-    b_cells = np.unique(t.cls_cell[b_mask])
-    i_cells = np.unique(t.cls_cell[~b_mask])
-    i_only = np.setdiff1d(i_cells, b_cells)
-    assert len(b_cells) and len(i_only)
-
-    base = t.boundary_fraction()
-    assert 0 < base < 1
-    hi = t.boundary_fraction(cell_weights=(b_cells, np.full(len(b_cells), 10.0)))
-    lo = t.boundary_fraction(cell_weights=(i_only, np.full(len(i_only), 10.0)))
-    assert hi == 1.0 and lo == 0.0
-    # a histogram that misses every covered cell falls back to pair counts
-    miss = t.boundary_fraction(cell_weights=(np.array([10**9]), np.array([5.0])))
-    assert miss == base
-
-
-def test_boundary_fraction_empty_histogram():
-    """An EMPTY histogram (zero sampled cells) must take the pair-count
-    fallback, not IndexError — `&` is bitwise, so the old guard
-    evaluated wc[idx_c] on a size-0 array before the length check."""
-    from raster_join_spark.geo.classify import classify_cells
-
-    ps = blob_polygons(4, 0, 0, 100, 100, n_verts=8, seed=3)
-    g = GridSpec(0.0, 0.0, 5.0, 5.0, 20, 20)
-    t = classify_cells(g, ps)
-    base = t.boundary_fraction()
-    got = t.boundary_fraction(
-        cell_weights=(np.array([], np.int64), np.array([], np.float64))
-    )
-    assert got == base
-
-
-def test_sampled_boundary_fraction_cached_table_disjoint_points(spark, polyset):
-    """The weight table is usually served from _PAIRS_CACHE; when the
-    sample (and the full-scan retry) then lands ZERO covered points,
-    the fallback must use self.cls_tables — the old code referenced a
-    local bound only in the cache-miss branch and raised NameError."""
-    fine = GridSpec(0.0, 0.0, 5.0, 5.0, 200, 200)
-    sj = SpatialJoin(spark, polyset, fine)
-
-    rng = np.random.RandomState(23)
-    inside = spark.createDataFrame(
-        pd.DataFrame(
-            {"x": rng.uniform(0, 1000, 500), "y": rng.uniform(0, 1000, 500)}
-        )
-    ).persist()
-    # far outside every polygon-covered cell but inside the grid extent
-    # is impossible for this fixture, so use coords beyond the polygons'
-    # reach within the grid: the corner region [990, 1000)^2 may still
-    # touch covered cells, so go fully off-polygon via y in the empty band
-    outside = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "x": np.full(300, -50.0),  # off-grid -> cell_id NULL
-                "y": np.full(300, -50.0),
-            }
-        )
-    ).persist()
-    try:
-        inside.count(), outside.count()
-        # first call populates _PAIRS_CACHE (cache-miss branch binds t)
-        sj._sampled_boundary_fraction(inside)
-        # second call on a fresh SpatialJoin hits the cache; zero covered
-        # points -> must fall back to the pair-count ratio, not NameError
-        sj2 = SpatialJoin(spark, polyset, fine)
-        got = sj2._sampled_boundary_fraction(outside)
-        assert got == sj2.cls_tables.boundary_fraction()
-    finally:
-        inside.unpersist()
-        outside.unpersist()

@@ -63,20 +63,6 @@ def main() -> None:
         ),
     ]
 
-    sections += [
-        (
-            "Fused hybrid join with packed coordinate transfer",
-            "coord_transfer='packed': both int32-exact coords in ONE int64 "
-            "column (shiftleft/or, pure JVM) — half the Arrow feed bytes of "
-            "float64 and half the per-row field count "
-            "(BENCH/hybrid_rootcause.md). Same exchange shape as the fused "
-            "plan; results bit-identical (driver-gated).",
-            plan_of(
-                sj.hybrid_join(pts, include_zero=False, coord_transfer="packed")
-            ),
-        ),
-    ]
-
     from raster_join_spark.operators.knn import knn_join_bulk
 
     qdf = pts.filter((F.col("event_id") % 10) == 0).select(
