@@ -35,9 +35,11 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def _force(df) -> int:
-    """Fully execute a plan; return row count (cheap aggregate pull)."""
-    return df.count()
+def _force(df) -> None:
+    """Fully execute a plan. A noop write runs every operator; count()
+    would let Catalyst prune the plan down to what the row count needs
+    (a densified result's count never touches its join)."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def run_suite(master: str, sf_dir: str) -> dict:
@@ -219,8 +221,8 @@ def _flagship_once(master: str, sf_dir: str) -> dict:
             runs.append(time.perf_counter() - t0)
         return min(runs)
 
-    # headline: the raster join (J1, the paper's title operator) — pure
-    # JVM, measured at 4B rows so fixed pipeline costs amortize; 256
+    # headline: the raster join (J1, the paper's title operator),
+    # measured at 4B rows so fixed pipeline costs amortize; 256
     # partitions (15.6M rows each) keep the single-threaded driver
     # scheduling loop out of the measurement (1024 tasks cost the
     # 32-thread level ~2-3s of serial dispatch)
@@ -769,7 +771,7 @@ def run_poly_sweep() -> dict:
         # weigh the EXACT artifact dict the kernel broadcasts (shared
         # builder — a hand-rebuilt copy here could silently drift from
         # what the fused plan actually ships)
-        bbytes = len(pickle.dumps(sj._bc_art_dict(), protocol=4))
+        bbytes = len(pickle.dumps(sj._bc_art_dict("hybrid"), protocol=4))
         res = {
             "classify_sec": round(t_classify, 3),
             "classify_refined_sec": round(t_classify_r, 3),
@@ -851,8 +853,8 @@ def run_attrib_sweep() -> dict:
 
 def _kernel_worker(args) -> float:
     """One OS process: run the fused-join kernel over `n` synthesized
-    points in 65k batches (the exact per-batch code path of
-    spatial_join._fused_agg). Returns elapsed seconds."""
+    points in 65k batches (the per-batch COUNT code path of
+    spatial_join._one_pass for hybrid_join). Returns elapsed seconds."""
     n, seed = args
     import numpy as np
 

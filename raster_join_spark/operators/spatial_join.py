@@ -1,40 +1,41 @@
 """The four spatial-join strategies of the reference, as Spark plans.
 
-Reference physical operators -> our logical plans (all share two
-driver-built broadcast artifacts: the rasterized polygon-grid tables from
-geo/classify.py and the flat CSR polygon arrays):
+Reference physical operators -> our plans. Every aggregate strategy runs
+the same one-pass kernel (:meth:`SpatialJoin._one_pass`) and differs only
+in the driver-built broadcast artifact it hands that kernel (the
+rasterized polygon-grid tables from geo/classify.py as cell -> polygon
+CSR lookups, plus the flat polygon vertices):
 
 - **index_join** (J2, RasterJoin/join/IndexJoin.cpp:52-198 + grid probe
-  shaders/index.glsl:186-249): point -> cell -> broadcast-join MBR
-  candidate lists -> exact ray-cast PIP (Arrow-vectorized pandas UDF)
-  -> groupBy(poly_id). Accurate.
-- **raster_join** (J1, RasterJoin/join/RasterJoin.cpp:91-260): points
-  pre-aggregated per cell (the "point rasterization" pass becomes a
-  map-side-combined groupBy(cell)) -> broadcast-join the center-inside
-  cover table (the "polygon rasterization" pass, computed once on the
-  driver) -> re-aggregate per polygon. Approximate within epsilon.
+  shaders/index.glsl:186-249): point -> cell -> MBR candidate list ->
+  exact ray-cast PIP on every candidate. Accurate.
+- **raster_join** (J1, RasterJoin/join/RasterJoin.cpp:91-260): point ->
+  cell -> the polygons whose center-inside cover holds that cell (the
+  "polygon rasterization" pass, computed once on the driver); no PIP.
+  Approximate within epsilon.
 - **hybrid_join** (J3, RasterJoin/join/HybridJoin.cpp:339-359,
-  shaders/hybrid.glsl:224-301): one mapInArrow pass — interior-cell
-  points resolve by a CSR cell lookup alone (no PIP), boundary-cell
-  points go through the exact PIP kernel, and each Arrow batch emits
-  per-polygon partials. Accurate, faster than index_join when
-  boundaries are thin.
+  shaders/hybrid.glsl:224-301): interior-cell points resolve by the
+  cell lookup alone (no PIP), boundary-cell points go through the exact
+  PIP kernel. Accurate, faster than index_join when boundaries are thin.
 - **error_bounds** (J4, RasterJoin/join/RasterJoinBounds.cpp:202-381,
   shaders/line-bound.frag:219-262): raster result plus per-polygon
   [agg-fp, agg+fn] intervals from boundary-cell accounting — both the
   whole-pixel (fp1/fn1) and the area-fraction-weighted (fp/fn) variants.
 
-Scale design (the part that matters at 100 TB / 1000 executors):
-- The polygon side is ALWAYS broadcast (a few MB); the point side never
-  shuffles for the join itself — candidate expansion is a map-side
-  broadcast hash join.
-- groupBy(cell) and groupBy(poly_id) both enjoy partial (map-side)
-  aggregation, so hot NYC-style cells collapse to <=1 row per task
-  before the exchange: the shuffle volume is O(distinct cells per task),
-  NOT O(points). This is the same trick as the reference's per-thread
-  partial vectors (CPUJoin.cpp:93-116), which Spark gives us for free.
-- The only Python in the plan is the PIP kernel over boundary points,
-  Arrow-batched, vectorized over points x edges in numpy.
+Scale design — the paper's two passes (RasterJoin.cpp:215-221, SURVEY §2):
+- Spark runs the point pass: ONE mapInArrow job per call, in which each
+  Arrow batch of points emits a partial per-polygon vector (<= P rows per
+  batch, the reference's per-thread partial vectors, CPUJoin.cpp:93-116).
+  The point side never shuffles and no join runs in Spark.
+- The driver runs the polygon pass: it collects the partials with
+  ``toArrow()`` (O(batches x P) rows, never O(points) or O(cells)), sums
+  them in numpy and returns a small local DataFrame, so the job runs at
+  call time and collecting the result launches none.
+- The polygon side is a broadcast artifact (a few MB), built once per
+  (collection, grid, strategy) and cached across calls in ``_BC_CACHE``.
+- The only Python in the plan is the kernel, Arrow-batched, vectorized
+  over points x edges in numpy. ``assign_polygons`` stays a lazy
+  DataFrame: it emits one row per (point, polygon).
 """
 
 from __future__ import annotations
@@ -43,8 +44,8 @@ from dataclasses import dataclass
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,6 +53,8 @@ from raster_join_spark.geo.classify import POLY_GRID_CACHE, PolyGridTables
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.pip import pip_candidates
 from raster_join_spark.geo.polygons import PolygonSet
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def _cell_csr(cells: np.ndarray, polys: np.ndarray, n_cells: int | None = None) -> dict:
@@ -126,32 +129,60 @@ def _csr_expand(csr: dict, cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return rows, csr["polys"][offs]
 
 
+def _members(
+    art: dict, cells: np.ndarray, x: np.ndarray, y: np.ndarray, dtype
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, poly_id) memberships of one batch: ``interior`` pairs by the
+    cell lookup alone, ``boundary`` pairs only where the exact PIP kernel
+    puts the point inside the polygon."""
+    ri, pi = _csr_expand(art["interior"], cells)
+    rb, pb = _csr_expand(art["boundary"], cells)
+    if len(rb):
+        m = pip_candidates(x[rb], y[rb], pb, art["verts"], art["offsets"], dtype=dtype)
+        rb, pb = rb[m], pb[m]
+    return np.concatenate([ri, rb]), np.concatenate([pi, pb]).astype(np.int64)
+
+
+def _fold(polys: np.ndarray, vals: np.ndarray, n: int) -> np.ndarray:
+    """Per-polygon sum of ``vals``. Integer values stay exact: float64
+    bincount is the fast path, but its partial sums are exact integers
+    only while bounded by 2^53, so large-magnitude integer batches take
+    an exact int64 scatter-add instead of silently losing low bits."""
+    if vals.dtype.kind == "f":
+        return np.bincount(polys, weights=vals, minlength=n)
+    if len(vals) and float(np.abs(vals).max()) * len(vals) >= 2.0**53:
+        out = np.zeros(n, np.int64)
+        np.add.at(out, polys, vals)
+        return out
+    return np.bincount(polys, weights=vals, minlength=n).astype(np.int64)
+
+
 @dataclass(frozen=True)
 class AggSpec:
     """Aggregation parity with the reference (Common.h:26 {Count, Avg, Sum},
-    DataHandler.cpp:68-71). ``col=None`` -> COUNT(*)."""
+    DataHandler.cpp:68-71). ``count`` is COUNT(*). ``sum`` and ``avg``
+    fold ``col`` with SQL NULL semantics: NULL values are skipped, AVG
+    divides by the non-null count, and a polygon without a non-null
+    value gets NULL."""
 
     op: str = "count"  # count | sum | avg
     col: str | None = None
     alias: str = "agg"
 
-    def exprs(self, cnt_col: str = "_cnt", sum_col: str = "_sum") -> list[Column]:
-        """Final-stage expressions over per-cell partials."""
-        if self.op == "count":
-            return [F.sum(cnt_col).alias(self.alias)]
-        if self.op == "sum":
-            return [F.sum(sum_col).alias(self.alias)]
-        if self.op == "avg":
-            return [(F.sum(sum_col) / F.sum(cnt_col)).alias(self.alias)]
-        raise ValueError(f"unknown agg {self.op}")
+    def __post_init__(self) -> None:
+        if self.op not in ("count", "sum", "avg"):
+            raise ValueError(f"unknown agg {self.op}")
+        if self.op != "count" and not self.col:
+            raise ValueError(f"{self.op} needs a column")
 
 
 class SpatialJoin:
     """One polygon collection + one grid, four join strategies.
 
     Builds the broadcast artifacts once (driver-side numpy rasterization,
-    memoized in POLY_GRID_CACHE), then exposes the strategies as
-    DataFrame -> DataFrame operators.
+    memoized in POLY_GRID_CACHE). The aggregate strategies run their one
+    Spark job when called and return the small per-polygon result as a
+    local DataFrame; ``assign_polygons`` returns a lazy DataFrame.
     """
 
     # --- internal classification-grid refinement (tiny-polygon regime) --
@@ -189,7 +220,7 @@ class SpatialJoin:
         matches the SQL oracle bit-for-bit.
 
         ``refine``: the internal classification-grid refinement factor
-        for the Arrow-kernel paths (``hybrid_join``,
+        for the interior/boundary paths (``hybrid_join``,
         ``assign_polygons``) — ``"auto"`` (default) picks
         a power-of-two factor when the polygon collection is tiny
         relative to the query grid (see the class constants), ``1``
@@ -230,12 +261,6 @@ class SpatialJoin:
         else:
             self.refine_k = max(int(refine), 1)
         self.cls_grid = grid.refined(self.refine_k)
-        # flat CSR polygon arrays broadcast to every executor once —
-        # the analogue of the reference's GPU polygon textures
-        # (GLFunction.cpp:158-197); a few MB even at 65k polygons.
-        self._bc_polys = spark.sparkContext.broadcast(
-            (polyset.verts, polyset.offsets)
-        )
 
     def _auto_refine_k(self) -> int:
         """Pick the refinement factor from driver-side geometry only (no
@@ -282,43 +307,38 @@ class SpatialJoin:
 
     # ------------------------------------------------------------ helpers
 
-    # session-level cache of the small dimension DataFrames: building a
-    # 1M+-row DataFrame from pandas costs ~1s of driver time, and the
-    # artifact is immutable per (polyset, grid) — build once, reuse across
-    # queries (the reference rebuilds per query; see classify.py notes)
-    _PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-    # session-level cache of the Arrow-kernel broadcast artifact: at 65k
+    # session-level cache of the kernel's broadcast artifact: at 65k
     # polygons with a k=4 refined grid the CSR artifact is ~108 MB and
     # sc.broadcast() pays ~2.7s of driver pickling PER CALL — but the
     # artifact is immutable per (collection content, grid, dtype,
-    # refine), so one broadcast serves every query, like the reference's
-    # persistent GPU polygon textures (GLFunction.cpp:158-197). Eviction
-    # is LRU (hits reinsert at the back; the front entry is the coldest)
-    # and evicted broadcasts are unpersist(blocking=False)'d — executors
-    # drop the blocks, but an in-flight lazy plan that still holds the
-    # handle simply re-fetches from the driver (only destroy() would
-    # break it), so the hottest artifacts are never force-rebroadcast.
+    # refine, strategy), so one broadcast serves every query, like the
+    # reference's persistent GPU polygon textures (GLFunction.cpp:158-197).
+    # Eviction is LRU (hits reinsert at the back; the front entry is the
+    # coldest) and evicted broadcasts are unpersist(blocking=False)'d —
+    # executors drop the blocks, but an in-flight lazy plan that still
+    # holds the handle simply re-fetches from the driver (only destroy()
+    # would break it), so the hottest artifacts are never force-rebroadcast.
     _BC_CACHE: dict[tuple, object] = {}
     _BC_CACHE_MAX = 16
 
-    def _bc_art(self):
-        """The per-executor membership artifact (interior CSR, boundary
-        CSR, flat polygon vertices), broadcast once per (session,
-        collection content, grid, dtype, refine_k) and shared by both
-        Arrow-kernel plans (``_fused_agg`` and ``_fused_pairs``)."""
+    def _bc_art(self, kind: str):
+        """The per-executor artifact of strategy ``kind`` (see
+        :meth:`_bc_art_dict`), broadcast once per (session, collection
+        content, grid, dtype, refine_k, kind). ``assign_polygons`` shares
+        the ``"hybrid"`` artifact."""
         key = (
             id(self.spark),
             self.polyset.cache_token,
             self.grid,
             np.dtype(self.dtype).char,
             self.refine_k,
+            kind,
         )
         bc = self._BC_CACHE.pop(key, None)
         if bc is not None:
             self._BC_CACHE[key] = bc  # reinsert: most-recently-used
             return bc
-        bc = self.spark.sparkContext.broadcast(self._bc_art_dict())
+        bc = self.spark.sparkContext.broadcast(self._bc_art_dict(kind))
         while len(self._BC_CACHE) >= self._BC_CACHE_MAX:
             old = self._BC_CACHE.pop(next(iter(self._BC_CACHE)))
             try:
@@ -328,142 +348,65 @@ class SpatialJoin:
         self._BC_CACHE[key] = bc
         return bc
 
-    def _bc_art_dict(self) -> dict:
+    def _bc_art_dict(self, kind: str) -> dict:
         """The artifact value behind :meth:`_bc_art` — exposed so size
         measurement (bench.py's polygon sweep) weighs the EXACT dict the
-        kernel ships, not a hand-rebuilt copy that could drift."""
-        t = self.cls_tables
-        int_c, int_p = t.interior_pairs()
-        b_c, b_p, _, _ = t.boundary_pairs()
-        return {
-            "interior": _cell_csr(int_c, int_p, self.cls_grid.n_cells),
-            "boundary": _cell_csr(b_c, b_p, self.cls_grid.n_cells),
+        kernel ships, not a hand-rebuilt copy that could drift.
+
+        ``interior`` pairs count a point without a PIP test, ``boundary``
+        pairs count it only where the exact PIP kernel puts it inside:
+        hybrid has both on the classification grid, index has every MBR
+        candidate as ``boundary``, raster and errorbounds have the
+        center-inside cover as ``interior``. errorbounds adds ``bounds``,
+        its boundary-cell pairs listed by pair index, with the per-pair
+        ``pair_poly``, ``frac``, ``frac_u6`` and ``attributed`` arrays."""
+        t = self.tables
+        n_cells = self.grid.n_cells
+        empty = _cell_csr(np.empty(0, np.int64), np.empty(0, np.int64))
+        art = {
+            "interior": empty,
+            "boundary": empty,
             "verts": self.polyset.verts,
             "offsets": self.polyset.offsets,
         }
+        if kind == "hybrid":
+            ct, cls_cells = self.cls_tables, self.cls_grid.n_cells
+            art["interior"] = _cell_csr(*ct.interior_pairs(), cls_cells)
+            b_c, b_p, _, _ = ct.boundary_pairs()
+            art["boundary"] = _cell_csr(b_c, b_p, cls_cells)
+        elif kind == "index":
+            art["boundary"] = _cell_csr(t.cand_cell, t.cand_poly, n_cells)
+        elif kind in ("raster", "errorbounds"):
+            art["interior"] = _cell_csr(t.cover_cell, t.cover_poly, n_cells)
+        else:
+            raise ValueError(f"unknown strategy {kind!r}")
+        if kind == "errorbounds":
+            b_c, b_p, b_f, b_ci = t.boundary_pairs()
+            frac = b_f.astype(np.float64)
+            art["bounds"] = _cell_csr(b_c, np.arange(len(b_c)), n_cells)
+            art["pair_poly"] = b_p.astype(np.int64)
+            art["frac"] = frac
+            art["frac_u6"] = np.floor(frac * 1e6).astype(np.int64)
+            art["attributed"] = b_ci.astype(np.bool_)
+        return art
 
-    def _pairs_df(
-        self,
-        cell: np.ndarray,
-        poly: np.ndarray,
-        extra: dict | None = None,
-        cache_key: str | None = None,
-    ) -> DataFrame:
-        if cache_key is not None:
-            key = (id(self.spark), self.polyset.cache_token, self.grid, cache_key)
-            hit = self._PAIRS_CACHE.pop(key, None)
-            if hit is not None:
-                self._PAIRS_CACHE[key] = hit  # reinsert: most-recently-used
-                return hit
-        data = {"cell_id": cell.astype(np.int64), "poly_id": poly.astype(np.int64)}
-        for k, (arr, _) in (extra or {}).items():
-            data[k] = arr
-        schema = T.StructType(
-            [
-                T.StructField("cell_id", T.LongType(), False),
-                T.StructField("poly_id", T.LongType(), False),
-            ]
-            + [
-                T.StructField(k, dt, False)
-                for k, (_, dt) in (extra or {}).items()
-            ]
-        )
-        df = self.spark.createDataFrame(pd.DataFrame(data), schema=schema)
-        # (r8) coalesce + persist the broadcast-side map: every query
-        # execution otherwise re-parses the python-serialized literal
-        # partitions AND collects them through defaultParallelism tiny
-        # tasks per broadcast build (measured on a since-removed plan
-        # with five such maps: ~0.9s/query of pure rebuild at any
-        # scale; 1-partition persisted maps cut it 2.3s -> 1.3s at
-        # sf1.0). Maps derive from
-        # the polygon fixture only (never from the scanned table), so
-        # this is broadcast-side constant data like the _BC_CACHE CSR
-        # artifact, LRU-bounded the same way. ~4M rows per partition
-        # keeps a budget-sized map's one-time build parallel enough.
-        if cache_key is not None:
-            # persist only cached frames — the LRU owns the unpersist
-            df = df.coalesce(max(1, len(cell) // 4_000_000 + 1)).persist()
-            while len(self._PAIRS_CACHE) >= 64:  # LRU: evict coldest only
-                old = self._PAIRS_CACHE.pop(next(iter(self._PAIRS_CACHE)))
-                try:
-                    old.unpersist(blocking=False)
-                except Exception:
-                    pass
-            self._PAIRS_CACHE[key] = df
-        return df
+    def _arrow_source(self, points: DataFrame, cols: list[str]) -> DataFrame:
+        """The kernel's input: the projected columns, coalesced (no
+        shuffle) to at most two tasks per core. Each Python-stage task
+        pays a fixed JVM<->worker protocol cost (~20 ms measured), so a
+        Python stage wants FEW, BIG tasks; coalesce never adds
+        partitions, so a coarser input keeps its own count. On a real
+        cluster this is executors*cores; tasks then stream many Arrow
+        batches each."""
+        target = max(self.spark.sparkContext.defaultParallelism, 1)
+        return points.select(*cols).coalesce(2 * target)
 
     def with_cell(self, points: DataFrame) -> DataFrame:
         """Tile assignment: attach the row-major cell id (native exprs,
-        index.glsl:229-233); out-of-grid points get NULL and are dropped
-        by the inner joins below, mirroring the reference's discard."""
+        index.glsl:229-233); out-of-grid points get NULL."""
         return points.withColumn(
             "cell_id", self.grid.cell_id_col(F.col(self.x), F.col(self.y))
         )
-
-    def _pip_filter(self, df: DataFrame) -> DataFrame:
-        """Exact ray-cast refinement: keep (point, candidate poly) rows
-        whose point is inside the polygon. Arrow-batched pandas UDF over
-        float64 (same IEEE op order as the SQL oracle); the kernel
-        vectorizes over points x edges (index.glsl:47-67 rule)."""
-        bc = self._bc_polys
-        dtype = self.dtype
-
-        @F.pandas_udf(T.BooleanType())
-        def _pip(x: pd.Series, y: pd.Series, poly: pd.Series) -> pd.Series:
-            verts, offsets = bc.value
-            mask = pip_candidates(
-                x.to_numpy(np.float64),
-                y.to_numpy(np.float64),
-                poly.to_numpy(np.int64),
-                verts,
-                offsets,
-                dtype=dtype,
-            )
-            return pd.Series(mask)
-
-        return df.filter(_pip(F.col(self.x), F.col(self.y), F.col("poly_id")))
-
-    def _cell_partials(self, points: DataFrame, agg: AggSpec) -> DataFrame:
-        """Point 'rasterization': per-cell partial aggregates
-        (RasterJoin.cpp:215-221's additive-blend canvas as a hash agg
-        with map-side combine)."""
-        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
-        sum_col = (
-            F.sum(F.col(agg.col)).alias("_sum")
-            if agg.col
-            else F.lit(None).cast("double").alias("_sum")
-        )
-        return pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("_cnt"), sum_col)
-
-    def _densify(
-        self, out: DataFrame, agg: AggSpec, include_zero: bool
-    ) -> DataFrame:
-        """Densify a per-polygon result to every polygon position
-        0..N-1, as the reference emits (RasterJoin/main.cpp:202-224):
-        empty polygons get 0 for COUNT and NULL for SUM/AVG.
-        ``include_zero=False`` returns ``out`` as is."""
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
-            "id", "poly_id"
-        )
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
-
-    def _finalize(
-        self, assigned: DataFrame, agg: AggSpec, include_zero: bool = True
-    ) -> DataFrame:
-        """groupBy(poly_id) final aggregation over (point, poly) rows,
-        then :meth:`_densify`."""
-        if agg.op == "count":
-            out = assigned.groupBy("poly_id").agg(F.count(F.lit(1)).alias(agg.alias))
-        elif agg.op == "sum":
-            out = assigned.groupBy("poly_id").agg(F.sum(agg.col).alias(agg.alias))
-        else:  # avg
-            out = assigned.groupBy("poly_id").agg(F.avg(agg.col).alias(agg.alias))
-        return self._densify(out, agg, include_zero)
 
     # --------------------------------------------------------- strategies
 
@@ -473,12 +416,9 @@ class SpatialJoin:
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
     ) -> DataFrame:
-        """J2 accurate: MBR candidate lists -> PIP everywhere."""
-        cand = self._pairs_df(self.tables.cand_cell, self.tables.cand_poly, cache_key="cand")
-        pts = self.with_cell(points)
-        joined = pts.join(F.broadcast(cand), "cell_id", "inner")
-        exact = self._pip_filter(joined)
-        return self._finalize(exact, agg, include_zero)
+        """J2 accurate: MBR candidate lists -> PIP everywhere. Runs its
+        one Spark job at call time (:meth:`_one_pass`)."""
+        return self._agg_frame("index", points, agg, include_zero)
 
     def assign_polygons(
         self, points: DataFrame, cols: Iterable[str] = ("url",)
@@ -486,7 +426,7 @@ class SpatialJoin:
         """Per-point polygon assignment (the north_star's per-point tile
         assignment output): exact hybrid-path resolution, one row per
         (point, containing polygon), emitted from one Arrow pass
-        (:meth:`_fused_pairs`)."""
+        (:meth:`_fused_pairs`). The result is lazy."""
         return self._fused_pairs(points, list(cols))
 
     def _fused_pairs(self, points: DataFrame, cols: list[str]) -> DataFrame:
@@ -497,7 +437,7 @@ class SpatialJoin:
         materialize as Python objects. Membership resolves on the
         internal classification grid (refine_k); the emitted cell_id is
         always the CALLER's grid cell (the public tile assignment)."""
-        bc = self._bc_art()
+        bc = self._bc_art("hybrid")
         grid = self.grid
         cls_grid = self.cls_grid
         refined = self.refine_k > 1
@@ -513,11 +453,9 @@ class SpatialJoin:
         )
 
         def fn(batches):
-            import pyarrow as pa
             import pyarrow.compute as pc
 
             art = bc.value
-            verts, offsets = art["verts"], art["offsets"]
             for batch in batches:
                 names = batch.schema.names
                 x = np.asarray(
@@ -529,13 +467,7 @@ class SpatialJoin:
                     np.float64,
                 )
                 cells = cls_grid.cell_ids_np(x, y)
-                ri, pi = _csr_expand(art["interior"], cells)
-                rb, pb = _csr_expand(art["boundary"], cells)
-                if len(rb):
-                    m = pip_candidates(x[rb], y[rb], pb, verts, offsets, dtype=dtype)
-                    rb, pb = rb[m], pb[m]
-                rows = np.concatenate([ri, rb])
-                polys = np.concatenate([pi, pb]).astype(np.int64)
+                rows, polys = _members(art, cells, x, y, dtype)
                 # emitted cell_id is the caller-grid tile (public output)
                 out_cells = grid.cell_ids_np(x, y) if refined else cells
                 idx = pa.array(rows)
@@ -552,10 +484,7 @@ class SpatialJoin:
                 )
                 yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
-        target = max(self.spark.sparkContext.defaultParallelism, 1)
-        src = points.select(*cols, x_name, y_name)
-        if src.rdd.getNumPartitions() > 2 * target:
-            src = src.coalesce(2 * target)
+        src = self._arrow_source(points, [*cols, x_name, y_name])
         return src.mapInArrow(fn, schema)
 
     def hybrid_join(
@@ -565,52 +494,47 @@ class SpatialJoin:
         include_zero: bool = True,
     ) -> DataFrame:
         """J3 accurate: interior fast path + boundary exact refinement.
-        Result is identical to index_join; only the physical plan differs
-        (PIP runs on boundary-cell points only). There is one plan, the
-        one-pass :meth:`_fused_agg` kernel; it takes coordinates as
-        float64 and carries no precondition on their values."""
-        return self._fused_agg(points, agg, include_zero)
+        Result is identical to index_join; only the artifact differs
+        (PIP runs on boundary-cell points only). Takes coordinates as
+        float64 and carries no precondition on their values. Runs its
+        one Spark job at call time (:meth:`_one_pass`)."""
+        return self._agg_frame("hybrid", points, agg, include_zero)
 
-    def _fused_agg(
-        self, points: DataFrame, agg: AggSpec, include_zero: bool
-    ) -> DataFrame:
-        """One-pass exact aggregation — the plan we'd run at 100 TB.
+    def _one_pass(
+        self, kind: str, points: DataFrame, val_col: str | None, integral: bool
+    ) -> dict[str, np.ndarray]:
+        """The one Spark job behind every aggregate strategy; returns
+        per-polygon totals (length n_polys arrays) by column name.
 
-        mapInArrow over (x, y[, val]): per Arrow batch, resolve interior
-        membership by CSR lookup of the cell, boundary membership by the
-        exact PIP kernel, and emit a PARTIAL per-polygon vector (<=P rows
-        per batch). The exchange then carries #batches x P rows instead of
-        O(points) pair rows — the reference's per-thread partial vectors
-        (CPUJoin/CPUJoin.cpp:93-116) in Spark clothes. No JVM-side pair
-        materialization. Membership resolves on the internal
-        classification grid (refine_k).
+        mapInArrow over (x, y[, val]): per Arrow batch, resolve membership
+        through the ``kind`` artifact (:func:`_members`) and emit a
+        PARTIAL per-polygon vector (<=P rows per batch). The driver
+        collects the partials with ``toArrow()`` and sums them in numpy.
+        Columns: ``_cnt`` (matched rows); with ``val_col`` also ``_nn``
+        (matched non-null values) and ``_sum`` (their sum, int64 when
+        ``integral``, transferred as int64 and never narrowed through
+        float64); for errorbounds the boundary-cell terms ``fp1``,
+        ``fn1``, ``fp``, ``fn``, ``fp_u6`` and ``fn_u6``. Integer columns
+        are exact in any fold order; the float columns are not.
         """
-        bc = self._bc_art()
-        grid = self.cls_grid
+        bc = self._bc_art(kind)
+        grid = self.cls_grid if kind == "hybrid" else self.grid
         dtype = self.dtype
         n_polys = self.polyset.n_polys
         x_name, y_name = self.x, self.y
-        want_sum = agg.col is not None
-        cols = [x_name, y_name] + ([agg.col] if want_sum else [])
-        agg_col = agg.col
-        # integral inputs keep integral partials end-to-end: the final
-        # SUM is then LongType, matching the BIGINT oracle bit-for-bit.
-        # Values transfer as int64 (never narrowed through float64) and
-        # the per-batch partial uses the float64-bincount fast path ONLY
-        # while every intermediate sum provably stays under 2^53 —
-        # otherwise it falls back to an exact int64 scatter-add, so
-        # exactness never silently degrades at large magnitudes
-        integral = want_sum and isinstance(
-            points.schema[agg.col].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        )
-
+        bounds = kind == "errorbounds"
+        out_cols = [("_cnt", True)]
+        if val_col is not None:
+            out_cols += [("_nn", True), ("_sum", integral)]
+        if bounds:
+            out_cols += [("fp1", True), ("fn1", True), ("fp", False), ("fn", False),
+                         ("fp_u6", True), ("fn_u6", True)]
+        fields = [("poly_id", True)] + out_cols
         schema = T.StructType(
-            [
-                T.StructField("poly_id", T.LongType(), False),
-                T.StructField("_cnt", T.LongType(), False),
-                T.StructField("_sum", T.LongType() if integral else T.DoubleType(), True),
-            ]
+            [T.StructField(c, T.LongType() if i else T.DoubleType(), False) for c, i in fields]
+        )
+        out_schema = pa.schema(
+            [pa.field(c, pa.int64() if i else pa.float64(), nullable=False) for c, i in fields]
         )
 
         # mapInArrow, not mapInPandas: the kernel consumes raw numpy, so
@@ -619,16 +543,7 @@ class SpatialJoin:
         # feed is the bandwidth-bound term (BENCH/hybrid_rootcause.md),
         # so one fewer per-row copy matters.
         def fn(batches):
-            import pyarrow as pa
-
-            out_fields = [
-                pa.field("poly_id", pa.int64(), nullable=False),
-                pa.field("_cnt", pa.int64(), nullable=False),
-                pa.field("_sum", pa.int64() if integral else pa.float64()),
-            ]
-            out_schema = pa.schema(out_fields)
             art = bc.value
-            verts, offsets = art["verts"], art["offsets"]
             for rb in batches:
                 names = rb.schema.names
                 x = np.asarray(
@@ -639,77 +554,89 @@ class SpatialJoin:
                     rb.column(names.index(y_name)).to_numpy(zero_copy_only=False),
                     dtype=np.float64,
                 )
-                val = (
-                    np.asarray(
-                        rb.column(names.index(agg_col)).to_numpy(zero_copy_only=False),
+                cells = grid.cell_ids_np(x, y)
+                rows, polys = _members(art, cells, x, y, dtype)
+                out = {"_cnt": np.bincount(polys, minlength=n_polys)}
+                if val_col is not None:
+                    arr = rb.column(names.index(val_col))
+                    # NULLs are skipped, never cast: fill_null keeps the
+                    # int64 transfer exact and the mask drops them
+                    val = np.asarray(
+                        arr.fill_null(0).to_numpy(zero_copy_only=False),
                         np.int64 if integral else np.float64,
                     )
-                    if want_sum
-                    else None
-                )
-                cells = grid.cell_ids_np(x, y)
-                cnt = np.zeros(n_polys, np.int64)
-                sm = (
-                    np.zeros(n_polys, np.int64 if integral else np.float64)
-                    if want_sum
-                    else None
-                )
-
-                def acc_sum(polys, vals):
-                    # float64 bincount is the fast path; its partial sums
-                    # are exact integers only while bounded by 2^53, so
-                    # large-magnitude integral batches take the exact
-                    # (slower) int64 scatter-add instead of silently
-                    # losing low bits while claiming BIGINT parity
-                    if (
-                        integral
-                        and len(vals)
-                        and float(np.abs(vals).max()) * len(vals) >= 2.0**53
-                    ):
-                        np.add.at(sm, polys, vals)
-                    else:
-                        out = np.bincount(polys, weights=vals, minlength=n_polys)
-                        sm[:] += out.astype(np.int64) if integral else out
-
-                rows_i, polys_i = _csr_expand(art["interior"], cells)
-                if len(rows_i):
-                    cnt += np.bincount(polys_i, minlength=n_polys)
-                    if want_sum:
-                        acc_sum(polys_i, val[rows_i])
-
-                rows_b, polys_b = _csr_expand(art["boundary"], cells)
-                if len(rows_b):
-                    mask = pip_candidates(
-                        x[rows_b], y[rows_b], polys_b, verts, offsets, dtype=dtype
-                    )
-                    pb = polys_b[mask]
-                    cnt += np.bincount(pb, minlength=n_polys)
-                    if want_sum:
-                        acc_sum(pb, val[rows_b][mask])
-
-                nz = np.nonzero(cnt)[0]
-                sm_out = sm[nz] if want_sum else np.full(len(nz), np.nan)
+                    if arr.null_count:
+                        ok = ~np.asarray(arr.is_null().to_numpy(zero_copy_only=False))[rows]
+                        rows, polys = rows[ok], polys[ok]
+                    out["_nn"] = np.bincount(polys, minlength=n_polys)
+                    out["_sum"] = _fold(polys, val[rows], n_polys)
+                if bounds:
+                    _, pair = _csr_expand(art["bounds"], cells)
+                    bp = art["pair_poly"][pair]
+                    att = art["attributed"][pair]
+                    frac, frac_u6 = art["frac"][pair], art["frac_u6"][pair]
+                    a, na = bp[att], bp[~att]
+                    out["fp1"] = np.bincount(a, minlength=n_polys)
+                    out["fn1"] = np.bincount(na, minlength=n_polys)
+                    out["fp"] = np.bincount(a, weights=1.0 - frac[att], minlength=n_polys)
+                    out["fn"] = np.bincount(na, weights=frac[~att], minlength=n_polys)
+                    out["fp_u6"] = _fold(a, 1_000_000 - frac_u6[att], n_polys)
+                    out["fn_u6"] = _fold(na, frac_u6[~att], n_polys)
+                    touched = out["_cnt"] + out["fp1"] + out["fn1"]
+                else:
+                    touched = out["_cnt"]
+                nz = np.flatnonzero(touched)
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(nz.astype(np.int64)),
-                        pa.array(cnt[nz]),
-                        pa.array(sm_out),
-                    ],
+                    [pa.array(nz.astype(np.int64))] + [pa.array(out[c][nz]) for c, _ in out_cols],
                     schema=out_schema,
                 )
 
-        # Python-stage task sizing: each mapInPandas task pays a fixed
-        # JVM<->worker protocol cost (~20 ms measured), so a python stage
-        # wants FEW, BIG tasks — coalesce (no shuffle) to ~1 task per core
-        # unless the input is already coarser. On a real cluster this is
-        # executors*cores; tasks then stream many Arrow batches each.
-        target = max(self.spark.sparkContext.defaultParallelism, 1)
-        src = points.select(*cols)
-        if src.rdd.getNumPartitions() > 2 * target:
-            src = src.coalesce(2 * target)
-        partials = src.mapInArrow(fn, schema)
-        out = partials.groupBy("poly_id").agg(*agg.exprs())
-        return self._densify(out, agg, include_zero)
+        cols = [x_name, y_name] + ([val_col] if val_col is not None else [])
+        partials = self._arrow_source(points, cols).mapInArrow(fn, schema).toArrow()
+        ids = partials.column("poly_id").to_numpy()
+        totals = {}
+        for c, is_int in out_cols:
+            acc = np.zeros(n_polys, np.int64 if is_int else np.float64)
+            np.add.at(acc, ids, partials.column(c).to_numpy())
+            totals[c] = acc
+        return totals
+
+    def _agg_frame(
+        self, kind: str, points: DataFrame, agg: AggSpec, include_zero: bool
+    ) -> DataFrame:
+        """COUNT/SUM/AVG per polygon from :meth:`_one_pass`, as a local
+        DataFrame (poly_id, alias) in poly_id order. ``include_zero``
+        keeps every polygon position 0..N-1, as the reference emits
+        (RasterJoin/main.cpp:202-224): empty polygons get 0 for COUNT
+        and NULL for SUM/AVG; without it only polygons with a matched
+        point appear."""
+        val_col = None if agg.op == "count" else agg.col
+        integral = val_col is not None and isinstance(
+            points.schema[val_col].dataType, _INTEGRAL
+        )
+        tot = self._one_pass(kind, points, val_col, integral)
+        cnt = tot["_cnt"]
+        keep = np.arange(len(cnt)) if include_zero else np.flatnonzero(cnt)
+        if agg.op == "count":
+            val, dtype = pa.array(cnt[keep]), T.LongType()
+        else:
+            nn, s = tot["_nn"][keep], tot["_sum"][keep]
+            if agg.op == "avg":
+                s = s / np.maximum(nn, 1)  # the one float64 division sum/count
+            val = pa.array(s, mask=nn == 0)
+            dtype = T.LongType() if agg.op == "sum" and integral else T.DoubleType()
+        # nullability as the former Spark plans declared it: a sum() is
+        # nullable, a densified COUNT is coalesced to 0, and only the
+        # index plan counted rows with count(), which is never NULL
+        nullable = agg.op != "count" or (not include_zero and kind != "index")
+        schema = T.StructType(
+            [
+                T.StructField("poly_id", T.LongType(), False),
+                T.StructField(agg.alias, dtype, nullable),
+            ]
+        )
+        table = pa.table([pa.array(keep.astype(np.int64)), val], names=["poly_id", agg.alias])
+        return self.spark.createDataFrame(table, schema)
 
     def raster_join(
         self,
@@ -719,15 +646,13 @@ class SpatialJoin:
     ) -> DataFrame:
         """J1 approximate: whole cells attributed by center-inside cover.
         Error bounded by epsilon when the grid was sized with
-        epsilon_to_cell_size (GLFunction.cpp:26-30)."""
-        cover = self._pairs_df(self.tables.cover_cell, self.tables.cover_poly, cache_key="cover")
-        cells = self._cell_partials(points, agg)
-        per_poly = cells.join(F.broadcast(cover), "cell_id", "inner")
-        out = per_poly.groupBy("poly_id").agg(*agg.exprs())
-        return self._densify(out, agg, include_zero)
+        epsilon_to_cell_size (GLFunction.cpp:26-30). Runs its one Spark
+        job at call time (:meth:`_one_pass`)."""
+        return self._agg_frame("raster", points, agg, include_zero)
 
     def error_bounds(self, points: DataFrame) -> DataFrame:
-        """J4: raster count plus per-polygon error intervals.
+        """J4: raster count plus per-polygon error intervals, one row per
+        polygon. Runs its one Spark job at call time (:meth:`_one_pass`).
 
         For each boundary cell b of polygon p with cell count c(b):
           attributed (center inside)  -> fp1 += c(b); fp += (1-frac)*c(b)
@@ -745,76 +670,25 @@ class SpatialJoin:
         form of the tight interval per the repo's quantization rule.
         (int64 headroom: cnt*1e6 overflows only past ~9e12 rows/polygon.)
         """
-        t = self.tables
-        b_c, b_p, b_f, b_ci = t.boundary_pairs()
-        frac_u6 = np.floor(b_f.astype(np.float64) * 1e6).astype(np.int64)
-        boundary = self._pairs_df(
-            b_c,
-            b_p,
-            cache_key="boundary_frac",
-            extra={
-                "frac": (b_f.astype(np.float64), T.DoubleType()),
-                "frac_u6": (frac_u6, T.LongType()),
-                "attributed": (b_ci.astype(np.bool_), T.BooleanType()),
-            },
+        tot = self._one_pass("errorbounds", points, None, False)
+        cnt = tot["_cnt"]
+        cols = {
+            "poly_id": np.arange(len(cnt), dtype=np.int64),
+            "cnt": cnt,
+            "lo1": cnt - tot["fp1"],
+            "hi1": cnt + tot["fn1"],
+            "lo": cnt - tot["fp"],
+            "hi": cnt + tot["fn"],
+            "lo_u6": cnt * 1_000_000 - tot["fp_u6"],
+            "hi_u6": cnt * 1_000_000 + tot["fn_u6"],
+        }
+        schema = T.StructType(
+            [
+                T.StructField(c, T.DoubleType() if v.dtype.kind == "f" else T.LongType(), False)
+                for c, v in cols.items()
+            ]
         )
-        cells = self._cell_partials(points, AggSpec("count"))
-
-        raster = (
-            cells.join(
-                F.broadcast(self._pairs_df(t.cover_cell, t.cover_poly, cache_key="cover")),
-                "cell_id",
-                "inner",
-            )
-            .groupBy("poly_id")
-            .agg(F.sum("_cnt").alias("cnt"))
-        )
-        bounds = (
-            cells.join(F.broadcast(boundary), "cell_id", "inner")
-            .groupBy("poly_id")
-            .agg(
-                F.sum(F.when(F.col("attributed"), F.col("_cnt")).otherwise(0)).alias("fp1"),
-                F.sum(F.when(~F.col("attributed"), F.col("_cnt")).otherwise(0)).alias("fn1"),
-                F.sum(
-                    F.when(F.col("attributed"), (1 - F.col("frac")) * F.col("_cnt")).otherwise(0.0)
-                ).alias("fp"),
-                F.sum(
-                    F.when(~F.col("attributed"), F.col("frac") * F.col("_cnt")).otherwise(0.0)
-                ).alias("fn"),
-                F.sum(
-                    F.when(
-                        F.col("attributed"),
-                        (F.lit(1_000_000) - F.col("frac_u6")) * F.col("_cnt"),
-                    ).otherwise(F.lit(0))
-                ).alias("fp_u6"),
-                F.sum(
-                    F.when(~F.col("attributed"), F.col("frac_u6") * F.col("_cnt")).otherwise(
-                        F.lit(0)
-                    )
-                ).alias("fn_u6"),
-            )
-        )
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed("id", "poly_id")
-        return (
-            all_polys.join(raster, "poly_id", "left")
-            .join(bounds, "poly_id", "left")
-            .select(
-                "poly_id",
-                F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-                (F.coalesce(F.col("cnt"), F.lit(0)) - F.coalesce(F.col("fp1"), F.lit(0))).alias("lo1"),
-                (F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("fn1"), F.lit(0))).alias("hi1"),
-                (F.coalesce(F.col("cnt"), F.lit(0)) - F.coalesce(F.col("fp"), F.lit(0.0))).alias("lo"),
-                (F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("fn"), F.lit(0.0))).alias("hi"),
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0)) * F.lit(1_000_000)
-                    - F.coalesce(F.col("fp_u6"), F.lit(0))
-                ).alias("lo_u6"),
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0)) * F.lit(1_000_000)
-                    + F.coalesce(F.col("fn_u6"), F.lit(0))
-                ).alias("hi_u6"),
-            )
-        )
+        return self.spark.createDataFrame(pa.table(cols), schema)
 
     def coarse_scan(self, points: DataFrame, x0: float, y0: float, x1: float, y1: float) -> DataFrame:
         """S5 partition-pruned range scan: rows whose CELL overlaps the

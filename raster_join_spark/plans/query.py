@@ -16,9 +16,9 @@ so a raster-join user can port a workload mechanically:
 The coarse sigma (executeQuery) narrows to grid cells overlapping the
 query window — a SUPERSET exactly like HashGridIndex::queryIndex
 (HashGridIndex.cpp:78-137); constraints are conjunctive EQ/LT/LTE/GT/GTE
-over typed attributes (Common.h:22,34-39); "cpu" maps to the same fused
-exact plan as hybrid (the reference's CPU join J5 is its oracle — here
-the hybrid plan IS the CPU join shape, per-task partials + merge).
+over typed attributes (Common.h:22,34-39); "cpu" maps to the same exact
+plan as hybrid (the reference's CPU join J5 is its oracle — here the
+one-pass kernel IS the CPU join shape, per-task partials + merge).
 """
 
 from __future__ import annotations
@@ -160,7 +160,11 @@ class QueryEngine:
 
     def execute_function(self, fn: str) -> DataFrame:
         """fn codes per GLHandler.cpp:228 / CPUJoin.cpp:146-151:
-        raster | index | hybrid | errorbounds | cpu."""
+        raster | index | hybrid | errorbounds | cpu.
+
+        The request's one Spark job runs here, at call time; the result
+        is a small local DataFrame (one row per polygon) whose collect
+        runs no job."""
         sj = self._sj()
         pts = self._filtered()
         if fn == "raster":
@@ -168,8 +172,8 @@ class QueryEngine:
         if fn == "index":
             return sj.index_join(pts, self.agg)
         if fn in ("hybrid", "cpu"):
-            # J5 (cpu): identical semantics; the fused plan IS the
-            # CPU-join shape (per-task partials + merge)
+            # J5 (cpu): identical semantics; the one-pass kernel IS
+            # the CPU-join shape (per-task partials + merge)
             return sj.hybrid_join(pts, self.agg)
         if fn == "errorbounds":
             return sj.error_bounds(pts)

@@ -7,7 +7,7 @@ exposes streaming equivalents of its core aggregations:
 - windowed_cell_counts: tumbling event-time windows x grid cell with a
   watermark for late crawl records — the incremental form of the raster
   join's cell pre-aggregation (state = open windows only)
-- streaming_polygon_counts: per-micro-batch fused hybrid join via
+- streaming_polygon_counts: per-micro-batch exact hybrid join via
   foreachBatch, accumulating per-polygon counts in a sink table —
   exactly-once via the streaming checkpoint + idempotent batch ids
 
@@ -17,8 +17,11 @@ unchanged on a real unbounded source (Kafka/file-arrival) in production.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.operators.spatial_join import SpatialJoin
@@ -68,6 +71,26 @@ def windowed_cell_counts(
     )
 
 
+def cover_pairs_df(sj: SpatialJoin) -> DataFrame:
+    """The J1 cover map of ``sj`` — one (cell_id, poly_id) row per cell
+    whose center lies inside the polygon — as the static side of a
+    stream-static broadcast join. Every micro-batch re-executes that
+    join, so the literal frame is coalesced to one partition and
+    persisted (CLAUDE.md, literal broadcast maps); it stays cached while
+    the stream runs."""
+    t = sj.tables
+    schema = T.StructType(
+        [
+            T.StructField("cell_id", T.LongType(), False),
+            T.StructField("poly_id", T.LongType(), False),
+        ]
+    )
+    pdf = pd.DataFrame(
+        {"cell_id": t.cover_cell.astype(np.int64), "poly_id": t.cover_poly.astype(np.int64)}
+    )
+    return sj.spark.createDataFrame(pdf, schema=schema).coalesce(1).persist()
+
+
 def windowed_polygon_counts(
     stream: DataFrame,
     sj: SpatialJoin,
@@ -81,9 +104,7 @@ def windowed_polygon_counts(
     Approximate (J1 whole-cell attribution) — the declarative counterpart
     of streaming_polygon_counts' exact foreachBatch path, with watermarked
     bounded state."""
-    cover = sj._pairs_df(
-        sj.tables.cover_cell, sj.tables.cover_poly, cache_key="cover"
-    )
+    cover = cover_pairs_df(sj)
     cells = (
         stream.withColumn("cell_id", sj.grid.cell_id_col(F.col(sj.x), F.col(sj.y)))
         .filter(F.col("cell_id").isNotNull())
@@ -110,10 +131,10 @@ def streaming_polygon_counts(
     sink_table: str = "poly_counts_stream",
     sink_dir: str | None = None,
 ):
-    """Continuous per-polygon counts: each micro-batch runs the fused
-    hybrid join (exact) and writes its PARTIAL per-polygon counts to a
-    durable directory keyed by batch_id; the sink view sums over batch
-    partials at read time.
+    """Continuous per-polygon counts: each micro-batch runs the exact
+    hybrid join (its one Spark job runs inside the batch) and writes its
+    PARTIAL per-polygon counts to a durable directory keyed by batch_id;
+    the sink view sums over batch partials at read time.
 
     This is genuinely exactly-once: a replayed micro-batch (same
     batch_id, from the streaming checkpoint) OVERWRITES its own partial

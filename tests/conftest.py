@@ -20,3 +20,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(call)`` runs ``call`` under a job group of its own and
+    returns ``(result, jobs)``, ``jobs`` holding one list per Spark job
+    the call ran: the task count of each of its stages."""
+    import itertools
+
+    sc = spark.sparkContext
+    serial = itertools.count()
+
+    def run(call):
+        group = f"spark-jobs-{next(serial)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = [
+            [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+            for j in sorted(tracker.getJobIdsForGroup(group))
+        ]
+        return out, jobs
+
+    return run

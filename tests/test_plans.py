@@ -2,8 +2,8 @@
 
 These lock in the properties that make the engine viable at 100 TB:
 filters reach the parquet scan, projection prunes columns, the polygon
-side broadcasts (never a shuffle of the point side), the raster path has
-no Python, and the fused hybrid path shuffles only partial vectors.
+side broadcasts (never a shuffle of the point side), and every aggregate
+strategy runs one Arrow pass with no exchange.
 """
 
 from __future__ import annotations
@@ -46,30 +46,73 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert pushed and "EqualTo(event_type,purchase)" in pushed[0]
 
 
+def ran_plans(spark, call) -> list[list[tuple[str, str]]]:
+    """Run ``call``; return, for each SQL execution it started, the
+    (name, description) of every physical operator Spark's status store
+    recorded — the plan that actually ran, not the plan of the returned
+    DataFrame (an aggregate strategy returns a LocalTableScan of its
+    reduced result). The walk stops at an InMemoryTableScan: a cached
+    relation's own plan ran when it was built."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def ids():
+        return {e.executionId() for e in seq(store.executionsList())}
+
+    before = ids()
+    call()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    for eid in sorted(ids() - before):
+        graph = store.planGraph(eid)
+        nodes = {n.id(): n for n in seq(graph.allNodes())}
+        kids: dict[int, list[int]] = {}
+        for e in seq(graph.edges()):  # edges run child -> parent
+            kids.setdefault(e.toId(), []).append(e.fromId())
+        children = {c for cs in kids.values() for c in cs}
+        todo, ops = [i for i in nodes if i not in children], []
+        while todo:
+            node = nodes[todo.pop()]
+            ops.append((node.name(), node.desc()))
+            if node.name() != "InMemoryTableScan":
+                todo.extend(kids.get(node.id(), []))
+        plans.append(ops)
+    return plans
+
+
+def assert_one_arrow_pass(spark, call) -> list[tuple[str, str]]:
+    """``call`` ran one SQL execution: a single MapInArrow pass over the
+    points with no Exchange and no join. Returns its operators."""
+    plans = ran_plans(spark, call)
+    assert len(plans) == 1, plans
+    names = [name for name, _ in plans[0]]
+    assert names.count("MapInArrow") == 1, names
+    assert not [n for n in names if "Exchange" in n or "Join" in n], names
+    return plans[0]
+
+
 def test_index_join_broadcasts_polygon_side(spark, sf_dir, sj):
-    plan = plan_of(sj.index_join(points_df(spark, sf_dir), include_zero=False))
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "SortMergeJoin" not in plan, "point side must never shuffle for the join"
+    """The polygon side reaches the executors only as the broadcast
+    artifact: the point side never shuffles and no join runs."""
+    pts = points_df(spark, sf_dir)
+    assert_one_arrow_pass(spark, lambda: sj.index_join(pts, include_zero=False))
 
 
-def test_raster_join_is_pure_jvm(spark, sf_dir, sj):
-    plan = plan_of(sj.raster_join(points_df(spark, sf_dir), include_zero=False))
-    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
-    assert "MapInArrow" not in plan
-    assert "SortMergeJoin" not in plan
+def test_raster_join_one_arrow_pass(spark, sf_dir, sj):
+    """The raster join is the same single Arrow pass (cover lookup, no
+    PIP); the former per-cell groupBy, cover join and densify join are
+    gone from its plan."""
+    pts = points_df(spark, sf_dir)
+    assert_one_arrow_pass(spark, lambda: sj.raster_join(pts, include_zero=False))
 
 
 def test_fused_hybrid_minimal_exchanges(spark, sf_dir, sj):
-    plan = plan_of(sj.hybrid_join(points_df(spark, sf_dir), include_zero=False))
-    # the fused kernel rides mapInArrow (no pandas copy layer)
-    assert "MapInArrow" in plan
-    # partial vectors -> exactly one aggregation exchange (plus AQE reads);
-    # never a point-wide shuffle
-    assert "SortMergeJoin" not in plan
-    n_shuffles = sum(
-        1 for l in plan.splitlines() if "Exchange hashpartitioning" in l
-    )
-    assert n_shuffles <= 1, plan
+    """The fused kernel rides mapInArrow (no pandas copy layer), and its
+    partial vectors are summed on the driver: no exchange at all."""
+    pts = points_df(spark, sf_dir)
+    assert_one_arrow_pass(spark, lambda: sj.hybrid_join(pts, include_zero=False))
 
 
 def test_simhash_and_minhash_are_pure_jvm(spark):
@@ -152,34 +195,18 @@ def test_prepare_corpus_no_doc_sized_join(spark, sf_dir):
     assert "Window" not in plan and "Cartesian" not in plan
 
 
-def request_nodes(df) -> list[str]:
-    """The physical operators a request runs, one string each. A cached
-    relation's own plan ran when it was built, so the walk stops at its
-    InMemoryTableScan; it enters adaptive plans and broadcast sides."""
-    out, todo = [], [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        node = todo.pop()
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            todo.append(node.executedPlan())
-            continue
-        out.append(node.simpleString(10_000))
-        kids = node.children()
-        todo.extend(kids.apply(i) for i in range(kids.size()))
-    return out
-
-
 def test_query_engine_reads_cached_points(spark, sf_dir):
     """QueryEngine requests scan the engine's persisted copy of its input:
     the page synthesis (regex extraction) ran once when the engine was
     built and is in no request's plan, not even inlined into the window
     and constraint predicates (CLAUDE.md, Catalyst inlines expensive
-    projections)."""
+    projections). Each request is one Arrow pass over that copy."""
     from raster_join_spark.plans.query import ConstraintType, QueryConstraint, QueryEngine
 
     eng = QueryEngine(spark, points_df(spark, sf_dir), COARSE_GRID).set_polygon_query(ORACLE_POLYS)
     eng.execute_query(None, "2024-01-05 00:00:00", "2024-01-25 00:00:00")
     eng.set_query_constraints([QueryConstraint("value_c", ConstraintType.GT, 2000)])
     for fn in ("raster", "index", "hybrid", "errorbounds"):
-        nodes = request_nodes(eng.execute_function(fn))
-        assert any(n.startswith("InMemoryTableScan") for n in nodes), (fn, nodes)
-        assert not [n for n in nodes if "regexp_extract" in n], (fn, nodes)
+        ops = assert_one_arrow_pass(spark, lambda: eng.execute_function(fn))
+        assert any(name == "InMemoryTableScan" for name, _ in ops), (fn, ops)
+        assert not [d for _, d in ops if "regexp_extract" in d], (fn, ops)

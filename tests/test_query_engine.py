@@ -21,7 +21,11 @@ from raster_join_spark.sources.pages import points_df
 
 @pytest.fixture(scope="module")
 def pts(spark, sf_dir):
-    return points_df(spark, sf_dir)
+    df = points_df(spark, sf_dir)
+    yield df
+    # every engine here persists this input; release it so later modules
+    # plan over the raw scan (Spark would serve them from the cache)
+    df.unpersist()
 
 
 def test_constraints_match_manual_filters(spark, pts):
@@ -117,3 +121,49 @@ def test_unknown_function_raises(spark, pts):
     for call, match in cases:
         with pytest.raises(ValueError, match=match):
             call()
+
+
+def test_one_spark_job_per_request(spark, pts, spark_jobs):
+    """Every strategy runs exactly one Spark job when the request is
+    executed (one Arrow pass, reduced on the driver), and collecting its
+    result runs none."""
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.execute_query(None, "2024-01-05 00:00:00", "2024-01-25 00:00:00")
+    eng.set_query_constraints([QueryConstraint("value_c", ConstraintType.GT, 2000)])
+    eng.set_aggregation(Aggregation.AVG, "value_c")
+    for fn in ("raster", "index", "hybrid", "errorbounds"):
+        df, jobs = spark_jobs(lambda: eng.execute_function(fn))
+        assert len(jobs) == 1, (fn, jobs)
+        rows, jobs = spark_jobs(df.collect)
+        assert jobs == [] and len(rows) == ORACLE_POLYS.n_polys, (fn, jobs)
+
+
+def test_empty_window_and_constraint(spark, pts):
+    """A window or a constraint that matches no row: COUNT is 0 and
+    SUM/AVG are NULL for every polygon, error_bounds is all 0, and
+    without include_zero no row comes back."""
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    n = ORACLE_POLYS.n_polys
+    empties = {
+        "window": lambda: eng.execute_query(
+            None, "2030-01-01 00:00:00", "2030-01-02 00:00:00"
+        ).set_query_constraints([]),
+        "constraint": lambda: eng.execute_query(None).set_query_constraints(
+            [QueryConstraint("value_c", ConstraintType.LT, -(10**15))]
+        ),
+    }
+    for case, make_empty in empties.items():
+        make_empty()
+        assert eng._filtered().count() == 0, case
+        for fn in ("raster", "index", "hybrid"):
+            for agg, want in ((Aggregation.COUNT, 0), (Aggregation.SUM, None), (Aggregation.AVG, None)):
+                eng.set_aggregation(agg, None if agg is Aggregation.COUNT else "value_c")
+                rows = eng.execute_function(fn).orderBy("poly_id").collect()
+                assert [r["poly_id"] for r in rows] == list(range(n)), (case, fn, agg)
+                assert [r["agg"] for r in rows] == [want] * n, (case, fn, agg)
+        eb = eng.execute_function("errorbounds").orderBy("poly_id").toPandas()
+        assert eb["poly_id"].tolist() == list(range(n))
+        assert (eb.drop(columns="poly_id").to_numpy() == 0).all(), case
+        sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
+        for strategy in (sj.raster_join, sj.index_join, sj.hybrid_join):
+            assert strategy(eng._filtered(), include_zero=False).collect() == [], (case, strategy)

@@ -12,6 +12,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from raster_join_spark.fixtures import micro_fixture
 from raster_join_spark.geo.grid import GridSpec
@@ -477,3 +478,117 @@ def test_refinement_auto_and_equivalence(spark):
     big = blob_polygons(8, 0, 0, 1000, 1000, n_verts=9, seed=31)
     assert SpatialJoin(spark, big, coarse).refine_k == 1
 
+
+
+# ----------------------------------------------------- output contract
+
+
+def _three_points(spark):
+    """One square holding three points whose ``v`` is 5, NULL and 7 (and
+    ``d`` 1.5, NULL, 2.5), one triangle holding a single point whose
+    values are both NULL, and one empty triangle. The grid is fine
+    enough that every strategy attributes every point to its polygon."""
+    from raster_join_spark.geo.polygons import PolygonSet
+
+    polys = PolygonSet.from_list(
+        [
+            [(0.5, 0.5), (5.5, 0.5), (5.5, 5.5), (0.5, 5.5)],
+            [(10.5, 10.5), (14.5, 10.5), (10.5, 14.5)],
+            [(20.5, 20.5), (22.5, 20.5), (20.5, 22.5)],
+        ]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("x", T.DoubleType()),
+            T.StructField("y", T.DoubleType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("i", T.IntegerType()),
+        ]
+    )
+    rows = [
+        (1.2, 1.3, 5, 1.5, 5),
+        (2.2, 2.3, None, None, None),
+        (3.2, 3.3, 7, 2.5, 7),
+        (11.2, 11.3, None, None, None),
+    ]
+    return polys, GridSpec(0.0, 0.0, 1.0, 1.0, 32, 32), spark.createDataFrame(rows, schema)
+
+
+def test_null_values_follow_sql_semantics(spark):
+    """SUM and AVG skip NULL values, AVG divides by the non-null count, and
+    a polygon without a non-null value gets NULL — in all four
+    strategies, integral and float columns alike. COUNT counts rows."""
+    polys, grid, df = _three_points(spark)
+    sj = SpatialJoin(spark, polys, grid)
+    want = {
+        "count": [3, 1, 0],
+        "sum": {"v": [12, None, None], "i": [12, None, None], "d": [4.0, None, None]},
+        "avg": {"v": [6.0, None, None], "i": [6.0, None, None], "d": [2.0, None, None]},
+    }
+    for strategy in (sj.raster_join, sj.index_join, sj.hybrid_join):
+        got = strategy(df).orderBy("poly_id").toPandas()["agg"].tolist()
+        assert got == want["count"], strategy.__name__
+        for op in ("sum", "avg"):
+            for col, exp in want[op].items():
+                rows = strategy(df, AggSpec(op, col)).orderBy("poly_id").collect()
+                assert [r["agg"] for r in rows] == exp, (strategy.__name__, op, col)
+    eb = sj.error_bounds(df).orderBy("poly_id").toPandas()
+    assert eb["cnt"].tolist() == want["count"]
+
+
+def test_output_schemas_pinned(spark):
+    """Column names, types and nullability of every aggregate result, as
+    the strategies have always declared them (a densified COUNT is never
+    NULL; SUM/AVG are nullable; SUM keeps an integral column's bigint)."""
+    polys, grid, df = _three_points(spark)
+    sj = SpatialJoin(spark, polys, grid)
+
+    def fields(out):
+        return [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema]
+
+    pid = ("poly_id", "bigint", False)
+    for name in ("raster_join", "index_join", "hybrid_join"):
+        strategy = getattr(sj, name)
+        for include_zero in (True, False):
+            count_nullable = not include_zero and name != "index_join"
+            want = {
+                AggSpec(): ("bigint", count_nullable),
+                AggSpec("sum", "v"): ("bigint", True),
+                AggSpec("sum", "i"): ("bigint", True),
+                AggSpec("sum", "d"): ("double", True),
+                AggSpec("avg", "v"): ("double", True),
+                AggSpec("avg", "d", "mean"): ("double", True),
+            }
+            for agg, (typ, nullable) in want.items():
+                got = fields(strategy(df, agg, include_zero=include_zero))
+                assert got == [pid, (agg.alias, typ, nullable)], (name, include_zero, agg)
+    assert fields(sj.error_bounds(df)) == [pid] + [
+        (c, "double" if c in ("lo", "hi") else "bigint", False)
+        for c in ("cnt", "lo1", "hi1", "lo", "hi", "lo_u6", "hi_u6")
+    ]
+
+
+def test_kernel_task_counts(spark, spark_jobs, polyset, grid):
+    """The Arrow pass coalesces its input to at most two tasks per core
+    and never adds partitions: a 1-partition input runs 1 task, a
+    64-partition input runs 2 * defaultParallelism. One job, one stage,
+    for the aggregate strategies and for assign_polygons alike."""
+    target = 2 * spark.sparkContext.defaultParallelism
+    sj = SpatialJoin(spark, polyset, grid)
+    for parts, tasks in ((1, 1), (64, target)):
+        pts = spark.range(0, 6400, numPartitions=parts).select(
+            ((F.col("id") * 37) % 1000).cast("double").alias("x"),
+            ((F.col("id") * 91) % 1000).cast("double").alias("y"),
+            F.col("id").cast("string").alias("url"),
+        )
+        calls = {
+            "hybrid": lambda: sj.hybrid_join(pts),
+            "index": lambda: sj.index_join(pts),
+            "raster": lambda: sj.raster_join(pts),
+            "errorbounds": lambda: sj.error_bounds(pts),
+            "assign": lambda: sj.assign_polygons(pts).collect(),
+        }
+        for name, call in calls.items():
+            _, jobs = spark_jobs(call)
+            assert jobs == [[tasks]], (name, parts, jobs)

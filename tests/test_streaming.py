@@ -129,7 +129,7 @@ def test_streaming_first_seen_dedup(spark, tmp_path):
 def test_windowed_polygon_counts_match_batch(spark, points_dir, pts_schema, tmp_path):
     """Declarative watermarked window x polygon (raster cover join) vs the
     equivalent batch aggregation."""
-    from raster_join_spark.streaming.windowed import windowed_polygon_counts
+    from raster_join_spark.streaming.windowed import cover_pairs_df, windowed_polygon_counts
 
     sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
     stream = stream_points(spark, points_dir, pts_schema, max_files_per_trigger=2)
@@ -146,7 +146,7 @@ def test_windowed_polygon_counts_match_batch(spark, points_dir, pts_schema, tmp_
     got = spark.sql("SELECT win_start, poly_id, cnt FROM win_polys").toPandas()
 
     batch = spark.read.parquet(points_dir)
-    cover = sj._pairs_df(sj.tables.cover_cell, sj.tables.cover_poly, cache_key="cover")
+    cover = cover_pairs_df(sj)
     exp = (
         batch.withColumn("cell_id", COARSE_GRID.cell_id_col(F.col("x"), F.col("y")))
         .filter(F.col("cell_id").isNotNull())
