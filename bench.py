@@ -106,8 +106,8 @@ def run_suite(master: str, sf_dir: str) -> dict:
             # sample, the same min-over-rounds policy the scaling
             # benchmark uses (and the reference's min-over-9-iterations,
             # GLHandler.cpp:214-248). Each sample builds a FRESH plan —
-            # no shuffle/persist reuse across samples (knn_join_bulk
-            # releases its per-round persist on completion).
+            # knn_join_bulk rebuilds its point index and reruns its pass
+            # on every call.
             for _ in range(int(os.environ.get("SPARK_GRAFT_KNNB_SAMPLES", "3"))):
                 t0 = time.perf_counter()
                 _force(qs[name](spark, sf_dir))
@@ -454,8 +454,9 @@ def _scaling_closure_md(hybrid_docs: int) -> str:
 
 
 def _hybrid_rootcause_md() -> str:
-    """Inline the hybrid-path scaling root-cause analysis (written by
-    tools/diag_hybrid.py) into BASELINE.md when present."""
+    """Inline the hybrid-path scaling root-cause analysis
+    (BENCH/hybrid_rootcause.md, a round-2 record) into BASELINE.md when
+    present."""
     path = os.path.join(REPO, "BENCH", "hybrid_rootcause.md")
     if not os.path.exists(path):
         return ""

@@ -7,7 +7,7 @@ from OPTIMIZATION_r*.md.
 
 Usage:
   python bench_extra.py knn       [sf_dir]   # knn_join with round stats
-  python bench_extra.py knn_bulk  [sf_dir]   # knn_join_bulk with phase stats
+  python bench_extra.py knn_bulk  [sf_dir]   # knn_join_bulk wall time per rep
   python bench_extra.py suite     [sf_dir]   # every headline query, noop sink
   python bench_extra.py plans     [sf_dir]   # dump .explain for headline queries
 """
@@ -65,10 +65,7 @@ def run_knn_bulk(sf_dir: str, reps: int = 3) -> None:
     import __spark_entry__ as e
 
     spark = _spark()
-    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    e._EVENTS_COUNT_CACHE[sf_dir] = n
     for i in range(reps):
-        stats: dict = {}
         pts = e._points(spark, sf_dir)
         qdf = pts.filter((F.col("event_id") % e.KNN_BULK_MOD) == 0).select(
             F.col("event_id").alias("q_id"),
@@ -77,13 +74,11 @@ def run_knn_bulk(sf_dir: str, reps: int = 3) -> None:
         )
         spark.sparkContext.setJobDescription(f"knn_bulk rep {i}")
         t0 = time.perf_counter()
-        out = knn_join_bulk(
-            spark, pts, COARSE_GRID, qdf, KNN_K, n_total=n, stats=stats
-        )
+        out = knn_join_bulk(spark, pts, COARSE_GRID, qdf, KNN_K)
         out.count()
         wall = round(time.perf_counter() - t0, 3)
         out.unpersist()
-        print(json.dumps({"rep": i, "wall": wall, **stats}))
+        print(json.dumps({"rep": i, "wall": wall}))
 
 
 def run_suite(sf_dir: str, reps: int = 2) -> None:

@@ -1,12 +1,15 @@
-"""kNN via iterative cell-ring expansion (reference J6 generalized).
+"""kNN via cell-ring expansion (reference J6 generalized).
 
 The reference ships the single-ring probe primitive
 (CPUJoin/GridIndexF.cpp:177-198: scan the cell ring around the query,
-ellipse-filter) but never wires it to a CLI; the north_rule asks for the
-full operator: grow the ring until the k-th candidate's distance is
-certified complete.
+ellipse-filter) over an in-memory grid index of the points, but never
+wires it to a CLI; the north_rule asks for the full operator: grow the
+ring until the k-th candidate's distance is certified complete. Any
+point in an unprobed cell is at least r*cell_min away from a query whose
+probe reached Chebyshev radius r, so a query is done once its k-th
+distance is <= (r * cell_min)^2.
 
-Spark plan per round r:
+:func:`knn_join` takes a driver list of queries; per round r:
   1. driver enumerates ONLY the new ANNULUS of cells (Chebyshev radius
      r_prev+1 .. r) per pending query — never the full disk again (the
      round-3 worst case: re-enumerating the whole disk grows O(r^2) per
@@ -20,9 +23,7 @@ Spark plan per round r:
      collect is exactly |pending| rows of k structs, INDEPENDENT of
      point density; the driver then MERGES each round's annulus top-k
      into the per-query running top-k (annuli are disjoint by cell, so
-     the merge never double-counts a point). Certification: a query is
-     done when the merged kth_dist <= (r * cell_min)^2 — any point in an
-     unvisited cell is at least r*cell_min away, so its top-k is exact.
+     the merge never double-counts a point) and certifies.
   4. EXHAUSTIVE FALLBACK: when the next annulus would need more than
      ``literal_cap`` literal cells (sparse data on a fine grid), or the
      annuli hit max_radius with queries still uncertified, the remaining
@@ -35,12 +36,22 @@ Spark plan per round r:
      literal DataFrame (inherently q x k rows — never big), so no plan
      is ever re-executed after its round ran.
 
+:func:`knn_join_bulk` takes a query TABLE. The driver collects the
+in-grid points once, refines the grid from their occupancy, sorts them
+by cell into a CSR index and broadcasts it; one ``mapInArrow`` pass over
+the queries then runs the whole ring expansion per Arrow batch in numpy
+and emits the final rows.
+
 Distances are squared Euclidean with the same op order as the SQL oracle:
 (x-qx)*(x-qx) + (y-qy)*(y-qy) — exact integers in microdegree space.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -277,266 +288,207 @@ def knn_join(
         base.unpersist()
 
 
-def _block_topk_by_cell(
-    probes: DataFrame,
-    pts: DataFrame,
-    grid: GridSpec,
-    k: int,
-    x: str,
-    y: str,
-    id_col: str,
-    n_groups: int | None = None,
-    max_pts_per_block: int = 2048,
-    cell_counts: DataFrame | None = None,
-    bounded_cells: bool = False,
-) -> DataFrame:
-    """Bucket-blocked kNN: cogroup (q_id, qx, qy, cell_id) probes with
-    (cell_id, id, x, y) points by a HASH BUCKET of cells
-    (``cell_id % n_groups``) and compute each probing query's top-k
-    within the bucket vectorized in numpy — the Arrow transfer is
-    O(|probes| + |points|) rows and the output is <= k rows per
-    (query, bucket), so hot-cell skew never materializes the quadratic
-    (query, candidate) pair set in the JVM (it runs as a chunked
-    distance matrix inside the block instead).
+# The bulk operator's index grid is the caller's grid refined until its
+# densest cell holds about this many points (or _MAX_REFINE binds).
+# Coarser cells make every query scan more candidates, finer cells make
+# sparse-region queries enumerate more cell rows. Single-thread kernel
+# time for targets 1024 / 256 / 128 / 64 / 32 (4-core host): 7.15 /
+# 2.71 / 1.93 / 1.26 / 1.16 s for 67k queries over the perfbench pages,
+# 3.25 / 1.35 / 0.67 / 0.44 / 0.29 s for 10k queries over sf0.1.
+_CELL_TARGET = 32
+# Largest refinement factor per axis: it bounds the cell rows a query in
+# a sparse region enumerates when one hot cell cannot be split (all of
+# its points on one coordinate).
+_MAX_REFINE = 16
+# Entries of one padded (queries x candidates) distance matrix.
+_MATRIX_ENTRIES = 1 << 20
+# Certification margin in cells: floor((v - origin) / cell) in floating
+# point can put a point a few ulps across its cell edge.
+_EDGE = 1e-6
 
-    The bucket count balances two costs. The pandas cogroup runner
-    pays ~0.5-1ms of fixed overhead per GROUP invocation, so per-cell
-    grouping puts |probed cells| Python calls on the critical path
-    (measured at sf0.1: 22k cells -> 14-20s wall for a ~3.7M-pair
-    kernel that computes in well under a second). Few HUGE groups
-    lose parallelism and (for spatially contiguous tiles, the round-5
-    design) concentrate the hot REGION's whole pair volume into one
-    serialized call. Hash buckets get both: group count capped near
-    ~512-32k, while neighboring hot cells scatter across buckets, so
-    the skewed region's work spreads over the executor pool. A single
-    pathological cell still lands in one bucket, but its work is one
-    vectorized distance block, not per-row Python. Group SIZE stays
-    bounded by cells-per-bucket x per-cell occupancy — the auto rule
-    keeps <= ~64 cells per bucket until the 32768-group cap engages.
 
-    Distance arithmetic is the identical IEEE double sequence as the
-    SQL oracle ((x-qx)^2 + (y-qy)^2, exact integers in microdegree
-    space); the (dist2, id) order is total (ids unique), and both the
-    per-cell selection and the per-bucket reduce rank by it, so
-    bucket-partial top-k then JVM array_sort merge is bit-exact vs
-    the flat join form.
+def _ramp(lens: np.ndarray) -> np.ndarray:
+    """0..len-1 for each segment length, concatenated."""
+    return np.arange(lens.sum()) - np.repeat(np.cumsum(lens) - lens, lens)
 
-    Hot-cell SALTING: a single cell holding tens of thousands of points
-    receives every nearby query's probes, and its quadratic distance
-    block would serialize in one task. Cells with more than
-    ``max_pts_per_block`` points split their POINT rows into
-    ceil(n/max_pts) deterministic hash slices; probes touching those
-    cells replicate to every slice. Per-slice top-k then the existing
-    per-query merge is exact (top-k is distributive over any point
-    partition, ids break ties totally), so results are bit-identical —
-    the hot cell's work just spreads over the executor pool.
 
-    applyInPandas deliberately: the applyInArrow cogroup runner
-    measured ~2x SLOWER end-to-end on Spark 4.1.2 (identical numpy
-    kernel) — the numeric arrow->pandas conversion is not the
-    bottleneck."""
-    import numpy as np
-    import pandas as pd
+def _cells(v: np.ndarray, origin: float, size: float, n: int) -> np.ndarray:
+    """Column (or row) of each coordinate, clamped into [0, n): an
+    out-of-grid query probes from its nearest edge cell, and a point on
+    the far edge stays in the last cell when a refined width rounds."""
+    t = np.floor((v - origin) / size)
+    return np.clip(np.nan_to_num(t), 0, n - 1).astype(np.int64)
 
-    if n_groups is None:
-        n_groups = int(min(grid.n_cells, max(512, grid.n_cells // 64), 32768))
-    n_groups = max(1, min(n_groups, grid.n_cells))
 
-    # hot-cell split table: (cell_id, _nsplit) for cells over budget.
-    # Computed on the (already probe-pruned) point side — a map-side-
-    # combined count, broadcast to both sides.
-    # ``cell_counts`` lets a caller with an already-materialized
-    # (cell_id, _n) frame (knn_join_bulk persists one for radius
-    # seeding) skip re-aggregating the point side every invocation; a
-    # superset of the probed cells is fine — unprobed hot cells simply
-    # never appear in either cogroup side.
-    if bounded_cells:
-        # caller certifies (from MEASURED per-cell counts, not the
-        # refinement heuristic) that no cell exceeds max_pts_per_block:
-        # the whole hot-split apparatus — broadcast build of the hot
-        # table, a left join + salt column on each cogroup side, the
-        # probe-replication explode, the 2^20 key fold — would be
-        # per-row work spent proving "not hot" for every row. Skip it;
-        # plain cell ids key the buckets. Results are identical by the
-        # salting exactness argument with zero split cells (r8;
-        # pinned by tests/test_knn.py::test_bulk_bounded_cells_flag).
-        pts = pts.select("cell_id", id_col, x, y)
-        probes = probes.select("cell_id", "q_id", "qx", "qy")
-    else:
-        if cell_counts is None:
-            cell_counts = pts.groupBy("cell_id").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-        hot = cell_counts.filter(F.col("_n") > max_pts_per_block).select(
-            "cell_id",
-            F.ceil(F.col("_n") / F.lit(max_pts_per_block))
-            .cast("int")
-            .alias("_nsplit"),
-        )
-        pts = pts.join(F.broadcast(hot), "cell_id", "left").withColumn(
-            "_salt",
-            F.when(F.col("_nsplit").isNull(), F.lit(0)).otherwise(
-                F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsplit")).cast("int")
-            ),
-        )
-        probes = probes.join(F.broadcast(hot), "cell_id", "left").withColumn(
-            "_salt",
-            F.explode(
-                F.sequence(F.lit(0), F.coalesce(F.col("_nsplit"), F.lit(1)) - 1)
-            ),
-        )
-        # fold the salt into the segmentation key so a probe replica only
-        # ever meets ITS OWN point slice (two slices of one cell colliding
-        # into one group would hand each replica the full point set and
-        # duplicate candidates in the merge). 2^20 slices x 2048 pts bounds
-        # a single cell at ~2G points before shift collision — far beyond
-        # any sane grid; cell ids stay within int64 up to ~2^43 cells.
-        _ck = (F.col("cell_id") * F.lit(1 << 20) + F.col("_salt")).alias("cell_id")
-        pts = pts.select(_ck, id_col, x, y)
-        probes = probes.select(_ck, "q_id", "qx", "qy")
+def _point_index(tbl: pa.Table, grid: GridSpec, id_col: str, x: str, y: str) -> dict:
+    """The broadcast point index over the in-grid rows of ``tbl``:
+    ``grid`` refined from its occupancy (np.bincount) to about
+    ``_CELL_TARGET`` points in the densest cell, and the points sorted by
+    refined cell id. A run of cell ids is then a contiguous run of points
+    (CSR offsets by ``searchsorted``). ``key`` ranks the ids, so ties
+    break by id for any id type."""
+    # imported here: pyarrow.compute adds ~33 MB to a process's RSS
+    import pyarrow.compute as pc
 
-    q_t = probes.schema["q_id"].dataType
-    id_t = pts.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", q_t, False),
-            T.StructField(id_col, id_t, False),
-            T.StructField("dist2", T.DoubleType(), False),
-        ]
-    )
-    # dtypes must FOLLOW out_schema (q_id/id types are caller-defined):
-    # a hardcoded int64 empty frame against e.g. a string id column
-    # fails Arrow conversion exactly on empty cogroup sides
-    _pd_dtype = {
-        "long": "int64", "integer": "int32", "short": "int16",
-        "double": "float64", "float": "float32", "string": "object",
+    px = tbl.column(x).to_numpy().astype(np.float64)
+    py = tbl.column(y).to_numpy().astype(np.float64)
+    with np.errstate(invalid="ignore"):  # NULL coordinates arrive as NaN
+        base = grid.cell_ids_np(px, py)
+    keep = base >= 0
+    px, py, base = px[keep], py[keep], base[keep]
+    ids = tbl.column(id_col).combine_chunks().filter(pa.array(keep))
+    densest = int(np.bincount(base).max()) if len(base) else 0
+    f = 1
+    if densest > _CELL_TARGET:
+        f = min(_MAX_REFINE, math.ceil(math.sqrt(densest / _CELL_TARGET)))
+    g = grid.refined(f)
+    cell = _cells(px, g.x0, g.cell_w, g.nx) + g.nx * _cells(py, g.y0, g.cell_h, g.ny)
+    order = np.argsort(cell, kind="stable")
+    key = np.empty(len(ids), np.int64)
+    key[pc.sort_indices(ids).to_numpy()] = np.arange(len(ids))
+    return {
+        "grid": g,
+        "cell": cell[order],
+        "x": px[order],
+        "y": py[order],
+        "key": key[order],
+        "ids": ids.take(pa.array(order)),
     }
-    empty = pd.DataFrame(
-        {
-            f.name: pd.Series([], dtype=_pd_dtype.get(f.dataType.typeName(), "object"))
-            for f in out_schema.fields
-        }
-    )
 
-    def _cell_topk(qx, qy, qid, px, py, pid, acc):
-        """Exact per-(probe-row) top-k within one cell, fully
-        array-level: kth-smallest via partition, candidate mask (kth
-        ties included), one (row, dist2, id) lexsort of the selected
-        pairs, strided gather of the first k per contiguous row
-        segment."""
-        npts = len(px)
-        kk = min(k, npts)
-        chunk = max(1, 4_000_000 // npts)
-        for s in range(0, len(qx), chunk):
-            dx = qx[s : s + chunk, None] - px[None, :]
+
+def _select(d: np.ndarray, p: np.ndarray, key: np.ndarray, k: int):
+    """Per row of the padded (rows x w) distance matrix ``d`` (inf pads)
+    over point indices ``p``: the first k by (dist2, id), inf-padded to
+    width k."""
+    rows, w = d.shape
+    kk = min(k, w)
+    kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
+    r, c = np.nonzero(d <= kth[:, None])
+    dd, pp = d[r, c], p[r, c]
+    o = np.lexsort((key[pp], dd, r))
+    r, dd, pp = r[o], dd[o], pp[o]
+    pos = _ramp(np.bincount(r, minlength=rows))
+    t = pos < k
+    out_d = np.full((rows, k), np.inf)
+    out_p = np.zeros((rows, k), np.int64)
+    out_d[r[t], pos[t]] = dd[t]
+    out_p[r[t], pos[t]] = pp[t]
+    return out_d, out_p
+
+
+def _block_topk(ix: dict, qx, qy, sq, a, b, k: int, budget: int):
+    """Top-k of each query over its block: the point runs ``[a, b)``,
+    owned by query ``sq`` (sorted). Queries go through padded distance
+    matrices of at most ``budget`` entries, largest blocks first; a
+    block wider than ``budget`` is scanned in column tiles that merge
+    into the running top-k."""
+    m = len(qx)
+    px, py, key = ix["x"], ix["y"], ix["key"]
+    ln = b - a
+    cnt = np.bincount(sq, weights=ln, minlength=m).astype(np.int64)
+    ns = np.bincount(sq, minlength=m)
+    s0 = np.cumsum(ns) - ns
+    best_d = np.full((m, k), np.inf)
+    best_p = np.zeros((m, k), np.int64)
+    order = np.argsort(-cnt, kind="stable")
+    i = 0
+    while i < m and cnt[order[i]] > 0:
+        chunk = order[i : i + max(1, budget // cnt[order[i]])]
+        rows = len(chunk)
+        i += rows
+        # the chunk's candidates, row-major: run ids, then point ids
+        runs = np.repeat(s0[chunk], ns[chunk]) + _ramp(ns[chunk])
+        pt = np.repeat(a[runs], ln[runs]) + _ramp(ln[runs])
+        qcx = np.repeat(qx[chunk], cnt[chunk])
+        qcy = np.repeat(qy[chunk], cnt[chunk])
+        # flat position in the padded matrix: row * width + column
+        w = min(int(cnt[chunk[0]]), budget)
+        at = np.repeat(np.arange(rows) * w, cnt[chunk]) + _ramp(cnt[chunk])
+        # one tile, or column tiles of a single over-budget row
+        step = budget if rows == 1 else len(pt)
+        cd, cp = best_d[chunk], best_p[chunk]
+        for c0 in range(0, len(pt), step):
+            t_pt = pt[c0 : c0 + step]
+            dx = px[t_pt] - qcx[c0 : c0 + step]
             d2 = dx * dx
-            dy = qy[s : s + chunk, None] - py[None, :]
+            dy = py[t_pt] - qcy[c0 : c0 + step]
             d2 += dy * dy
-            kth = np.partition(d2, kk - 1, axis=1)[:, kk - 1]
-            rows, cols = np.nonzero(d2 <= kth[:, None])
-            dsel = d2[rows, cols]
-            order = np.lexsort((pid[cols], dsel, rows))
-            rows, cols, dsel = rows[order], cols[order], dsel[order]
-            counts = np.bincount(rows, minlength=d2.shape[0])
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            take = (starts[:, None] + np.arange(kk)[None, :]).ravel()
-            acc[0].append(np.repeat(qid[s : s + chunk], kk))
-            acc[1].append(pid[cols[take]])
-            acc[2].append(dsel[take])
+            dm = np.full(rows * w, np.inf)
+            pm = np.zeros(rows * w, np.int64)
+            dm[at[c0 : c0 + step] - c0] = d2
+            pm[at[c0 : c0 + step] - c0] = t_pt
+            dm, pm = dm.reshape(rows, w), pm.reshape(rows, w)
+            if c0:
+                dm, pm = np.hstack([cd, dm]), np.hstack([cp, pm])
+            cd, cp = _select(dm, pm, key, k)
+        best_d[chunk], best_p[chunk] = cd, cp
+    return best_d, best_p
 
-    def fn_single(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # tile == 1: the group IS one cell — no segmentation, no
-        # per-tile reduce (each probe row already yields exactly one
-        # <= k selection). This is the hot path on ordinary grids.
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        acc: tuple = ([], [], [])
-        _cell_topk(
-            left["qx"].to_numpy(np.float64),
-            left["qy"].to_numpy(np.float64),
-            left["q_id"].to_numpy(),
-            right[x].to_numpy(np.float64),
-            right[y].to_numpy(np.float64),
-            right[id_col].to_numpy(),
-            acc,
-        )
-        return pd.DataFrame(
-            {
-                "q_id": np.concatenate(acc[0]),
-                id_col: np.concatenate(acc[1]),
-                "dist2": np.concatenate(acc[2]),
-            }
-        )
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        lcell = left["cell_id"].to_numpy()
-        lo = np.argsort(lcell, kind="stable")
-        lcell = lcell[lo]
-        qx = left["qx"].to_numpy(np.float64)[lo]
-        qy = left["qy"].to_numpy(np.float64)[lo]
-        qid = left["q_id"].to_numpy()[lo]
-        rcell = right["cell_id"].to_numpy()
-        ro = np.argsort(rcell, kind="stable")
-        rcell = rcell[ro]
-        px = right[x].to_numpy(np.float64)[ro]
-        py = right[y].to_numpy(np.float64)[ro]
-        pid = right[id_col].to_numpy()[ro]
-        lcells, lstarts = np.unique(lcell, return_index=True)
-        rcells, rstarts = np.unique(rcell, return_index=True)
-        lends = np.append(lstarts[1:], len(lcell))
-        rends = np.append(rstarts[1:], len(rcell))
-        common, li, ri = np.intersect1d(
-            lcells, rcells, assume_unique=True, return_indices=True
-        )
-        if len(common) == 0:
-            return empty
-        acc: tuple = ([], [], [])
-        for j in range(len(common)):
-            ls, le = lstarts[li[j]], lends[li[j]]
-            rs, re = rstarts[ri[j]], rends[ri[j]]
-            _cell_topk(
-                qx[ls:le], qy[ls:le], qid[ls:le],
-                px[rs:re], py[rs:re], pid[rs:re], acc,
-            )
-        aq = np.concatenate(acc[0])
-        ai = np.concatenate(acc[1])
-        ad = np.concatenate(acc[2])
-        # reduce to per-query top-k WITHIN this tile before anything
-        # reaches the JVM: (query, dist2, id) lexsort, then the first
-        # min(k, segment) of each contiguous query segment
-        order = np.lexsort((ai, ad, aq))
-        aq, ai, ad = aq[order], ai[order], ad[order]
-        _, qstarts = np.unique(aq, return_index=True)
-        qends = np.append(qstarts[1:], len(aq))
-        lens = np.minimum(qends - qstarts, k)
-        flat = np.arange(lens.sum()) - np.repeat(
-            np.cumsum(lens) - lens, lens
-        )
-        take = np.repeat(qstarts, lens) + flat
-        return pd.DataFrame(
-            {"q_id": aq[take], id_col: ai[take], "dist2": ad[take]}
-        )
+def _knn_batch(ix: dict, qx: np.ndarray, qy: np.ndarray, k: int, budget: int):
+    """Exact kNN of one batch of queries against the point index: per
+    query (row in the batch), point index, rank 1..k and dist2, ordered
+    by (row, rank).
 
-    if n_groups >= grid.n_cells:
-        # bucket == (cell, slice): no segmentation, no per-bucket
-        # reduce (each probe row already yields exactly one <= k
-        # selection per slice; the caller's merge is distributive)
-        return probes.groupBy("cell_id").cogroup(
-            pts.groupBy("cell_id")
-        ).applyInPandas(fn_single, out_schema)
-    # xxhash64, not plain modulo: the salted key is cell_id << 20, and
-    # a power-of-two-friendly n_groups would collapse every salt-0 row
-    # into a handful of buckets under `key % n_groups`
-    bucket = F.pmod(F.xxhash64(F.col("cell_id")), F.lit(n_groups)).alias(
-        "bucket_id"
-    )
-    pts_sel = pts.select(bucket, "cell_id", id_col, x, y)
-    probe_sel = probes.select(bucket, "cell_id", "q_id", "qx", "qy")
-    return probe_sel.groupBy("bucket_id").cogroup(
-        pts_sel.groupBy("bucket_id")
-    ).applyInPandas(fn, out_schema)
+    Each query probes the cell block of Chebyshev radius r around its
+    (clamped) cell, seeded from its own cell's occupancy (floored by the
+    global density) to reach ~64*k candidates. A block row is one run of
+    the cell-sorted points, and a full-width block is one run. A query
+    certifies when its kth distance is at most ``(r * cell_min)^2``:
+    every unprobed point is at least that far. An uncertified query with
+    k candidates re-probes at the radius its kth distance needs; one with
+    fewer doubles r. The whole-grid block (every point) certifies
+    unconditionally, and a query switches to it once its block would
+    have more rows than there are points."""
+    g, cell = ix["grid"], ix["cell"]
+    n, m = len(cell), len(qx)
+    if n == 0 or m == 0:
+        return (np.empty(0, np.int64),) * 3 + (np.empty(0, np.float64),)
+    cx = _cells(qx, g.x0, g.cell_w, g.nx)
+    cy = _cells(qy, g.y0, g.cell_h, g.ny)
+    own = cx + g.nx * cy
+    occ = np.searchsorted(cell, own, "right") - np.searchsorted(cell, own, "left")
+    inside = (qx >= g.x0) & (qx < g.x1) & (qy >= g.y0) & (qy < g.y1)
+    d_eff = np.maximum(np.where(inside, occ, 0), n / g.n_cells)
+    whole_r = max(g.nx, g.ny)
+    r = np.maximum(np.ceil(np.sqrt(64.0 * k / d_eff) / 2.0) - 1, 1)
+    r = np.where(2 * r + 1 > n, whole_r, np.minimum(r, whole_r)).astype(np.int64)
+    cell_min = min(g.cell_w, g.cell_h)
+    out: list[tuple] = []
+    todo = np.arange(m)
+    while todo.size:
+        rr = r[todo]
+        x_lo = np.maximum(cx[todo] - rr, 0)
+        x_hi = np.minimum(cx[todo] + rr, g.nx - 1)
+        y_lo = np.maximum(cy[todo] - rr, 0)
+        y_hi = np.minimum(cy[todo] + rr, g.ny - 1)
+        wide = (x_lo == 0) & (x_hi == g.nx - 1)
+        whole = wide & (y_lo == 0) & (y_hi == g.ny - 1)
+        h = np.where(wide, 1, y_hi - y_lo + 1)
+        sq = np.repeat(np.arange(len(todo)), h)
+        row = y_lo[sq] + _ramp(h)
+        lo = np.where(wide[sq], y_lo[sq] * g.nx, row * g.nx + x_lo[sq])
+        hi = np.where(wide[sq], (y_hi[sq] + 1) * g.nx, row * g.nx + x_hi[sq] + 1)
+        d, p = _block_topk(
+            ix, qx[todo], qy[todo], sq,
+            np.searchsorted(cell, lo), np.searchsorted(cell, hi), k, budget,
+        )
+        kth = d[:, k - 1]
+        reach = np.maximum(rr - _EDGE, 0.0) * cell_min
+        done = whole | (kth <= reach * reach)
+        hit = np.isfinite(d[done])
+        q, rank = np.nonzero(hit)
+        out.append((todo[done][q], p[done][hit], rank + 1, d[done][hit]))
+        rk, kth = rr[~done].astype(np.float64), kth[~done]
+        with np.errstate(invalid="ignore"):
+            need = np.ceil(np.sqrt(kth) / cell_min + _EDGE)
+        grown = np.where(np.isfinite(kth), np.maximum(need, rk + 1), 2 * rk + 1)
+        grown = np.where(2 * grown + 1 > n, whole_r, np.minimum(grown, whole_r))
+        todo = todo[~done]
+        r[todo] = grown.astype(np.int64)
+    q, p, rank, d2 = (np.concatenate(c) for c in zip(*out))
+    o = np.lexsort((rank, q))
+    return q[o], p[o], rank[o], d2[o]
 
 
 def knn_join_bulk(
@@ -548,467 +500,88 @@ def knn_join_bulk(
     x: str = "x",
     y: str = "y",
     id_col: str = "event_id",
-    n_total: int | None = None,
-    max_cells_per_query: int = 4096,
-    max_rounds: int = 6,
-    max_pts_per_cell: int = 1024,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Set-oriented exact kNN: ``queries`` is a DataFrame (q_id, qx, qy)
     — the training-pipeline shape (kNN of a whole table of query points;
     the reference's getRegionPt probe, CPUJoin/GridIndexF.cpp:177-198,
-    issued per point). Returns a DISTRIBUTED DataFrame
-    (q_id, {id_col}, rank, dist2), rank 1..k by (dist2, id).
+    issued per point). Returns (q_id, {id_col}, rank, dist2), rank 1..k
+    by (dist2, id), over the points inside ``grid``; a query gets
+    min(k, in-grid points) rows.
 
-    Unlike :func:`knn_join` (driver list, driver-side merge), every
-    per-query structure here is a DataFrame op, so the query side scales
-    to millions of rows:
+    Two steps, as the reference's in-memory grid index over the points:
 
-    round r: each pending query explodes its own probe disk JVM-side
-    (sequence(-r..r) x sequence(-r..r) -> cell ids; NO driver-built cell
-    table), the disk table broadcast-joins the points on cell_id, and
-    per-query top-k reduces in-plan (map-side-combined collect_list ->
-    array_sort -> slice — no Window exchange). A query CERTIFIES in-plan
-    when its kth distance <= (r*cell_min)^2; certified rows exit to the
-    result union, the rest re-probe at 4x radius (re-probing the full
-    disk, not an annulus, keeps rounds stateless — total probe work is
-    bounded by ~4/3 of the final disk).
+    1. Index (driver). The projection (id, x, y) is collected with
+       ``toArrow()``; its in-grid rows, sorted by the cell of a grid
+       refined from their occupancy (:func:`_point_index`), are
+       broadcast once.
+    2. Query pass: ONE ``mapInArrow`` over the queries, hash-partitioned
+       by q_id into 2 x defaultParallelism tasks, finishes every query
+       in-kernel by cell-block expansion (:func:`_knn_batch`) and emits
+       the final rows. AQE is held off for the pass and then restored:
+       its coalescing would merge the small query shuffle into one task.
 
-    ``r`` is PER QUERY, seeded from the query's own-cell occupancy (one
-    map-side-combined per-cell count, left-joined to the query table),
-    floored by the global density: under the hot-box skew the fixtures
-    and real city data share, a global-density radius makes every
-    hot-region query probe the whole hot region (measured at sf0.1:
-    r=4 for all -> 810k probe rows, ~200M pairs against two ~9.4k-point
-    hot cells, 2.5M merge rows). Local seeding sends dense-cell queries
-    out at r=1 and only sparse-region queries wide. Radii cap at the
-    ``max_cells_per_query`` disk bound; when every pending query is at
-    the cap (its top-k can no longer change, so re-probing is pure
-    waste) or after ``max_rounds``, the remainder resolves by ONE
-    broadcast nested-loop pass of pending queries against all points —
-    exact by construction, and the right plan exactly when disks would
-    have covered most of the grid.
+    The result is persisted and materialized before returning, so
+    consuming it never re-runs the pass; callers may ``unpersist`` it.
 
-    The per-round driver footprint is ONE action per round (a
-    count + min-pending-radius aggregate for loop control); results
-    never land on the driver.
-
-    Execution contract (round-4 verdict item 2): each round's probe
-    join runs EXACTLY ONCE. The per-round ``topk`` frame is persisted and
-    materialized by the loop-control count; both the certified and the
-    pending branch read that cache. The returned union is persisted and
-    eagerly materialized (bounded at O(q x k) small rows) before every
-    round cache and the point cache are released — so consuming the
-    result does NOT re-execute any probe join. Callers may ``unpersist``
-    the returned frame when done with it.
+    Point-side bound: every point of the projection crosses to the
+    driver, 24 B per point (long id, two doubles), under
+    ``spark.driver.maxResultSize`` (1 GB by default, ~40M points); past
+    it the collect fails with Spark's own error. The query side stays
+    distributed.
     """
-    if stats is None:
-        stats = {}
-    import time as _time
+    # no Spark-side in-grid filter: Catalyst would inline the source's
+    # projection (the pages' regex synthesis) into each of the filter's
+    # four x/y references; the collect of the bare projection measured
+    # 0.4-0.8 s against 2.8 s filtered (100k pages, local[4])
+    tbl = points.select(id_col, x, y).toArrow()
+    bc = spark.sparkContext.broadcast(_point_index(tbl, grid, id_col, x, y))
+    schema = T.StructType(
+        [
+            queries.schema["q_id"],
+            T.StructField(id_col, points.schema[id_col].dataType, False),
+            T.StructField("rank", T.IntegerType(), False),
+            T.StructField("dist2", T.DoubleType(), False),
+        ]
+    )
+    budget = _MATRIX_ENTRIES
 
-    # per-phase wall timings (driver-action boundaries) — the evidence
-    # stream for the cold-sample attribution in BENCH/knn_bulk_cold.md:
-    # setup_sec covers the source-projection persist build; occupancy_sec
-    # the per-cell counts + refinement decision; round_sec each probe
-    # round's single action; finalize_sec the result materialization.
-    phase: dict = {"round_sec": []}
-    stats.update({"rounds": 0, "exhaustive": False, "phase_sec": phase})
-    _t0 = _time.perf_counter()
-    # AQE's partition coalescing merges shuffle partitions by BYTE size;
-    # the cogroup kernel's cost is CPU per row, not bytes, so the tiny
-    # probe/point shuffles (a few MB) collapse into ONE task and the
-    # whole python kernel serializes (measured at sf0.1: a 10.9s
-    # single-task stage; 32-way the same work is sub-second). Disable
-    # coalescing for the duration of this operator's actions — every
-    # frame this function materializes is built and persisted inside it.
-    _coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    _coalesce_prev = spark.conf.get(_coalesce_key, "true")
-    spark.conf.set(_coalesce_key, "false")
+    def fn(batches):
+        ix = bc.value
+        for rb in batches:
+            qx = rb.column(1).to_numpy(zero_copy_only=False)
+            qy = rb.column(2).to_numpy(zero_copy_only=False)
+            q, p, rank, d2 = _knn_batch(ix, qx, qy, k, budget)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0).take(pa.array(q)),
+                    ix["ids"].take(pa.array(p)),
+                    pa.array(rank.astype(np.int32)),
+                    pa.array(d2),
+                ],
+                names=schema.names,
+            )
+
+    # AQE is held off for the pass: its partition coalescing merges by
+    # bytes and would fold the small query shuffle into one task, and
+    # under AQE materializing the persisted result takes four jobs (the
+    # shuffle stage, the table-cache stage, count's exchange, the final
+    # stage) where a static plan takes one
+    aqe_key = "spark.sql.adaptive.enabled"
+    aqe_prev = spark.conf.get(aqe_key, "true")
+    spark.conf.set(aqe_key, "false")
     try:
-        # ONE materialization of the source: the operator re-reads the
-        # point set several times (occupancy counts, per-round probe
-        # prunes, the exhaustive fallback), and the source may be an
-        # expensive view (the fixture's regex-extraction CTE costs more
-        # than every kernel below combined). Cache the PROJECTED three
-        # columns — far smaller than the source table — and derive every
-        # grid assignment (including the refined grid) from the cache.
-        # (r8) the .rdd.getNumPartitions() under-parallelism guard that
-        # used to live here cost ~0.5-1s of pure driver time per call
-        # (full physical planning of the source just to read a number).
-        # points_df does NOT repartition (its single-row-group scan stays
-        # one task; sources/pages.py records why the repartition was
-        # reverted): this persist is the barrier that keeps the regex
-        # synthesis out of every probe predicate below.
-        pts_base = points.select(id_col, x, y).persist()
-
-        def _assign(g: GridSpec) -> DataFrame:
-            return pts_base.withColumn(
-                "cell_id", g.cell_id_col(F.col(x), F.col(y))
-            ).filter(F.col("cell_id").isNotNull())
-
-        pts = _assign(grid)
-        if n_total is None:
-            n_total = pts_base.count()
-        phase["setup_sec"] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
-        import math as _math
-
-        counts = None
-        counts16 = None
-        if n_total > 0:
-            # PROBE-GRID REFINEMENT: the caller's grid is a storage
-            # layout, not an obligation — kNN results are grid-invariant
-            # (the grid only drives candidate enumeration; certification
-            # is a distance bound). A hot cell forces quadratic work on
-            # every nearby query (fixture sf0.1: two ~9.4k-point cells
-            # attract ~1/3 of all probes -> 300M distance pairs), and
-            # the blow-up grows with SF. Refine until the densest cell
-            # holds <= max_pts_per_cell points, so per-cell blocks stay
-            # bounded no matter how skewed the data is.
-            #
-            # (r8) ONE full aggregation instead of two, for LARGE
-            # inputs: per-cell counts are computed once at the FINEST
-            # candidate refinement (f0=16) and persisted; the base-grid
-            # max (the refinement decision) and the chosen grid's counts
-            # both derive from it by in-plan rollups over <= |occupied
-            # fine cells| rows — exact (a parent's count is the sum of
-            # its children's). Measured at sf1.0: occupancy jobs shed
-            # ~0.5-1s AND the pow2-snapped finer refinement (16 vs 10)
-            # shrinks the kernel's distance blocks (round 4.6-7s ->
-            # 3.4-3.8s). Below the size gate the fine-grid aggregation's
-            # extra key space costs more than the saved second scan
-            # (sf0.1 measured +0.7-1s), so small inputs keep the
-            # two-aggregation path. The refine factor under the fused
-            # path is snapped to the next power of two so it divides f0
-            # (a stronger refinement than the ceil(sqrt) value is
-            # always safe — results are grid-invariant).
-            fuse_counts = n_total >= 400_000
-            if fuse_counts:
-                f0 = 16
-                grid16 = GridSpec(
-                    grid.x0,
-                    grid.y0,
-                    grid.cell_w / f0,
-                    grid.cell_h / f0,
-                    grid.nx * f0,
-                    grid.ny * f0,
-                )
-                counts16 = (
-                    _assign(grid16)
-                    .groupBy("cell_id")
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .persist()
-                )
-                nx16 = grid16.nx
-                base_nx = grid.nx  # captured BEFORE grid is rebound
-
-                def _roll(fto: int) -> DataFrame:
-                    # rollup fine counts to the fto-grid (fto divides
-                    # f0); cx16/cy16 < 2^26, exact under float64 floor
-                    s = f0 // fto
-                    cx16 = F.col("cell_id") % nx16
-                    cy16 = F.floor(F.col("cell_id") / F.lit(nx16))
-                    cell_f = (
-                        F.floor(cx16 / F.lit(s))
-                        + F.lit(base_nx * fto) * F.floor(cy16 / F.lit(s))
-                    ).cast("long")
-                    return counts16.groupBy(cell_f.alias("cell_id")).agg(
-                        F.sum("_n").alias("_n")
-                    )
-
-                # ONE action: base-grid max (materializes counts16 too)
-                mx = _roll(1).agg(F.max("_n")).collect()[0][0] or 0
-                if mx > max_pts_per_cell:
-                    f = min(
-                        16,
-                        int(_math.ceil(_math.sqrt(mx / max_pts_per_cell))),
-                    )
-                    f = 1 << (f - 1).bit_length()  # next pow2 | f0
-                    grid = GridSpec(
-                        grid.x0,
-                        grid.y0,
-                        grid.cell_w / f,
-                        grid.cell_h / f,
-                        grid.nx * f,
-                        grid.ny * f,
-                    )
-                    stats["refine_factor"] = f
-                    pts = _assign(grid)
-                    counts = counts16 if f == f0 else _roll(f)
-                else:
-                    counts = _roll(1)
-            else:
-                counts = pts.groupBy("cell_id").agg(
-                    F.count(F.lit(1)).alias("_n")
-                )
-                mx = counts.agg(F.max("_n")).collect()[0][0] or 0
-                if mx > max_pts_per_cell:
-                    f = min(
-                        16,
-                        int(_math.ceil(_math.sqrt(mx / max_pts_per_cell))),
-                    )
-                    grid = GridSpec(
-                        grid.x0,
-                        grid.y0,
-                        grid.cell_w / f,
-                        grid.cell_h / f,
-                        grid.nx * f,
-                        grid.ny * f,
-                    )
-                    stats["refine_factor"] = f
-                    pts = _assign(grid)
-                    counts = pts.groupBy("cell_id").agg(
-                        F.count(F.lit(1)).alias("_n")
-                    )
-        mx_eff = mx if counts is not None else None
-        if counts is not None:
-            # reused every round (occupied-cell probe prune) and by the
-            # r0 seeding join; bounded by occupied cells
-            counts = counts.persist()
-            if "refine_factor" in stats:
-                # the MEASURED densest-cell occupancy on the refined
-                # grid (refinement targets <= max_pts_per_cell but is a
-                # heuristic — a base cell's points could all land in one
-                # child). The agg doubles as the counts-cache
-                # materialization, so it costs one small job, and it
-                # lets every round skip the hot-split machinery when the
-                # bound holds (bounded_cells below).
-                mx_eff = counts.agg(F.max("_n")).collect()[0][0] or 0
-        stats["max_cell_pts"] = mx_eff
-        cell_min = min(grid.cell_w, grid.cell_h)
-        # radius cap: the per-query disk never exceeds max_cells_per_query
-        # (a query that would need more loops until the all-capped /
-        # max_rounds exit routes it to the exhaustive pass)
-        r_cap = max(1, (_math.isqrt(max_cells_per_query) - 1) // 2)
-        density = n_total / max(grid.n_cells, 1)
-
-        qcx = F.floor((F.col("qx") - F.lit(grid.x0)) / F.lit(grid.cell_w))
-        qcy = F.floor((F.col("qy") - F.lit(grid.y0)) / F.lit(grid.cell_h))
-        pending = queries.select("q_id", "qx", "qy", qcx.alias("qcx"), qcy.alias("qcy"))
-        if n_total > 0:
-            # per-query initial radius from the query's OWN-CELL occupancy
-            # (floored by the global density): one map-side-combined count
-            # per occupied cell, joined to the query table — under hot-box
-            # skew this is the difference between every hot query probing
-            # the whole hot region and probing its immediate ring
-            d_eff = F.greatest(
-                F.coalesce(F.col("_n"), F.lit(0)).cast("double"),
-                F.lit(float(density)),
-            )
-            r0 = F.ceil(F.sqrt(F.lit(64.0 * k) / d_eff) / F.lit(2.0)) - F.lit(1)
-            # out-of-grid queries must NOT alias a valid cell (qcx=-1,
-            # qcy=1 would map onto cell (nx-1, 0) and seed the radius
-            # from an unrelated cell's occupancy — ADVICE r6): a null
-            # seeding cell misses the counts join, so d_eff falls back
-            # to the global density. Exactness was never at stake
-            # (certification bounds results), only the initial radius.
-            in_grid = (
-                (F.col("qcx") >= 0)
-                & (F.col("qcx") < grid.nx)
-                & (F.col("qcy") >= 0)
-                & (F.col("qcy") < grid.ny)
-            )
-            pending = (
-                pending.withColumn(
-                    "cell_id",
-                    F.when(
-                        in_grid,
-                        (F.col("qcx") + F.lit(grid.nx) * F.col("qcy")).cast("long"),
-                    ),
-                )
-                .join(counts, "cell_id", "left")
-                .withColumn(
-                    "r",
-                    F.least(
-                        F.greatest(r0.cast("long"), F.lit(1)), F.lit(int(r_cap))
-                    ),
-                )
-                .drop("cell_id", "_n")
-            )
-        else:
-            pending = pending.withColumn("r", F.lit(min(4, r_cap)))
-        phase["occupancy_sec"] = round(_time.perf_counter() - _t0, 3)
-        # round 1's plan references pending three times (probe disk,
-        # probed-cell distinct for the point prune, certification join);
-        # caching the O(|queries|) frame computes the counts-join subtree
-        # once instead of three times
-        pending = pending.persist()
-        first_pending = pending
-        dist2_col = (
-            (F.col(x) - F.col("qx")) * (F.col(x) - F.col("qx"))
-            + (F.col(y) - F.col("qy")) * (F.col(y) - F.col("qy"))
-        ).alias("dist2")
-
-        def _topk(cand: DataFrame) -> DataFrame:
-            return cand.groupBy("q_id").agg(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("dist2"), F.col(id_col).alias("_id")))
-                    ),
-                    1,
-                    k,
-                ).alias("top")
-            )
-
-        def _explode(certified: DataFrame) -> DataFrame:
-            return certified.select(
-                "q_id", F.posexplode("top").alias("pos", "s")
-            ).select(
-                "q_id",
-                F.col("s._id").alias(id_col),
-                (F.col("pos") + 1).alias("rank"),
-                F.col("s.dist2").alias("dist2"),
-            )
-
-        results: list[DataFrame] = []
-        kept: list[DataFrame] = []
-        min_r_pending = 0
-        while True:
-            _t0 = _time.perf_counter()
-            stats["rounds"] += 1
-            # all-capped pending queries can never certify (their disk, and
-            # with it their top-k, can no longer grow) — re-probing is waste
-            exhaust = stats["rounds"] > max_rounds or min_r_pending >= r_cap
-            if exhaust:
-                # one broadcast nested-loop pass: pending queries x all
-                # in-grid points; globally exact, closes out every straggler
-                stats["exhaustive"] = True
-                cand = pts.crossJoin(
-                    F.broadcast(pending.select("q_id", "qx", "qy"))
-                ).select("q_id", F.col(id_col), dist2_col)
-                results.append(_explode(_topk(cand)))
-                phase["round_sec"].append(round(_time.perf_counter() - _t0, 3))
-                break
-            offs = F.sequence(-F.col("r"), F.col("r"))
-            disk = (
-                pending.withColumn("dx", F.explode(offs))
-                .withColumn("dy", F.explode(offs))
-                .withColumn("cx", F.col("qcx") + F.col("dx"))
-                .withColumn("cy", F.col("qcy") + F.col("dy"))
-                .filter(
-                    (F.col("cx") >= 0)
-                    & (F.col("cx") < grid.nx)
-                    & (F.col("cy") >= 0)
-                    & (F.col("cy") < grid.ny)
-                )
-                .select(
-                    "q_id",
-                    "qx",
-                    "qy",
-                    (F.col("cx") + F.lit(grid.nx) * F.col("cy")).alias("cell_id"),
-                )
-            )
-            if counts is not None:
-                # EMPTY probed cells contribute nothing to any top-k and
-                # certification is a pure distance bound over the probed
-                # AREA, so dropping their probe rows is exact — and on a
-                # refined grid a sparse query's disk is mostly empty
-                # cells, i.e. this prunes the dominant share of the
-                # Arrow feed into the python kernel
-                disk = disk.join(
-                    F.broadcast(counts.select("cell_id")), "cell_id", "leftsemi"
-                )
-            # per-cell BLOCK top-k instead of a raw candidate join: a
-            # broadcast join + collect_list materializes every (query,
-            # point-in-disk) pair in the JVM — under hot-cell skew that is
-            # O(|hot queries| x |hot points|) rows (measured 302M rows in
-            # round 1 at sf0.1, ~3.7M expected under uniformity) and the
-            # aggregation buffers all of it. Cogrouping probes and points by
-            # cell keeps the Arrow transfer at O(probes + points) rows; the
-            # quadratic distance work runs vectorized in numpy inside each
-            # cell block, and only <= k rows per (query, cell) ever reach
-            # the JVM merge. Per-cell top-k then global merge is exact
-            # (distributive top-k); ties break by (dist2, id) in BOTH the
-            # numpy block and the JVM merge, and the arithmetic is the same
-            # IEEE double sequence as dist2_col, so results are bit-equal
-            # to the join form.
-            # prune the point side to probed cells BEFORE the cogroup
-            # shuffle — but only from round 2 on (r8): in round 1 every
-            # query is pending and the disks cover most occupied cells,
-            # so the prune dropped ~70% of point rows yet still LOST
-            # overall (measured at sf1.0: round 5.3s median without vs
-            # 6.9s with — the distinct+broadcast job and the second
-            # disk computation cost more than shuffling the extra rows;
-            # unmatched point buckets exit the kernel immediately).
-            # Later rounds have FEW pending queries, so without the
-            # prune the full point table would re-shuffle every round —
-            # there the distinct cell list is small and the prune wins.
-            if stats["rounds"] > 1:
-                pts_round = pts.join(
-                    F.broadcast(disk.select("cell_id").distinct()),
-                    "cell_id",
-                    "leftsemi",
-                )
-            else:
-                pts_round = pts
-            # bucket count from DATA volume, not cell count (r8): the
-            # pandas cogroup pays fixed per-GROUP overhead, so groups
-            # should be as few as balance allows — the refined grid's
-            # old cell-count formula hit the 32768 cap and charged
-            # ~0.5-1s of pure group overhead per round at sf1.0
-            # (measured sweep: 512 groups 2.8-3.4s vs 32768 3.5-3.6s
-            # kernel wall; skew below 256 groups reverses the gain).
-            # Scale-adaptively: ~2048 point rows per bucket, floored at
-            # 512 (balance across tasks), capped at 32768 (bounds the
-            # per-group pandas frame at scale).
-            ng = int(min(grid.n_cells, max(512, n_total // 2048), 32768))
-            percell = _block_topk_by_cell(
-                disk, pts_round, grid, k, x, y, id_col,
-                n_groups=ng, cell_counts=counts,
-                # measured refined-grid occupancy bound: when no cell
-                # exceeds the block budget, the hot-split joins/explode
-                # are provably dead weight (see _block_topk_by_cell)
-                bounded_cells=(mx_eff is not None and mx_eff <= 2048),
-            )
-            # ONE persisted frame per round, covering BOTH branches: the
-            # loop-control count below materializes it, so the certified
-            # filter and the next round's pending filter are cache reads —
-            # the expensive probe stage executes exactly once per round
-            topk = pending.join(_topk(percell), "q_id", "left").persist()
-            kept.append(topk)
-            r_reach = F.col("r").cast("double") * F.lit(float(cell_min))
-            done_cond = (F.size("top") >= k) & (
-                F.element_at("top", k)["dist2"] <= r_reach * r_reach
-            )
-            results.append(_explode(topk.filter(done_cond).select("q_id", "top")))
-            nxt = topk.filter(~F.coalesce(done_cond, F.lit(False))).select(
-                "q_id", "qx", "qy", "qcx", "qcy", "r"
-            )
-            # the ONLY driver-side action per round: pending count for loop
-            # exit + the minimum radius JUST PROBED (pre-growth) for the
-            # all-capped exhaustive route
-            row = nxt.agg(
-                F.count(F.lit(1)).alias("n"), F.min("r").alias("rmin")
-            ).collect()[0]
-            n_pending, min_r_pending = row["n"], row["rmin"] or 0
-            # 4x radius growth, capped; stateless full-disk re-probe
-            pending = nxt.withColumn(
-                "r", F.least(F.col("r") * 4 + 3, F.lit(int(r_cap)))
-            )
-            phase["round_sec"].append(round(_time.perf_counter() - _t0, 3))
-            if n_pending == 0:
-                break
-        _t0 = _time.perf_counter()
-        out = results[0]
-        for df in results[1:]:
-            out = out.unionByName(df)
-        # materialize the bounded O(q x k) result ONCE while the round caches
-        # are live, then release every intermediate cache — consumption of
-        # the returned frame is a cache read, never a probe-join re-run
-        out = out.persist()
+        target = max(spark.sparkContext.defaultParallelism, 1)
+        out = (
+            queries.select("q_id", F.col("qx").cast("double"), F.col("qy").cast("double"))
+            .repartition(2 * target, "q_id")
+            .mapInArrow(fn, schema)
+            .persist()
+        )
         out.count()
-        for df in kept:
-            df.unpersist(False)
-        first_pending.unpersist(False)
-        if counts is not None:
-            counts.unpersist(False)
-        if counts16 is not None and counts16 is not counts:
-            counts16.unpersist(False)
-        pts_base.unpersist(False)
-        phase["finalize_sec"] = round(_time.perf_counter() - _t0, 3)
         return out
     finally:
-        spark.conf.set(_coalesce_key, _coalesce_prev)
+        spark.conf.set(aqe_key, aqe_prev)
+        bc.unpersist(blocking=False)
 
 
 def radius_query(

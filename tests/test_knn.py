@@ -5,11 +5,35 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-
-from pyspark.sql.functions import col as F_col
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from raster_join_spark.geo.grid import GridSpec
-from raster_join_spark.operators.knn import knn_join
+from raster_join_spark.operators import knn
+from raster_join_spark.operators.knn import knn_join, knn_join_bulk
+
+
+def _brute(ids, x, y, grid, qx, qy, k):
+    """[(dist2, id)] of ranks 1..k over the in-grid points, ordered by
+    (dist2, id), distances in the oracle's op order."""
+    keep = np.flatnonzero(grid.cell_ids_np(x, y) >= 0)
+    d2 = (x[keep] - qx) * (x[keep] - qx) + (y[keep] - qy) * (y[keep] - qy)
+    return sorted(zip(d2.tolist(), [ids[i] for i in keep]))[:k]
+
+
+def _assert_knn(got, ids, x, y, grid, qs, k, id_col="event_id"):
+    """``got`` (pandas) holds exactly the brute-force rows of every query."""
+    n_rows = 0
+    for q, qx, qy in qs:
+        exp = _brute(ids, x, y, grid, qx, qy, k)
+        sub = got[got.q_id == q].sort_values("rank")
+        assert sub["rank"].tolist() == list(range(1, len(exp) + 1)), f"q={q}"
+        assert list(zip(sub["dist2"].tolist(), sub[id_col].tolist())) == exp, f"q={q}"
+        n_rows += len(exp)
+    assert len(got) == n_rows
 
 
 def test_knn_exact_vs_bruteforce(spark):
@@ -154,8 +178,6 @@ def test_knn_annulus_merge_across_rounds(spark):
 def test_knn_bulk_vs_bruteforce(spark):
     """Set-oriented kNN over a DataFrame of query points — exact vs
     numpy brute force for every query, including ties broken by id."""
-    from raster_join_spark.operators.knn import knn_join_bulk
-
     rng = np.random.RandomState(31)
     n, nq, k = 2000, 50, 4
     x = rng.uniform(0, 1000, n).round()
@@ -169,7 +191,7 @@ def test_knn_bulk_vs_bruteforce(spark):
         pd.DataFrame({"q_id": np.arange(nq, dtype=np.int64), "qx": qx, "qy": qy})
     )
     grid = GridSpec(0.0, 0.0, 50.0, 50.0, 20, 20)
-    got = knn_join_bulk(spark, df, grid, qdf, k, n_total=n).toPandas()
+    got = knn_join_bulk(spark, df, grid, qdf, k).toPandas()
     assert len(got) == nq * k
     for q in range(nq):
         d2 = (x - qx[q]) ** 2 + (y - qy[q]) ** 2
@@ -178,42 +200,43 @@ def test_knn_bulk_vs_bruteforce(spark):
         assert sub["event_id"].tolist() == exp, f"q={q}"
 
 
-def test_knn_bulk_sparse_forces_multi_round(spark):
-    """Bulk path with queries in empty regions: must go through the
-    grow-or-exhaust machinery and still be exact."""
-    from raster_join_spark.operators.knn import knn_join_bulk
-
+def test_knn_bulk_sparse_forces_multi_round(spark, monkeypatch):
+    """Queries in empty regions: the in-kernel ring expansion must grow
+    over several block probes (counted on the kernel run in-process) and
+    the operator must stay exact."""
     rng = np.random.RandomState(41)
-    n, k = 60, 6
+    n, k = 2000, 6
     x = rng.uniform(900, 1000, n).round()
     y = rng.uniform(900, 1000, n).round()
-    df = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    )
-    qdf = spark.createDataFrame(
-        pd.DataFrame({"q_id": np.array([0, 1], dtype=np.int64),
-                      "qx": [5.0, 980.0], "qy": [5.0, 990.0]})
-    )
+    ids = np.arange(n, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame({"event_id": ids, "x": x, "y": y}))
+    qs = [(0, 5.0, 5.0), (1, 980.0, 990.0)]
+    qdf = spark.createDataFrame(pd.DataFrame(qs, columns=["q_id", "qx", "qy"]))
     grid = GridSpec(0.0, 0.0, 10.0, 10.0, 100, 100)
-    stats: dict = {}
-    got = knn_join_bulk(spark, df, grid, qdf, k, n_total=n, stats=stats).toPandas()
-    assert stats["rounds"] >= 2, stats
-    for q, (qx_, qy_) in enumerate([(5.0, 5.0), (980.0, 990.0)]):
-        d2 = (x - qx_) ** 2 + (y - qy_) ** 2
-        exp = np.lexsort((np.arange(n), d2))[:k].tolist()
-        sub = got[got.q_id == q].sort_values("rank")
-        assert sub["event_id"].tolist() == exp, f"q={q}"
+    probes = []
+    block_topk = knn._block_topk
+
+    def counted(ix, qx, *args):
+        probes.append(len(qx))
+        return block_topk(ix, qx, *args)
+
+    monkeypatch.setattr(knn, "_block_topk", counted)
+    ix = knn._point_index(
+        pa.table({"event_id": ids, "x": x, "y": y}), grid, "event_id", "x", "y"
+    )
+    knn._knn_batch(ix, np.array([5.0, 980.0]), np.array([5.0, 990.0]), k, 1 << 20)
+    assert len(probes) >= 2, probes
+    got = knn_join_bulk(spark, df, grid, qdf, k).toPandas()
+    _assert_knn(got, ids, x, y, grid, qs, k)
 
 
 def test_knn_bulk_no_reexecution_on_consume(spark):
-    """Round-4 verdict item 2: each round's probe join executes exactly
-    once — consuming the returned DataFrame (even repeatedly) must NOT
-    re-scan the point source. The source is wrapped in a counting
-    mapInArrow stage; after knn_join_bulk returns (it materializes the
-    persisted result internally), further consumption leaves the scan
-    counter untouched."""
-    from raster_join_spark.operators.knn import knn_join_bulk
-
+    """Round-4 verdict item 2: the query pass executes exactly once —
+    consuming the returned DataFrame (even repeatedly) must NOT re-scan
+    the point source. The source is wrapped in a counting mapInArrow
+    stage; after knn_join_bulk returns (it materializes the persisted
+    result internally), further consumption leaves the scan counter
+    untouched."""
     rng = np.random.RandomState(51)
     n, k = 60, 6
     x = rng.uniform(900, 1000, n).round()
@@ -236,9 +259,7 @@ def test_knn_bulk_no_reexecution_on_consume(spark):
         )
     )
     grid = GridSpec(0.0, 0.0, 10.0, 10.0, 100, 100)
-    stats: dict = {}
-    got = knn_join_bulk(spark, counted, grid, qdf, k, n_total=n, stats=stats)
-    assert stats["rounds"] >= 2, stats  # multi-round path actually ran
+    got = knn_join_bulk(spark, counted, grid, qdf, k)
     scans_after_build = acc.value
     assert scans_after_build > 0
     got.count()
@@ -340,16 +361,12 @@ def test_radius_query_literal_cap_fallback(spark):
 
 
 def test_knn_bulk_hotcell_skew_block_kernel(spark):
-    """Round-5 skew fix: a hot cell shared by many queries and many
-    points must NOT materialize the (query, candidate) pair set in the
-    JVM (the old join+collect_list form buffered 302M rows at sf0.1).
-    2,000 points and 300 queries share one cell (~600k pairs under the
-    old plan); the probe stage must be the cogrouped block kernel with
-    the broadcast left-semi point pruning, and results must stay exact
-    vs numpy brute force INCLUDING duplicate-distance ties (lattice
+    """Round-5 skew: a hot cell shared by many queries and many points.
+    2,000 points and 300 queries share one cell of the caller's grid;
+    the index refines it, the (query, candidate) pairs live only in the
+    kernel's padded distance blocks, and results must stay exact vs
+    numpy brute force INCLUDING duplicate-distance ties (lattice
     coordinates force dist2 collisions; ties break by id)."""
-    from raster_join_spark.operators.knn import knn_join_bulk
-
     rng = np.random.RandomState(77)
     n, k = 2000, 5
     # integer lattice inside the single cell [500,510)x[500,510) ->
@@ -368,13 +385,8 @@ def test_knn_bulk_hotcell_skew_block_kernel(spark):
         )
     )
     grid = GridSpec(0.0, 0.0, 10.0, 10.0, 100, 100)
-    stats: dict = {}
-    got = knn_join_bulk(spark, src, grid, qdf, k, n_total=n, stats=stats)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsIn" in plan, plan[:2000]
-    assert "LeftSemi" in plan, plan[:2000]
+    got = knn_join_bulk(spark, src, grid, qdf, k)
     out = got.toPandas()
-    assert not stats["exhaustive"], stats
     assert len(out) == nq * k
     ids = np.arange(n)
     for q in range(nq):
@@ -386,168 +398,12 @@ def test_knn_bulk_hotcell_skew_block_kernel(spark):
     got.unpersist()
 
 
-def test_block_kernel_bucketed_equals_single_cell(spark):
-    """The group-count cap switches the block kernel to hash-bucket
-    grouping (segmented cells + per-bucket reduce). After the global
-    per-query merge, every bucket count must agree with the per-cell
-    path and with numpy brute force — including ties."""
-    from raster_join_spark.operators.knn import _block_topk_by_cell
-
-    rng = np.random.RandomState(99)
-    n, k, nq = 1500, 4, 120
-    x = rng.randint(0, 400, n).astype(np.float64)
-    y = rng.randint(0, 400, n).astype(np.float64)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    )
-    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 40, 40)
-    pts = pts.withColumn(
-        "cell_id", grid.cell_id_col(F_col("x"), F_col("y"))
-    ).filter(F_col("cell_id").isNotNull())
-    qx = rng.randint(0, 400, nq).astype(np.float64)
-    qy = rng.randint(0, 400, nq).astype(np.float64)
-    # probe disk r=1 around each query cell, clamped to the grid
-    rows = []
-    r = 1
-    for q in range(nq):
-        cx0, cy0 = int(qx[q] // 10), int(qy[q] // 10)
-        for dx in range(-r, r + 1):
-            for dy in range(-r, r + 1):
-                cx, cy = cx0 + dx, cy0 + dy
-                if 0 <= cx < 40 and 0 <= cy < 40:
-                    rows.append((q, qx[q], qy[q], cx + 40 * cy))
-    probes = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["q_id", "qx", "qy", "cell_id"])
-    )
-
-    def merged(n_groups):
-        out = _block_topk_by_cell(
-            probes, pts, grid, k, "x", "y", "event_id", n_groups=n_groups
-        ).toPandas()
-        res = {}
-        for q, g in out.groupby("q_id"):
-            gg = g.sort_values(["dist2", "event_id"]).head(k)
-            res[q] = list(zip(gg["event_id"], gg["dist2"]))
-        return res
-
-    base = merged(grid.n_cells)  # per-cell path (fn_single)
-    ids = np.arange(n)
-    for q in range(nq):
-        # brute force over the probed cells only (the kernel's scope)
-        cells = {c for (qq, _, _, c) in rows if qq == q}
-        pc = (x // 10).astype(int) + 40 * (y // 10).astype(int)
-        m = np.isin(pc, list(cells))
-        d2 = (x[m] - qx[q]) ** 2 + (y[m] - qy[q]) ** 2
-        order = np.lexsort((ids[m], d2))[: min(k, m.sum())]
-        exp = list(zip(ids[m][order], d2[order]))
-        assert base.get(q, []) == exp, f"q={q}"
-    for n_groups in (1, 7, 61, 512, None):
-        assert merged(n_groups) == base, f"n_groups={n_groups}"
-
-
-def test_block_kernel_hot_cell_salting_exact(spark):
-    """Forcing a tiny max_pts_per_block splits every cell into point
-    slices with replicated probes. Per-slice top-k must merge to the
-    unsalted result exactly — no duplicated candidates (a probe replica
-    must only meet its own slice), no lost points."""
-    from raster_join_spark.operators.knn import _block_topk_by_cell
-
-    rng = np.random.RandomState(7)
-    n, k, nq = 900, 4, 60
-    x = rng.randint(0, 200, n).astype(np.float64)
-    y = rng.randint(0, 200, n).astype(np.float64)
-    grid = GridSpec(0.0, 0.0, 20.0, 20.0, 10, 10)  # ~9 pts/cell
-    pts = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    ).withColumn("cell_id", grid.cell_id_col(F_col("x"), F_col("y"))).filter(
-        F_col("cell_id").isNotNull()
-    )
-    qx = rng.randint(0, 200, nq).astype(np.float64)
-    qy = rng.randint(0, 200, nq).astype(np.float64)
-    rows = []
-    for q in range(nq):
-        cx0, cy0 = int(qx[q] // 20), int(qy[q] // 20)
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                cx, cy = cx0 + dx, cy0 + dy
-                if 0 <= cx < 10 and 0 <= cy < 10:
-                    rows.append((q, qx[q], qy[q], cx + 10 * cy))
-    probes = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["q_id", "qx", "qy", "cell_id"])
-    )
-
-    def merged(max_pts):
-        out = _block_topk_by_cell(
-            probes, pts, grid, k, "x", "y", "event_id",
-            n_groups=16, max_pts_per_block=max_pts,
-        ).toPandas()
-        # each point lives in exactly one slice of one cell, so it may
-        # appear at most once per query — a duplicate is the
-        # replica-meets-foreign-slice bug
-        assert not out.duplicated(["q_id", "event_id"]).any()
-        res = {}
-        for q, g in out.groupby("q_id"):
-            gg = g.sort_values(["dist2", "event_id"]).head(k)
-            res[q] = list(zip(gg["event_id"], gg["dist2"]))
-        return res
-
-    base = merged(10**9)  # no cell splits
-    for max_pts in (3, 2, 1):
-        assert merged(max_pts) == base, f"max_pts_per_block={max_pts}"
-
-
-def test_bulk_bounded_cells_flag(spark):
-    """bounded_cells=True (r8: caller certifies no cell exceeds the
-    block budget, so the hot-split joins/explode are skipped and plain
-    cell ids key the buckets) must be bit-identical to the default
-    salted path on data where the bound holds."""
-    from raster_join_spark.operators.knn import _block_topk_by_cell
-
-    rng = np.random.RandomState(23)
-    n, k, nq = 1200, 3, 80
-    x = rng.randint(0, 300, n).astype(np.float64)
-    y = rng.randint(0, 300, n).astype(np.float64)
-    grid = GridSpec(0.0, 0.0, 15.0, 15.0, 20, 20)
-    pts = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    ).withColumn("cell_id", grid.cell_id_col(F_col("x"), F_col("y"))).filter(
-        F_col("cell_id").isNotNull()
-    )
-    qx = rng.randint(0, 300, nq).astype(np.float64)
-    qy = rng.randint(0, 300, nq).astype(np.float64)
-    rows = []
-    for q in range(nq):
-        cx0, cy0 = int(qx[q] // 15), int(qy[q] // 15)
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                cx, cy = cx0 + dx, cy0 + dy
-                if 0 <= cx < 20 and 0 <= cy < 20:
-                    rows.append((q, qx[q], qy[q], cx + 20 * cy))
-    probes = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["q_id", "qx", "qy", "cell_id"])
-    )
-
-    def merged(**kw):
-        out = _block_topk_by_cell(
-            probes, pts, grid, k, "x", "y", "event_id", n_groups=16, **kw
-        ).toPandas()
-        res = {}
-        for q, g in out.groupby("q_id"):
-            gg = g.sort_values(["dist2", "event_id"]).head(k)
-            res[q] = list(zip(gg["event_id"], gg["dist2"]))
-        return res
-
-    assert merged(bounded_cells=True) == merged()
-
-
 def test_knn_bulk_out_of_grid_query_no_cell_alias(spark):
     """An out-of-grid query (qcx=-1) must not alias a valid cell when
     seeding its initial radius (ADVICE r6: qcx + nx*qcy wraps onto cell
     (nx-1, qcy-1) without bounds checks). Exactness was never at stake
     (certification bounds results) — pin it anyway, with queries on all
     four out-of-grid sides plus a far corner."""
-    from raster_join_spark.operators.knn import knn_join_bulk
-
     rng = np.random.RandomState(17)
     n = 4000
     x = np.round(rng.uniform(0, 1000, n))
@@ -560,10 +416,168 @@ def test_knn_bulk_out_of_grid_query_no_cell_alias(spark):
           (3, 500.0, 1030.0), (4, -500.0, -500.0)]
     qdf = spark.createDataFrame(pd.DataFrame(qs, columns=["q_id", "qx", "qy"]))
     k = 5
-    got = knn_join_bulk(spark, df, grid, qdf, k, n_total=n).toPandas()
+    got = knn_join_bulk(spark, df, grid, qdf, k).toPandas()
     assert len(got) == k * len(qs)
     for q, qx, qy in qs:
         d2 = (x - qx) * (x - qx) + (y - qy) * (y - qy)
         order = np.lexsort((np.arange(n), d2))[:k]
         sub = got[got.q_id == q].sort_values("rank")
         assert sub["event_id"].tolist() == order.tolist(), f"q={q}"
+
+
+def _pdf(spark, ids, x, y, id_col="event_id"):
+    pdf = pd.DataFrame({id_col: ids, "x": x, "y": y})
+    # an empty frame has no rows to infer its schema from
+    return spark.createDataFrame(pdf, None if len(pdf) else f"{id_col} long, x double, y double")
+
+
+def _qdf(spark, qs):
+    return spark.createDataFrame(
+        pd.DataFrame(qs, columns=["q_id", "qx", "qy"]).astype({"q_id": np.int64})
+    )
+
+
+def test_knn_bulk_empty_inputs(spark):
+    """No points: every query gets zero rows. No queries: zero rows."""
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    no_pts = _pdf(spark, np.array([], np.int64), np.array([]), np.array([]))
+    qdf = _qdf(spark, [(0, 5.0, 5.0), (1, 55.0, 95.0)])
+    assert knn_join_bulk(spark, no_pts, grid, qdf, 3).count() == 0
+    pts = _pdf(spark, np.arange(5, dtype=np.int64), np.arange(5.0), np.arange(5.0))
+    no_qs = spark.createDataFrame([], "q_id long, qx double, qy double")
+    out = knn_join_bulk(spark, pts, grid, no_qs, 3)
+    assert out.count() == 0
+    assert out.columns == ["q_id", "event_id", "rank", "dist2"]
+
+
+def test_knn_bulk_fewer_points_than_k(spark):
+    """Three in-grid points (two more lie outside the grid and never
+    count): every query gets those three, ranked, and no more."""
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    ids = np.arange(5, dtype=np.int64)
+    x = np.array([1.0, 50.0, 99.0, -3.0, 150.0])
+    y = np.array([1.0, 50.0, 99.0, 20.0, 20.0])
+    qs = [(0, 0.0, 0.0), (1, 60.0, 40.0), (2, -50.0, 200.0)]
+    got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), 5).toPandas()
+    assert len(got) == 9
+    _assert_knn(got, ids, x, y, grid, qs, 5)
+
+
+def test_knn_bulk_single_coordinate_ties_by_id(spark, monkeypatch):
+    """Every point on one coordinate: refinement cannot split the cell,
+    so each query's block holds all 3,000 points. A 256-entry matrix
+    budget forces column tiles merging into the running top-k; all
+    distances tie, so ranks follow the ids."""
+    monkeypatch.setattr(knn, "_MATRIX_ENTRIES", 256)
+    n, k = 3000, 7
+    ids = np.random.RandomState(3).permutation(n).astype(np.int64) + 100
+    x = np.full(n, 50.0)
+    y = np.full(n, 50.0)
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    qs = [(0, 50.0, 50.0), (1, 0.5, 3.25), (2, 250.0, 50.0)]
+    got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), k).toPandas()
+    _assert_knn(got, ids, x, y, grid, qs, k)
+    assert got[got.q_id == 0]["event_id"].tolist() == list(range(100, 100 + k))
+
+
+def test_knn_bulk_non_integral_and_out_of_grid_queries(spark):
+    """Coordinates off the integer lattice on a non-dyadic grid, queries
+    on every side outside the grid: an out-of-grid query probes from its
+    clamped edge cell, and its certification bound still holds."""
+    rng = np.random.RandomState(19)
+    n, k = 1500, 4
+    grid = GridSpec(-3.7, 2.2, 1.0 / 3.0, 0.7, 30, 20)
+    ids = np.arange(n, dtype=np.int64)
+    x = rng.uniform(grid.x0 - 1.0, grid.x1 + 1.0, n)
+    y = rng.uniform(grid.y0 - 1.0, grid.y1 + 1.0, n)
+    qx = np.r_[rng.uniform(grid.x0, grid.x1, 20), [grid.x0 - 5.3, grid.x1 + 0.01, 0.0, 1.5, -50.0]]
+    qy = np.r_[rng.uniform(grid.y0, grid.y1, 20), [5.0, 9.1, grid.y0 - 0.2, grid.y1 + 7.7, 80.0]]
+    qs = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qx, qy))]
+    got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), k).toPandas()
+    _assert_knn(got, ids, x, y, grid, qs, k)
+
+
+def test_knn_bulk_string_ids_and_schema(spark):
+    """A string id column is ranked and tie-broken by its own order, and
+    the output schema follows the inputs' types: q_id keeps its type and
+    nullability, the id column its type (never nullable), rank int,
+    dist2 double."""
+    rng = np.random.RandomState(23)
+    n, k = 400, 3
+    ids = np.array([f"p{i:04d}" for i in rng.permutation(n)], dtype=object)
+    x = rng.randint(0, 40, n).astype(np.float64)  # lattice: many ties
+    y = rng.randint(0, 40, n).astype(np.float64)
+    grid = GridSpec(0.0, 0.0, 4.0, 4.0, 10, 10)
+    pts = _pdf(spark, ids, x, y, id_col="pid")
+    qs = [(i, float(a), float(b)) for i, (a, b) in enumerate(rng.randint(0, 40, (30, 2)))]
+    qdf = _qdf(spark, qs).withColumn("q_id", F.col("q_id").cast("int"))
+    out = knn_join_bulk(spark, pts, grid, qdf, k, id_col="pid")
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == [
+        ("q_id", "int", True),
+        ("pid", "string", False),
+        ("rank", "int", False),
+        ("dist2", "double", False),
+    ]
+    _assert_knn(out.toPandas(), ids, x, y, grid, qs, k, id_col="pid")
+    sq = spark.createDataFrame(pd.DataFrame({"q_id": ["a", "b"], "qx": [1.0, 39.0], "qy": [2.0, 0.5]}))
+    pts_int = _pdf(spark, np.arange(n, dtype=np.int32), x, y)
+    out = knn_join_bulk(spark, pts_int, grid, sq, k)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == [
+        ("q_id", "string", True),
+        ("event_id", "int", False),
+        ("rank", "int", False),
+        ("dist2", "double", False),
+    ]
+    assert out.count() == 2 * k
+
+
+def test_knn_bulk_restores_aqe_conf(spark):
+    """AQE (and with it partition coalescing) is held off only for the
+    call: the session's settings come back afterwards, also when the
+    call raises."""
+    keys = ["spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled"]
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    pts = _pdf(spark, np.arange(20, dtype=np.int64), np.arange(20.0) * 4, np.arange(20.0) * 3)
+    qdf = _qdf(spark, [(0, 5.0, 5.0)])
+    bad = qdf.withColumn("qx", F.when(F.col("q_id") >= 0, F.raise_error(F.lit("bad query"))))
+    assert [spark.conf.get(key) for key in keys] == ["true", "true"]
+    knn_join_bulk(spark, pts, grid, qdf, 2).unpersist()
+    assert [spark.conf.get(key) for key in keys] == ["true", "true"]
+    with pytest.raises(Exception, match="bad query"):
+        knn_join_bulk(spark, pts, grid, bad, 2)
+    assert [spark.conf.get(key) for key in keys] == ["true", "true"]
+
+
+_cell = st.sampled_from([1.0, 0.5, 0.1, 1.0 / 3.0, 2.5, 7.3])
+_frac = st.floats(min_value=-0.2, max_value=1.2, allow_nan=False)
+
+
+@settings(max_examples=25, deadline=None)
+@given(data=st.data())
+def test_knn_bulk_matches_brute_force_property(spark, data):
+    """knn_join_bulk equals brute force over random grids (non-dyadic
+    cell sizes), coordinates off the integer lattice, duplicated points,
+    points and queries outside the grid, and k from 1 to past n."""
+    nx, ny = data.draw(st.integers(1, 12)), data.draw(st.integers(1, 12))
+    grid = GridSpec(
+        data.draw(st.floats(-50, 50, allow_nan=False)),
+        data.draw(st.floats(-50, 50, allow_nan=False)),
+        data.draw(_cell), data.draw(_cell), nx, ny,
+    )
+    fx = st.builds(lambda f: grid.x0 + f * (grid.x1 - grid.x0), _frac)
+    fy = st.builds(lambda f: grid.y0 + f * (grid.y1 - grid.y0), _frac)
+    pts = data.draw(st.lists(st.tuples(fx, fy), max_size=60))
+    dups = data.draw(st.lists(st.integers(0, max(len(pts) - 1, 0)), max_size=10)) if pts else []
+    pts = pts + [pts[i] for i in dups]
+    if data.draw(st.booleans()):
+        pts = [(float(round(a)), float(round(b))) for a, b in pts]
+    n = len(pts)
+    qs = data.draw(st.lists(st.tuples(fx, fy), min_size=1, max_size=8))
+    qs = [(i, a, b) for i, (a, b) in enumerate(qs)]
+    k = data.draw(st.integers(1, n + 3))
+    ids = np.arange(n, dtype=np.int64)[::-1].copy()
+    x = np.array([p[0] for p in pts], dtype=np.float64)
+    y = np.array([p[1] for p in pts], dtype=np.float64)
+    got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), k)
+    _assert_knn(got.toPandas(), ids, x, y, grid, qs, k)
+    got.unpersist()

@@ -46,13 +46,14 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert pushed and "EqualTo(event_type,purchase)" in pushed[0]
 
 
-def ran_plans(spark, call) -> list[list[tuple[str, str]]]:
+def ran_plans(spark, call, into_cache: bool = False) -> list[list[tuple[str, str]]]:
     """Run ``call``; return, for each SQL execution it started, the
     (name, description) of every physical operator Spark's status store
     recorded — the plan that actually ran, not the plan of the returned
     DataFrame (an aggregate strategy returns a LocalTableScan of its
-    reduced result). The walk stops at an InMemoryTableScan: a cached
-    relation's own plan ran when it was built."""
+    reduced result). The walk stops at an InMemoryTableScan (a cached
+    relation's own plan ran when it was built) unless ``into_cache``:
+    then it also walks the plans of the relations ``call`` cached."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def seq(s):
@@ -76,7 +77,7 @@ def ran_plans(spark, call) -> list[list[tuple[str, str]]]:
         while todo:
             node = nodes[todo.pop()]
             ops.append((node.name(), node.desc()))
-            if node.name() != "InMemoryTableScan":
+            if into_cache or node.name() != "InMemoryTableScan":
                 todo.extend(kids.get(node.id(), []))
         plans.append(ops)
     return plans
@@ -210,3 +211,39 @@ def test_query_engine_reads_cached_points(spark, sf_dir):
         ops = assert_one_arrow_pass(spark, lambda: eng.execute_function(fn))
         assert any(name == "InMemoryTableScan" for name, _ in ops), (fn, ops)
         assert not [d for _, d in ops if "regexp_extract" in d], (fn, ops)
+
+
+def test_knn_bulk_one_arrow_pass(spark, spark_jobs):
+    """knn_join_bulk runs two Spark jobs (the point collect, then the
+    query shuffle and the kNN pass that fill the result cache) with one
+    MapInArrow and none of the former round plan: no pandas cogroup, no
+    collect_list merge, no nested-loop fallback."""
+    import numpy as np
+    import pandas as pd
+
+    from raster_join_spark.geo.grid import GridSpec
+    from raster_join_spark.operators.knn import knn_join_bulk
+
+    rng = np.random.RandomState(5)
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {"event_id": np.arange(500), "x": rng.uniform(0, 100, 500), "y": rng.uniform(0, 100, 500)}
+        )
+    )
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"q_id": np.arange(40), "qx": rng.uniform(-5, 105, 40), "qy": rng.uniform(0, 100, 40)})
+    )
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    ran = []
+    plans = ran_plans(
+        spark, lambda: ran.append(spark_jobs(lambda: knn_join_bulk(spark, pts, grid, qdf, 4))), into_cache=True
+    )
+    out, jobs = ran[0]
+    assert out.count() == 160
+    out.unpersist()
+    assert len(jobs) <= 2, jobs
+    ops = [op for plan in plans for op in plan]
+    names = [name for name, _ in ops]
+    assert names.count("MapInArrow") == 1, names
+    assert not [n for n in names if "FlatMapCoGroups" in n or "NestedLoopJoin" in n], names
+    assert not [d for _, d in ops if "collect_list" in d], ops

@@ -1,4 +1,5 @@
-"""Config sweep for the Arrow-feed starvation seen in diag_hybrid.
+"""Config sweep for the Arrow-feed starvation behind the hybrid path's
+round-2 scaling loss (BENCH/hybrid_rootcause.md).
 
 Runs ONLY the no-op python stage (generate -> mapInPandas decode ->
 count) under different configs, one fresh JVM per run.

@@ -85,59 +85,16 @@ def main() -> None:
         F.col("x").alias("qx"),
         F.col("y").alias("qy"),
     )
-    # dense fixture: forces the ROUND path (the sf0.001 pages are so
-    # sparse relative to COARSE_GRID that the disk would cover most of
-    # the grid and the operator correctly takes the exhaustive fallback
-    # — captured separately below)
-    import numpy as np
-    import pandas as pd
-
-    from raster_join_spark.geo.grid import GridSpec
-
-    rng = np.random.RandomState(3)
-    n_dense = 20_000
-    dense_pts = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "event_id": np.arange(n_dense, dtype=np.int64),
-                "x": rng.uniform(0, 1000, n_dense).round(),
-                "y": rng.uniform(0, 1000, n_dense).round(),
-            }
-        )
-    )
-    dense_grid = GridSpec(0.0, 0.0, 10.0, 10.0, 100, 100)
-    dense_q = dense_pts.filter((F.col("event_id") % 40) == 0).select(
-        F.col("event_id").alias("q_id"),
-        F.col("x").alias("qx"),
-        F.col("y").alias("qy"),
-    )
     sections += [
         (
-            "Bulk kNN round plan (cogrouped block kernel, J6 at table scale)",
-            "Each pending query explodes its probe disk JVM-side "
-            "(sequence x sequence -> cell ids); points are pruned to probed "
-            "cells by a broadcast LEFT-SEMI join, then probes and points "
-            "COGROUP by cell_id into a numpy block kernel "
-            "(FlatMapCoGroupsInPandas) that emits <= k rows per (query, "
-            "cell) — the Arrow transfer is O(probes + points), never the "
-            "(query, candidate) pair set, so hot-cell skew cannot blow up "
-            "the exchange. The per-query global top-k then reduces in-plan "
-            "(map-side combined collect_list -> array_sort -> slice; no "
-            "Window) and certifies in-plan; the union of per-round "
-            "certified results stays distributed.",
-            plan_of(
-                knn_join_bulk(
-                    spark, dense_pts, dense_grid, dense_q, 5, n_total=n_dense
-                )
-            ),
-        ),
-        (
-            "Bulk kNN exhaustive fallback (sparse data / giant disk)",
-            "When the probe disk would exceed max_cells_per_query (or "
-            "max_rounds), pending queries resolve by ONE broadcast "
-            "nested-loop pass against all points — the intended plan "
-            "exactly when disks would have covered most of the grid.",
-            plan_of(knn_join_bulk(spark, pts, COARSE_GRID, qdf, 5, n_total=1000)),
+            "Bulk kNN (J6 at table scale)",
+            "The driver collects the point projection with toArrow() (one "
+            "job) and broadcasts its grid index. The returned frame is the "
+            "cached query pass: the query table hash-partitioned by q_id "
+            "and ONE MapInArrow that runs every query's cell-ring "
+            "expansion in-kernel and emits the final (q_id, id, rank, "
+            "dist2) rows. No join, no cogroup, no aggregate.",
+            plan_of(knn_join_bulk(spark, pts, COARSE_GRID, qdf, 5)),
         ),
     ]
 
