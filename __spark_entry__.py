@@ -702,7 +702,9 @@ def _q_knn_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (spatial self-join / per-row probe, the reference's
     getRegionPt called per point, CPUJoin/GridIndexF.cpp:177-198). The
     driver indexes the points once; one Arrow pass over the query table
-    answers every query."""
+    answers every query. The operator returns its result persisted; it
+    is collected into a local frame and released here, so repeated calls
+    keep no cached block."""
     from raster_join_spark.fixtures import COARSE_GRID, KNN_K
     from raster_join_spark.operators.knn import knn_join_bulk
 
@@ -713,12 +715,17 @@ def _q_knn_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").alias("qy"),
     )
     out = knn_join_bulk(spark, pts, COARSE_GRID, qdf, KNN_K)
-    return out.select(
-        F.col("q_id").cast("long").alias("q_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("dist2").cast("long").alias("dist2"),
-    )
+    try:
+        proj = out.select(
+            F.col("q_id").cast("long").alias("q_id"),
+            F.col("event_id").cast("long").alias("event_id"),
+            F.col("rank").cast("long").alias("rank"),
+            F.col("dist2").cast("long").alias("dist2"),
+        )
+        table = proj.toArrow()
+    finally:
+        out.unpersist()
+    return spark.createDataFrame(table, proj.schema)
 
 
 # ------------------------------------------- training-data pipeline ops

@@ -10,18 +10,27 @@ polygon rasterization passes:
 - **classification table** (hybrid J3 / error-bounds J4): every cell in a
   polygon's MBR labeled interior / boundary / outside via the exact
   polygon-vs-cell-rect test (CPUJoin/GridIndexF.cpp:461-511 logic:
-  any vertex in rect -> partial; else corner-in-poly counts + edge-vs-rect
-  crossings decide), plus the polygon∩cell area fraction for boundary
-  cells (Sutherland–Hodgman clip; the reference's per-pixel
-  Cohen–Sutherland fraction, shaders/line-bound.frag:27-187).
+  any vertex in rect or any edge crossing the rect -> boundary; else
+  the center decides), plus, on request, the polygon∩cell area
+  fraction of boundary cells (Sutherland–Hodgman clip; the reference's
+  per-pixel Cohen–Sutherland fraction, shaders/line-bound.frag:27-187).
 - **candidate lists** (index join J2): MBR-cover cell -> candidate poly
   ids, a superset exactly like the GPU linked-list grid
   (shaders/create-index.glsl:34-81); PIP filters the slack.
 
-Computed ONCE per (polygon collection, grid) with vectorized numpy,
-cached, and shipped to executors as a broadcast-joinable DataFrame — the
-reference rebuilds its polygon index every query (GLFunction.cpp:65-156);
-we memoize because polygon sets are static dimension data.
+:func:`classify_cells` builds all three from the polygon OUTLINES, as
+the reference draws boundary pixels (HybridJoin::drawOutline,
+HybridJoin.cpp:197-268) and fills interiors separately
+(polygon-inside.frag:15-57): boundary cells are the cells each edge
+crosses, center-inside comes from one scanline per (edge, cell row).
+:func:`classify_cells_ref` is the per-polygon spec it is tested against
+and the float32 path.
+
+Computed ONCE per (polygon collection, grid) with vectorized numpy and
+cached in :data:`POLY_GRID_CACHE` — the reference rebuilds its polygon
+index every query (GLFunction.cpp:65-156); we memoize because polygon
+sets are static dimension data. Area fractions are built only when
+asked (error_bounds is their one consumer).
 
 Scale note: the tables are O(covered cells), a few MB for 256-1024² grids
 with hundreds of polygons — safely below Spark's broadcast threshold even
@@ -30,6 +39,7 @@ for the 65,536-polygon sweep.
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass
 
 import numpy as np
@@ -98,7 +108,7 @@ def _segments_intersect_rect(
     ):
         par = p == 0
         ok &= ~(par & (q < 0))  # parallel and outside
-        with np.errstate(divide="ignore", invalid="ignore"):
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
             t = np.where(par, 0.0, q / np.where(p == 0, 1.0, p))
         t0 = np.where(~par & (p < 0), np.maximum(t0, t), t0)
         t1 = np.where(~par & (p > 0), np.minimum(t1, t), t1)
@@ -110,10 +120,10 @@ def classify_cells_ref(
 ) -> PolyGridTables:
     """Classify every MBR-covered cell of every polygon — REFERENCE
     implementation (per-polygon loop; the readable spec). The production
-    path is :func:`classify_cells` below, a batch-vectorized rewrite that
-    removes the per-polygon and per-boundary-cell Python loops (65,536
-    polygons: minutes -> seconds; see BENCH/poly_scaling.md); its output
-    is equivalence-tested against this function. This loop form remains
+    path is :func:`classify_cells` below, a batch rewrite driven by the
+    polygon outlines with no per-polygon or per-cell Python loops
+    (65,536 polygons: minutes -> seconds); its output is
+    equivalence-tested against this function. This loop form remains
     the implementation for dtype=float32 (the reference-parity precision
     mode), whose mixed float32/float64 promotion sequence the batched
     form does not reproduce bit-for-bit.
@@ -349,7 +359,7 @@ def _clip_area_fraction_batch(
                 # t/ins are computed whole-array (inf/nan where cross is
                 # False and the edge is degenerate) but consumed only on
                 # cross rows, where the denominator is nonzero
-                with np.errstate(divide="ignore", invalid="ignore"):
+                with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
                     t = (bound - prv[:, axis]) / (cur[:, axis] - prv[:, axis])
                     ins = prv + t[:, None] * (cur - prv)
                 pos = out_m[cross]
@@ -393,97 +403,211 @@ def _clip_area_fraction_batch(
     return frac
 
 
-def _pair_geometry(
+# elements per vectorized step of the outline passes: bounds the
+# temporaries of one step (~15 float64 arrays of this length)
+_CHUNK = 1 << 14
+
+
+def _boundary_fractions(
+    grid: GridSpec, polyset: PolygonSet, cells: np.ndarray, polys: np.ndarray
+) -> np.ndarray:
+    """polygon∩cell area fraction of each (cell, polygon) pair by the
+    batched Sutherland–Hodgman clip, grouped by vertex count and run in
+    chunks of ``_CHUNK`` pairs."""
+    frac = np.zeros(len(cells), dtype=np.float64)
+    if len(cells) == 0:
+        return frac
+    vd = polyset.verts.astype(np.float64)
+    offs = polyset.offsets
+    nv_pp = np.diff(offs)[polys]
+    gx = cells % grid.nx
+    gy = cells // grid.nx
+    for nv in np.unique(nv_pp):
+        sel_all = np.flatnonzero(nv_pp == nv)
+        for s0 in range(0, len(sel_all), _CHUNK):
+            sel = sel_all[s0 : s0 + _CHUNK]
+            lbx = grid.x0 + gx[sel].astype(np.float64) * grid.cell_w
+            lby = grid.y0 + gy[sel].astype(np.float64) * grid.cell_h
+            frac[sel] = _clip_area_fraction_batch(
+                vd, offs[polys[sel]].astype(np.int64), int(nv),
+                lbx, lby, lbx + grid.cell_w, lby + grid.cell_h,
+            )
+    return frac
+
+
+def _expand(counts: np.ndarray, limit: int):
+    """Walk the flat expansion of ``counts`` (item i repeated counts[i]
+    times) in slices of at most ``limit`` elements, yielding (item,
+    offset-within-item) arrays. A slice may end inside an item, so one
+    item with a huge count is split over several slices."""
+    ends = np.cumsum(counts)
+    total = int(ends[-1]) if len(ends) else 0
+    for s in range(0, total, limit):
+        k = np.arange(s, min(s + limit, total), dtype=np.int64)
+        item = np.searchsorted(ends, k, side="right")
+        yield item, k - (ends[item] - counts[item])
+
+
+def _outline_masks(
     grid: GridSpec,
     polyset: PolygonSet,
-    pair_poly: np.ndarray,
-    gx: np.ndarray,
-    gy: np.ndarray,
-    with_frac: bool,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Geometric tests for EXPLICIT (polygon, cell) pairs on ``grid``:
-    returns (center_in, vert_in, edge_hit, frac) flat arrays. This is
-    the batch core of :func:`classify_cells` (which derives its pairs
-    from MBR covers)."""
-    offs = polyset.offsets
-    nv_per = np.diff(offs)
-    tot = len(pair_poly)
-    lbx = grid.x0 + gx.astype(np.float64) * grid.cell_w
-    lby = grid.y0 + gy.astype(np.float64) * grid.cell_h
-    rtx = lbx + grid.cell_w
-    rty = lby + grid.cell_h
-    ccx = lbx + 0.5 * grid.cell_w
-    ccy = lby + 0.5 * grid.cell_h
+    pids: np.ndarray,
+    stx: np.ndarray,
+    sty: np.ndarray,
+    enx: np.ndarray,
+    eny: np.ndarray,
+    pair_base: np.ndarray,
+    tot: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(boundary, center_in) masks over the pair enumeration of
+    :func:`classify_cells`, computed from the polygons' outlines.
 
-    vd = polyset.verts.astype(np.float64)
-    base = offs[pair_poly].astype(np.int64)
-    nv_pp = nv_per[pair_poly]
+    Polygon ``pids[q]`` owns pairs ``pair_base[q] + (gy - sty[q]) * wx +
+    (gx - stx[q])`` over its MBR cell range. Every edge (v[i], v[i+1])
+    visits the cell rows its y-extent reaches (widened by a rounding
+    slack). Per (edge, row) it does two things:
 
+    - boundary: clip the edge to the row's band, take that x-interval of
+      cells widened by one cell on each side, and run the exact
+      Liang–Barsky test on those candidates only. A vertex inside a
+      closed cell rect is an endpoint of an edge that hits the rect, so
+      the edge hits alone decide the boundary mask.
+    - center_in: the row's cell centers share one y, so the pip_mask
+      straddle test and ``xcross`` (same expression, ``(vi, vj) =
+      (v[i+1], v[i])`` as pip_mask pairs them) run once per (edge, row).
+      A crossing flips every cell of the row whose center lies left of
+      it (``cx < xcross``): a prefix of the row, found exactly by
+      comparing the cell centers with the classify expression. Each
+      flip is a +1 at the row start and at the prefix end; a cumulative
+      count over the enumeration then gives every cell's crossing
+      parity."""
+    boundary = np.zeros(tot, dtype=bool)
     center_in = np.zeros(tot, dtype=bool)
-    vert_in = np.zeros(tot, dtype=bool)
-    edge_hit = np.zeros(tot, dtype=bool)
-    frac = np.zeros(tot, dtype=np.float64)
+    offs = polyset.offsets
+    vd = polyset.verts.astype(np.float64)
+    x0, y0, w, h = grid.x0, grid.y0, grid.cell_w, grid.cell_h
+    # rounding slack, in coordinate units: the exact tests run on
+    # rects rebuilt as x0 + g * w, so candidate rows must reach a row
+    # whose edge sits within rounding of the outline's y-extent
+    mag = max(
+        abs(x0), abs(y0), abs(x0 + grid.nx * w), abs(y0 + grid.ny * h),
+        float(np.abs(vd).max()) if len(vd) else 0.0,
+    )
+    slack = 128.0 * np.finfo(np.float64).eps * mag
+    tol = 1e-9 + slack / h
+    wx = enx - stx
+    nv_all = np.diff(offs)[pids]
+    # polygons in groups of about _CHUNK edges; a group's pairs are one
+    # contiguous range of the enumeration
+    ends = np.cumsum(nv_all)
+    cuts = np.searchsorted(ends, np.arange(_CHUNK, int(ends[-1]), _CHUNK), side="right")
+    for qa, qb in zip(np.r_[0, cuts], np.r_[cuts, len(pids)]):
+        if qa == qb:
+            continue
+        nv = nv_all[qa:qb]
+        e_q = qa + np.repeat(np.arange(qb - qa), nv)  # edge -> polygon slot
+        e_loc = np.arange(int(nv.sum()), dtype=np.int64) - np.repeat(np.cumsum(nv) - nv, nv)
+        i0 = offs[pids[e_q]] + e_loc
+        i1 = i0 + np.where(e_loc + 1 == nv_all[e_q], 1 - nv_all[e_q], 1)
+        ex0, ey0, ex1, ey1 = vd[i0, 0], vd[i0, 1], vd[i1, 0], vd[i1, 1]
+        del e_loc, i0, i1
+        ymin, ymax = np.minimum(ey0, ey1), np.maximum(ey0, ey1)
+        r0 = np.clip(np.floor((ymin - y0) / h - tol), sty[e_q], eny[e_q]).astype(np.int64)
+        r1 = np.clip(np.floor((ymax - y0) / h + tol), sty[e_q] - 1, eny[e_q] - 1)
+        n_r = np.maximum(r1.astype(np.int64) - r0 + 1, 0)
+        del r1
+        p_lo = int(pair_base[qa])
+        p_hi = int(pair_base[qb - 1] + wx[qb - 1] * (eny[qb - 1] - sty[qb - 1]))
+        flips: list[np.ndarray] = []
 
-    CHUNK = 1 << 18
-    for nv in np.unique(nv_pp):
-        nv = int(nv)
-        sel_all = np.flatnonzero(nv_pp == nv)
-        for s0 in range(0, len(sel_all), CHUNK):
-            sel = sel_all[s0 : s0 + CHUNK]
-            b = base[sel]
-            lx, ly, rx, ry = lbx[sel], lby[sel], rtx[sel], rty[sel]
-            cx, cy = ccx[sel], ccy[sel]
-            # center PIP (same per-edge expression as pip_mask)
-            c = np.zeros(len(sel), dtype=bool)
-            vin = np.zeros(len(sel), dtype=bool)
-            ehit = np.zeros(len(sel), dtype=bool)
-            j = nv - 1
-            for i in range(nv):
-                vix, viy = vd[b + i, 0], vd[b + i, 1]
-                vjx, vjy = vd[b + j, 0], vd[b + j, 1]
-                j = i
-                straddle = (viy > cy) != (vjy > cy)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xcross = (vjx - vix) * (cy - viy) / (vjy - viy) + vix
-                c ^= straddle & (cx < xcross)
-                vin |= (vix >= lx) & (vix <= rx) & (viy >= ly) & (viy <= ry)
-                i2 = 0 if i == nv - 1 else i + 1
-                ehit |= _segments_intersect_rect(
-                    vix, viy, vd[b + i2, 0], vd[b + i2, 1], lx, ly, rx, ry
+        for e, roff in _expand(n_r, _CHUNK):
+            q = e_q[e]
+            r = r0[e] + roff
+            row_pos = pair_base[q] + (r - sty[q]) * wx[q]
+            lby = y0 + r.astype(np.float64) * h
+            rty = lby + h
+
+            # center_in: one straddle test and xcross per (edge, row)
+            cy = lby + 0.5 * h
+            vix, viy, vjx, vjy = ex1[e], ey1[e], ex0[e], ey0[e]
+            st = np.flatnonzero((viy > cy) != (vjy > cy))
+            if len(st):
+                vix, viy, vjx, vjy = vix[st], viy[st], vjx[st], vjy[st]
+                xcross = (vjx - vix) * (cy[st] - viy) / (vjy - viy) + vix
+                lo, hi = stx[q[st]], enx[q[st]]
+                # first column whose center is not left of the crossing
+                with np.errstate(invalid="ignore"):
+                    est = np.floor((xcross - x0) / w - 0.5) + 1
+                cut = np.clip(np.nan_to_num(est, nan=0.0), lo, hi).astype(np.int64)
+                while True:
+                    dec = (cut > lo) & ~(x0 + (cut - 1).astype(np.float64) * w + 0.5 * w < xcross)
+                    inc = (cut < hi) & (x0 + cut.astype(np.float64) * w + 0.5 * w < xcross)
+                    if not (dec.any() or inc.any()):
+                        break
+                    cut = cut - dec + inc
+                flips.append(row_pos[st] - p_lo)
+                flips.append(row_pos[st] + (cut - lo) - p_lo)
+
+            # boundary: the edge's x-interval inside the row's band
+            ya = np.clip(lby - slack, ymin[e], ymax[e])
+            yb = np.clip(rty + slack, ymin[e], ymax[e])
+            dx, dy = ex1[e] - ex0[e], ey1[e] - ey0[e]
+            flat = dy == 0
+            # edge parameters of the band's clamped y, clipped to [0, 1]:
+            # a near-horizontal edge may overflow its slope, never t
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                ta = np.clip((ya - ey0[e]) / dy, 0.0, 1.0)
+                tb = np.clip((yb - ey0[e]) / dy, 0.0, 1.0)
+            xa = np.where(flat, ex0[e], ex0[e] + ta * dx)
+            xb = np.where(flat, ex1[e], ex0[e] + tb * dx)
+            c0 = np.floor((np.minimum(xa, xb) - x0) / w) - 1
+            c1 = np.floor((np.maximum(xa, xb) - x0) / w) + 1
+            c0 = np.clip(c0, stx[q], enx[q]).astype(np.int64)
+            c1 = np.clip(c1, stx[q] - 1, enx[q] - 1).astype(np.int64)
+            n_c = np.maximum(c1 - c0 + 1, 0)
+            for j, coff in _expand(n_c, _CHUNK):
+                ej = e[j]
+                c = c0[j] + coff
+                lbx = x0 + c.astype(np.float64) * w
+                hit = _segments_intersect_rect(
+                    ex0[ej], ey0[ej], ex1[ej], ey1[ej], lbx, lby[j], lbx + w, rty[j]
                 )
-            center_in[sel] = c
-            vert_in[sel] = vin
-            edge_hit[sel] = ehit
-            if with_frac:
-                bmask = vin | ehit
-                bs = sel[bmask]
-                if len(bs):
-                    frac[bs] = _clip_area_fraction_batch(
-                        vd, base[bs], nv, lbx[bs], lby[bs], rtx[bs], rty[bs]
-                    )
-    return center_in, vert_in, edge_hit, frac
+                boundary[(row_pos[j] + (c - stx[q[j]]))[hit]] = True
+
+        if flips:
+            cnt = np.bincount(np.concatenate(flips), minlength=p_hi - p_lo + 1)
+            np.cumsum(cnt, out=cnt)
+            np.bitwise_and(cnt, 1, out=cnt)
+            center_in[p_lo:p_hi] = cnt[: p_hi - p_lo]
+    return boundary, center_in
 
 
 def classify_cells(
     grid: GridSpec, polyset: PolygonSet, dtype=np.float64, with_frac: bool = True
 ) -> PolyGridTables:
-    """Batch-vectorized cell classification — same semantics as
+    """Batch cell classification — same semantics as
     :func:`classify_cells_ref` (the readable per-polygon spec; see its
-    docstring for the rules), restructured for LARGE polygon collections:
-    all (polygon, covered-cell) pairs are materialized as flat arrays and
-    every geometric test (center PIP, vertex-in-rect, Liang–Barsky edge
-    crossing, Sutherland–Hodgman area fraction) runs as a handful of
-    whole-array passes per distinct vertex count, instead of per-polygon
-    (and per-boundary-cell) Python iterations. 65,536 polygons x
-    FINE_GRID classify in seconds (BENCH/poly_scaling.md); equivalence
-    vs the reference form is test-enforced (tests/test_geometry.py).
+    docstring for the rules), built from the polygons' outlines as the
+    reference builds its boundary pixels (HybridJoin::drawOutline,
+    HybridJoin.cpp:197-268) and fills interiors per row
+    (polygon-inside.frag:15-57), so the cost grows with outline length
+    plus covered area rather than with covered cells x vertices:
+
+    - the (polygon, MBR cell) pairs are enumerated as flat arrays
+      (polygon order, row-major inside each MBR range); this order is
+      the order of every output array;
+    - boundary cells are the cells each edge crosses, found row by row
+      and confirmed with the exact Liang–Barsky test;
+    - center-inside comes from one scanline per (edge, cell row) and a
+      cumulative crossing count (:func:`_outline_masks`).
+
+    Equivalence with the reference form is test-enforced
+    (tests/test_geometry.py, including a Hypothesis property test).
 
     ``with_frac=False`` skips the Sutherland–Hodgman area-fraction stage
-    (the dominant classify cost) and leaves cls_frac at 0 for boundary
-    cells. Only the error-bounds join consumes fractions, so the
-    interior/boundary tables the hybrid paths need — in particular the
-    k-refined internal classification grids, whose pair counts grow ~k^2
-    — build several-fold faster this way.
+    and leaves cls_frac at 0 for boundary cells. Only the error-bounds
+    join consumes fractions; everything else asks for the light tables
+    (:class:`PolyGridCache` defaults to them).
 
     dtype=float32 (the reference-precision parity mode) delegates to the
     loop form, whose exact float32/float64 promotion sequence this
@@ -491,9 +615,9 @@ def classify_cells(
     """
     if np.dtype(dtype) != np.float64:
         return classify_cells_ref(grid, polyset, dtype=dtype)
-    nP = polyset.n_polys
     empty = PolyGridTables(
-        *(np.empty(0, dt) for dt in (np.int64,) * 2),
+        cover_cell=np.empty(0, np.int64),
+        cover_poly=np.empty(0, np.int64),
         cls_cell=np.empty(0, np.int64),
         cls_poly=np.empty(0, np.int64),
         cls_kind=np.empty(0, np.int32),
@@ -502,10 +626,9 @@ def classify_cells(
         cand_cell=np.empty(0, np.int64),
         cand_poly=np.empty(0, np.int64),
     )
-    if nP == 0:
+    if polyset.n_polys == 0:
         return empty
-    offs = polyset.offsets
-    nv_per = np.diff(offs)
+    nv_per = np.diff(polyset.offsets)
     mbrs = _poly_mbrs_vec(polyset)
     # cover ranges per polygon (grid.mbr_cell_range, vectorized)
     stx = np.maximum(np.floor((mbrs[:, 0] - grid.x0) / grid.cell_w), 0).astype(np.int64)
@@ -520,30 +643,38 @@ def classify_cells(
     pids = np.flatnonzero(valid)
     if len(pids) == 0:
         return empty
-    wx = enx[pids] - stx[pids]
-    cnt = wx * (eny[pids] - sty[pids])
+    stx, sty, enx, eny = stx[pids], sty[pids], enx[pids], eny[pids]
+    wx = enx - stx
+    cnt = wx * (eny - sty)
     tot = int(cnt.sum())
     pair_poly = np.repeat(pids, cnt)
     excl = np.cumsum(cnt) - cnt
     t_loc = np.arange(tot, dtype=np.int64) - np.repeat(excl, cnt)
     wx_pp = np.repeat(wx, cnt)
-    gx = stx[pair_poly] + t_loc % wx_pp
-    gy = sty[pair_poly] + t_loc // wx_pp
-    cells = gx + grid.nx * gy
-    center_in, vert_in, edge_hit, frac = _pair_geometry(
-        grid, polyset, pair_poly, gx, gy, with_frac
+    cells = (np.repeat(stx, cnt) + t_loc % wx_pp) + grid.nx * (
+        np.repeat(sty, cnt) + t_loc // wx_pp
+    )
+    del t_loc, wx_pp
+    boundary, center_in = _outline_masks(
+        grid, polyset, pids, stx, sty, enx, eny, excl, tot
     )
 
-    boundary = vert_in | edge_hit
-    interior = ~boundary & center_in
-    keep = boundary | interior
+    keep = boundary | center_in
+    cls_cell, cls_poly = cells[keep], pair_poly[keep]
+    b_keep = boundary[keep]
+    cls_frac = np.ones(len(cls_cell), dtype=np.float64)
+    cls_frac[b_keep] = (
+        _boundary_fractions(grid, polyset, cls_cell[b_keep], cls_poly[b_keep])
+        if with_frac
+        else 0.0
+    )
     return PolyGridTables(
         cover_cell=cells[center_in],
         cover_poly=pair_poly[center_in],
-        cls_cell=cells[keep],
-        cls_poly=pair_poly[keep],
-        cls_kind=np.where(boundary[keep], BOUNDARY, INTERIOR).astype(np.int32),
-        cls_frac=np.where(boundary[keep], frac[keep], 1.0),
+        cls_cell=cls_cell,
+        cls_poly=cls_poly,
+        cls_kind=np.where(b_keep, BOUNDARY, INTERIOR).astype(np.int32),
+        cls_frac=cls_frac,
         cls_center_in=center_in[keep],
         cand_cell=cells,
         cand_poly=pair_poly,
@@ -551,43 +682,51 @@ def classify_cells(
 
 
 class PolyGridCache:
-    """Memoize classification per (collection content, grid) — the
-    reference rebuilds per query (GLFunction.cpp:65-156); we build once.
-    Keys use :attr:`PolygonSet.cache_token` (a geometry fingerprint),
-    never the collection name: same-named, differently-shaped sets must
-    not serve each other stale tables."""
+    """Memoize classification per (collection content, grid, dtype) —
+    the reference rebuilds per query (GLFunction.cpp:65-156); we build
+    once. Keys use :attr:`PolygonSet.cache_token` (a geometry
+    fingerprint), never the collection name: same-named, differently-
+    shaped sets must not serve each other stale tables.
+
+    ``get`` returns the light tables (no area fractions) unless asked
+    ``with_frac=True``. Each key holds one entry: asking for fractions
+    on a light entry adds them to it (the classification is reused, only
+    the Sutherland–Hodgman stage runs) and replaces it, and tables with
+    fractions serve light requests too."""
 
     # refined-grid entries can reach ~REFINE_COVER_BUDGET pairs
-    # (~hundreds of MB); bound the cache like _PAIRS_CACHE/_BC_CACHE so
-    # a long session sweeping collections/grids can't grow without limit
+    # (~hundreds of MB); bound the cache (cleared wholesale) so a long
+    # session sweeping collections/grids can't grow without limit
     MAX_ENTRIES = 12
 
     def __init__(self) -> None:
-        self._cache: dict[tuple, PolyGridTables] = {}
+        # key -> (tables, has fractions)
+        self._cache: dict[tuple, tuple[PolyGridTables, bool]] = {}
 
     def get(
         self,
         grid: GridSpec,
         polyset: PolygonSet,
         dtype=np.float64,
-        with_frac: bool = True,
+        with_frac: bool = False,
     ) -> PolyGridTables:
-        key = (polyset.cache_token, grid, np.dtype(dtype).char, True)
-        if key in self._cache:
-            return self._cache[key]  # full tables serve light requests too
-        if not with_frac:
-            lkey = (polyset.cache_token, grid, np.dtype(dtype).char, False)
-            if lkey not in self._cache:
-                if len(self._cache) >= self.MAX_ENTRIES:
-                    self._cache.clear()
-                self._cache[lkey] = classify_cells(
-                    grid, polyset, dtype=dtype, with_frac=False
-                )
-            return self._cache[lkey]
-        if len(self._cache) >= self.MAX_ENTRIES:
-            self._cache.clear()
-        self._cache[key] = classify_cells(grid, polyset, dtype=dtype)
-        return self._cache[key]
+        key = (polyset.cache_token, grid, np.dtype(dtype).char)
+        hit = self._cache.get(key)
+        if hit is not None and (hit[1] or not with_frac):
+            return hit[0]
+        if hit is not None:
+            t = hit[0]
+            b = t.cls_kind == BOUNDARY
+            frac = t.cls_frac.copy()
+            frac[b] = _boundary_fractions(grid, polyset, t.cls_cell[b], t.cls_poly[b])
+            t = dataclasses.replace(t, cls_frac=frac)
+        else:
+            if len(self._cache) >= self.MAX_ENTRIES:
+                self._cache.clear()
+            t = classify_cells(grid, polyset, dtype=dtype, with_frac=with_frac)
+        # the float32 form is the reference loop, which always clips
+        self._cache[key] = (t, with_frac or np.dtype(dtype) != np.float64)
+        return t
 
 
 POLY_GRID_CACHE = PolyGridCache()

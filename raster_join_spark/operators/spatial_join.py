@@ -225,9 +225,11 @@ class SpatialJoin:
         a power-of-two factor when the polygon collection is tiny
         relative to the query grid (see the class constants), ``1``
         disables, an int forces a factor. Results are identical at any
-        factor; only the physical interior/boundary split changes.
-        float32 parity mode never refines (classification decisions
-        must mirror the reference's exactly).
+        factor; only the physical interior/boundary split changes. The
+        refined grid's tables are built from the polygon outlines (cost
+        ~ edges x rows crossed plus covered pairs, geo/classify.py) and
+        carry no area fractions. float32 parity mode never refines
+        (classification decisions must mirror the reference's exactly).
 
         ``ring_semantics``: how multi-ring (hole-bearing) polygons are
         interpreted, across ALL strategies (classification, PIP, cover):
@@ -253,6 +255,7 @@ class SpatialJoin:
         self.x = x
         self.y = y
         self.dtype = dtype
+        # light tables (no area fractions; error_bounds adds them)
         self.tables: PolyGridTables = POLY_GRID_CACHE.get(grid, polyset, dtype=dtype)
         if np.dtype(dtype) != np.float64:
             self.refine_k = 1
@@ -296,14 +299,12 @@ class SpatialJoin:
     @property
     def cls_tables(self) -> PolyGridTables:
         """Interior/boundary tables on the internal classification grid
-        (== the query-grid tables when refine_k == 1). Refined tables
-        skip the area-fraction stage — only error_bounds needs fractions
-        and it always runs on the query grid."""
+        (== the query-grid tables when refine_k == 1). Like ``tables``
+        they carry no area fractions: only error_bounds reads fractions,
+        and it asks for them on the query grid."""
         if self.refine_k == 1:
             return self.tables
-        return POLY_GRID_CACHE.get(
-            self.cls_grid, self.polyset, dtype=self.dtype, with_frac=False
-        )
+        return POLY_GRID_CACHE.get(self.cls_grid, self.polyset, dtype=self.dtype)
 
     # ------------------------------------------------------------ helpers
 
@@ -381,6 +382,8 @@ class SpatialJoin:
         else:
             raise ValueError(f"unknown strategy {kind!r}")
         if kind == "errorbounds":
+            # the one consumer of area fractions: built on first use
+            t = POLY_GRID_CACHE.get(self.grid, self.polyset, dtype=self.dtype, with_frac=True)
             b_c, b_p, b_f, b_ci = t.boundary_pairs()
             frac = b_f.astype(np.float64)
             art["bounds"] = _cell_csr(b_c, np.arange(len(b_c)), n_cells)

@@ -141,7 +141,7 @@ def error_bounds_sql(grid: GridSpec = COARSE_GRID, tight: bool = False) -> str:
     per-cell fraction is pre-quantized to floor(frac*1e6) on the driver
     and inlined as BIGINT, so the whole fold is integer arithmetic and
     bit-identical to Spark regardless of summation order."""
-    t = POLY_GRID_CACHE.get(grid, ORACLE_POLYS)
+    t = POLY_GRID_CACHE.get(grid, ORACLE_POLYS, with_frac=True)
     b_c, b_p, b_f, b_ci = t.boundary_pairs()
     frac_u6 = np.floor(b_f.astype(np.float64) * 1e6).astype(np.int64)
     rows = ",".join(

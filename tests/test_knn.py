@@ -581,3 +581,17 @@ def test_knn_bulk_matches_brute_force_property(spark, data):
     got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), k)
     _assert_knn(got.toPandas(), ids, x, y, grid, qs, k)
     got.unpersist()
+
+
+def test_knn_bulk_entry_releases_its_result(spark, sf_dir):
+    """The driver's knn_bulk query collects the operator's persisted
+    result into a local frame and unpersists it: three calls leave the
+    session's persisted-RDD count where it was."""
+    import __spark_entry__ as e
+
+    jsc = spark.sparkContext._jsc
+    e._q_knn_bulk(spark, sf_dir).collect()  # warm the entry's own caches
+    before = jsc.getPersistentRDDs().size()
+    rows = [e._q_knn_bulk(spark, sf_dir).collect() for _ in range(3)]
+    assert jsc.getPersistentRDDs().size() == before
+    assert rows[0] == rows[2] and len(rows[0]) > 0

@@ -592,3 +592,39 @@ def test_kernel_task_counts(spark, spark_jobs, polyset, grid):
         for name, call in calls.items():
             _, jobs = spark_jobs(call)
             assert jobs == [[tasks]], (name, parts, jobs)
+
+
+def test_area_fractions_built_only_for_error_bounds(spark, points_df, random_points, monkeypatch):
+    """A never-seen collection classifies without the Sutherland–Hodgman
+    stage: a cold assign_polygons and hybrid_join (base and refined
+    classification grid) never clip. error_bounds afterwards adds the
+    fractions to the cached entry, so the cache keeps one entry per
+    (collection, grid), and its bounds still contain the exact count."""
+    from raster_join_spark.geo import classify as cl
+
+    ps = blob_polygons(6, 0, 0, 1000, 1000, n_verts=11, seed=4242, name="lazyfrac")
+    grid = GridSpec(0.0, 0.0, 40.0, 40.0, 25, 25)
+
+    def no_clip(*a, **k):
+        raise AssertionError("area fractions built outside error_bounds")
+
+    monkeypatch.setattr(cl, "_clip_area_fraction_batch", no_clip)
+    for refine in (1, 4):
+        sj = SpatialJoin(spark, ps, grid, refine=refine)
+        assert sj.assign_polygons(points_df, cols=["url"]).count() > 0
+        sj.hybrid_join(points_df).collect()
+    monkeypatch.undo()
+
+    sj = SpatialJoin(spark, ps, grid, refine=1)
+    out = sj.error_bounds(points_df).toPandas().sort_values("poly_id")
+    x, y, _ = random_points
+    exact, _ = brute_counts(x, y, ps)
+    assert (out["lo1"].to_numpy() <= exact).all() and (exact <= out["hi1"].to_numpy()).all()
+    keys = [k for k in cl.POLY_GRID_CACHE._cache if k[0] == ps.cache_token]
+    assert sorted(k[1].cell_w for k in keys) == [10.0, 40.0]
+    t, has_frac = cl.POLY_GRID_CACHE._cache[(ps.cache_token, grid, "d")]
+    assert has_frac
+    b = t.cls_kind == cl.BOUNDARY
+    assert (t.cls_frac[b] > 0).any()
+    ref = cl.classify_cells_ref(grid, ps)
+    np.testing.assert_allclose(t.cls_frac, ref.cls_frac, atol=1e-9)
