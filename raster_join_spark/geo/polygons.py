@@ -221,12 +221,27 @@ class PolygonSet:
 
     @property
     def mbrs(self) -> np.ndarray:
-        """(P, 4) [minx, miny, maxx, maxy]."""
+        """(P, 4) [minx, miny, maxx, maxy]. A polygon with no vertices
+        gets the empty box [inf, inf, -inf, -inf], which no cell range
+        covers and which leaves :attr:`bbox` unchanged."""
         if self._mbrs is None:
-            m = np.empty((self.n_polys, 4), dtype=np.float64)
-            for p in range(self.n_polys):
-                pv = self.poly_verts(p)
-                m[p] = [pv[:, 0].min(), pv[:, 1].min(), pv[:, 0].max(), pv[:, 1].max()]
+            m = np.tile([np.inf, np.inf, -np.inf, -np.inf], (self.n_polys, 1))
+            offs = self.offsets
+            some = np.diff(offs) > 0
+            if some.any():
+                # consecutive starts of non-empty polygons bound each one's
+                # vertex run (the empty ones between them add nothing)
+                v = self.verts[: offs[-1]]
+                seg = offs[:-1][some]
+                m[some] = np.stack(
+                    [
+                        np.minimum.reduceat(v[:, 0], seg),
+                        np.minimum.reduceat(v[:, 1], seg),
+                        np.maximum.reduceat(v[:, 0], seg),
+                        np.maximum.reduceat(v[:, 1], seg),
+                    ],
+                    axis=1,
+                )
             self._mbrs = m
         return self._mbrs
 

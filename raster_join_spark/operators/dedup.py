@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster_join_spark.session import drop_zip_finders
+
 # 31-bit Mersenne prime: (a*h + b) stays under 2^62, so the permutation
 # arithmetic is overflow-free in 64-bit integers on BOTH engines (Spark
 # ANSI mode and DuckDB abort on 64-bit overflow — no silent wraparound
@@ -747,6 +749,7 @@ def winnow_fingerprints(
     )
 
     def fn(batches):
+        drop_zip_finders()
         for pdf in batches:
             ids, poss, fps = _winnow_kernel(
                 pdf[id_col].to_numpy(), pdf[text_col].tolist(), k, window

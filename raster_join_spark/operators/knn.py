@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from raster_join_spark.geo.grid import GridSpec
+from raster_join_spark.session import drop_zip_finders
 
 
 def _round_topk(cand: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -546,6 +547,7 @@ def knn_join_bulk(
     budget = _MATRIX_ENTRIES
 
     def fn(batches):
+        drop_zip_finders()
         ix = bc.value
         for rb in batches:
             qx = rb.column(1).to_numpy(zero_copy_only=False)

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from raster_join_spark.session import drop_zip_finders
+
 
 MEDIA_META = T.StructType(
     [
@@ -113,6 +115,7 @@ def attach_media_meta(df: DataFrame, payload_col: str = "html", codec: Codec | N
 
     @F.pandas_udf(MEDIA_META)
     def _meta(payload: pd.Series) -> pd.DataFrame:
+        drop_zip_finders()
         return codec.meta_batch(payload)
 
     return df.withColumn("media_meta", _meta(F.col(payload_col)))
@@ -249,6 +252,7 @@ def extract_features(
     )
 
     def fn(batches):
+        drop_zip_finders()
         for pdf in batches:
             for chunk in _payload_chunks(pdf, payload_col, budget):
                 ids = []
@@ -294,6 +298,7 @@ def resize_media(
     )
 
     def fn(batches):
+        drop_zip_finders()
         for pdf in batches:
             ids, thumbs = [], []
             for i, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -335,6 +340,7 @@ def frame_sample(
     )
 
     def fn(batches):
+        drop_zip_finders()
         for pdf in batches:
             out_ids, out_idx, out_bytes = [], [], []
             for i, payload in zip(pdf[id_col], pdf[payload_col]):

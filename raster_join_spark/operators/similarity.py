@@ -35,6 +35,19 @@ def _fold_add(terms: list[str]) -> str:
     return out
 
 
+def _finite(q: np.ndarray, what: str) -> np.ndarray:
+    """``q`` as float64, which is rendered into SQL text below: an inf
+    or NaN would print as ``inf``/``nan`` and fail in the SQL parser, so
+    it is rejected here with the input named."""
+    q = np.asarray(q, dtype=np.float64)
+    bad = np.flatnonzero(~np.isfinite(q))
+    if len(bad):
+        raise ValueError(
+            f"{what} must be finite: element {int(bad[0])} is {float(q[bad[0]])!r}"
+        )
+    return q
+
+
 def dot_expr(col: str, q: np.ndarray) -> Column:
     """Unrolled dot product: ((e0*q0 + e1*q1) + e2*q2) ... left-fold in
     double — the same IEEE sequence the generated SQL uses.
@@ -49,7 +62,7 @@ def dot_expr(col: str, q: np.ndarray) -> Column:
     c = _sq(col)
     terms = [
         f"CAST({c}[{i}] AS DOUBLE) * {float(qi)!r}D"
-        for i, qi in enumerate(np.asarray(q, dtype=np.float64))
+        for i, qi in enumerate(_finite(q, "dot-product vector"))
     ]
     return F.expr(_fold_add(terms))
 
@@ -57,7 +70,7 @@ def dot_expr(col: str, q: np.ndarray) -> Column:
 def dot_sql(col: str, q: np.ndarray) -> str:
     terms = [
         f"CAST({col}[{i + 1}] AS DOUBLE) * {float(qi)!r}"
-        for i, qi in enumerate(np.asarray(q, dtype=np.float64))
+        for i, qi in enumerate(_finite(q, "dot-product vector"))
     ]
     out = terms[0]
     for t in terms[1:]:
@@ -130,16 +143,16 @@ def lsh_bucket_col(vec_col: str, planes: np.ndarray) -> Column:
     driver chatter per plan construction."""
     c = _sq(vec_col)
 
-    def _proj(plane: np.ndarray) -> str:
+    def _proj(plane: np.ndarray, bit: int) -> str:
         return _fold_add(
             [
                 f"CAST({c}[{i}] AS DOUBLE) * {float(qi)!r}D"
-                for i, qi in enumerate(np.asarray(plane, dtype=np.float64))
+                for i, qi in enumerate(_finite(plane, f"hyperplane {bit}"))
             ]
         )
 
     terms = [
-        f"CASE WHEN ({_proj(plane)}) >= 0 THEN {1 << bit} ELSE 0 END"
+        f"CASE WHEN ({_proj(plane, bit)}) >= 0 THEN {1 << bit} ELSE 0 END"
         for bit, plane in enumerate(planes)
     ]
     return F.expr(f"CAST({_fold_add(terms)} AS BIGINT)")

@@ -53,6 +53,7 @@ from raster_join_spark.geo.classify import POLY_GRID_CACHE, PolyGridTables
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.pip import pip_candidates
 from raster_join_spark.geo.polygons import PolygonSet
+from raster_join_spark.session import drop_zip_finders
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
@@ -396,11 +397,15 @@ class SpatialJoin:
     def _arrow_source(self, points: DataFrame, cols: list[str]) -> DataFrame:
         """The kernel's input: the projected columns, coalesced (no
         shuffle) to at most two tasks per core. Each Python-stage task
-        pays a fixed JVM<->worker protocol cost (~20 ms measured), so a
-        Python stage wants FEW, BIG tasks; coalesce never adds
-        partitions, so a coarser input keeps its own count. On a real
-        cluster this is executors*cores; tasks then stream many Arrow
-        batches each."""
+        pays a fixed JVM<->worker cost, so a Python stage wants FEW, BIG
+        tasks; coalesce never adds partitions, so a coarser input keeps
+        its own count. On a real cluster this is executors*cores; tasks
+        then stream many Arrow batches each. On a 4-core host a no-op
+        ``mapInArrow`` over 1/16/64 one-row partitions took 0.48-0.55 /
+        1.72-1.82 / 6.20-6.94 s while every task re-read the worker's
+        zip archives in ``importlib.invalidate_caches()`` (145-220 ms
+        per task), and 0.16 / 0.38-0.44 / 1.06 s once the kernel calls
+        :func:`drop_zip_finders` (CLAUDE.md, "Python stages")."""
         target = max(self.spark.sparkContext.defaultParallelism, 1)
         return points.select(*cols).coalesce(2 * target)
 
@@ -456,6 +461,7 @@ class SpatialJoin:
         )
 
         def fn(batches):
+            drop_zip_finders()
             import pyarrow.compute as pc
 
             art = bc.value
@@ -546,6 +552,7 @@ class SpatialJoin:
         # feed is the bandwidth-bound term (BENCH/hybrid_rootcause.md),
         # so one fewer per-row copy matters.
         def fn(batches):
+            drop_zip_finders()
             art = bc.value
             for rb in batches:
                 names = rb.schema.names

@@ -8,6 +8,8 @@ real 1000-executor cluster (see README "Scale design").
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -20,11 +22,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Arrow is mandatory: every Python-side kernel in this engine is an
-    Arrow-batched pandas UDF (input_hint: "no per-row Python").
-    AQE is on so skewed shuffle partitions get split at runtime — the
-    reference absorbs skew with GPU atomics (RasterJoin/join/RasterJoin.cpp),
-    we absorb it with AQE skew-join + explicit salting (operators/spatial_join).
+    Arrow is mandatory: every Python-side kernel in this engine consumes
+    whole Arrow batches (``mapInArrow`` for the spatial and kNN passes,
+    ``mapInPandas``/pandas UDFs for the text and media operators); none
+    runs per row. AQE is on so skewed shuffle partitions get split at
+    runtime, the reference's answer being GPU atomics
+    (RasterJoin/join/RasterJoin.cpp). The aggregate joins need neither:
+    their point pass never shuffles (operators/spatial_join).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -81,6 +85,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def drop_zip_finders() -> None:
+    """Remove every zip-archive finder from ``sys.path_importer_cache``.
+
+    PySpark's worker runs ``importlib.invalidate_caches()`` at the start
+    of every Python task, and CPython 3.11's
+    ``zipimporter.invalidate_caches`` re-reads its archive's whole
+    directory. A worker holds zip finders over ``pyspark.zip``, the py4j
+    source zip and the spark-core jar (all on the workers' PYTHONPATH),
+    so each task paid ~0.2 s re-reading them (CLAUDE.md, "Python
+    stages"). Every kernel the engine hands to Spark calls this first:
+    the current task has already paid, but later tasks on the reused
+    worker find no zip finder to refresh. An import from one of those
+    archives still works: the path hook builds a new finder from
+    ``zipimport._zip_directory_cache`` without reading the archive.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 def stop_spark() -> None:

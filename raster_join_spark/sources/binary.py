@@ -35,6 +35,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from raster_join_spark.session import drop_zip_finders
+
 # numpy packed layouts == the C structs' natural layout (every field is
 # naturally aligned in declaration order, so packed == aligned; itemsize
 # asserts guard the parity)
@@ -175,6 +177,7 @@ def read_binary_records(
     out_schema = layout.spark_schema(names)
 
     def decode(iterator):
+        drop_zip_finders()
         import pyarrow as pa
 
         for rb in iterator:

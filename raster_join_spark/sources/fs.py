@@ -188,7 +188,19 @@ class HadoopFS:
         on S3A conditional-write stores; FileAlreadyExistsException maps
         to FileExistsError so the store's ConcurrentCommitError path is
         backend-independent. ``tmp`` is unused (no link(2) here — the
-        exclusive create is already the commit point)."""
+        exclusive create is already the commit point).
+
+        After the create, the content is read back and compared, since
+        on a store whose exclusive create is not truly atomic two
+        writers can both appear to commit. The read-back therefore
+        requires that a file created through this CAS stays immutable
+        until ownership is settled: a ``replace_text`` (or any rewrite)
+        of ``path`` between the create and the read-back makes the
+        genuine winner raise ``FileExistsError``. The table store obeys
+        this: its ``snap-N.json`` manifests are written once and never
+        replaced; only the ``current`` pointer is rewritten. Conversely,
+        on such a store two writers of identical bytes both pass the
+        read-back."""
         from py4j.protocol import Py4JJavaError
 
         try:

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from raster_join_spark.session import drop_zip_finders
+
 STATE_SCHEMA = T.StructType([T.StructField("seen", T.BinaryType(), True)])
 OUT_SCHEMA = T.StructType(
     [
@@ -35,6 +37,7 @@ OUT_SCHEMA = T.StructType(
 
 
 def _dedup_group(key, pdf_iter, state: GroupState):
+    drop_zip_finders()
     # fully vectorized first-seen filter (no per-row Python): per Arrow
     # chunk, keep rows whose hash is (a) not in the persisted seen set,
     # (b) not emitted by an earlier chunk of this same batch, and

@@ -1,4 +1,4 @@
-"""Unit tests for the geometry core (pure numpy; no Spark session).
+"""Unit tests for the geometry core (numpy; two tests also check Spark parity).
 
 Kernels under test mirror reference semantics:
 - mercator: RasterJoin/common/Utils.h:9-27, UsefulFuncs.cpp:578-607
@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -464,10 +465,11 @@ def _classify_both(grid, ps):
     return b
 
 
-def test_classify_empty_and_degenerate_collections():
+def test_classify_empty_and_degenerate_collections(spark):
     """Fixed inputs the fixtures never produce: an empty collection, a
     collection entirely outside the grid, and polygons with fewer than
-    3 vertices mixed with valid ones (skipped, ids of the rest kept)."""
+    3 vertices (zero included) mixed with valid ones: skipped, ids of
+    the rest kept, bbox and exact COUNTs unaffected."""
     g = GridSpec(0.0, 0.0, 1.0, 1.0, 8, 6)
     t = _classify_both(g, PolygonSet.from_list([]))
     assert len(t.cand_cell) == 0 and t.cls_kind.dtype == np.int32
@@ -478,19 +480,35 @@ def test_classify_empty_and_degenerate_collections():
     assert len(t.cand_cell) == 0
     polys = [
         [(1.0, 1.0)],
+        [],
         [(0.5, 0.5), (6.5, 4.5)],
         [(0.5, 0.5), (6.5, 0.5), (3.0, 5.5)],
         [(4.0, 4.0), (4.0, 4.0)],
         [(2.0, 1.0), (2.0, 1.0), (7.0, 3.0), (2.0, 5.0)],
+        [],
     ]
-    # raw CSR: keeps the repeated vertices
+    # raw CSR: keeps the repeated vertices and the zero-vertex polygons
+    # (two equal offsets, one of them trailing)
     mixed = PolygonSet(
         verts=np.asarray([v for p in polys for v in p], np.float64),
         offsets=np.r_[0, np.cumsum([len(p) for p in polys])],
     )
+    assert mixed.bbox == (0.5, 0.5, 7.0, 5.5)
     t = _classify_both(g, mixed)
-    assert set(t.cand_poly.tolist()) == {2, 4}
+    assert set(t.cand_poly.tolist()) == {3, 5}
     assert (t.cls_kind == INTERIOR).any()
+
+    from raster_join_spark.operators.spatial_join import SpatialJoin
+
+    rng = np.random.default_rng(11)
+    x, y = rng.uniform(0.0, 8.0, 400), rng.uniform(0.0, 6.0, 400)
+    exp = np.zeros(len(polys), np.int64)
+    for p in (3, 5):
+        exp[p] = pip_mask(x, y, mixed.poly_verts(p)).sum()
+    pts = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
+    got = SpatialJoin(spark, mixed, g).hybrid_join(pts).orderBy("poly_id").toPandas()
+    np.testing.assert_array_equal(got["poly_id"].to_numpy(), np.arange(len(polys)))
+    np.testing.assert_array_equal(got["agg"].to_numpy(), exp)
 
 
 def test_classify_triangle_spanning_fine_grid(monkeypatch):

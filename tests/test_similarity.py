@@ -65,6 +65,19 @@ def test_brute_force_topk_exact(spark, emb, emb_pdf):
     assert got["rank"].tolist() == list(range(1, 11))
 
 
+def test_non_finite_coefficients_rejected(spark, emb):
+    """inf/NaN would render as ``infD``/``nanD`` SQL text; the operators
+    reject them up front with the bad input named."""
+    q = np.ones(16)
+    q[3] = np.nan
+    with pytest.raises(ValueError, match="dot-product vector.*element 3 is nan"):
+        S.brute_force_topk(emb, q)
+    planes = np.ones((4, 16))
+    planes[2, 5] = np.inf
+    with pytest.raises(ValueError, match="hyperplane 2.*element 5 is inf"):
+        S.lsh_bucket_col("embedding", planes)
+
+
 def test_lsh_topk_recall(spark, emb, emb_pdf):
     """ANN with multi-probe: recall@10 >= 0.6 vs brute force on this
     fixture (seeded, deterministic)."""
