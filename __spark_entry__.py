@@ -37,24 +37,6 @@ def _tmpdir(prefix: str) -> str:
     return path
 
 
-# per-process cache of the events row count (the kNN density hint): the
-# bench and the driver gate both run several queries against one sf_dir,
-# and the count job was measured at ~4s cold at sf0.1 — pay it once.
-# LRU-bounded like the operator caches (r6 verdict item 8): hits
-# reinsert at the back, the front entry is the coldest.
-_EVENTS_COUNT_CACHE: dict[str, int] = {}
-_ENTRY_CACHE_MAX = 16
-
-
-def _events_count(spark: SparkSession, sf_dir: str) -> int:
-    n = _EVENTS_COUNT_CACHE.pop(sf_dir, None)
-    if n is None:
-        n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-        while len(_EVENTS_COUNT_CACHE) >= _ENTRY_CACHE_MAX:
-            _EVENTS_COUNT_CACHE.pop(next(iter(_EVENTS_COUNT_CACHE)))
-    _EVENTS_COUNT_CACHE[sf_dir] = n
-    return n
-
 # query-box fixtures (exact integers in microdegree space)
 BOX = (-100_000_000.0, 30_000_000.0, -80_000_000.0, 45_000_000.0)
 T0, T1 = "2024-01-02 00:00:00", "2024-01-20 00:00:00"
@@ -66,6 +48,7 @@ FILTER_WHERE = "lang = 'purchase' AND value_c > 2000"
 # time); the DataFrame's logical plan is immutable, so reusing it is the
 # moral equivalent of a prepared statement
 _POINTS_CACHE: dict[tuple[int, str], DataFrame] = {}
+_ENTRY_CACHE_MAX = 16
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,13 +461,7 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raster_join_spark.fixtures import COARSE_GRID, KNN_K, KNN_QUERIES
     from raster_join_spark.operators.knn import knn_join
 
-    # density hint from the events table (pages are 1:1 with events), so
-    # the probe disk is sized without scanning the derived table; cached
-    # per sf_dir so bench/driver runs never pay the count job twice
-    n_total = _events_count(spark, sf_dir)
-    out = knn_join(
-        spark, _points(spark, sf_dir), COARSE_GRID, KNN_QUERIES, KNN_K, n_total=n_total
-    )
+    out = knn_join(spark, _points(spark, sf_dir), COARSE_GRID, KNN_QUERIES, KNN_K)
     return out.select(
         F.col("q_id").cast("long").alias("q_id"),
         F.col("event_id").cast("long").alias("event_id"),

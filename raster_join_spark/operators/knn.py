@@ -1,46 +1,22 @@
-"""kNN via cell-ring expansion (reference J6 generalized).
+"""Exact kNN and radius queries over a grid index of the points
+(reference J6, the in-memory GridIndex of CPUJoin/GridIndexF.cpp).
 
-The reference ships the single-ring probe primitive
-(CPUJoin/GridIndexF.cpp:177-198: scan the cell ring around the query,
-ellipse-filter) over an in-memory grid index of the points, but never
-wires it to a CLI; the north_rule asks for the full operator: grow the
-ring until the k-th candidate's distance is certified complete. Any
-point in an unprobed cell is at least r*cell_min away from a query whose
-probe reached Chebyshev radius r, so a query is done once its k-th
-distance is <= (r * cell_min)^2.
+One point index serves both kNN operators. The driver collects the bare
+projection (id, x, y) with ``toArrow()``, keeps its in-grid rows, refines
+the caller's grid from their occupancy and sorts the points by cell
+(:func:`_point_index`). :func:`_knn_batch` then answers a batch of
+queries in numpy: each query probes the cell block around it, the
+reference's getRegionPt ring probe (GridIndexF.cpp:177-198), and grows
+it until its k-th distance is certified complete. Any point outside a
+block of Chebyshev radius r is at least r * cell_min away, so a query is
+done once its k-th distance is <= (r * cell_min)^2.
 
-:func:`knn_join` takes a driver list of queries; per round r:
-  1. driver enumerates ONLY the new ANNULUS of cells (Chebyshev radius
-     r_prev+1 .. r) per pending query — never the full disk again (the
-     round-3 worst case: re-enumerating the whole disk grows O(r^2) per
-     round and explodes on fine grids). The literal table stays tiny and
-     is broadcast.
-  2. broadcast hash join against the points on cell_id — the big side
-     never shuffles
-  3. candidates are reduced to per-query top-k IN THE PLAN
-     (groupBy(q_id).agg(slice(array_sort(collect_list(struct(dist2, id))),
-     1, k)) — map-side combined, no window exchange), so the per-round
-     collect is exactly |pending| rows of k structs, INDEPENDENT of
-     point density; the driver then MERGES each round's annulus top-k
-     into the per-query running top-k (annuli are disjoint by cell, so
-     the merge never double-counts a point) and certifies.
-  4. EXHAUSTIVE FALLBACK: when the next annulus would need more than
-     ``literal_cap`` literal cells (sparse data on a fine grid), or the
-     annuli hit max_radius with queries still uncertified, the remaining
-     queries are resolved by ONE job that broadcasts the pending query
-     coords against ALL (in-grid) points — no cell table at all; its
-     per-query top-k is globally exact by construction and REPLACES the
-     merged state (a full scan is the right plan exactly when the disk
-     would have covered most of the grid anyway).
-  5. certified rows accumulate on the driver; the final result is a
-     literal DataFrame (inherently q x k rows — never big), so no plan
-     is ever re-executed after its round ran.
+The two operators use the index in two ways:
 
-:func:`knn_join_bulk` takes a query TABLE. The driver collects the
-in-grid points once, refines the grid from their occupancy, sorts them
-by cell into a CSR index and broadcasts it; one ``mapInArrow`` pass over
-the queries then runs the whole ring expansion per Arrow batch in numpy
-and emits the final rows.
+- :func:`knn_join` takes a driver list of queries and runs the kernel
+  in-process on the driver; its rows come back as a local frame.
+- :func:`knn_join_bulk` takes a query TABLE, broadcasts the index once
+  and runs the kernel in one ``mapInArrow`` pass over the queries.
 
 Distances are squared Euclidean with the same op order as the SQL oracle:
 (x-qx)*(x-qx) + (y-qy)*(y-qy) — exact integers in microdegree space.
@@ -60,25 +36,6 @@ from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.session import drop_zip_finders
 
 
-def _round_topk(cand: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Reduce raw (q_id, id, dist2) candidates to per-query top-k inside
-    the plan: one row per q_id holding a k-slice of the (dist2, id)-sorted
-    struct array. collect_list partially aggregates map-side, so the
-    single hash exchange carries per-task candidate lists keyed by q_id
-    (|queries| keys), and the subsequent driver collect is O(|q| * k)
-    rows regardless of point density — the scale contract the 100x rule
-    demands (no raw-candidate collect, no window exchange)."""
-    return cand.groupBy("q_id").agg(
-        F.slice(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("dist2"), F.col(id_col).alias("_id")))
-            ),
-            1,
-            k,
-        ).alias("top")
-    )
-
-
 def knn_join(
     spark: SparkSession,
     points: DataFrame,
@@ -88,208 +45,43 @@ def knn_join(
     x: str = "x",
     y: str = "y",
     id_col: str = "event_id",
-    max_radius: int | None = None,
-    n_total: int | None = None,
-    literal_cap: int = 65_536,
-    stats: dict | None = None,
 ) -> DataFrame:
-    """Exact k nearest points per query point. Returns
-    (q_id, {id_col}, rank, dist2) with rank 1..k ordered by
-    (dist2, id) — the id tiebreak keeps results deterministic.
+    """Exact k nearest points per query of a driver list of
+    ``(q_id, qx, qy)``. Returns (q_id, {id_col}, rank, dist2), rank 1..k
+    by (dist2, id) — the id tiebreak keeps results deterministic — over
+    the points inside ``grid``; a query gets min(k, in-grid points) rows.
 
-    ``n_total`` (row-count hint) sizes the initial probe disk from point
-    density; when omitted it is computed with one column-pruned count
-    job — a density-blind fixed radius would make the probe-disk join
-    output grow linearly with density (pass an explicit value to skip
-    the count when the caller already knows it). Certification never
-    depends on the starting radius, only round count does.
+    One Spark job collects the point index (:func:`_collect_index`); the
+    kernel (:func:`_knn_batch`) runs on the driver over the list, and
+    the result is a local frame. The query side is tiny, so a second
+    Spark pass over it would cost more than the kernel.
 
-    ``literal_cap`` bounds the driver-built annulus cell table: when the
-    next annulus would exceed it (sparse data / fine grid), remaining
-    queries switch to the exhaustive broadcast-against-all-points plan —
-    still exact, and no literal DataFrame bigger than the cap is ever
-    built regardless of grid resolution. ``max_radius`` likewise only
-    bounds annulus expansion, not correctness. ``stats`` (optional dict)
-    receives {"rounds", "max_literal_rows", "exhaustive"} — used by the
-    scale-regression tests.
+    Driver-side bound: every point of the projection crosses to the
+    driver, 24 B per point (long id, two doubles), under
+    ``spark.driver.maxResultSize`` (1 GB by default, ~40M points), the
+    same as :func:`knn_join_bulk`; past it the collect fails with
+    Spark's own error.
     """
-    if max_radius is None:
-        max_radius = max(grid.nx, grid.ny)
-    cell_min = min(grid.cell_w, grid.cell_h)
-
-    # Persist the NARROW projection and derive every probe input from
-    # the cache (r8). Two reasons, both measured at sf1.0 (1M rows,
-    # single-row-group source):
-    # (1) Catalyst inlines an expensive source projection into every
-    #     downstream expression that references it (the pushed-down
-    #     cell filter, the join key, dist2) and the resulting giant
-    #     expression tree falls out of whole-stage codegen — one probe
-    #     round cost 19-24s uncached vs ~0.3s over the cache. The
-    #     InMemoryRelation is an optimizer barrier: the projection is
-    #     evaluated exactly once per row at cache build (~0.5-2s), and
-    #     all cell/distance arithmetic runs over cached doubles.
-    # (2) multi-round queries and the exhaustive fallback re-scan the
-    #     same rows; the cache bounds the source cost at one pass.
-    # The probe side carries NO cell_id IS NOT NULL filter — an INNER
-    # join on cell_id never matches a null key, so the filter is
-    # redundant there; only the exhaustive fallback applies it (the
-    # in-grid restriction is part of that plan's semantics).
-    base = points.select(id_col, x, y).persist()
-    pts = base.withColumn("cell_id", grid.cell_id_col(F.col(x), F.col(y)))
-    if stats is None:
-        stats = {}
-    stats.update({"rounds": 0, "max_literal_rows": 0, "exhaustive": False})
-    try:
-        # initial radius: size the first probe disk for ~64k expected
-        # candidates — the in-plan top-k reduction bounds the collect
-        # either way, but an over-wide disk still pays join + partial
-        # aggregation over every probed point, while every extra driver
-        # round costs a full scheduling barrier (~0.3-0.5 s)
-        if n_total is None:
-            n_total = points.count()
-        if n_total > 0:
-            import math as _math
-
-            density = n_total / max(grid.n_cells, 1)
-            r_init = max(0, int(_math.ceil(_math.sqrt((64.0 * k) / density) / 2.0)) - 1)
-        else:
-            r_init = 4
-        r_init = min(r_init, max(grid.nx, grid.ny) // 4)
-        qxp = {q: int((qx - grid.x0) // grid.cell_w) for q, qx, _ in queries}
-        qyp = {q: int((qy - grid.y0) // grid.cell_h) for q, _, qy in queries}
-        qpos = {q: (qx, qy) for q, qx, qy in queries}
-        pending = {q for q, _, _ in queries}
-        # merged running top-k per query across rounds: (dist2, id)
-        # tuples, truncated to k — annuli are cell-disjoint, so simple
-        # list-merge never sees the same point twice
-        best: dict[int, list[tuple[float, object]]] = {q: [] for q in pending}
-
-        def _certify(q: int, r_probed: int) -> bool:
-            rs = best[q]
-            return len(rs) >= k and rs[k - 1][0] <= (r_probed * cell_min) ** 2
-
-        def _emit(q: int) -> None:
-            final_rows.extend(
-                (q, pid, rank + 1, d2) for rank, (d2, pid) in enumerate(best[q][:k])
-            )
-
-        r_prev = -1  # all cells with Chebyshev distance <= r_prev probed
-        r = r_init
-        next_step = 1
-        final_rows: list[tuple] = []
-        id_type = pts.schema[id_col].dataType
-        q_schema = T.StructType(
-            [
-                T.StructField("q_id", T.LongType(), False),
-                T.StructField("cell_id", T.LongType(), False),
-                T.StructField("qx", T.DoubleType(), False),
-                T.StructField("qy", T.DoubleType(), False),
-            ]
-        )
-        dist2_col = (
-            (F.col(x) - F.col("qx")) * (F.col(x) - F.col("qx"))
-            + (F.col(y) - F.col("qy")) * (F.col(y) - F.col("qy"))
-        ).alias("dist2")
-        while pending:
-            r = min(r, max_radius)
-            # worst-case (unclamped) literal size of the next annulus;
-            # conservative near grid edges, which only switches to the
-            # exhaustive plan a round early
-            prev_cells = (2 * r_prev + 1) ** 2 if r_prev >= 0 else 0
-            est_rows = len(pending) * ((2 * r + 1) ** 2 - prev_cells)
-            if r_prev >= max_radius or est_rows > literal_cap:
-                # EXHAUSTIVE: broadcast pending query coords against all
-                # in-grid points — no cell table; globally exact, so it
-                # REPLACES the merged state for these queries
-                stats["exhaustive"] = True
-                stats["rounds"] += 1
-                qlit = spark.createDataFrame(
-                    [(q, -1, qpos[q][0], qpos[q][1]) for q in sorted(pending)],
-                    q_schema,
-                ).drop("cell_id")
-                cand = (
-                    base.withColumn(
-                        "cell_id", grid.cell_id_col(F.col(x), F.col(y))
-                    )
-                    .filter(F.col("cell_id").isNotNull())
-                    .crossJoin(F.broadcast(qlit))
-                    .select("q_id", F.col(id_col), dist2_col)
-                )
-                by_q = {
-                    row["q_id"]: row["top"]
-                    for row in _round_topk(cand, id_col, k).collect()
-                }
-                for q in list(pending):
-                    best[q] = [(t["dist2"], t["_id"]) for t in by_q.get(q, [])]
-                    _emit(q)
-                    pending.discard(q)
-                break
-            stats["rounds"] += 1
-            # literal table: ONLY the new annulus r_prev+1 .. r per
-            # pending query, with query coords inlined — one broadcast
-            # join resolves both the probe and the distance inputs
-            rows = []
-            for q in pending:
-                qx_, qy_ = qpos[q]
-                for rr in range(r_prev + 1, r + 1):
-                    for c in grid.ring_cells(qxp[q], qyp[q], rr):
-                        rows.append((q, c, qx_, qy_))
-            stats["max_literal_rows"] = max(stats["max_literal_rows"], len(rows))
-            if rows:
-                cand_cells = spark.createDataFrame(rows, q_schema)
-                cand = pts.join(F.broadcast(cand_cells), "cell_id", "inner").select(
-                    "q_id", F.col(id_col), dist2_col
-                )
-                # ONE job per round: the plan reduces candidates to
-                # per-query top-k (struct-array sort + slice, map-side
-                # combined), so the collect is exactly |pending| rows of
-                # k structs each — O(|queries| * k) driver bytes at ANY
-                # point density; merge + certification stay driver-side
-                # and nothing is ever re-executed
-                by_q = {
-                    row["q_id"]: row["top"]
-                    for row in _round_topk(cand, id_col, k).collect()
-                }
-                for q in list(pending):
-                    new = by_q.get(q)
-                    if new:
-                        best[q] = sorted(
-                            best[q] + [(t["dist2"], t["_id"]) for t in new]
-                        )[:k]
-                    if _certify(q, r):
-                        _emit(q)
-                        pending.discard(q)
-            else:
-                # annulus fully outside the grid for every pending query
-                for q in list(pending):
-                    if _certify(q, r):
-                        _emit(q)
-                        pending.discard(q)
-            # exponential ring growth (4x: rounds are the expensive
-            # unit, candidates are cheap): sparse regions certify in
-            # O(log r) driver rounds instead of O(r); overshoot is safe
-            # because the exhaustive fallback — not a final giant-disk
-            # enumeration — now closes out any stragglers
-            r_prev = r
-            step = max(next_step, r)  # at least double the radius
-            r = r + step
-            next_step = min(next_step * 4, max(grid.nx, grid.ny) // 4 + 1)
-        assert not pending, f"uncertified kNN queries left: {sorted(pending)}"
-        assert final_rows, "no kNN results produced"
-        out_schema = T.StructType(
-            [
-                T.StructField("q_id", T.LongType(), False),
-                T.StructField(id_col, id_type, False),
-                T.StructField("rank", T.IntegerType(), False),
-                T.StructField("dist2", T.DoubleType(), False),
-            ]
-        )
-        return spark.createDataFrame(final_rows, out_schema)
-    finally:
-        base.unpersist()
+    ix = _collect_index(points, grid, id_col, x, y)
+    qid = np.array([q for q, _, _ in queries], np.int64)
+    qx = np.array([v for _, v, _ in queries], np.float64)
+    qy = np.array([v for _, _, v in queries], np.float64)
+    q, p, rank, d2 = _knn_batch(ix, qx, qy, k, _MATRIX_ENTRIES)
+    schema = T.StructType(
+        [
+            T.StructField("q_id", T.LongType(), False),
+            T.StructField(id_col, points.schema[id_col].dataType, False),
+            T.StructField("rank", T.IntegerType(), False),
+            T.StructField("dist2", T.DoubleType(), False),
+        ]
+    )
+    rows = zip(
+        qid[q].tolist(), ix["ids"].take(pa.array(p)).to_pylist(), rank.tolist(), d2.tolist()
+    )
+    return spark.createDataFrame(list(rows), schema)
 
 
-# The bulk operator's index grid is the caller's grid refined until its
+# The point index's grid is the caller's grid refined until its
 # densest cell holds about this many points (or _MAX_REFINE binds).
 # Coarser cells make every query scan more candidates, finer cells make
 # sparse-region queries enumerate more cell rows. Single-thread kernel
@@ -322,7 +114,7 @@ def _cells(v: np.ndarray, origin: float, size: float, n: int) -> np.ndarray:
 
 
 def _point_index(tbl: pa.Table, grid: GridSpec, id_col: str, x: str, y: str) -> dict:
-    """The broadcast point index over the in-grid rows of ``tbl``:
+    """The point index over the in-grid rows of ``tbl``:
     ``grid`` refined from its occupancy (np.bincount) to about
     ``_CELL_TARGET`` points in the densest cell, and the points sorted by
     refined cell id. A run of cell ids is then a contiguous run of points
@@ -355,6 +147,17 @@ def _point_index(tbl: pa.Table, grid: GridSpec, id_col: str, x: str, y: str) -> 
         "key": key[order],
         "ids": ids.take(pa.array(order)),
     }
+
+
+def _collect_index(points: DataFrame, grid: GridSpec, id_col: str, x: str, y: str) -> dict:
+    """Collect the bare projection (id, x, y) in one Spark job and build
+    its :func:`_point_index`. No Spark-side in-grid filter: Catalyst
+    would inline the source's projection (the pages' regex synthesis)
+    into each of the filter's four x/y references; the collect of the
+    bare projection measured 0.4-0.8 s against 2.8 s filtered (100k
+    pages, local[4])."""
+    tbl = points.select(id_col, x, y).toArrow()
+    return _point_index(tbl, grid, id_col, x, y)
 
 
 def _select(d: np.ndarray, p: np.ndarray, key: np.ndarray, k: int):
@@ -513,7 +316,7 @@ def knn_join_bulk(
 
     1. Index (driver). The projection (id, x, y) is collected with
        ``toArrow()``; its in-grid rows, sorted by the cell of a grid
-       refined from their occupancy (:func:`_point_index`), are
+       refined from their occupancy (:func:`_collect_index`), are
        broadcast once.
     2. Query pass: ONE ``mapInArrow`` over the queries, hash-partitioned
        by q_id into 2 x defaultParallelism tasks, finishes every query
@@ -530,12 +333,7 @@ def knn_join_bulk(
     it the collect fails with Spark's own error. The query side stays
     distributed.
     """
-    # no Spark-side in-grid filter: Catalyst would inline the source's
-    # projection (the pages' regex synthesis) into each of the filter's
-    # four x/y references; the collect of the bare projection measured
-    # 0.4-0.8 s against 2.8 s filtered (100k pages, local[4])
-    tbl = points.select(id_col, x, y).toArrow()
-    bc = spark.sparkContext.broadcast(_point_index(tbl, grid, id_col, x, y))
+    bc = spark.sparkContext.broadcast(_collect_index(points, grid, id_col, x, y))
     schema = T.StructType(
         [
             queries.schema["q_id"],
@@ -597,7 +395,6 @@ def radius_query(
     y: str = "y",
     id_col: str = "event_id",
     literal_cap: int = 65_536,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Ellipse radius query — the reference's getRegionPt primitive
     (CPUJoin/GridIndexF.cpp:177-198): probe the cell ring covering
@@ -608,11 +405,10 @@ def radius_query(
     Plan: enumerate covering cells per query on the driver (tiny),
     broadcast, hash-join on cell_id, native-expression ellipse filter —
     all JVM-side. When the covering-cell table would exceed
-    ``literal_cap`` rows (a huge radius relative to the cell size —
-    knn_join's fine-grid hazard applies here too), the cell table is
-    skipped entirely: the tiny query list broadcasts against all points
-    and the ellipse filter alone selects — same rows, one full scan,
-    never a giant driver-built literal."""
+    ``literal_cap`` rows (a huge radius relative to the cell size, or a
+    fine grid), the cell table is skipped entirely: the tiny query list
+    broadcasts against all points and the ellipse filter alone selects —
+    same rows, one full scan, never a giant driver-built literal."""
     qlit = spark.createDataFrame(
         [(q, qx, qy) for q, qx, qy in queries],
         T.StructType(
@@ -637,8 +433,6 @@ def radius_query(
     n_cells = sum(
         max(0, enx - stx) * max(0, eny - sty) for stx, sty, enx, eny in spans
     )
-    if stats is not None:
-        stats.update({"n_cells": n_cells, "fallback": n_cells > literal_cap})
     if n_cells > literal_cap:
         cand = pts.crossJoin(F.broadcast(qlit))
     else:

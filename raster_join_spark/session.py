@@ -60,22 +60,6 @@ def get_spark(
         # by payload budget (operators/multimodal.py), so no batch can
         # still blow past executor memory.
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "2147483647b")
-        # knn_join reduces per-query top-k in-plan via a
-        # map-side-combined collect_list aggregation (operators/knn.py)
-        # whose group key is the query id — thousands of distinct keys
-        # per task. ObjectHashAggregate's sort-based fallback triggers
-        # at just 128 distinct keys, replacing the hash agg with a
-        # per-task SORT of every (query, candidate) row; raise the
-        # threshold so the partial lists stay hash-aggregated. Memory
-        # stays bounded: the operator caps per-query candidates before
-        # the agg (annulus literal cap).
-        # SESSION-WIDE INVARIANT (ADVICE r7): because this raises the
-        # sort-based fallback for EVERY ObjectHashAggregate in the
-        # engine, any new collect_list/collect_set-style operator MUST
-        # cap its per-group payload before aggregating (as knn_join
-        # does) — an uncapped group inherits OOM risk instead
-        # of graceful sort-based spill.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -1,5 +1,5 @@
-"""kNN via cell-ring expansion (J6 generalized, GridIndexF.cpp:177-198)
-vs brute-force numpy top-k."""
+"""kNN over the grid index of the points (J6, GridIndexF.cpp:177-198)
+vs brute-force numpy top-k, and radius queries vs numpy."""
 
 from __future__ import annotations
 
@@ -61,118 +61,51 @@ def test_knn_exact_vs_bruteforce(spark):
 
 
 def test_knn_radius_clamp_no_overshoot(spark):
-    """Doubling growth must clamp the final step so the exhaustive
-    certify-all round at exactly max_radius always runs. Setup forces
-    r to double past max_radius (r=10, step=10, max_radius=19): the old
-    clamp (checking next_step, incrementing by max(next_step, r))
-    overshot and silently dropped uncertified queries. With k > n the
-    ONLY way to finish is the exhaustive round."""
+    """k > n: fewer in-grid points than k exist, so no query can certify
+    by its k-th distance; every query must still finish and return each
+    point exactly once, ranked (the whole-grid block closes it out)."""
     n = 5
+    ids = np.arange(n, dtype=np.int64)
     x = np.array([900.0, 910.0, 920.0, 930.0, 940.0])
     y = np.array([900.0, 910.0, 920.0, 930.0, 940.0])
-    df = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    )
     grid = GridSpec(0.0, 0.0, 50.0, 50.0, 20, 20)
-    got = knn_join(spark, df, grid, [(0, 10.0, 10.0)], k=10, max_radius=19).toPandas()
-    # fewer than k points exist: all of them must come back, exactly once
-    assert sorted(got["event_id"].tolist()) == list(range(n))
-    d2 = (x - 10.0) ** 2 + (y - 10.0) ** 2
-    order = np.lexsort((np.arange(n), d2))
-    assert got.sort_values("rank")["event_id"].tolist() == order.tolist()
-
-
-def test_knn_round_collect_is_topk_bounded(spark):
-    """The per-round collect must be O(|queries| * k) regardless of
-    candidate density: _round_topk reduces in-plan (one row per q_id,
-    <= k structs each) with no Window exchange."""
-    from raster_join_spark.operators.knn import _round_topk
-
-    rng = np.random.RandomState(3)
-    n = 20_000  # dense candidate set: 10k rows per query
-    cand = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "q_id": np.repeat(np.arange(2, dtype=np.int64), n // 2),
-                "event_id": np.arange(n, dtype=np.int64),
-                "dist2": rng.uniform(0, 1e6, n).round(),
-            }
-        )
-    )
-    topk = _round_topk(cand, "event_id", k=7)
-    rows = topk.collect()
-    assert len(rows) == 2  # one row per query, never per candidate
-    assert all(len(r["top"]) == 7 for r in rows)
-    plan = topk._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan
-    # struct array-sort ranks by (dist2, id) — verify against numpy
-    pdf = cand.toPandas()
-    for q in (0, 1):
-        sub = pdf[pdf.q_id == q]
-        o = np.lexsort((sub["event_id"].to_numpy(), sub["dist2"].to_numpy()))[:7]
-        exp = sub["event_id"].to_numpy()[o].tolist()
-        got = [t["_id"] for r in rows if r["q_id"] == q for t in r["top"]]
-        assert got == exp
+    qs = [(0, 10.0, 10.0)]
+    got = knn_join(spark, _pdf(spark, ids, x, y), grid, qs, k=10).toPandas()
+    _assert_knn(got, ids, x, y, grid, qs, 10)
 
 
 def test_knn_fine_grid_sparse_no_giant_literal(spark):
-    """Round-3 verdict item 2: on a fine grid (2048 x 2048 = 4.2M cells)
-    with sparse data, certification must NOT enumerate a giant literal
-    cell table (the old code's final certify-all round built the whole
-    disk driver-side). The annulus/exhaustive design keeps every
-    driver-built DataFrame under literal_cap and resolves stragglers by
-    broadcasting the pending queries against all points instead."""
+    """A fine grid (2048 x 2048 = 4.2M cells) with sparse data, ~1 point
+    per 100k cells: the query's block must grow across most of the grid
+    and stay exact."""
     rng = np.random.RandomState(11)
-    n = 40  # sparse: ~1 point per 100k cells
+    n = 40
+    ids = np.arange(n, dtype=np.int64)
     x = rng.uniform(0, 204800, n).round()
     y = rng.uniform(0, 204800, n).round()
-    df = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    )
     grid = GridSpec(0.0, 0.0, 100.0, 100.0, 2048, 2048)
-    stats: dict = {}
-    got = knn_join(
-        spark, df, grid, [(0, 55.0, 44.0)], k=5, n_total=n, stats=stats
-    ).toPandas()
-    assert stats["max_literal_rows"] <= 100_000, stats
-    d2 = (x - 55.0) ** 2 + (y - 44.0) ** 2
-    exp = np.lexsort((np.arange(n), d2))[:5].tolist()
-    assert got.sort_values("rank")["event_id"].tolist() == exp
-    np.testing.assert_array_equal(
-        got.sort_values("rank")["dist2"].to_numpy(), np.sort(d2)[:5]
-    )
+    qs = [(0, 55.0, 44.0)]
+    got = knn_join(spark, _pdf(spark, ids, x, y), grid, qs, k=5).toPandas()
+    _assert_knn(got, ids, x, y, grid, qs, 5)
 
 
 def test_knn_annulus_merge_across_rounds(spark):
-    """Cross-round top-k merge: force several annulus rounds (moderate
-    density, query in an emptyish corner) and verify the merged result
-    equals brute force — candidates found in different annuli must
-    combine, not overwrite."""
+    """Four points near the query and a far shell: the top-9 combines the
+    near 4 with candidates only a wider block reaches, so a probe that
+    replaced instead of merged would lose the near 4."""
     rng = np.random.RandomState(21)
-    # 4 points near the query (inside the first tiny probe disk) + a far
-    # shell: the correct top-9 combines candidates found in DIFFERENT
-    # annulus rounds, so a replace-instead-of-merge bug loses the near 4
     ang = rng.uniform(0, 2 * np.pi, 396)
     fx = (500 + np.cos(ang) * 160.0).round()  # far shell, fully in-grid
     fy = (500 + np.sin(ang) * 160.0).round()
     x = np.r_[[560.0, 500.0, 540.0, 515.0], fx]
     y = np.r_[[500.0, 560.0, 540.0, 545.0], fy]
     n = len(x)
-    df = spark.createDataFrame(
-        pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
-    )
+    ids = np.arange(n, dtype=np.int64)
     grid = GridSpec(0.0, 0.0, 25.0, 25.0, 40, 40)
-    stats: dict = {}
-    # n_total inflated: forces a tiny initial probe radius so the near
-    # points are found rounds before the far shell enters the disk
-    got = knn_join(
-        spark, df, grid, [(0, 500.0, 500.0)], k=9, n_total=100 * n, stats=stats
-    ).toPandas()
-    assert stats["rounds"] >= 2, stats  # the merge path actually ran
-    d2 = (x - 500.0) ** 2 + (y - 500.0) ** 2
-    exp = np.lexsort((np.arange(n), d2))[:9].tolist()
-    assert set(exp[:4]) == {0, 1, 2, 3}  # the near 4 must be in the answer
-    assert got.sort_values("rank")["event_id"].tolist() == exp
+    qs = [(0, 500.0, 500.0)]
+    got = knn_join(spark, _pdf(spark, ids, x, y), grid, qs, k=9).toPandas()
+    assert {0, 1, 2, 3} <= set(got["event_id"])  # the near 4 are in the answer
+    _assert_knn(got, ids, x, y, grid, qs, 9)
 
 
 def test_knn_bulk_vs_bruteforce(spark):
@@ -276,6 +209,17 @@ def test_knn_bulk_no_reexecution_on_consume(spark):
     got.unpersist()
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _cell_id_equi_join(plan: str) -> bool:
+    return any(
+        ("HashJoin" in line or "SortMergeJoin" in line) and "cell_id" in line
+        for line in plan.splitlines()
+    )
+
+
 def test_radius_query_offgrid_span_does_not_bypass_cap(spark):
     """ADVICE round 4: a query MBR fully right/above the grid used to
     yield a NEGATIVE clamped span that offset another query's huge
@@ -296,13 +240,16 @@ def test_radius_query_offgrid_span_does_not_bypass_cap(spark):
     # right past the 65,536 cap; q1 alone demands the fallback
     queries = [(0, 10_000_000.0, 50_000.0), (1, 50_000.0, 50_000.0)]
     rx = ry = 40_000.0
-    stats: dict = {}
-    got = radius_query(spark, df, grid, queries, rx, ry, stats=stats).toPandas()
-    assert stats["fallback"], stats  # the clamp kept the guard honest
-    assert stats["n_cells"] > 65_536, stats
-    oracle = radius_query(
-        spark, df, grid, queries, rx, ry, literal_cap=10**9
-    ).toPandas()
+    fallback = radius_query(spark, df, grid, queries, rx, ry)
+    got = fallback.toPandas()
+    # the clamp kept the guard honest: the query list broadcast against
+    # every point, no cell table
+    plan = _executed_plan(fallback)
+    assert "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan, plan
+    assert not _cell_id_equi_join(plan), plan
+    cells = radius_query(spark, df, grid, queries, rx, ry, literal_cap=10**9)
+    oracle = cells.toPandas()
+    assert _cell_id_equi_join(_executed_plan(cells))
     key = ["q_id", "event_id"]
     pd.testing.assert_frame_equal(
         got.sort_values(key, ignore_index=True),
@@ -450,6 +397,27 @@ def test_knn_bulk_empty_inputs(spark):
     assert out.columns == ["q_id", "event_id", "rank", "dist2"]
 
 
+def test_knn_join_empty_inputs(spark):
+    """No in-grid points, no points at all, or no queries: an empty frame
+    with the operator's schema, not an error."""
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    schema = [
+        ("q_id", "bigint", False),
+        ("event_id", "bigint", False),
+        ("rank", "int", False),
+        ("dist2", "double", False),
+    ]
+    ids = np.arange(3, dtype=np.int64)
+    outside = _pdf(spark, ids, np.array([-5.0, 150.0, 20.0]), np.array([5.0, 5.0, 100.0]))
+    no_pts = _pdf(spark, np.array([], np.int64), np.array([]), np.array([]))
+    pts = _pdf(spark, ids, np.arange(3.0), np.arange(3.0))
+    cases = [(outside, [(0, 5.0, 5.0), (1, 55.0, 95.0)]), (no_pts, [(0, 5.0, 5.0)]), (pts, [])]
+    for points, qs in cases:
+        out = knn_join(spark, points, grid, qs, 3)
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == schema
+        assert out.count() == 0
+
+
 def test_knn_bulk_fewer_points_than_k(spark):
     """Three in-grid points (two more lie outside the grid and never
     count): every query gets those three, ranked, and no more."""
@@ -555,8 +523,8 @@ _frac = st.floats(min_value=-0.2, max_value=1.2, allow_nan=False)
 @settings(max_examples=25, deadline=None)
 @given(data=st.data())
 def test_knn_bulk_matches_brute_force_property(spark, data):
-    """knn_join_bulk equals brute force over random grids (non-dyadic
-    cell sizes), coordinates off the integer lattice, duplicated points,
+    """knn_join_bulk and knn_join equal brute force over random grids
+    (non-dyadic cell sizes), coordinates off the integer lattice, duplicated points,
     points and queries outside the grid, and k from 1 to past n."""
     nx, ny = data.draw(st.integers(1, 12)), data.draw(st.integers(1, 12))
     grid = GridSpec(
@@ -578,9 +546,11 @@ def test_knn_bulk_matches_brute_force_property(spark, data):
     ids = np.arange(n, dtype=np.int64)[::-1].copy()
     x = np.array([p[0] for p in pts], dtype=np.float64)
     y = np.array([p[1] for p in pts], dtype=np.float64)
-    got = knn_join_bulk(spark, _pdf(spark, ids, x, y), grid, _qdf(spark, qs), k)
+    pdf = _pdf(spark, ids, x, y)
+    got = knn_join_bulk(spark, pdf, grid, _qdf(spark, qs), k)
     _assert_knn(got.toPandas(), ids, x, y, grid, qs, k)
     got.unpersist()
+    _assert_knn(knn_join(spark, pdf, grid, qs, k).toPandas(), ids, x, y, grid, qs, k)
 
 
 def test_knn_bulk_entry_releases_its_result(spark, sf_dir):

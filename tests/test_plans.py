@@ -247,3 +247,35 @@ def test_knn_bulk_one_arrow_pass(spark, spark_jobs):
     assert names.count("MapInArrow") == 1, names
     assert not [n for n in names if "FlatMapCoGroups" in n or "NestedLoopJoin" in n], names
     assert not [d for _, d in ops if "collect_list" in d], ops
+
+
+def test_knn_join_one_collect(spark, spark_jobs):
+    """knn_join over a driver list runs one Spark job, the collect of the
+    point projection: no collect_list merge, no join of any kind (the
+    former probe rounds and nested-loop fallback), and nothing persisted
+    afterwards."""
+    import numpy as np
+    import pandas as pd
+
+    from raster_join_spark.geo.grid import GridSpec
+    from raster_join_spark.operators.knn import knn_join
+
+    rng = np.random.RandomState(6)
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {"event_id": np.arange(500), "x": rng.uniform(0, 100, 500), "y": rng.uniform(0, 100, 500)}
+        )
+    )
+    qs = [(0, 5.0, 5.0), (1, 50.0, 99.0), (2, -20.0, 40.0)]
+    grid = GridSpec(0.0, 0.0, 10.0, 10.0, 10, 10)
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keys())
+    ran = []
+    plans = ran_plans(spark, lambda: ran.append(spark_jobs(lambda: knn_join(spark, pts, grid, qs, 4))))
+    out, jobs = ran[0]
+    assert len(jobs) == 1 and len(plans) == 1, (jobs, plans)
+    names = [name for name, _ in plans[0]]
+    assert not [n for n in names if "Join" in n or "Aggregate" in n], names
+    assert not [d for _, d in plans[0] if "collect_list" in d], plans[0]
+    assert set(jsc.getPersistentRDDs().keys()) == cached
+    assert out.count() == 12
