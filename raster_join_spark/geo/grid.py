@@ -156,6 +156,27 @@ class GridSpec:
         ok = (xp >= 0) & (xp < F.lit(self.nx)) & (yp >= 0) & (yp < F.lit(self.ny))
         return F.when(ok, xp + F.lit(self.nx) * yp).otherwise(F.lit(None))
 
+    def cell_xy_spark_sql(self, x_expr: str, y_expr: str) -> tuple[str, str]:
+        """Column/row indices as Spark SQL text: the arithmetic of
+        cell_id_col, with double literals carrying Spark's ``D`` suffix
+        so none parses as DECIMAL. Out-of-range values are not masked."""
+        return (
+            f"floor((CAST({x_expr} AS DOUBLE) - {float(self.x0)!r}D) / {float(self.cell_w)!r}D)",
+            f"floor((CAST({y_expr} AS DOUBLE) - {float(self.y0)!r}D) / {float(self.cell_h)!r}D)",
+        )
+
+    def window_spark_sql(
+        self, x_expr: str, y_expr: str, box: tuple[float, float, float, float]
+    ) -> str:
+        """Spark SQL predicate: the point's cell is one of the cells the
+        MBR ``box`` covers (mbr_cell_range). The range is clamped to the
+        grid, so the predicate also implies the in-grid test; a NULL
+        coordinate fails it. Written on the grid coordinates, not on a
+        derived cell id, so a filter on it carries no CASE WHEN."""
+        stx, sty, enx, eny = self.mbr_cell_range(*box)
+        xp, yp = self.cell_xy_spark_sql(x_expr, y_expr)
+        return f"{xp} >= {stx} AND {xp} < {enx} AND {yp} >= {sty} AND {yp} < {eny}"
+
     def cell_id_sql(self, x_expr: str, y_expr: str) -> str:
         """The identical arithmetic as ANSI SQL text (for DuckDB oracles)."""
         xp = f"CAST(floor(({x_expr} - {self.x0!r}) / {self.cell_w!r}) AS BIGINT)"

@@ -75,10 +75,11 @@ def knn_join(
             T.StructField("dist2", T.DoubleType(), False),
         ]
     )
-    rows = zip(
-        qid[q].tolist(), ix["ids"].take(pa.array(p)).to_pylist(), rank.tolist(), d2.tolist()
-    )
-    return spark.createDataFrame(list(rows), schema)
+    # an Arrow table becomes a local relation: consuming the rows runs
+    # no Spark job (a list of rows would be a parallelized RDD)
+    cols = [qid[q], ix["ids"].take(pa.array(p)), rank.astype(np.int32), d2]
+    table = pa.table(cols, names=schema.names)
+    return spark.createDataFrame(table, schema)
 
 
 # The point index's grid is the caller's grid refined until its

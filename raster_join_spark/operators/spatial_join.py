@@ -58,6 +58,11 @@ from raster_join_spark.session import drop_zip_finders
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _cell_csr(cells: np.ndarray, polys: np.ndarray, n_cells: int | None = None) -> dict:
     """Sort (cell, poly) pairs by cell into a lookup. ``starts`` is
     sentinel-terminated (len(uniq)+1 entries), so per-group counts are
@@ -409,13 +414,6 @@ class SpatialJoin:
         target = max(self.spark.sparkContext.defaultParallelism, 1)
         return points.select(*cols).coalesce(2 * target)
 
-    def with_cell(self, points: DataFrame) -> DataFrame:
-        """Tile assignment: attach the row-major cell id (native exprs,
-        index.glsl:229-233); out-of-grid points get NULL."""
-        return points.withColumn(
-            "cell_id", self.grid.cell_id_col(F.col(self.x), F.col(self.y))
-        )
-
     # --------------------------------------------------------- strategies
 
     def index_join(
@@ -704,11 +702,19 @@ class SpatialJoin:
         """S5 partition-pruned range scan: rows whose CELL overlaps the
         query box — a superset at hash-cell granularity, exactly like the
         reference's coarse sigma (HashGridIndex.cpp:78-137). The exact
-        sigma (S6) is a plain .filter chained after."""
-        stx, sty, enx, eny = self.grid.mbr_cell_range(x0, y0, x1, y1)
-        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
-        xp = F.col("cell_id") % self.grid.nx
-        yp = (F.col("cell_id") / self.grid.nx).cast("long")
-        return pts.filter(
-            (xp >= stx) & (xp < enx) & (yp >= sty) & (yp < eny)
+        sigma (S6) is a plain .filter chained after.
+
+        One filter on the grid coordinates (:meth:`window_sql`), with the
+        row-major ``cell_id`` attached above it (index.glsl:229-233). The
+        window keeps in-grid points only, so the id needs no range test.
+        A filter on a derived id would have Catalyst inline the id's
+        CASE WHEN into every term of the pushed-down predicate."""
+        xp, yp = self.grid.cell_xy_spark_sql(sql_ident(self.x), sql_ident(self.y))
+        return points.filter(F.expr(self.window_sql((x0, y0, x1, y1)))).withColumn(
+            "cell_id", F.expr(f"{xp} + {self.grid.nx} * {yp}")
         )
+
+    def window_sql(self, box: tuple[float, float, float, float]) -> str:
+        """The coarse window over ``box`` as Spark SQL text on this join's
+        coordinate columns (GridSpec.window_spark_sql)."""
+        return self.grid.window_spark_sql(sql_ident(self.x), sql_ident(self.y), box)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.polygons import PolygonSet
-from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin
+from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin, sql_ident
 
 
 class ConstraintType(Enum):  # Common.h:22
@@ -67,6 +67,11 @@ class QueryConstraint:  # Common.h:34-39
         return c >= F.lit(self.value)
 
 
+def _sql_str(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 @dataclass
 class QueryEngine:
     """DataHandler-shaped driver over a points DataFrame.
@@ -89,7 +94,7 @@ class QueryEngine:
     polyset: PolygonSet | None = None
     constraints: list[QueryConstraint] = field(default_factory=list)
     agg: AggSpec = field(default_factory=AggSpec)
-    _window: DataFrame | None = None
+    _window: Column | None = field(default=None, init=False, repr=False)
     _join: SpatialJoin | None = field(default=None, init=False, repr=False)
 
     def __post_init__(self) -> None:
@@ -131,18 +136,28 @@ class QueryEngine:
         ts_col: str = "warc_ts",
     ) -> "QueryEngine":
         """Coarse sigma: cell-granular superset of the query window
-        (HashGridIndex.cpp:78-137). If box is None, uses the polygon
-        collection's bbox like the reference (main.cpp:131-134)."""
+        (HashGridIndex.cpp:78-137), plus the inclusive time bounds. If box
+        is None, uses the polygon collection's bbox like the reference
+        (main.cpp:131-134).
+
+        One filter per request: the window (on the grid coordinates, see
+        SpatialJoin.window_sql) and the time bounds are one Spark SQL
+        predicate, kept as a Column; :meth:`execute_function` ANDs the
+        constraints into it and applies it as the one ``filter`` over
+        the cached points. A chain of filters over a derived cell id
+        would be analysed once per clause, and Catalyst would inline the
+        id's CASE WHEN into every pushed term."""
         if box is None:
             if self.polyset is None:
                 raise ValueError("execute_query needs a box or a polygon collection")
             box = self.polyset.bbox
-        win = self._sj().coarse_scan(self.points, *box)
+        terms = [self._sj().window_sql(box)]
+        ts = sql_ident(ts_col)
         if t0 is not None:
-            win = win.filter(F.col(ts_col) >= F.lit(t0).cast("timestamp_ntz"))
+            terms.append(f"{ts} >= CAST({_sql_str(t0)} AS TIMESTAMP_NTZ)")
         if t1 is not None:
-            win = win.filter(F.col(ts_col) <= F.lit(t1).cast("timestamp_ntz"))
-        self._window = win
+            terms.append(f"{ts} <= CAST({_sql_str(t1)} AS TIMESTAMP_NTZ)")
+        self._window = F.expr(" AND ".join(terms))
         return self
 
     # ------------------------------------------------------- execution
@@ -153,10 +168,12 @@ class QueryEngine:
         return self._join
 
     def _filtered(self) -> DataFrame:
-        df = self._window if self._window is not None else self.points
+        """The cached points under the request's one filter: the window
+        predicate AND every constraint (none when there is neither)."""
+        pred = self._window
         for c in self.constraints:
-            df = df.filter(c.to_column())
-        return df
+            pred = c.to_column() if pred is None else pred & c.to_column()
+        return self.points if pred is None else self.points.filter(pred)
 
     def execute_function(self, fn: str) -> DataFrame:
         """fn codes per GLHandler.cpp:228 / CPUJoin.cpp:146-151:

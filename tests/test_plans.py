@@ -201,7 +201,10 @@ def test_query_engine_reads_cached_points(spark, sf_dir):
     the page synthesis (regex extraction) ran once when the engine was
     built and is in no request's plan, not even inlined into the window
     and constraint predicates (CLAUDE.md, Catalyst inlines expensive
-    projections). Each request is one Arrow pass over that copy."""
+    projections). Each request is one Arrow pass over that copy, under
+    exactly one Filter: the window, time and constraint predicate, written
+    on the grid coordinates, so no cell id's CASE WHEN is inlined into it.
+    ``coarse_scan`` filters on the same window."""
     from raster_join_spark.plans.query import ConstraintType, QueryConstraint, QueryEngine
 
     eng = QueryEngine(spark, points_df(spark, sf_dir), COARSE_GRID).set_polygon_query(ORACLE_POLYS)
@@ -211,6 +214,13 @@ def test_query_engine_reads_cached_points(spark, sf_dir):
         ops = assert_one_arrow_pass(spark, lambda: eng.execute_function(fn))
         assert any(name == "InMemoryTableScan" for name, _ in ops), (fn, ops)
         assert not [d for _, d in ops if "regexp_extract" in d], (fn, ops)
+        filters = [d for name, d in ops if name == "Filter"]
+        assert len(filters) == 1, (fn, ops)
+        assert "CASE WHEN" not in filters[0].upper(), (fn, filters)
+    sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
+    (ops,) = ran_plans(spark, lambda: sj.coarse_scan(eng.points, *ORACLE_POLYS.bbox).count())
+    filters = [d for name, d in ops if name == "Filter"]
+    assert len(filters) == 1 and "CASE WHEN" not in filters[0].upper(), ops
 
 
 def test_knn_bulk_one_arrow_pass(spark, spark_jobs):
@@ -278,4 +288,6 @@ def test_knn_join_one_collect(spark, spark_jobs):
     assert not [n for n in names if "Join" in n or "Aggregate" in n], names
     assert not [d for _, d in plans[0] if "collect_list" in d], plans[0]
     assert set(jsc.getPersistentRDDs().keys()) == cached
-    assert out.count() == 12
+    # the result is a local relation: consuming it runs no Spark job
+    rows, jobs = spark_jobs(out.collect)
+    assert len(rows) == 12 and jobs == [], jobs

@@ -1,5 +1,6 @@
 """Property-based tests (hypothesis): PIP vs literal C-rule transcription,
-grid/quadkey invariants. Pure numpy — no Spark session."""
+grid/quadkey invariants, and the Spark coarse window against its numpy
+twin (the one test here that runs Spark)."""
 
 from __future__ import annotations
 
@@ -72,6 +73,93 @@ def test_quadkey_prefix_property(x, y, z1, z2):
     kb = quadkey_np(np.array([x]), np.array([y]), 0.0, 0.0, 1024.0, 1024.0, hi)[0]
     assert kb.startswith(ka)
     assert len(ka) == lo and len(kb) == hi
+
+
+def _axis(lo: float, size: float, n: int):
+    """One coordinate near a grid axis: on a cell edge (the far edge
+    included), just outside the grid, anywhere inside it, or NULL."""
+    hi = lo + n * size
+    return st.one_of(
+        st.integers(0, n).map(lambda i: lo + i * size),
+        st.sampled_from([np.nextafter(lo, -np.inf), lo - size, np.nextafter(hi, np.inf)]),
+        st.floats(lo, hi, exclude_max=True),
+        st.none(),
+    )
+
+
+@st.composite
+def _window_case(draw):
+    """A grid (dyadic cells, or a non-dyadic from_resolution grid), points
+    on and around it, and a box that may lie partly or wholly outside."""
+    x0, y0 = draw(st.integers(-50, 50)) * 1.0, draw(st.integers(-50, 50)) * 1.0
+    nx, ny = draw(st.integers(1, 7)), draw(st.integers(1, 7))
+    if draw(st.booleans()):
+        g = GridSpec(x0, y0, 0.5, 2.0, nx, ny)
+    else:
+        wx, wy = draw(st.sampled_from([1.0, 7.0, 10.0])), draw(st.sampled_from([3.0, 10.0]))
+        g = GridSpec.from_resolution(x0, y0, x0 + wx, y0 + wy, nx, ny)
+    pts = draw(
+        st.lists(
+            st.tuples(_axis(g.x0, g.cell_w, g.nx), _axis(g.y0, g.cell_h, g.ny)),
+            min_size=1,
+            max_size=30,
+        )
+    )
+    ex, ey = g.x1 - g.x0, g.y1 - g.y0
+    bx = sorted(draw(_corners(_axis(g.x0, g.cell_w, g.nx), g.x0 - 2 * ex, g.x1 + 2 * ex)))
+    by = sorted(draw(_corners(_axis(g.y0, g.cell_h, g.ny), g.y0 - 2 * ey, g.y1 + 2 * ey)))
+    return g, pts, (bx[0], by[0], bx[1], by[1])
+
+
+def _corners(near, lo: float, hi: float):
+    """Two box coordinates on one axis: near the grid or anywhere in
+    [lo, hi], which reaches two grid extents past either side."""
+    value = st.one_of(near, st.floats(lo, hi)).filter(lambda v: v is not None)
+    return st.lists(value, min_size=2, max_size=2)
+
+
+@settings(max_examples=25, deadline=None)
+@given(case=_window_case())
+def test_coarse_window_matches_numpy(spark, case):
+    """``SpatialJoin.coarse_scan`` and a QueryEngine COUNT over an explicit
+    box keep exactly the points whose numpy cell (GridSpec.cell_xy_np) lies
+    in ``mbr_cell_range(box)``, and coarse_scan's cell_id is the numpy
+    row-major id. The one polygon covers the whole grid, so the raster
+    COUNT is the number of points the window keeps."""
+    import pyarrow as pa
+
+    from raster_join_spark.geo.polygons import PolygonSet
+    from raster_join_spark.operators.spatial_join import SpatialJoin
+    from raster_join_spark.plans.query import QueryEngine
+
+    g, pts, box = case
+    x = np.array([np.nan if v is None else v for v, _ in pts], np.float64)
+    y = np.array([np.nan if v is None else v for _, v in pts], np.float64)
+    ok = ~(np.isnan(x) | np.isnan(y))
+    xp, yp = g.cell_xy_np(x[ok], y[ok])
+    stx, sty, enx, eny = g.mbr_cell_range(*box)
+    keep = (xp >= stx) & (xp < enx) & (yp >= sty) & (yp < eny)
+    want = sorted((xp + g.nx * yp)[keep].tolist())
+
+    df = spark.createDataFrame(
+        pa.table(
+            {
+                "x": pa.array([v for v, _ in pts], pa.float64()),
+                "y": pa.array([v for _, v in pts], pa.float64()),
+            }
+        )
+    )
+    cover = PolygonSet.from_list(
+        [[(g.x0 - 1, g.y0 - 1), (g.x1 + 1, g.y0 - 1), (g.x1 + 1, g.y1 + 1), (g.x0 - 1, g.y1 + 1)]]
+    )
+    got = SpatialJoin(spark, cover, g).coarse_scan(df, *box).select("cell_id").collect()
+    assert sorted(r.cell_id for r in got) == want, (g, box)
+    eng = QueryEngine(spark, df, g).set_polygon_query(cover)
+    try:
+        (row,) = eng.execute_query(box).execute_function("raster").collect()
+    finally:
+        eng.points.unpersist()
+    assert row.agg == len(want), (g, box)
 
 
 def test_accuracy_sweep_artifact_invariants():

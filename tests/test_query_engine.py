@@ -167,3 +167,13 @@ def test_empty_window_and_constraint(spark, pts):
         sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
         for strategy in (sj.raster_join, sj.index_join, sj.hybrid_join):
             assert strategy(eng._filtered(), include_zero=False).collect() == [], (case, strategy)
+
+
+def test_time_bound_is_a_literal(spark, pts):
+    """A time bound reaches Spark as one string literal cast to a
+    timestamp: text that would close the quote and widen the predicate
+    fails the cast instead of turning it into a tautology."""
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.execute_query(None, "2099-01-01 00:00:00' OR TRUE OR '")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        eng.execute_function("hybrid")

@@ -67,6 +67,25 @@ def main() -> None:
             "point's cell goes through the exact PIP kernel.",
             ran_plan(lambda: sj.index_join(pts, include_zero=False)),
         ),
+    ]
+
+    from raster_join_spark.plans.query import ConstraintType, QueryConstraint, QueryEngine
+
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.execute_query(None, "2024-01-05 00:00:00", "2024-01-25 00:00:00")
+    eng.set_query_constraints([QueryConstraint("value_c", ConstraintType.GT, 2000)])
+    sections += [
+        (
+            "QueryEngine request (executeQuery + executeFunction)",
+            "A request over the engine's cached points: ONE Filter above the "
+            "InMemoryTableScan carries the window (on the grid coordinates, "
+            "no cell-id CASE WHEN), the time bounds and the constraints; then "
+            "the same single MapInArrow pass as the strategies above.",
+            ran_plan(lambda: eng.execute_function("hybrid")),
+        ),
+    ]
+    eng.points.unpersist()
+    sections += [
         (
             "Filtered scan (F1 + S6)",
             "Attribute constraints reach the parquet scan as PushedFilters.",
