@@ -149,11 +149,17 @@ class GridSpec:
         """Row-major cell id as a native column expr; NULL when out of range.
 
         Same float64 arithmetic and operation order as cell_ids_np / the
-        SQL oracle: floor((v - origin)/cell) in double, then int.
+        SQL oracle: floor((v - origin)/cell) in double, then int. Spark's
+        floor(NaN) is 0, so a NaN coordinate is tested for explicitly and
+        gets NULL, as cell_ids_np gives it -1.
         """
-        xp = F.floor((x.cast("double") - F.lit(self.x0)) / F.lit(self.cell_w))
-        yp = F.floor((y.cast("double") - F.lit(self.y0)) / F.lit(self.cell_h))
-        ok = (xp >= 0) & (xp < F.lit(self.nx)) & (yp >= 0) & (yp < F.lit(self.ny))
+        xd, yd = x.cast("double"), y.cast("double")
+        xp = F.floor((xd - F.lit(self.x0)) / F.lit(self.cell_w))
+        yp = F.floor((yd - F.lit(self.y0)) / F.lit(self.cell_h))
+        ok = (
+            ~F.isnan(xd) & ~F.isnan(yd)
+            & (xp >= 0) & (xp < F.lit(self.nx)) & (yp >= 0) & (yp < F.lit(self.ny))
+        )
         return F.when(ok, xp + F.lit(self.nx) * yp).otherwise(F.lit(None))
 
     def cell_xy_spark_sql(self, x_expr: str, y_expr: str) -> tuple[str, str]:
@@ -170,12 +176,16 @@ class GridSpec:
     ) -> str:
         """Spark SQL predicate: the point's cell is one of the cells the
         MBR ``box`` covers (mbr_cell_range). The range is clamped to the
-        grid, so the predicate also implies the in-grid test; a NULL
-        coordinate fails it. Written on the grid coordinates, not on a
-        derived cell id, so a filter on it carries no CASE WHEN."""
+        grid, so the predicate also implies the in-grid test; a NULL or
+        NaN coordinate fails it (Spark's floor(NaN) is 0, hence the
+        isnan terms). Written on the grid coordinates, not on a derived
+        cell id, so a filter on it carries no CASE WHEN."""
         stx, sty, enx, eny = self.mbr_cell_range(*box)
         xp, yp = self.cell_xy_spark_sql(x_expr, y_expr)
-        return f"{xp} >= {stx} AND {xp} < {enx} AND {yp} >= {sty} AND {yp} < {eny}"
+        return (
+            f"NOT isnan(CAST({x_expr} AS DOUBLE)) AND NOT isnan(CAST({y_expr} AS DOUBLE)) AND "
+            f"{xp} >= {stx} AND {xp} < {enx} AND {yp} >= {sty} AND {yp} < {eny}"
+        )
 
     def cell_id_sql(self, x_expr: str, y_expr: str) -> str:
         """The identical arithmetic as ANSI SQL text (for DuckDB oracles)."""

@@ -31,6 +31,9 @@ Scale design — the paper's two passes (RasterJoin.cpp:215-221, SURVEY §2):
   ``toArrow()`` (O(batches x P) rows, never O(points) or O(cells)), sums
   them in numpy and returns a small local DataFrame, so the job runs at
   call time and collecting the result launches none.
+- A request's window, time bounds and constraints can ride along as
+  ``where`` (operators/predicate.py): the kernel masks each batch with
+  it, so the Spark plan carries no literal of the request.
 - The polygon side is a broadcast artifact (a few MB), built once per
   (collection, grid, strategy) and cached across calls in ``_BC_CACHE``.
 - The only Python in the plan is the kernel, Arrow-batched, vectorized
@@ -53,9 +56,8 @@ from raster_join_spark.geo.classify import POLY_GRID_CACHE, PolyGridTables
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.pip import pip_candidates
 from raster_join_spark.geo.polygons import PolygonSet
+from raster_join_spark.operators.predicate import INTEGRAL, RowPredicate
 from raster_join_spark.session import drop_zip_finders
-
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def sql_ident(name: str) -> str:
@@ -421,10 +423,11 @@ class SpatialJoin:
         points: DataFrame,
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
+        where: RowPredicate | None = None,
     ) -> DataFrame:
         """J2 accurate: MBR candidate lists -> PIP everywhere. Runs its
         one Spark job at call time (:meth:`_one_pass`)."""
-        return self._agg_frame("index", points, agg, include_zero)
+        return self._agg_frame("index", points, agg, include_zero, where)
 
     def assign_polygons(
         self, points: DataFrame, cols: Iterable[str] = ("url",)
@@ -499,16 +502,22 @@ class SpatialJoin:
         points: DataFrame,
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
+        where: RowPredicate | None = None,
     ) -> DataFrame:
         """J3 accurate: interior fast path + boundary exact refinement.
         Result is identical to index_join; only the artifact differs
         (PIP runs on boundary-cell points only). Takes coordinates as
         float64 and carries no precondition on their values. Runs its
         one Spark job at call time (:meth:`_one_pass`)."""
-        return self._agg_frame("hybrid", points, agg, include_zero)
+        return self._agg_frame("hybrid", points, agg, include_zero, where)
 
     def _one_pass(
-        self, kind: str, points: DataFrame, val_col: str | None, integral: bool
+        self,
+        kind: str,
+        points: DataFrame,
+        val_col: str | None,
+        integral: bool,
+        where: RowPredicate | None,
     ) -> dict[str, np.ndarray]:
         """The one Spark job behind every aggregate strategy; returns
         per-polygon totals (length n_polys arrays) by column name.
@@ -523,8 +532,15 @@ class SpatialJoin:
         float64); for errorbounds the boundary-cell terms ``fp1``,
         ``fn1``, ``fp``, ``fn``, ``fp_u6`` and ``fn_u6``. Integer columns
         are exact in any fold order; the float columns are not.
+
+        ``where`` (a request's window, time bounds and constraints) is
+        evaluated here, in the kernel: its columns join the projection and
+        each batch is masked before membership runs, so the plan carries
+        no literal of the request and is the same for every request over
+        the same columns. The window is on this join's grid.
         """
         bc = self._bc_art(kind)
+        win_grid = self.grid
         grid = self.cls_grid if kind == "hybrid" else self.grid
         dtype = self.dtype
         n_polys = self.polyset.n_polys
@@ -553,6 +569,8 @@ class SpatialJoin:
             drop_zip_finders()
             art = bc.value
             for rb in batches:
+                if where is not None:
+                    rb = rb.filter(pa.array(where.mask(rb, win_grid, x_name, y_name)))
                 names = rb.schema.names
                 x = np.asarray(
                     rb.column(names.index(x_name)).to_numpy(zero_copy_only=False),
@@ -600,6 +618,8 @@ class SpatialJoin:
                 )
 
         cols = [x_name, y_name] + ([val_col] if val_col is not None else [])
+        if where is not None:
+            cols += [c for c in where.columns() if c not in cols]
         partials = self._arrow_source(points, cols).mapInArrow(fn, schema).toArrow()
         ids = partials.column("poly_id").to_numpy()
         totals = {}
@@ -610,7 +630,12 @@ class SpatialJoin:
         return totals
 
     def _agg_frame(
-        self, kind: str, points: DataFrame, agg: AggSpec, include_zero: bool
+        self,
+        kind: str,
+        points: DataFrame,
+        agg: AggSpec,
+        include_zero: bool,
+        where: RowPredicate | None,
     ) -> DataFrame:
         """COUNT/SUM/AVG per polygon from :meth:`_one_pass`, as a local
         DataFrame (poly_id, alias) in poly_id order. ``include_zero``
@@ -620,9 +645,9 @@ class SpatialJoin:
         point appear."""
         val_col = None if agg.op == "count" else agg.col
         integral = val_col is not None and isinstance(
-            points.schema[val_col].dataType, _INTEGRAL
+            points.schema[val_col].dataType, INTEGRAL
         )
-        tot = self._one_pass(kind, points, val_col, integral)
+        tot = self._one_pass(kind, points, val_col, integral, where)
         cnt = tot["_cnt"]
         keep = np.arange(len(cnt)) if include_zero else np.flatnonzero(cnt)
         if agg.op == "count":
@@ -651,14 +676,15 @@ class SpatialJoin:
         points: DataFrame,
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
+        where: RowPredicate | None = None,
     ) -> DataFrame:
         """J1 approximate: whole cells attributed by center-inside cover.
         Error bounded by epsilon when the grid was sized with
         epsilon_to_cell_size (GLFunction.cpp:26-30). Runs its one Spark
         job at call time (:meth:`_one_pass`)."""
-        return self._agg_frame("raster", points, agg, include_zero)
+        return self._agg_frame("raster", points, agg, include_zero, where)
 
-    def error_bounds(self, points: DataFrame) -> DataFrame:
+    def error_bounds(self, points: DataFrame, where: RowPredicate | None = None) -> DataFrame:
         """J4: raster count plus per-polygon error intervals, one row per
         polygon. Runs its one Spark job at call time (:meth:`_one_pass`).
 
@@ -678,7 +704,7 @@ class SpatialJoin:
         form of the tight interval per the repo's quantization rule.
         (int64 headroom: cnt*1e6 overflows only past ~9e12 rows/polygon.)
         """
-        tot = self._one_pass("errorbounds", points, None, False)
+        tot = self._one_pass("errorbounds", points, None, False, where)
         cnt = tot["_cnt"]
         cols = {
             "poly_id": np.arange(len(cnt), dtype=np.int64),

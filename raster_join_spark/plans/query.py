@@ -23,15 +23,17 @@ one-pass kernel IS the CPU join shape, per-task partials + merge).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from enum import Enum
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.polygons import PolygonSet
-from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin, sql_ident
+from raster_join_spark.operators.predicate import RowPredicate, bind_term, ts_bound_us
+from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin
 
 
 class ConstraintType(Enum):  # Common.h:22
@@ -67,11 +69,6 @@ class QueryConstraint:  # Common.h:34-39
         return c >= F.lit(self.value)
 
 
-def _sql_str(v: str) -> str:
-    """``v`` as a Spark SQL string literal."""
-    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 @dataclass
 class QueryEngine:
     """DataHandler-shaped driver over a points DataFrame.
@@ -79,13 +76,13 @@ class QueryEngine:
     Like the reference's ``DataHandler::initData`` (DataHandler.cpp:24-62),
     the engine loads its input once: construction persists ``points`` and
     materializes it, so every request reads the cached columns instead of
-    re-running the scan and the page synthesis, which Catalyst would
-    otherwise inline into each window, time and constraint predicate.
-    The copy is held in memory for the engine's lifetime;
-    ``engine.points.unpersist()`` releases it. Spark serves every query
-    over the same input plan from this one copy, so engines over the
-    same input share it, and so does any other query the caller runs
-    over that input.
+    re-running the scan and the page synthesis. Each request's window,
+    time bounds and constraints are evaluated in the kernel over those
+    columns (:meth:`execute_function`). The copy is held in memory for
+    the engine's lifetime; ``engine.points.unpersist()`` releases it.
+    Spark serves every query over the same input plan from this one
+    copy, so engines over the same input share it, and so does any other
+    query the caller runs over that input.
     """
 
     spark: SparkSession
@@ -94,7 +91,7 @@ class QueryEngine:
     polyset: PolygonSet | None = None
     constraints: list[QueryConstraint] = field(default_factory=list)
     agg: AggSpec = field(default_factory=AggSpec)
-    _window: Column | None = field(default=None, init=False, repr=False)
+    _window: RowPredicate = field(default_factory=RowPredicate, init=False, repr=False)
     _join: SpatialJoin | None = field(default=None, init=False, repr=False)
 
     def __post_init__(self) -> None:
@@ -140,24 +137,31 @@ class QueryEngine:
         is None, uses the polygon collection's bbox like the reference
         (main.cpp:131-134).
 
-        One filter per request: the window (on the grid coordinates, see
-        SpatialJoin.window_sql) and the time bounds are one Spark SQL
-        predicate, kept as a Column; :meth:`execute_function` ANDs the
-        constraints into it and applies it as the one ``filter`` over
-        the cached points. A chain of filters over a derived cell id
-        would be analysed once per clause, and Catalyst would inline the
-        id's CASE WHEN into every pushed term."""
+        The window and the bounds are kept as data (a RowPredicate), not
+        as a Spark filter: :meth:`execute_function` adds the constraints
+        and the kernel evaluates all of it on each Arrow batch. The
+        window keeps a point whose cell on the engine grid
+        (``floor((v - origin) / cell)`` in float64) is in
+        ``mbr_cell_range(box)``; a NULL or NaN coordinate fails it. The
+        bounds ``t0``/``t1`` are inclusive, ``YYYY-MM-DD[ HH:MM:SS[.ffffff]]``
+        naive timestamps compared with the ``TIMESTAMP_NTZ`` column
+        ``ts_col`` (read only when a bound is set); a NULL timestamp fails
+        them. A bound in any other form, or a time column of another
+        type, raises ValueError here."""
         if box is None:
             if self.polyset is None:
                 raise ValueError("execute_query needs a box or a polygon collection")
             box = self.polyset.bbox
-        terms = [self._sj().window_sql(box)]
-        ts = sql_ident(ts_col)
-        if t0 is not None:
-            terms.append(f"{ts} >= CAST({_sql_str(t0)} AS TIMESTAMP_NTZ)")
-        if t1 is not None:
-            terms.append(f"{ts} <= CAST({_sql_str(t1)} AS TIMESTAMP_NTZ)")
-        self._window = F.expr(" AND ".join(terms))
+        cells = self._sj().grid.mbr_cell_range(*box)
+        t0_us = None if t0 is None else ts_bound_us(t0)
+        t1_us = None if t1 is None else ts_bound_us(t1)
+        if t0_us is not None or t1_us is not None:
+            schema = self.points.schema
+            found = schema[ts_col].dataType if ts_col in schema.fieldNames() else None
+            if not isinstance(found, T.TimestampNTZType):
+                what = "no such column" if found is None else found.simpleString()
+                raise ValueError(f"time column {ts_col!r} is not TIMESTAMP_NTZ ({what})")
+        self._window = RowPredicate(cells, ts_col, t0_us, t1_us)
         return self
 
     # ------------------------------------------------------- execution
@@ -167,31 +171,39 @@ class QueryEngine:
             raise ValueError("no polygon collection: call set_polygon_query first")
         return self._join
 
-    def _filtered(self) -> DataFrame:
-        """The cached points under the request's one filter: the window
-        predicate AND every constraint (none when there is neither)."""
-        pred = self._window
-        for c in self.constraints:
-            pred = c.to_column() if pred is None else pred & c.to_column()
-        return self.points if pred is None else self.points.filter(pred)
-
     def execute_function(self, fn: str) -> DataFrame:
         """fn codes per GLHandler.cpp:228 / CPUJoin.cpp:146-151:
         raster | index | hybrid | errorbounds | cpu.
 
         The request's one Spark job runs here, at call time; the result
         is a small local DataFrame (one row per polygon) whose collect
-        runs no job."""
+        runs no job.
+
+        The request's predicate (the :meth:`execute_query` window and
+        bounds, AND every constraint) runs inside the kernel, on the
+        cached columns: the Spark plan is InMemoryTableScan -> MapInArrow
+        with no Filter and no literal of the request, the same for every
+        request over the same columns, so no request compiles generated
+        code. Constraints follow Spark SQL: a NULL value fails; a numeric
+        column compares with an int or float literal in the type Spark
+        coerces them to; in floating point NaN equals NaN and sorts above
+        every number, and -0.0 equals 0.0; a string column compares with
+        a string literal, bytewise. Any other pairing raises ValueError
+        naming the constraint, before the job runs."""
         sj = self._sj()
-        pts = self._filtered()
+        if fn not in ("raster", "index", "hybrid", "cpu", "errorbounds"):
+            raise ValueError(f"unknown join type {fn!r}")
+        schema = self.points.schema
+        where = replace(
+            self._window,
+            terms=tuple(bind_term(schema, c.attr, c.op.name, c.value) for c in self.constraints),
+        )
         if fn == "raster":
-            return sj.raster_join(pts, self.agg)
+            return sj.raster_join(self.points, self.agg, where=where)
         if fn == "index":
-            return sj.index_join(pts, self.agg)
-        if fn in ("hybrid", "cpu"):
-            # J5 (cpu): identical semantics; the one-pass kernel IS
-            # the CPU-join shape (per-task partials + merge)
-            return sj.hybrid_join(pts, self.agg)
+            return sj.index_join(self.points, self.agg, where=where)
         if fn == "errorbounds":
-            return sj.error_bounds(pts)
-        raise ValueError(f"unknown join type {fn!r}")
+            return sj.error_bounds(self.points, where=where)
+        # J5 (cpu): identical semantics; the one-pass kernel IS the
+        # CPU-join shape (per-task partials + merge)
+        return sj.hybrid_join(self.points, self.agg, where=where)

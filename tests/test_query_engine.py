@@ -141,20 +141,31 @@ def test_one_spark_job_per_request(spark, pts, spark_jobs):
 def test_empty_window_and_constraint(spark, pts):
     """A window or a constraint that matches no row: COUNT is 0 and
     SUM/AVG are NULL for every polygon, error_bounds is all 0, and
-    without include_zero no row comes back."""
+    without include_zero no row comes back. Each case's input is empty
+    under the same predicate as a Spark filter (``window_spark_sql``,
+    the time bounds, ``QueryConstraint.to_column``)."""
     eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
     n = ORACLE_POLYS.n_polys
+    window = F.expr(COARSE_GRID.window_spark_sql("x", "y", ORACLE_POLYS.bbox))
+    ts = F.col("warc_ts")
+    t0, t1 = "2030-01-01 00:00:00", "2030-01-02 00:00:00"
+    low = QueryConstraint("value_c", ConstraintType.LT, -(10**15))
     empties = {
-        "window": lambda: eng.execute_query(
-            None, "2030-01-01 00:00:00", "2030-01-02 00:00:00"
-        ).set_query_constraints([]),
-        "constraint": lambda: eng.execute_query(None).set_query_constraints(
-            [QueryConstraint("value_c", ConstraintType.LT, -(10**15))]
+        "window": (
+            lambda: eng.execute_query(None, t0, t1).set_query_constraints([]),
+            window
+            & (ts >= F.lit(t0).cast("timestamp_ntz"))
+            & (ts <= F.lit(t1).cast("timestamp_ntz")),
+        ),
+        "constraint": (
+            lambda: eng.execute_query(None).set_query_constraints([low]),
+            window & low.to_column(),
         ),
     }
-    for case, make_empty in empties.items():
+    for case, (make_empty, spark_pred) in empties.items():
         make_empty()
-        assert eng._filtered().count() == 0, case
+        filtered = eng.points.filter(spark_pred)
+        assert filtered.count() == 0, case
         for fn in ("raster", "index", "hybrid"):
             for agg, want in ((Aggregation.COUNT, 0), (Aggregation.SUM, None), (Aggregation.AVG, None)):
                 eng.set_aggregation(agg, None if agg is Aggregation.COUNT else "value_c")
@@ -166,14 +177,92 @@ def test_empty_window_and_constraint(spark, pts):
         assert (eb.drop(columns="poly_id").to_numpy() == 0).all(), case
         sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
         for strategy in (sj.raster_join, sj.index_join, sj.hybrid_join):
-            assert strategy(eng._filtered(), include_zero=False).collect() == [], (case, strategy)
+            assert strategy(filtered, include_zero=False).collect() == [], (case, strategy)
 
 
 def test_time_bound_is_a_literal(spark, pts):
-    """A time bound reaches Spark as one string literal cast to a
-    timestamp: text that would close the quote and widen the predicate
-    fails the cast instead of turning it into a tautology."""
+    """A time bound is parsed as one naive timestamp: text that would
+    close a quote and widen the predicate, a time zone, an impossible
+    date or a non-string raises ValueError at the request, and the
+    engine keeps its previous (here empty) window instead of widening."""
     eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
-    eng.execute_query(None, "2099-01-01 00:00:00' OR TRUE OR '")
-    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
-        eng.execute_function("hybrid")
+    eng.execute_query(None, "2099-01-01 00:00:00")
+    bad = [
+        "2099-01-01 00:00:00' OR TRUE OR '",
+        "2024-01-05T00:00:00+01:00",
+        "2024-01-05 00:00:00Z",
+        "2024-01-05 00:00:00 UTC",
+        "2024-02-30 00:00:00",
+        "2024-01-05 24:00:00",
+        "2024-01-05 00:00",
+        "2024-1-5",
+        "yesterday",
+        " 2024-01-05",
+        "2024-01-05 00:00:00.1234567",
+        20240105,
+    ]
+    for t in bad:
+        with pytest.raises(ValueError, match="time bound"):
+            eng.execute_query(None, t)
+        with pytest.raises(ValueError, match="time bound"):
+            eng.execute_query(None, "2024-01-01 00:00:00", t)
+    assert [r.agg for r in eng.execute_function("hybrid").collect()] == [0] * ORACLE_POLYS.n_polys
+
+
+def test_bad_predicate_input_raises(spark, pts):
+    """Input the kernel cannot evaluate exactly raises ValueError naming
+    it, before any job: a literal of the wrong type for its column, an
+    unknown column, an integer outside int64, and a time bound on a
+    column that is not TIMESTAMP_NTZ."""
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    cases = [
+        (("lang", ConstraintType.EQ, 3), "string column compares only with a string"),
+        (("lang", ConstraintType.LT, 1.5), "string column compares only with a string"),
+        (("value_c", ConstraintType.GT, "2000"), "compares only with an int or a float"),
+        (("value_c", ConstraintType.GT, True), "compares only with an int or a float"),
+        (("value_c", ConstraintType.LT, 2**70), "outside int64"),
+        (("nope", ConstraintType.EQ, 1), "no column 'nope'"),
+        (("url", ConstraintType.EQ, "\ud800"), "not valid UTF-8"),
+    ]
+    for (attr, op, value), match in cases:
+        eng.set_query_constraints([QueryConstraint(attr, op, value)])
+        with pytest.raises(ValueError, match=match):
+            eng.execute_function("hybrid")
+    eng.set_query_constraints([])
+    for col, match in (("event_id", "bigint"), ("missing", "no such column")):
+        with pytest.raises(ValueError, match=match):
+            eng.execute_query(None, "2024-01-05 00:00:00", None, ts_col=col)
+
+
+def test_no_request_compiles(spark, pts):
+    """Requests differ only in literals, and those live in the kernel's
+    predicate: after one warm request per strategy, requests with new
+    windows, time bounds and constraint values compile no generated
+    code (Spark's CodegenMetrics compilation count stays put). A Spark
+    Filter carrying the literals compiled ~3 classes per request."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    eng = QueryEngine(spark, pts, COARSE_GRID).set_polygon_query(ORACLE_POLYS)
+    eng.set_aggregation(Aggregation.SUM, "value_c")
+    fns = ("raster", "index", "hybrid", "errorbounds")
+    x0, y0, x1, y1 = ORACLE_POLYS.bbox
+    langs = ("purchase", "view", "click")
+
+    def request(i: int) -> None:
+        d = i * (x1 - x0) / 40
+        eng.execute_query((x0 + d, y0, x1 - d, y1 - d), f"2024-01-{1 + i:02d} 00:00:00",
+                          f"2024-01-{20 + i:02d} 12:00:00.{i:06d}")
+        eng.set_query_constraints(
+            [
+                QueryConstraint("lang", ConstraintType.EQ, langs[i % 3]),
+                QueryConstraint("value_c", ConstraintType.GT, 1000 + 37 * i),
+                QueryConstraint("value_c", ConstraintType.LT, 15000 - 11 * i),
+            ]
+        )
+        eng.execute_function(fns[i % 4]).collect()
+
+    for i in range(4):
+        request(i)
+    before = compiles.getCount()
+    for i in range(4, 12):
+        request(i)
+    assert compiles.getCount() == before

@@ -77,10 +77,13 @@ def main() -> None:
     sections += [
         (
             "QueryEngine request (executeQuery + executeFunction)",
-            "A request over the engine's cached points: ONE Filter above the "
-            "InMemoryTableScan carries the window (on the grid coordinates, "
-            "no cell-id CASE WHEN), the time bounds and the constraints; then "
-            "the same single MapInArrow pass as the strategies above.",
+            "A request over the engine's cached points: the same single "
+            "MapInArrow pass as the strategies above, straight over the "
+            "InMemoryTableScan. There is no Filter: the window, the time "
+            "bounds and the constraints are evaluated inside the kernel, so "
+            "the plan holds no literal of the request and every request over "
+            "the same columns runs (and reuses the generated code of) this "
+            "same plan.",
             ran_plan(lambda: eng.execute_function("hybrid")),
         ),
     ]
