@@ -390,11 +390,12 @@ def _q_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming under the exact gate: the points table is
     written to a directory, replayed as a file-arrival stream
     (availableNow), aggregated by the watermarked tumbling-window x
-    raster-cover polygon plan, and drained into a memory sink; the
-    returned batch DataFrame is the stream's complete output. Oracle =
-    the same epoch-aligned window arithmetic + cover VALUES in DuckDB,
-    so the streaming engine's windowing, stream-static broadcast join,
-    and replay machinery are all hash-checked."""
+    raster-cover polygon plan (each micro-batch mapped by one Arrow pass
+    over the raster join's broadcast cover lookup), and drained into a
+    memory sink; the returned batch DataFrame is the stream's complete
+    output. Oracle = the same epoch-aligned window arithmetic + cover
+    VALUES in DuckDB, so the streaming engine's windowing, cover
+    attribution and replay machinery are all hash-checked."""
     from raster_join_spark.fixtures import COARSE_GRID
     from raster_join_spark.streaming.windowed import (
         stream_points,

@@ -1,11 +1,8 @@
-"""Uniform grid over a planar bounding box: cell ids, centers, rings.
+"""Uniform grid over a planar bounding box: cell ids, centers, MBR covers.
 
 Reimplements the reference's grid math:
 - point -> cell id, row-major ``cell = xp + nx*yp``, out-of-range discarded
   (RasterJoin/shaders/index.glsl:229-233; CPUJoin/GridIndexF.cpp:158-175)
-- epsilon -> canvas resolution: cellSize = (eps/sqrt(2))/groundRes, canvas =
-  ceil(bbox/cellSize) (RasterJoin/join/GLFunction.cpp:26-30)
-- cell-ring enumeration for radius/kNN probes (GridIndexF.cpp:177-198)
 
 Cell assignment is exposed both as numpy (oracle/driver) and as a pyspark
 Column expression (hot path, whole-stage codegen — the floor-divide is two
@@ -35,15 +32,6 @@ class GridSpec:
     # -- constructors -------------------------------------------------
 
     @staticmethod
-    def from_bbox(
-        x0: float, y0: float, x1: float, y1: float, cell_size: float
-    ) -> "GridSpec":
-        """Canvas sizing per GLFunction.cpp:26-30: res = ceil(extent/cellSize)."""
-        nx = int(math.ceil((x1 - x0) / cell_size))
-        ny = int(math.ceil((y1 - y0) / cell_size))
-        return GridSpec(x0, y0, cell_size, cell_size, max(nx, 1), max(ny, 1))
-
-    @staticmethod
     def from_resolution(
         x0: float, y0: float, x1: float, y1: float, nx: int, ny: int
     ) -> "GridSpec":
@@ -67,10 +55,13 @@ class GridSpec:
     # -- numpy kernels (driver / oracle) -------------------------------
 
     def cell_xy_np(self, x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Column/row indices; floor((v - origin)/cell) — may be out of range."""
-        xp = np.floor((np.asarray(x, np.float64) - self.x0) / self.cell_w).astype(np.int64)
-        yp = np.floor((np.asarray(y, np.float64) - self.y0) / self.cell_h).astype(np.int64)
-        return xp, yp
+        """Column/row indices; floor((v - origin)/cell) — may be out of range.
+        A NaN, infinite or past-int64 index is -1 (out of range), not cast:
+        that cast is undefined and gives INT64_MIN on x86 but 0 on aarch64."""
+        with np.errstate(over="ignore"):  # overflow -> inf, masked below
+            xp = np.floor((np.asarray(x, np.float64) - self.x0) / self.cell_w)
+            yp = np.floor((np.asarray(y, np.float64) - self.y0) / self.cell_h)
+        return tuple(np.where(np.abs(v) < 2.0**62, v, -1.0).astype(np.int64) for v in (xp, yp))
 
     def cell_ids_np(self, x: np.ndarray, y: np.ndarray) -> np.ndarray:
         """Row-major cell id; -1 for out-of-range points (discarded, index.glsl:233)."""
@@ -120,28 +111,6 @@ class GridSpec:
         enx = min(int(math.floor((maxx - self.x0) / self.cell_w)) + 1, self.nx)
         eny = min(int(math.floor((maxy - self.y0) / self.cell_h)) + 1, self.ny)
         return stx, sty, enx, eny
-
-    def ring_cells(self, xp: int, yp: int, radius: int) -> list[int]:
-        """Cell ids at Chebyshev distance == radius from (xp,yp), clamped to the
-        grid — the probe ring of GridIndexF.cpp:177-198 generalized to
-        iterative expansion (radius 0 = the center cell itself)."""
-        out = []
-        if radius == 0:
-            if 0 <= xp < self.nx and 0 <= yp < self.ny:
-                out.append(xp + self.nx * yp)
-            return out
-        for dy in range(-radius, radius + 1):
-            yy = yp + dy
-            if yy < 0 or yy >= self.ny:
-                continue
-            if abs(dy) == radius:
-                xs = range(xp - radius, xp + radius + 1)
-            else:
-                xs = (xp - radius, xp + radius)
-            for xx in xs:
-                if 0 <= xx < self.nx:
-                    out.append(xx + self.nx * yy)
-        return out
 
     # -- Spark column expressions (hot path) ---------------------------
 

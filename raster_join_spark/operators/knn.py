@@ -18,6 +18,11 @@ The two operators use the index in two ways:
 - :func:`knn_join_bulk` takes a query TABLE, broadcasts the index once
   and runs the kernel in one ``mapInArrow`` pass over the queries.
 
+:func:`radius_query` needs no index: one ``mapInArrow`` pass over the
+points carries the query list, and each Arrow batch, sorted by cell,
+hands every query the runs of points in the cells its ellipse's box
+covers.
+
 Distances are squared Euclidean with the same op order as the SQL oracle:
 (x-qx)*(x-qx) + (y-qy)*(y-qy) — exact integers in microdegree space.
 """
@@ -126,8 +131,7 @@ def _point_index(tbl: pa.Table, grid: GridSpec, id_col: str, x: str, y: str) -> 
 
     px = tbl.column(x).to_numpy().astype(np.float64)
     py = tbl.column(y).to_numpy().astype(np.float64)
-    with np.errstate(invalid="ignore"):  # NULL coordinates arrive as NaN
-        base = grid.cell_ids_np(px, py)
+    base = grid.cell_ids_np(px, py)  # NULL coordinates arrive as NaN: -1
     keep = base >= 0
     px, py, base = px[keep], py[keep], base[keep]
     ids = tbl.column(id_col).combine_chunks().filter(pa.array(keep))
@@ -395,71 +399,102 @@ def radius_query(
     x: str = "x",
     y: str = "y",
     id_col: str = "event_id",
-    literal_cap: int = 65_536,
 ) -> DataFrame:
     """Ellipse radius query — the reference's getRegionPt primitive
-    (CPUJoin/GridIndexF.cpp:177-198): probe the cell ring covering
-    [q - r, q + r], keep points with ((x-qx)/rx)^2 + ((y-qy)/ry)^2 <= 1
-    (the ellipse test at GridIndexF.cpp:15-19). Returns
-    (q_id, id, dist2) for every point inside some query's ellipse.
+    (CPUJoin/GridIndexF.cpp:177-198): every in-grid point with
+    ((x-qx)/rx)^2 + ((y-qy)/ry)^2 <= 1 (the ellipse test at
+    GridIndexF.cpp:15-19) for some query of the driver list
+    ``(q_id, qx, qy)``. Returns (q_id, {id_col}, dist2) with dist2 =
+    (x-qx)*(x-qx) + (y-qy)*(y-qy) cast to long, both in the SQL
+    oracle's op order.
 
-    Plan: enumerate covering cells per query on the driver (tiny),
-    broadcast, hash-join on cell_id, native-expression ellipse filter —
-    all JVM-side. When the covering-cell table would exceed
-    ``literal_cap`` rows (a huge radius relative to the cell size, or a
-    fine grid), the cell table is skipped entirely: the tiny query list
-    broadcasts against all points and the ellipse filter alone selects —
-    same rows, one full scan, never a giant driver-built literal."""
-    qlit = spark.createDataFrame(
-        [(q, qx, qy) for q, qx, qy in queries],
-        T.StructType(
-            [
-                T.StructField("q_id", T.LongType(), False),
-                T.StructField("qx", T.DoubleType(), False),
-                T.StructField("qy", T.DoubleType(), False),
-            ]
-        ),
+    One ``mapInArrow`` pass over the points (id, x, y), coalesced to at
+    most two tasks per core as SpatialJoin's kernels are; the query
+    list rides in the kernel. Each Arrow batch sorts its in-grid points
+    by cell, and a query tests only the row runs of its probe cells
+    (:func:`_radius_batch`), so the work is the candidates, not batch x
+    queries. The result stays a lazy distributed DataFrame: its size is
+    unbounded.
+
+    A non-finite query coordinate or a radius that is not a positive
+    finite number raises ValueError before any Spark job runs."""
+    for name, r in (("rx", rx), ("ry", ry)):
+        if not (math.isfinite(r) and r > 0):
+            raise ValueError(f"radius {name}={r!r} must be a positive finite number")
+    qid = np.array([q for q, _, _ in queries], np.int64)
+    qx = np.array([v for _, v, _ in queries], np.float64)
+    qy = np.array([v for _, _, v in queries], np.float64)
+    bad = np.flatnonzero(~(np.isfinite(qx) & np.isfinite(qy)))
+    if len(bad):
+        i = bad[0]
+        raise ValueError(f"query {qid[i]} has a non-finite coordinate ({qx[i]!r}, {qy[i]!r})")
+    # each query's probe cells: the mbr_cell_range of its box [q - r,
+    # q + r] widened by one cell on each side, as the rounded box edge can
+    # fall a few ulps short of a point that the ellipse test accepts,
+    # across a cell edge; in float64, as a far off-grid range passes int64
+    box = [grid.mbr_cell_range(a - rx, b - ry, a + rx, b + ry) for a, b in zip(qx, qy)]
+    span, n = np.array(box, np.float64).reshape(-1, 4).T, [[grid.nx], [grid.ny]]
+    lo = np.clip(span[:2] - 1, 0, n).astype(np.int64)
+    hi = np.clip(span[2:] + 1, 0, n).astype(np.int64)
+    spans = (lo[0], hi[0], lo[1], hi[1])
+    schema = T.StructType(
+        [
+            T.StructField("q_id", T.LongType(), False),
+            points.schema[id_col],
+            T.StructField("dist2", T.LongType(), False),
+        ]
     )
-    pts = points.withColumn("cell_id", grid.cell_id_col(F.col(x), F.col(y))).filter(
-        F.col("cell_id").isNotNull()
-    )
-    spans = [
-        grid.mbr_cell_range(qx - rx, qy - ry, qx + rx, qy + ry)
-        for _, qx, qy in queries
-    ]
-    # clamp each span: mbr_cell_range clamps lower bounds at 0 and upper
-    # at nx/ny, so a query MBR fully outside the grid yields a NEGATIVE
-    # span that must not offset another query's huge positive span and
-    # sneak past the cap
-    n_cells = sum(
-        max(0, enx - stx) * max(0, eny - sty) for stx, sty, enx, eny in spans
-    )
-    if n_cells > literal_cap:
-        cand = pts.crossJoin(F.broadcast(qlit))
-    else:
-        rows = []
-        for (q, _, _), (stx, sty, enx, eny) in zip(queries, spans):
-            for yy in range(sty, eny):
-                for xx in range(stx, enx):
-                    rows.append((q, xx + grid.nx * yy))
-        cand_cells = spark.createDataFrame(
-            rows,
-            T.StructType(
-                [
-                    T.StructField("q_id", T.LongType(), False),
-                    T.StructField("cell_id", T.LongType(), False),
-                ]
-            ),
-        )
-        cand = (
-            pts.join(F.broadcast(cand_cells), "cell_id", "inner")
-            .join(F.broadcast(qlit), "q_id", "inner")
-        )
-    ex = (F.col(x) - F.col("qx")) / F.lit(rx)
-    ey = (F.col(y) - F.col("qy")) / F.lit(ry)
-    return cand.filter(ex * ex + ey * ey <= F.lit(1.0)).select(
-        "q_id",
-        F.col(id_col),
-        ((F.col(x) - F.col("qx")) * (F.col(x) - F.col("qx"))
-         + (F.col(y) - F.col("qy")) * (F.col(y) - F.col("qy"))).cast("long").alias("dist2"),
-    )
+
+    def fn(batches):
+        drop_zip_finders()
+        for rb in batches:
+            px = np.asarray(rb.column(1).to_numpy(zero_copy_only=False), np.float64)
+            py = np.asarray(rb.column(2).to_numpy(zero_copy_only=False), np.float64)
+            q, row, d2 = _radius_batch(grid, spans, qx, qy, rx, ry, px, py)
+            if len(d2) and d2.max() >= 2.0**63:
+                raise ValueError("dist2 past the long range: the radius is too large")
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qid[q]), rb.column(0).take(pa.array(row)), pa.array(d2.astype(np.int64))],
+                names=schema.names,
+            )
+
+    target = max(spark.sparkContext.defaultParallelism, 1)
+    return points.select(id_col, x, y).coalesce(2 * target).mapInArrow(fn, schema)
+
+
+def _radius_batch(grid: GridSpec, spans, qx, qy, rx: float, ry: float, px, py):
+    """(query, point row, dist2) of every in-grid point of one batch
+    that lies in a query's ellipse. The in-grid points are sorted by
+    cell, so one row of a query's probe cells is one run of points (the
+    whole block is one run when it spans the grid's width), located by
+    ``searchsorted``. Candidates are tested in chunks of at most
+    ``_MATRIX_ENTRIES``."""
+    cell = grid.cell_ids_np(px, py)
+    keep = np.flatnonzero(cell >= 0)
+    order = keep[np.argsort(cell[keep])]
+    cell = cell[order]
+    nx = grid.nx
+    x_lo, x_hi, y_lo, y_hi = spans
+    wide = (x_lo == 0) & (x_hi == nx)
+    h = np.where((x_hi > x_lo) & (y_hi > y_lo), np.where(wide, 1, y_hi - y_lo), 0)
+    sq = np.repeat(np.arange(len(qx)), h)
+    row = y_lo[sq] + _ramp(h)
+    a = np.searchsorted(cell, np.where(wide[sq], y_lo[sq] * nx, row * nx + x_lo[sq]))
+    ln = np.searchsorted(cell, np.where(wide[sq], y_hi[sq] * nx, row * nx + x_hi[sq])) - a
+    ends = np.cumsum(ln)
+    out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))]
+    r0 = 0
+    while r0 < len(ln):
+        base = ends[r0 - 1] if r0 else 0
+        r1 = max(int(np.searchsorted(ends, base + _MATRIX_ENTRIES, "right")), r0 + 1)
+        p = order[np.repeat(a[r0:r1], ln[r0:r1]) + _ramp(ln[r0:r1])]
+        q = np.repeat(sq[r0:r1], ln[r0:r1])
+        dx = px[p] - qx[q]
+        dy = py[p] - qy[q]
+        ex = dx / rx
+        ey = dy / ry
+        hit = ex * ex + ey * ey <= 1.0
+        dx, dy = dx[hit], dy[hit]
+        out.append((q[hit], p[hit], dx * dx + dy * dy))
+        r0 = r1
+    return tuple(np.concatenate(c) for c in zip(*out))

@@ -90,9 +90,3 @@ def drop_zip_finders() -> None:
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             cache.pop(path, None)
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

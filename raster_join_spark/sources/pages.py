@@ -132,11 +132,6 @@ def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def points_oracle_sql(select: str, where: str = "TRUE") -> str:
-    """DuckDB oracle over the SAME CTE text."""
-    return f"WITH {POINTS_CTE} SELECT {select} FROM points WHERE {where}"
-
-
 def synth_points(spark: SparkSession, n: int, num_partitions: int = 256) -> DataFrame:
     """Deterministic scalable point table for benchmarks (no external data).
 

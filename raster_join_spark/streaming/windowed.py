@@ -7,6 +7,9 @@ exposes streaming equivalents of its core aggregations:
 - windowed_cell_counts: tumbling event-time windows x grid cell with a
   watermark for late crawl records — the incremental form of the raster
   join's cell pre-aggregation (state = open windows only)
+- windowed_polygon_counts: the same windows x polygon, each micro-batch
+  mapped by one Arrow pass over the raster join's broadcast cover
+  lookup (no join, no cached literal frame)
 - streaming_polygon_counts: per-micro-batch exact hybrid join via
   foreachBatch, accumulating per-polygon counts in a sink table —
   exactly-once via the streaming checkpoint + idempotent batch ids
@@ -18,13 +21,14 @@ unchanged on a real unbounded source (Kafka/file-arrival) in production.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from raster_join_spark.geo.grid import GridSpec
-from raster_join_spark.operators.spatial_join import SpatialJoin
+from raster_join_spark.operators.spatial_join import SpatialJoin, _members
+from raster_join_spark.session import drop_zip_finders
 
 
 def stream_points(
@@ -71,26 +75,6 @@ def windowed_cell_counts(
     )
 
 
-def cover_pairs_df(sj: SpatialJoin) -> DataFrame:
-    """The J1 cover map of ``sj`` — one (cell_id, poly_id) row per cell
-    whose center lies inside the polygon — as the static side of a
-    stream-static broadcast join. Every micro-batch re-executes that
-    join, so the literal frame is coalesced to one partition and
-    persisted (CLAUDE.md, literal broadcast maps); it stays cached while
-    the stream runs."""
-    t = sj.tables
-    schema = T.StructType(
-        [
-            T.StructField("cell_id", T.LongType(), False),
-            T.StructField("poly_id", T.LongType(), False),
-        ]
-    )
-    pdf = pd.DataFrame(
-        {"cell_id": t.cover_cell.astype(np.int64), "poly_id": t.cover_poly.astype(np.int64)}
-    )
-    return sj.spark.createDataFrame(pdf, schema=schema).coalesce(1).persist()
-
-
 def windowed_polygon_counts(
     stream: DataFrame,
     sj: SpatialJoin,
@@ -98,21 +82,43 @@ def windowed_polygon_counts(
     watermark: str = "1 hour",
     ts_col: str = "warc_ts",
 ) -> DataFrame:
-    """Fully declarative streaming spatial aggregation: tumbling event-time
-    windows x polygon via the raster cover broadcast join (stream-static
-    joins are supported natively; the polygon side is a static broadcast).
-    Approximate (J1 whole-cell attribution) — the declarative counterpart
-    of streaming_polygon_counts' exact foreachBatch path, with watermarked
-    bounded state."""
-    cover = cover_pairs_df(sj)
-    cells = (
-        stream.withColumn("cell_id", sj.grid.cell_id_col(F.col(sj.x), F.col(sj.y)))
-        .filter(F.col("cell_id").isNotNull())
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    """Streaming spatial aggregation: tumbling event-time windows x
+    polygon under J1 raster-cover attribution (a point counts for every
+    polygon whose cover holds its cell), with watermarked bounded state.
+    Approximate, like raster_join — the windowed counterpart of
+    streaming_polygon_counts' exact foreachBatch path.
+
+    Each micro-batch runs one ``mapInArrow`` that resolves membership
+    through ``sj``'s broadcast ``"raster"`` artifact (the cover lookup of
+    SpatialJoin._one_pass) and emits one (ts, poly_id) row per
+    membership; the watermark and the window groupBy run on those rows.
+    No join and no cached frame: the artifact is the batch engine's
+    broadcast."""
+    bc = sj._bc_art("raster")
+    grid, dtype = sj.grid, sj.dtype
+    schema = T.StructType(
+        [
+            T.StructField(ts_col, T.TimestampType(), True),
+            T.StructField("poly_id", T.LongType(), False),
+        ]
     )
-    joined = cells.join(F.broadcast(cover), "cell_id", "inner")
+
+    def fn(batches):
+        drop_zip_finders()
+        art = bc.value
+        for rb in batches:
+            x = np.asarray(rb.column(1).to_numpy(zero_copy_only=False), np.float64)
+            y = np.asarray(rb.column(2).to_numpy(zero_copy_only=False), np.float64)
+            rows, polys = _members(art, grid.cell_ids_np(x, y), x, y, dtype)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).take(pa.array(rows)), pa.array(polys)], names=schema.names
+            )
+
+    # watermarks require TIMESTAMP (tz-aware); parquet NTZ is cast in
+    # the session's UTC zone, so the instant is unchanged
+    pairs = stream.select(F.col(ts_col).cast("timestamp"), sj.x, sj.y).mapInArrow(fn, schema)
     return (
-        joined.withWatermark(ts_col, watermark)
+        pairs.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col("poly_id"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(

@@ -97,16 +97,6 @@ def test_mbr_cell_range_matches_reference_formula():
     assert g.mbr_cell_range(-5.0, -5.0, 50.0, 50.0) == (0, 0, 10, 10)
 
 
-def test_ring_cells():
-    g = GridSpec(0.0, 0.0, 1.0, 1.0, 5, 5)
-    assert g.ring_cells(2, 2, 0) == [12]
-    r1 = set(g.ring_cells(2, 2, 1))
-    assert r1 == {6, 7, 8, 11, 13, 16, 17, 18}
-    # corner clamping
-    r_corner = set(g.ring_cells(0, 0, 1))
-    assert r_corner == {1, 5, 6}
-
-
 def test_cell_centers():
     g = GridSpec(10.0, 20.0, 2.0, 3.0, 4, 4)
     cx, cy = g.cell_centers_np(np.array([0, 5]))

@@ -209,22 +209,26 @@ def test_knn_bulk_no_reexecution_on_consume(spark):
     got.unpersist()
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _assert_radius(got, ids, x, y, grid, queries, rx, ry):
+    """``got`` (pandas) holds exactly the numpy brute-force rows: every
+    in-grid point inside a query's ellipse, in the oracle's op order,
+    with dist2 truncated to long."""
+    ok = grid.cell_ids_np(x, y) >= 0
+    exp = []
+    for q, qx, qy in queries:
+        ex, ey = (x - qx) / rx, (y - qy) / ry
+        for i in np.flatnonzero(ok & (ex * ex + ey * ey <= 1.0)):
+            d2 = (x[i] - qx) * (x[i] - qx) + (y[i] - qy) * (y[i] - qy)
+            exp.append((q, ids[i], int(d2)))
+    rows = list(zip(got["q_id"].tolist(), got["event_id"].tolist(), got["dist2"].tolist()))
+    assert sorted(rows) == sorted(exp)
 
 
-def _cell_id_equi_join(plan: str) -> bool:
-    return any(
-        ("HashJoin" in line or "SortMergeJoin" in line) and "cell_id" in line
-        for line in plan.splitlines()
-    )
-
-
-def test_radius_query_offgrid_span_does_not_bypass_cap(spark):
-    """ADVICE round 4: a query MBR fully right/above the grid used to
-    yield a NEGATIVE clamped span that offset another query's huge
-    positive span and bypassed literal_cap. Spans must clamp at 0 per
-    query; rows must be identical either way."""
+def test_radius_query_offgrid_query_matches_brute_force(spark):
+    """Queries whose boxes lie wholly off the grid (x far right, y
+    in-grid; one so far that its cell range passes int64) next to one
+    whose box covers most of a 4M-cell grid: the off-grid queries match
+    nothing, the other its numpy brute force."""
     from raster_join_spark.operators.knn import radius_query
 
     rng = np.random.RandomState(17)
@@ -235,29 +239,11 @@ def test_radius_query_offgrid_span_does_not_bypass_cap(spark):
         pd.DataFrame({"event_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
     )
     grid = GridSpec(0.0, 0.0, 50.0, 50.0, 2000, 2000)
-    # q0: x far off-grid, y in-grid -> unclamped span is hugely NEGATIVE
-    # (neg x-span * pos y-span) and would offset q1's 2.56M-cell span
-    # right past the 65,536 cap; q1 alone demands the fallback
-    queries = [(0, 10_000_000.0, 50_000.0), (1, 50_000.0, 50_000.0)]
+    queries = [(0, 10_000_000.0, 50_000.0), (1, 50_000.0, 50_000.0), (2, 1e100, 50_000.0)]
     rx = ry = 40_000.0
-    fallback = radius_query(spark, df, grid, queries, rx, ry)
-    got = fallback.toPandas()
-    # the clamp kept the guard honest: the query list broadcast against
-    # every point, no cell table
-    plan = _executed_plan(fallback)
-    assert "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan, plan
-    assert not _cell_id_equi_join(plan), plan
-    cells = radius_query(spark, df, grid, queries, rx, ry, literal_cap=10**9)
-    oracle = cells.toPandas()
-    assert _cell_id_equi_join(_executed_plan(cells))
-    key = ["q_id", "event_id"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key, ignore_index=True),
-        oracle.sort_values(key, ignore_index=True),
-    )
-    m = ((x - 50_000.0) / rx) ** 2 + ((y - 50_000.0) / ry) ** 2 <= 1.0
-    assert set(got[got.q_id == 1]["event_id"]) == set(np.flatnonzero(m))
-    assert (got.q_id == 0).sum() == 0  # off-grid query matches nothing
+    got = radius_query(spark, df, grid, queries, rx, ry).toPandas()
+    _assert_radius(got, np.arange(n), x, y, grid, queries, rx, ry)
+    assert set(got.q_id) == {1}
 
 
 def test_knn_query_outside_dense_area(spark):
@@ -277,10 +263,10 @@ def test_knn_query_outside_dense_area(spark):
     assert got.sort_values("rank")["event_id"].tolist() == exp
 
 
-def test_radius_query_literal_cap_fallback(spark):
-    """A huge radius on a fine grid must NOT enumerate a giant cell
-    table — the fallback broadcasts the query list against all points
-    and returns identical rows."""
+def test_radius_query_huge_radius_fine_grid_matches_brute_force(spark):
+    """A radius covering ~2.6M cells of a 4M-cell grid: the rows equal
+    the numpy brute force (the probe cells of a query are runs of a
+    batch's points, never an enumerated cell table)."""
     from raster_join_spark.operators.knn import radius_query
 
     rng = np.random.RandomState(13)
@@ -292,19 +278,9 @@ def test_radius_query_literal_cap_fallback(spark):
     )
     grid = GridSpec(0.0, 0.0, 50.0, 50.0, 2000, 2000)  # 4M cells
     queries = [(0, 20_000.0, 30_000.0), (1, 90_000.0, 10_000.0)]
-    rx = ry = 40_000.0  # covers ~2.6M cells -> must take the fallback
+    rx = ry = 40_000.0
     got = radius_query(spark, df, grid, queries, rx, ry).toPandas()
-    small = radius_query(
-        spark, df, grid, queries, rx, ry, literal_cap=10**9
-    ).toPandas()  # force the cell-table plan as the oracle
-    key = ["q_id", "event_id"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key, ignore_index=True),
-        small.sort_values(key, ignore_index=True),
-    )
-    for q, qx, qy in queries:
-        m = ((x - qx) / rx) ** 2 + ((y - qy) / ry) ** 2 <= 1.0
-        assert set(got[got.q_id == q]["event_id"]) == set(np.flatnonzero(m))
+    _assert_radius(got, np.arange(n), x, y, grid, queries, rx, ry)
 
 
 def test_knn_bulk_hotcell_skew_block_kernel(spark):

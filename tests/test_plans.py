@@ -299,3 +299,42 @@ def test_knn_join_one_collect(spark, spark_jobs):
     # the result is a local relation: consuming it runs no Spark job
     rows, jobs = spark_jobs(out.collect)
     assert len(rows) == 12 and jobs == [], jobs
+
+
+def test_radius_query_one_arrow_pass(spark, sf_dir):
+    """radius_query is one MapInArrow over the points with the query list
+    in the kernel: no join of any kind (the former literal (query, cell)
+    table hash join and its nested-loop or cartesian fallback)."""
+    from raster_join_spark.fixtures import KNN_QUERIES
+    from raster_join_spark.operators.knn import radius_query
+
+    out = radius_query(
+        spark, points_df(spark, sf_dir), COARSE_GRID, KNN_QUERIES, 2_000_000.0, 1_500_000.0
+    )
+    names = [name for name, _ in assert_one_arrow_pass(spark, out.collect)]
+    assert not [n for n in names if "CartesianProduct" in n], names
+
+
+def test_windowed_polygon_counts_one_arrow_pass(spark, sf_dir, sj, tmp_path):
+    """Each micro-batch of the windowed stream join is one MapInArrow over
+    the raster artifact, below the stateful window aggregate: no join."""
+    from raster_join_spark.streaming.windowed import stream_points, windowed_polygon_counts
+
+    src = str(tmp_path / "src")
+    points_df(spark, sf_dir).select("warc_ts", "x", "y").write.parquet(src)
+    stream = stream_points(spark, src, spark.read.parquet(src).schema)
+    q = (
+        windowed_polygon_counts(stream, sj).writeStream.format("memory")
+        .queryName("plan_win_polys")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain()
+    q.stop()
+    plan = buf.getvalue()
+    assert plan.count("MapInArrow") == 1 and "StateStoreSave" in plan, plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan

@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis): PIP vs literal C-rule transcription,
 grid/quadkey invariants, the Spark coarse window against its numpy twin,
 the QueryEngine's in-kernel request predicate against the same predicate
-as a Spark filter, and the J4 error bounds against a brute force. The
-Spark tests share one session and build their frames once per module."""
+as a Spark filter, the J4 error bounds and radius_query against a brute
+force. The Spark tests share one session and build their frames once
+per module."""
 
 from __future__ import annotations
 
@@ -61,6 +62,29 @@ def test_cell_id_consistent_with_rect(x, y):
     lbx, lby, rtx, rty = g.cell_rect(cid)
     assert lbx <= x < rtx or np.isclose(x, rtx)
     assert lby <= y < rty or np.isclose(y, rty)
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize(
+    "g",
+    [
+        GridSpec(0.0, 0.0, 2.5, 2.5, 40, 40),
+        GridSpec(-5.0, 3.0, 1e-3, 7.0, 9, 2),
+        GridSpec.from_resolution(-1.0, -1.0, 6.0, 2.0, 7, 3),
+    ],
+)
+def test_cell_ids_np_nonfinite_and_huge_are_out_of_grid(g):
+    """NaN, ±inf and ±1e300 coordinates get cell -1 on every platform:
+    the index is masked before its int64 cast (whose result for NaN,
+    inf or past-int64 values is undefined), without a RuntimeWarning."""
+    bad = np.array([np.nan, np.inf, -np.inf, 1e300, -1e300])
+    inside = np.full(len(bad), g.x0 + 0.5 * g.cell_w)
+    assert g.cell_ids_np(bad, inside).tolist() == [-1] * len(bad)
+    assert g.cell_ids_np(inside, bad).tolist() == [-1] * len(bad)
+    assert g.cell_ids_np(bad, bad).tolist() == [-1] * len(bad)
+    xp, yp = g.cell_xy_np(bad, bad)
+    assert xp.tolist() == yp.tolist() == [-1] * len(bad)
+    assert int(g.cell_ids_np(np.array([g.x0]), np.array([g.y0]))[0]) == 0
 
 
 @settings(max_examples=100, deadline=None)
@@ -501,3 +525,131 @@ def test_accuracy_sweep_artifact_invariants():
     widths = [tot_width[e] for e in eps_desc]
     assert all(a >= b for a, b in zip(widths, widths[1:])), widths
     assert tot_err[eps_desc[-1]] < tot_err[eps_desc[0]], dict(tot_err)
+
+
+# -- radius_query: the one Arrow pass vs a numpy brute force -----------
+
+
+@st.composite
+def _radius_case(draw):
+    """A dyadic or non-dyadic grid; 0-40 queries on cell edges, in the
+    grid or off it; a radius from a fraction of a cell up to one that
+    covers the whole grid, or that reaches from a query to a cell edge;
+    points on cell edges, off-grid, NaN or NULL, plus points exactly on
+    (and one ulp outside) some query's ellipse."""
+    x0, y0 = draw(st.integers(-50, 50)) * 1.0, draw(st.integers(-50, 50)) * 1.0
+    nx, ny = draw(st.integers(1, 7)), draw(st.integers(1, 7))
+    if draw(st.booleans()):
+        g = GridSpec(x0, y0, 0.5, 2.0, nx, ny)
+    else:
+        wx, wy = draw(st.sampled_from([1.0, 7.0, 10.0])), draw(st.sampled_from([3.0, 10.0]))
+        g = GridSpec.from_resolution(x0, y0, x0 + wx, y0 + wy, nx, ny)
+    ex, ey = g.x1 - g.x0, g.y1 - g.y0
+    qx = st.one_of(_edge(g.x0, g.cell_w, g.nx), st.floats(g.x0 - 2 * ex, g.x1 + 2 * ex))
+    qy = st.one_of(_edge(g.y0, g.cell_h, g.ny), st.floats(g.y0 - 2 * ey, g.y1 + 2 * ey))
+    queries = draw(st.lists(st.tuples(qx, qy), max_size=40))
+
+    def radius(cell, extent):
+        return st.one_of(
+            st.sampled_from([cell, 0.5 * cell, 3 * cell, 4 * extent]),
+            st.floats(0.01, 2 * extent),
+        )
+
+    rx, ry = draw(radius(g.cell_w, ex)), draw(radius(g.cell_h, ey))
+    pts = draw(
+        st.lists(st.tuples(_axis(g.x0, g.cell_w, g.nx), _axis(g.y0, g.cell_h, g.ny)), max_size=30)
+    )
+    if queries and draw(st.booleans()):
+        # rx measured from a query to a cell edge: the rounded box edge
+        # qx + rx can fall one ulp short of the edge point that the
+        # ellipse test accepts (e.g. qx=-31.049974811108886,
+        # rx=38.54997481110888, x=7.5, on 0.5-wide cells)
+        a, b = queries[0]
+        e = g.x0 + draw(st.integers(0, g.nx)) * g.cell_w
+        if e != a:
+            rx = abs(e - a)
+            pts += [(e, b), (2 * a - e, b)]
+    for i in draw(st.lists(st.integers(0, max(len(queries) - 1, 0)), max_size=4)) if queries else []:
+        a, b = queries[i]
+        for dx, dy in ((rx, 0.0), (-rx, 0.0), (0.0, ry), (0.0, -ry)):
+            pts.append((a + dx, b + dy))
+            pts.append((float(np.nextafter(a + dx, a + 2 * dx)), float(np.nextafter(b + dy, b + 2 * dy))))
+    return g, [(q, a, b) for q, (a, b) in enumerate(queries)], rx, ry, pts
+
+
+@settings(max_examples=40, deadline=None)
+@given(case=_radius_case())
+def test_radius_query_matches_brute_force(spark, case):
+    """Every (q_id, event_id, dist2) row of ``radius_query`` and no other:
+    the in-grid points (``cell_ids_np >= 0``) inside a query's ellipse by
+    the oracle's test, ((x-qx)/rx)*((x-qx)/rx) + ((y-qy)/ry)*((y-qy)/ry)
+    <= 1, with dist2 = (x-qx)*(x-qx) + (y-qy)*(y-qy) truncated to long."""
+    import pyarrow as pa
+
+    from raster_join_spark.operators.knn import radius_query
+
+    g, queries, rx, ry, pts = case
+    x = np.array([np.nan if v is None else v for v, _ in pts], np.float64)
+    y = np.array([np.nan if v is None else v for _, v in pts], np.float64)
+    ok = g.cell_ids_np(x, y) >= 0
+    want = []
+    for q, a, b in queries:
+        ex, ey = (x - a) / rx, (y - b) / ry
+        for i in np.flatnonzero(ok & (ex * ex + ey * ey <= 1.0)):
+            want.append((q, int(i), int((x[i] - a) * (x[i] - a) + (y[i] - b) * (y[i] - b))))
+    df = spark.createDataFrame(
+        pa.table(
+            {
+                "event_id": pa.array(np.arange(len(pts)), pa.int64()),
+                "x": pa.array([v for v, _ in pts], pa.float64()),
+                "y": pa.array([v for _, v in pts], pa.float64()),
+            }
+        )
+    )
+    got = radius_query(spark, df, g, queries, rx, ry).collect()
+    assert sorted((r.q_id, r.event_id, r.dist2) for r in got) == sorted(want), (g, rx, ry)
+
+
+def test_radius_query_keeps_point_past_rounded_box(spark):
+    """The ellipse test accepts the edge point x = 7.5 ((x-qx)/rx rounds
+    to 1.0) although the rounded box edge qx + rx = 7.4999999999999964
+    lies in the cell before it: the probe cells are widened by one, so
+    the point is still a candidate."""
+    from raster_join_spark.operators.knn import radius_query
+
+    qx, rx = -31.049974811108886, 38.54997481110888
+    assert ((7.5 - qx) / rx) * ((7.5 - qx) / rx) <= 1.0 and qx + rx < 7.5
+    g = GridSpec(0.0, 0.0, 0.5, 0.5, 40, 40)
+    df = spark.createDataFrame([(0, 7.5, 5.0), (1, 7.0, 5.0)], "event_id long, x double, y double")
+    got = radius_query(spark, df, g, [(0, qx, 5.0)], rx, 1.0).collect()
+    d2 = int((7.5 - qx) * (7.5 - qx))
+    assert sorted((r.q_id, r.event_id, r.dist2) for r in got) == [
+        (0, 0, d2), (0, 1, int((7.0 - qx) * (7.0 - qx)))
+    ]
+
+
+@pytest.mark.parametrize(
+    "queries, rx, ry, name",
+    [
+        ([(0, float("nan"), 1.0)], 1.0, 1.0, "query 0"),
+        ([(0, 1.0, 1.0), (7, 1.0, float("inf"))], 1.0, 1.0, "query 7"),
+        ([(3, -float("inf"), 1.0)], 1.0, 1.0, "query 3"),
+        ([(0, 1.0, 1.0)], 0.0, 1.0, "rx"),
+        ([(0, 1.0, 1.0)], 1.0, -2.0, "ry"),
+        ([(0, 1.0, 1.0)], float("nan"), 1.0, "rx"),
+        ([(0, 1.0, 1.0)], 1.0, float("inf"), "ry"),
+    ],
+)
+def test_radius_query_rejects_bad_input_before_any_job(spark, spark_jobs, queries, rx, ry, name):
+    """A non-finite query coordinate or a radius that is not a positive
+    finite number raises a ValueError naming it, and no Spark job runs."""
+    from raster_join_spark.operators.knn import radius_query
+
+    df = spark.createDataFrame([(0, 1.0, 1.0)], "event_id long, x double, y double")
+
+    def call():
+        with pytest.raises(ValueError, match=name):
+            radius_query(spark, df, GridSpec(0.0, 0.0, 1.0, 1.0, 4, 4), queries, rx, ry)
+
+    _, jobs = spark_jobs(call)
+    assert jobs == []

@@ -126,42 +126,54 @@ def test_streaming_first_seen_dedup(spark, tmp_path):
     assert len(got) == 15  # no duplicates emitted
 
 
-def test_windowed_polygon_counts_match_batch(spark, points_dir, pts_schema, tmp_path):
-    """Declarative watermarked window x polygon (raster cover join) vs the
-    equivalent batch aggregation."""
-    from raster_join_spark.streaming.windowed import cover_pairs_df, windowed_polygon_counts
+def _run_windowed(spark, points_dir, pts_schema, sj, name, ckpt):
+    from raster_join_spark.streaming.windowed import windowed_polygon_counts
 
-    sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
     stream = stream_points(spark, points_dir, pts_schema, max_files_per_trigger=2)
     agg = windowed_polygon_counts(stream, sj, window="6 hours", watermark="1 hour")
     q = (
         agg.writeStream.format("memory")
-        .queryName("win_polys")
+        .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
+    q.stop()
+
+
+def test_windowed_polygon_counts_match_batch(spark, points_dir, pts_schema, tmp_path):
+    """Declarative watermarked window x polygon (raster cover attribution)
+    vs the batch raster join: each 6-hour window's counts are
+    ``SpatialJoin.raster_join`` over that window's rows."""
+    sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID)
+    _run_windowed(spark, points_dir, pts_schema, sj, "win_polys", str(tmp_path / "ck3"))
     got = spark.sql("SELECT win_start, poly_id, cnt FROM win_polys").toPandas()
 
-    batch = spark.read.parquet(points_dir)
-    cover = cover_pairs_df(sj)
-    exp = (
-        batch.withColumn("cell_id", COARSE_GRID.cell_id_col(F.col("x"), F.col("y")))
-        .filter(F.col("cell_id").isNotNull())
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-        .join(F.broadcast(cover), "cell_id", "inner")
-        .groupBy(F.window("warc_ts", "6 hours").alias("win"), "poly_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("win.start").alias("win_start"), "poly_id", "cnt")
-        .toPandas()
-    )
-    key = ["win_start", "poly_id"]
-    assert got.sort_values(key, ignore_index=True).equals(
-        exp.sort_values(key, ignore_index=True)
-    )
-    assert len(got) > 0
+    pts = spark.read.parquet(points_dir).select("warc_ts", "x", "y").toPandas()
+    win = pts["warc_ts"].dt.floor("6h")  # epoch-aligned, as F.window
+    for w in win.unique():
+        rows = spark.createDataFrame(pts.loc[win == w, ["x", "y"]])
+        exp = sj.raster_join(rows, include_zero=False).toPandas()
+        sub = got[got.win_start == w].sort_values("poly_id")
+        assert sub["poly_id"].tolist() == exp["poly_id"].tolist(), w
+        assert sub["cnt"].tolist() == exp["agg"].tolist(), w
+    assert set(got.win_start) <= set(win) and len(got) > 0
+
+
+def test_windowed_polygon_counts_persist_nothing(spark, points_dir, pts_schema, tmp_path):
+    """A started-then-stopped windowed query leaves no persisted RDD
+    behind: the polygon side is the raster join's broadcast artifact,
+    not a cached literal frame."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    # a grid no other test uses: nothing cached by an earlier query can
+    # stand in for what this one would cache
+    sj = SpatialJoin(spark, ORACLE_POLYS, COARSE_GRID.refined(2))
+    _run_windowed(spark, points_dir, pts_schema, sj, "win_polys_rdds", str(tmp_path / "ck"))
+    assert spark.table("win_polys_rdds").count() > 0
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_streaming_checkpoint_reset_discards_stale_partials(
